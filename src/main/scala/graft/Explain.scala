@@ -17,7 +17,6 @@ object Explain {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     namesArg.split(',').foreach { name =>

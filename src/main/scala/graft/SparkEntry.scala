@@ -76,6 +76,14 @@ object SparkEntry {
     EntityLinker.depicts(docFrames(spark, "/root/testdata/sf0.001"), docLabels)
   }
 
+  /** embeddings → the (id string, group long, vec array<double>) frame
+    * the kNN and PCA operators take.
+    */
+  private def knnFeatures(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id").cast("string").as("id"),
+      col("label").cast("long").as("group"),
+      expr("transform(embedding, x -> cast(x as double))").as("vec"))
+
   // ---- SQL fragments shared by the generated oracles ----
 
   /** Non-overlapping substring count of `term` in documents.text. */
@@ -128,43 +136,6 @@ object SparkEntry {
       |     cast(sum(length(bin((cc + vv) // (c + 1))) - 1) as bigint) AS total_bits
       |   FROM sc, v GROUP BY doc_id, is_train)""".stripMargin
 
-  /** Shared CTE chain of the kmeans_* oracles: fixed-point encode
-    * (floor((x+1)·2^20) — all-positive so `//` truncation == floor on
-    * both engines), md5-ranked seed centroids, then `iters` unrolled
-    * Lloyd rounds (integer argmin with the (dist, cid) tie-break, sum//n
-    * centroid update, empty clusters carry the previous centroid) —
-    * ends at the `c<iters>` relation (cid, cv). All distances are exact:
-    * int64 codes ≤ 2^21, inner products ≤ 2^48 < 2^53, so DuckDB's
-    * double-returning list_inner_product is lossless.
-    */
-  private def kmeansCtes(c: Int, iters: Int, dims: Int): String = {
-    def dist(a: String, b: String) =
-      s"list_inner_product($a, $a) + list_inner_product($b, $b)" +
-        s" - 2 * list_inner_product($a, $b)"
-    val head =
-      s"""WITH e AS (SELECT vec_id, list_transform(cast(embedding as double[]),
-        |     x -> cast(floor((x + 1.0) * 1048576.0) as bigint)) AS xq FROM embeddings),
-        | hb AS (SELECT vec_id, xq,
-        |     cast(concat('0x', substr(md5(cast(vec_id as varchar)), 1, 8)) as bigint) % 1000000 AS h
-        |   FROM e),
-        | c0 AS (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS cid, xq AS cv
-        |   FROM hb ORDER BY h, vec_id LIMIT $c)""".stripMargin
-    val rounds = (1 to iters).map { i =>
-      s""" a$i AS (SELECT t.vec_id, t.xq, c.cid,
-        |     row_number() OVER (PARTITION BY t.vec_id
-        |       ORDER BY ${dist("t.xq", "c.cv")}, c.cid) AS rk
-        |   FROM hb t CROSS JOIN c${i - 1} c),
-        | m$i AS (SELECT vec_id, xq, cid FROM a$i WHERE rk = 1),
-        | s$i AS (SELECT cid, d, cast(sum(xq[d + 1]) as bigint) // cast(count(*) as bigint) AS cx
-        |   FROM m$i CROSS JOIN (SELECT unnest(range(0, $dims)) AS d) dims
-        |   GROUP BY cid, d),
-        | c$i AS (SELECT p.cid, coalesce(l.cv, p.cv) AS cv
-        |   FROM c${i - 1} p LEFT JOIN
-        |     (SELECT cid, list(cx ORDER BY d) AS cv FROM s$i GROUP BY cid) l USING (cid))""".stripMargin
-    }
-    (head +: rounds).mkString(",\n")
-  }
-
   /** Shared CTE chain of the substring-dedup oracles: stride-1 10-word
     * grams, per-gram first/second owners, cross-doc hit positions, the
     * pos−prev ≤ k island merge — ends at the `spans` relation
@@ -194,62 +165,9 @@ object SparkEntry {
       |     cast(min(other_doc) as bigint) AS other_doc
       |   FROM i2 GROUP BY doc_id, island)""".stripMargin
 
-  /** Code-generated CTE chain replaying `k` BPE merge iterations:
-    * w0 = char-symbolized word counts, then per iteration the pair
-    * counts (p_i), the (n desc, pair asc) argmax (b_i), and the
-    * space-padded replace application (w_i) — the same left-to-right
-    * non-overlapping `replace` semantics as the engine.
-    */
-  private def bpeCtes(k: Int): String = {
-    // AS MATERIALIZED on every stage: without it DuckDB inlines the
-    // k-deep CTE chain (each w_i references w_{i-1}, each b_i is a
-    // scalar subquery used twice) into an exponentially-expanded tree
-    val sb = new StringBuilder(
-      """WITH w0 AS MATERIALIZED (SELECT ' ' || array_to_string(regexp_split_to_array(word, ''), ' ') || ' ' AS syms,
-        |   cast(count(*) as bigint) AS cnt
-        | FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        | GROUP BY word)""".stripMargin)
-    for (i <- 1 to k) {
-      sb ++= s""",
-        | p$i AS MATERIALIZED (SELECT unnest(list_transform(generate_series(1, len(s) - 1),
-        |     j -> concat(s[j], ' ', s[j + 1]))) AS pair, cnt
-        |   FROM (SELECT string_split(trim(syms), ' ') AS s, cnt FROM w${i - 1})),
-        | b$i AS MATERIALIZED (SELECT pair, cast(sum(cnt) as bigint) AS n FROM p$i
-        |   GROUP BY pair ORDER BY n DESC, pair LIMIT 1),
-        | w$i AS MATERIALIZED (SELECT replace(syms, ' ' || (SELECT pair FROM b$i) || ' ',
-        |     ' ' || (SELECT replace(pair, ' ', '') FROM b$i) || ' ') AS syms, cnt
-        |   FROM w${i - 1})""".stripMargin
-    }
-    sb.toString
-  }
-
-  private def bpeMergesOracleSql(k: Int): String =
-    bpeCtes(k) + (1 to k).map(i =>
-      s"\n SELECT $i AS merge_rank, (SELECT pair FROM b$i) AS pair," +
-        s" (SELECT n FROM b$i) AS frequency").mkString("", "\n UNION ALL", "") +
-      "\n ORDER BY merge_rank"
-
-  /** Tokenize oracle: the merge chain above, then every document word
-    * symbolized and run through the k replaces in rank order.
-    */
-  private def bpeTokenizeOracleSql(k: Int): String = {
-    val replaced = (1 to k).foldLeft("syms0") { (acc, i) =>
-      s"replace($acc, ' ' || (SELECT pair FROM b$i) || ' '," +
-        s" ' ' || (SELECT replace(pair, ' ', '') FROM b$i) || ' ')"
-    }
-    bpeCtes(k) + s""",
-      | tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
-      | symd AS (SELECT doc_id,
-      |     ' ' || array_to_string(regexp_split_to_array(word, ''), ' ') || ' ' AS syms0
-      |   FROM tok),
-      | applied AS (SELECT doc_id, $replaced AS syms FROM symd)
-      | SELECT doc_id, cast(sum(len(string_split(trim(syms), ' '))) as bigint) AS n_tokens
-      | FROM applied GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
-
   /** MMR oracle: candidate pool (round-6 cosine top-`pool`), pairwise
     * round-6 sims, then the k greedy steps UNROLLED as a CTE chain
-    * (bpe_merges' discipline) — step i picks the argmax of
+    * (one CTE per step) — step i picks the argmax of
     * 0.7·rel − 0.3·max(sim to s1..s(i-1)), ties by vec_id. DuckDB's
     * `list_cosine_similarity` is bit-identical to the engine's
     * dot/(√·√) left-to-right fold, and 0.7e0/0.3e0 are double literals,
@@ -573,7 +491,7 @@ object SparkEntry {
 
     // MMR diversified re-ranking over the exact top-24 candidate pool:
     // the greedy λ·rel − (1−λ)·maxsim selection, oracle-replayed step
-    // for step (unrolled CTE chain, bpe_merges' discipline)
+    // for step (unrolled CTE chain, one CTE per greedy step)
     "ann_mmr" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val q = emb.where(col("vec_id") === 0)
@@ -621,7 +539,7 @@ object SparkEntry {
     }),
 
     "knn_graph" -> ((s, dir) =>
-      SimilaritySearch.neighborGraph(t(s, dir, "embeddings"), k = 5, exact = true)
+      graft.canon.KnnJoin.exactTopK(knnFeatures(t(s, dir, "embeddings")), 5)
         .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
           round(col("distance"), 6).as("distance"))
         .orderBy("src", "distance", "dst")),
@@ -635,12 +553,8 @@ object SparkEntry {
     // buckets per group, candidates a strict subset). knn_graph stays
     // the exact-path gate; CanonSpec pins the production variant's recall.
     "knn_portable" -> ((s, dir) => {
-      val feat = t(s, dir, "embeddings")
-        .select(col("vec_id").cast("string").as("id"),
-          col("label").cast("long").as("group"),
-          expr("transform(embedding, x -> cast(x as double))").as("vec"))
-      graft.canon.KnnJoin.approxTopK(feat, 5, tables = 1, bits = 4,
-          window = 8, portable = true)
+      graft.canon.KnnJoin.approxTopK(knnFeatures(t(s, dir, "embeddings")), 5,
+          tables = 1, bits = 4, window = 8, portable = true)
         .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
           round(col("distance"), 6).as("distance"))
         .orderBy("src", "dst")
@@ -1052,8 +966,7 @@ object SparkEntry {
     }),
     "cc_components" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      val edges = SimilaritySearch.neighborGraph(
-        t(s, dir, "embeddings"), k = 3, exact = true)
+      val edges = graft.canon.KnnJoin.exactTopK(knnFeatures(t(s, dir, "embeddings")), 3)
         .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       graft.canon.ConnectedComponents.run(edges)
     }),
@@ -1419,19 +1332,6 @@ object SparkEntry {
     // DISTINCT hash: est = (k−1)·2^32 div h_k, one row, all int64
     "bottomk_distinct" -> ((s, dir) =>
       graft.ops.Sketches.bottomKDistinct(t(s, dir, "documents"), col("text"), k = 64)),
-    // exact set-similarity join via prefix filtering (PPJoin family):
-    // ALL pairs with word-set Jaccard ≥ 0.8 in integer milli output;
-    // the oracle is the brute-force all-pairs ground truth, so the
-    // gate proves the prefix filter loses nothing. Bounded to the
-    // deterministic doc_id < 1000 slice (= the whole sf0.01 gate
-    // fixture): the synthetic 31-word vocabulary is the prefix
-    // filter's adversarial worst case — every token is common, so
-    // candidates degrade toward all-pairs regardless of algorithm
-    // (SetJoinSpec proves real pruning on a realistic-vocab corpus)
-    "ppjoin_pairs" -> ((s, dir) =>
-      graft.ops.SetJoin.ppJoin(
-        t(s, dir, "documents").where(col("doc_id") < 1000), tauMilli = 800L)
-        .orderBy("a", "b")),
     // deterministic synchronous label propagation over the kNN graph:
     // 4 rounds, most-frequent neighbor label, smallest-label ties —
     // every round replayed by the oracle
@@ -1470,59 +1370,21 @@ object SparkEntry {
     "chunk_docs" -> ((s, dir) =>
       TextAnalysis.chunk(t(s, dir, "documents"), window = 16, stride = 12)
         .orderBy("doc_id", "chunk_id")),
-    // classic BPE merge learning on the corpus word-count table:
-    // 8 iterated (count desc, pair asc) argmax merges — the oracle
-    // replays every iteration via code-generated chained CTEs
-    "bpe_merges" -> ((s, dir) =>
-      graft.ops.BpeTrainer.learnMerges(t(s, dir, "documents"), merges = 8)),
-    // end-to-end subword tokenization with the learned merges: per-doc
-    // subword counts after applying all 8 merges in rank order
-    "bpe_tokenize" -> ((s, dir) => {
-      val ms = graft.ops.BpeTrainer.learnMerges(t(s, dir, "documents"), merges = 8)
-        .orderBy("merge_rank").collect().map(_.getString(1)).toSeq
-      graft.ops.BpeTrainer.tokenizeCount(t(s, dir, "documents"), ms)
-        .orderBy("doc_id")
-    }),
     "pca_reduce" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       // deterministic PCA twin (sign-canonicalized, integer-sum fit) —
       // (id, dim, value) rows, hash-checkable against the DuckDB mirror
       // of the same arithmetic; Reduce.pca stays the MLlib variant
-      graft.canon.Reduce.pcaDet(
-        t(s, dir, "embeddings").select(col("vec_id").cast("string").as("id"),
-          col("label").cast("long").as("group"),
-          expr("transform(embedding, x -> cast(x as double))").as("vec")), 8)
+      graft.canon.Reduce.pcaDet(knnFeatures(t(s, dir, "embeddings")), 8)
         .select(col("id"), posexplode(col("vec")).as(Seq("dim", "value")))
         .select(col("id"), col("dim"), round(col("value"), 6).as("value"))
         .orderBy("id", "dim")
     }),
 
-    // --- round 5: temporal joins, semantic dedup, graph link
+    // --- round 5: ledger time-travel, semantic dedup, graph link
     //     prediction, PMI collocations, stratified sampling,
     //     semi-structured extraction ---
 
-    // distributed AS-OF join (telemetry-to-frame alignment shape):
-    // every click gains the latest view of the same user at ts <= its
-    // own — union-tag + ONE keyed window + running last(ignoreNulls),
-    // no range join; the oracle replays the identical
-    // (ts, side, event_id) total order
-    "asof_join" -> ((s, dir) =>
-      graft.ops.Temporal.asofJoin(t(s, dir, "events"))
-        .orderBy("event_id")),
-    // trailing 10-minute RANGE-frame rolling count/cents-sum per user —
-    // value-based frames are peer-order-free, so ties at equal ts are
-    // frame-complete on both engines
-    "range_rolling" -> ((s, dir) =>
-      graft.ops.Temporal.rollingRange(t(s, dir, "events"))
-        .orderBy("event_id")),
-    // bucketized interval-overlap join: (view, click) pairs of the same
-    // user whose 6-hour intervals overlap. The oracle runs the NAIVE
-    // overlap join, so a hash match proves the engine's bucket-explode →
-    // equi-join → first-shared-bucket machinery against the plain
-    // semantics, not against a replay of itself
-    "interval_join" -> ((s, dir) =>
-      graft.ops.Temporal.intervalJoin(t(s, dir, "events"))
-        .orderBy("l_event_id", "r_event_id")),
     // ledger time-travel: events become an add/del triple change ledger
     // (any engagement asserts (user, ENGAGED_WITH, item-k); an 'error'
     // retracts it), snapshotted at the corpus-midpoint timestamp. The
@@ -1572,15 +1434,6 @@ object SparkEntry {
     "semantic_dedup" -> ((s, dir) =>
       graft.ops.Dedup.semanticDedup(t(s, dir, "embeddings"), tau = 0.40)
         .orderBy("vec_id")),
-    // fully DISTRIBUTED fixed-point Lloyd k-means (every vector in every
-    // round — the "model is the output" fit, vs fitCentroids' bounded
-    // sample): md5-ranked seeds, integer-argmin assignment, order-free
-    // int64 centroid update; the oracle unrolls all 3 Lloyd rounds
-    "kmeans_assign" -> ((s, dir) =>
-      graft.ops.KMeans.assign(t(s, dir, "embeddings")).orderBy("vec_id")),
-    "kmeans_centroids" -> ((s, dir) =>
-      graft.ops.KMeans.centroidTable(s, t(s, dir, "embeddings"))
-        .orderBy("cluster", "dim")),
     // DeepWalk-style random-walk corpus over the exact kNN graph:
     // per hop one frontier⋈edges equi-join + a min_by partial agg on
     // the md5-derandomized choice key; the oracle unrolls all 4 hops
@@ -1655,13 +1508,6 @@ object SparkEntry {
         .select(col("id").as("vec_id"), col("layer"))
         .orderBy("vec_id")
     }),
-    // strict first-touch conversion funnel view→click→purchase within
-    // 30-minute hops: two chained forward first(ignoreNulls) windows
-    // over one (ts, step, event_id) total order — one shuffle, both
-    // engines replay the identical attribution
-    "funnel_counts" -> ((s, dir) =>
-      graft.ops.Temporal.funnelCounts(t(s, dir, "events"))
-        .orderBy("user_id")),
     // mergeable equi-width histogram quantiles (the deterministic
     // fixed-memory quantile sketch): per-lang p50/p90/p99 as bin lower
     // edges, ceil-threshold rank arithmetic in exact int64
@@ -1714,22 +1560,6 @@ object SparkEntry {
         .orderBy("source")),
     // semi-structured extraction: the JSON props column parsed and
     // aggregated per event type (get_json_object ↔ json_extract_string)
-    // the explicit salted join (hash-of-row salt on the skewed fact,
-    // 8x replicated order side, join on (key, salt)) must produce the
-    // EXACT plain-join rollup — the oracle runs the unsalted join, so a
-    // hash match proves the salting machinery is semantics-neutral
-    "salted_rollup" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_orderkey").as("okey"),
-        col("l_extendedprice"), col("l_discount"))
-      val ords = t(s, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderpriority"))
-      graft.ops.SkewJoin.saltedJoin(li, ords, "okey", saltFactor = 8)
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"),
-          sum(floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * lit(100.0) + lit(0.5)).cast("long")).as("cents"))
-        .orderBy("o_orderpriority")
-    }),
     "q29_json_props" -> ((s, dir) =>
       t(s, dir, "events")
         .select(col("event_type"),
@@ -1743,31 +1573,7 @@ object SparkEntry {
     // oracle replays every pick count off its own window cumsum
     "weighted_sample" -> ((s, dir) =>
       graft.ops.Mixing.weightedSample(t(s, dir, "documents"))
-        .orderBy("doc_id")),
-    // Z-order (Morton) layout: per-file min-max file-skipping stats +
-    // the pruning verdict of the 2-D benchmark predicate — the oracle
-    // replays quantization, bit interleave, file split and verdicts
-    "zorder_stats" -> ((s, dir) =>
-      graft.ops.Layout.zorderStats(t(s, dir, "events"))
-        .orderBy("file_id")),
-    // pruning effectiveness at equal file counts, z-order vs insertion
-    // order: the 2-D predicate skips most z-ordered files and almost
-    // no insertion-ordered ones — the reason to cluster at 100 TB
-    "zorder_prune" -> ((s, dir) =>
-      graft.ops.Layout.zorderPrune(t(s, dir, "events"))
-        .orderBy("layout")),
-    // bucketed co-located join (zero exchange / zero sort on the join,
-    // LayoutSpec pins the plan) — hash-identical to the oracle's plain
-    // join, so the bucketed layout is proven semantics-neutral
-    "bucket_join" -> ((s, dir) =>
-      graft.ops.Layout.bucketedRollup(s, t(s, dir, "orders"),
-        t(s, dir, "customer"), tag = dir.replaceAll("[^A-Za-z0-9]", "_"))),
-    // SCD2 dimension history folded from the purchase change stream:
-    // no-change touches collapsed, inclusive interval chaining, NULL
-    // open end on the current row
-    "scd2_history" -> ((s, dir) =>
-      graft.ops.Temporal.scd2History(t(s, dir, "events"))
-        .orderBy("user_id", "valid_from_us", "cents"))
+        .orderBy("doc_id"))
   )
 
   /** Shared CTE chain of the HLL oracles: register = first md5 hex byte
@@ -2875,21 +2681,6 @@ object SparkEntry {
         | SELECT max(h) AS kth_hash,
         |   (63 * 4294967296) // greatest(max(h), 1) AS est_distinct
         | FROM k""".stripMargin,
-    // brute-force all-pairs ground truth for the prefix-filtered
-    // set-similarity join — a STRONGER check than replaying the filter:
-    // it proves the prefix machinery loses no qualifying pair
-    "ppjoin_pairs" ->
-      """WITH t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS ws
-        |   FROM documents WHERE doc_id < 1000),
-        | s AS (SELECT doc_id, cast(len(ws) as bigint) AS n, ws FROM t),
-        | p AS (SELECT a.doc_id AS a, b.doc_id AS b,
-        |     cast(len(list_intersect(a.ws, b.ws)) as bigint) AS inter_n,
-        |     a.n AS a_n, b.n AS b_n
-        |   FROM s a JOIN s b ON a.doc_id < b.doc_id)
-        | SELECT a, b, inter_n, a_n, b_n,
-        |   (1000 * inter_n) // (a_n + b_n - inter_n) AS jaccard_milli
-        | FROM p WHERE (1000 * inter_n) // (a_n + b_n - inter_n) >= 800
-        | ORDER BY a, b""".stripMargin,
     "label_prop" -> labelPropOracleSql,
     // replays sequence packing: prefix-sum starts in doc_id order, each
     // doc exploded over the sequence ids it spans, segment arithmetic
@@ -2945,10 +2736,6 @@ object SparkEntry {
         |   cast(len(list_slice(w, cid * 12 + 1, cid * 12 + 16)) as bigint) AS n_tokens,
         |   array_to_string(list_slice(w, cid * 12 + 1, cid * 12 + 16), ' ') AS chunk
         | FROM c WHERE cid * 12 < len(w) ORDER BY doc_id, chunk_id""".stripMargin,
-    // replays all 8 BPE iterations via the code-generated CTE chain —
-    // identical argmax order and replace semantics both engines
-    "bpe_merges" -> bpeMergesOracleSql(8),
-    "bpe_tokenize" -> bpeTokenizeOracleSql(8),
     // replays the quantized BM25: floor-log2 idf on the exact rational
     // (2(N-df)+1)/(2df+1) with the milli interpolation fraction,
     // Lucene-style clamp at df > N/2, milli tf saturation with the
@@ -3285,38 +3072,6 @@ object SparkEntry {
         |   AND g.gts >= seg.pt AND (g.gts < seg.nt OR seg.nt IS NULL)
         | ORDER BY g.inspection_id, g.channel, g.frame_index""".stripMargin,
 
-    // replays the as-of total order exactly: union-tag, the
-    // (ts_us, side, event_id) keyed sort, running last(IGNORE NULLS)
-    "asof_join" ->
-      """WITH u AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |     CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS side,
-        |     cast(floor(value * 100 + 0.5) as bigint) AS cents
-        |   FROM events WHERE event_type IN ('click', 'view')),
-        | c AS (SELECT *,
-        |     last_value(CASE WHEN side = 0 THEN event_id END IGNORE NULLS) OVER w AS asof_event_id,
-        |     last_value(CASE WHEN side = 0 THEN ts_us END IGNORE NULLS) OVER w AS asof_ts_us,
-        |     last_value(CASE WHEN side = 0 THEN cents END IGNORE NULLS) OVER w AS asof_cents
-        |   FROM u WINDOW w AS (PARTITION BY user_id
-        |     ORDER BY ts_us, side, event_id ROWS UNBOUNDED PRECEDING))
-        | SELECT event_id, user_id, ts_us, asof_event_id,
-        |   ts_us - asof_ts_us AS gap_us, asof_cents
-        | FROM c WHERE side = 1 ORDER BY event_id""".stripMargin,
-    // the NAIVE closed-interval overlap join — deliberately NOT a replay
-    // of the engine's bucketization, so the hash gate proves the
-    // bucket-explode/equi-join/anchor machinery equals the semantics
-    "interval_join" ->
-      """WITH l AS (SELECT event_id, user_id, epoch_us(ts) AS s,
-        |     epoch_us(ts) + 21600000000 AS e
-        |   FROM events WHERE event_type = 'view'),
-        | r AS (SELECT event_id, user_id, epoch_us(ts) AS s,
-        |     epoch_us(ts) + 21600000000 AS e
-        |   FROM events WHERE event_type = 'click')
-        | SELECT l.event_id AS l_event_id, r.event_id AS r_event_id,
-        |   l.user_id AS user_id,
-        |   least(l.e, r.e) - greatest(l.s, r.s) AS overlap_us
-        | FROM l JOIN r ON l.user_id = r.user_id
-        |   AND l.s <= r.e AND r.s <= l.e
-        | ORDER BY l_event_id, r_event_id""".stripMargin,
     // ledger replay at the integer-midpoint timestamp: latest op per
     // (subj, pred, obj) at-or-before T wins (ts desc, event_id desc),
     // and only a winning 'add' is in the snapshot
@@ -3361,14 +3116,6 @@ object SparkEntry {
         | WHERE NOT EXISTS (SELECT 1 FROM s2
         |   WHERE s2.subj = s1.subj AND s2.pred = s1.pred AND s2.obj = s1.obj)
         | ORDER BY subj, pred, obj, change""".stripMargin,
-    "range_rolling" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        | cast(count(*) OVER w as bigint) AS n_window,
-        | cast(sum(cast(floor(value * 100 + 0.5) as bigint)) OVER w as bigint) AS cents_window
-        | FROM events
-        | WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |   RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW)
-        | ORDER BY event_id""".stripMargin,
     // replays SemDeDup stage for stage: md5-ranked seed centroids
     // (ann_ivf_portable's recipe, over ALL vectors), Euclidean argmin
     // assignment, within-cluster rank<=64 anchor pairs, cosine >= tau,
@@ -3396,27 +3143,6 @@ object SparkEntry {
         |   FROM hits WHERE cos >= 0.40)
         | SELECT vec_id, cluster, anchor AS dup_of, round(cos, 6) AS cosine
         | FROM best WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-    // replays the distributed Lloyd fit end-to-end (kmeansCtes: encode,
-    // md5 seeds, 3 unrolled rounds), then one final integer-argmin
-    // assignment against the fitted centroids with the exact distance
-    "kmeans_assign" ->
-      s"""${kmeansCtes(8, 3, 64)},
-        | a4 AS (SELECT t.vec_id, c.cid,
-        |     cast(list_inner_product(t.xq, t.xq) + list_inner_product(c.cv, c.cv)
-        |       - 2 * list_inner_product(t.xq, c.cv) as bigint) AS dist,
-        |     row_number() OVER (PARTITION BY t.vec_id
-        |       ORDER BY list_inner_product(t.xq, t.xq) + list_inner_product(c.cv, c.cv)
-        |         - 2 * list_inner_product(t.xq, c.cv), c.cid) AS rk
-        |   FROM hb t CROSS JOIN c3 c)
-        | SELECT vec_id, cast(cid as bigint) AS cluster, dist AS dist_fixed
-        | FROM a4 WHERE rk = 1 ORDER BY vec_id""".stripMargin,
-    // the fitted model itself, dim-exploded — C*D = 512 exact int64 cells
-    "kmeans_centroids" ->
-      s"""${kmeansCtes(8, 3, 64)}
-        | SELECT cast(cid as bigint) AS cluster, cast(d as bigint) AS dim,
-        |   cast(cv[d + 1] as bigint) AS c_fixed
-        | FROM c3 CROSS JOIN (SELECT unnest(range(0, 64)) AS d) dims
-        | ORDER BY cluster, dim""".stripMargin,
     // replays every hop of the derandomized walk: the shared kNN edge
     // CTE, then per hop the md5("walk_t_dst") % 10^6 choice key and the
     // (h, dst) row_number argmin — identical to the engine's min_by
@@ -3618,28 +3344,6 @@ object SparkEntry {
         | SELECT source, cast(sum(csw) as bigint) AS n_tokens,
         |   cast(sum(csw * slm) as bigint) AS kl_milli_tokens
         | FROM j GROUP BY source ORDER BY source""".stripMargin,
-    // replays the funnel's two chained forward windows: first purchase
-    // at/after every row, then the first click's (ts, purchase-ts) —
-    // both CASEs non-null on the same first click row — and the
-    // identical window-bound CASE arithmetic
-    "funnel_counts" ->
-      """WITH t AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |     CASE event_type WHEN 'view' THEN 0 WHEN 'click' THEN 1 ELSE 2 END AS step
-        |   FROM events WHERE event_type IN ('view', 'click', 'purchase')),
-        | p1 AS (SELECT *,
-        |     first_value(CASE WHEN step = 2 THEN ts_us END IGNORE NULLS) OVER w AS p_ts
-        |   FROM t WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, step, event_id
-        |     ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
-        | p2 AS (SELECT *,
-        |     first_value(CASE WHEN step = 1 THEN ts_us END IGNORE NULLS) OVER w AS c_ts,
-        |     first_value(CASE WHEN step = 1 THEN p_ts END IGNORE NULLS) OVER w AS c_pts
-        |   FROM p1 WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, step, event_id
-        |     ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        | SELECT user_id, count(*) AS n_views,
-        |   cast(sum(CASE WHEN c_ts - ts_us <= 1800000000 THEN 1 ELSE 0 END) as bigint) AS n_clicked,
-        |   cast(sum(CASE WHEN c_ts - ts_us <= 1800000000
-        |     AND c_pts - c_ts <= 1800000000 THEN 1 ELSE 0 END) as bigint) AS n_converted
-        | FROM p2 WHERE step = 0 GROUP BY user_id ORDER BY user_id""".stripMargin,
     "hist_quantiles" ->
       """WITH b AS (SELECT lang, n_chars // 50 AS bin FROM documents),
         | c AS (SELECT lang, bin, cast(count(*) as bigint) AS c FROM b GROUP BY 1, 2),
@@ -3651,13 +3355,6 @@ object SparkEntry {
         |   min(CASE WHEN cum * 100 >= n * 90 THEN bin * 50 END) AS p90_lo,
         |   min(CASE WHEN cum * 100 >= n * 99 THEN bin * 50 END) AS p99_lo
         | FROM m GROUP BY lang ORDER BY lang""".stripMargin,
-    // the plain (unsalted) join — q01's integer-cents recipe, same
-    // arithmetic op order both engines
-    "salted_rollup" ->
-      """SELECT o.o_orderpriority, count(*) AS n,
-        | cast(sum(cast(floor(((l.l_extendedprice * (1.0 - l.l_discount)) * 100.0) + 0.5) as bigint)) as bigint) AS cents
-        | FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        | GROUP BY 1 ORDER BY 1""".stripMargin,
     "q29_json_props" ->
       """SELECT event_type, count(*) AS n,
         | cast(sum(cast(json_extract_string(props, '$.k') as bigint)) as bigint) AS sum_k,
@@ -3680,93 +3377,8 @@ object SparkEntry {
         |       ELSE (start_off + weight - 1 - phase) // step + 1 END, 100)
         |     - CASE WHEN start_off <= phase THEN 0
         |       ELSE (start_off - phase + step - 1) // step END, 0) AS n_picks
-        | FROM c, p) q WHERE n_picks > 0 ORDER BY doc_id""".stripMargin,
-    "zorder_stats" -> zorderStatsOracleSql,
-    "zorder_prune" -> zorderPruneOracleSql,
-    // the plain (unbucketed) join — the hash match proves the bucketed
-    // co-located layout on the Spark side is semantics-neutral
-    "bucket_join" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-        | cast(sum(cast(floor((o_totalprice * 100.0) + 0.5) as bigint)) as bigint) AS cents
-        | FROM orders JOIN customer ON o_custkey = c_custkey
-        | GROUP BY 1 ORDER BY 1""".stripMargin,
-    // SCD2: WHERE filters the touch rows BEFORE the lead window runs
-    // (standard SQL evaluation order) — identical to the Spark plan's
-    // filter-then-window
-    "scd2_history" ->
-      """WITH p AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |     cast(floor((value * 100.0) + 0.5) as bigint) AS cents
-        |   FROM events WHERE event_type = 'purchase'),
-        | d AS (SELECT *, lag(cents) OVER (PARTITION BY user_id
-        |     ORDER BY ts_us, event_id) AS prev FROM p)
-        |SELECT user_id, cents, valid_from_us, valid_to_us,
-        |  CASE WHEN valid_to_us IS NULL THEN 1 ELSE 0 END AS is_current
-        |FROM (SELECT user_id, cents, ts_us AS valid_from_us,
-        |    lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) - 1 AS valid_to_us
-        |  FROM d WHERE prev IS NULL OR prev <> cents) h
-        |ORDER BY user_id, valid_from_us, cents""".stripMargin
+        | FROM c, p) q WHERE n_picks > 0 ORDER BY doc_id""".stripMargin
   )
-
-  /** Shared z-order oracle CTEs: quantize both dimensions to 6 bits off
-    * the fitted min/span frame, interleave with explicit shift/mask
-    * terms, split the curve into files of 16 z-values, and derive the
-    * integer-percent pruning bounds — the exact arithmetic of
-    * [[graft.ops.Layout]].
-    */
-  private def zorderCtes: String =
-    """WITH b AS (SELECT cast(event_id as bigint) AS event_id,
-      |    cast(user_id as bigint) AS user_id, epoch_us(ts) AS ts_us FROM events),
-      | f AS (SELECT min(user_id) AS fmin_u, max(user_id) - min(user_id) + 1 AS span_u,
-      |    min(ts_us) AS fmin_t, max(ts_us) - min(ts_us) + 1 AS span_t,
-      |    min(event_id) AS fmin_e, max(event_id) - min(event_id) + 1 AS span_e FROM b),
-      | q AS (SELECT event_id, user_id, ts_us,
-      |    ((user_id - fmin_u) * 64) // span_u AS qx,
-      |    ((ts_us - fmin_t) * 64) // span_t AS qy FROM b, f),
-      | z AS (SELECT user_id, ts_us,
-      |    ((((qx >> 0) & 1) << 0) + (((qy >> 0) & 1) << 1)
-      |     + (((qx >> 1) & 1) << 2) + (((qy >> 1) & 1) << 3)
-      |     + (((qx >> 2) & 1) << 4) + (((qy >> 2) & 1) << 5)
-      |     + (((qx >> 3) & 1) << 6) + (((qy >> 3) & 1) << 7)
-      |     + (((qx >> 4) & 1) << 8) + (((qy >> 4) & 1) << 9)
-      |     + (((qx >> 5) & 1) << 10) + (((qy >> 5) & 1) << 11)) >> 4 AS file_id
-      |   FROM q),
-      | g AS (SELECT fmin_u + (span_u * 40) // 100 AS u_lo,
-      |    fmin_u + (span_u * 50) // 100 AS u_hi,
-      |    fmin_t + (span_t * 30) // 100 AS t_lo,
-      |    fmin_t + (span_t * 45) // 100 AS t_hi FROM f),
-      | zs AS (SELECT file_id, count(*) AS n, min(user_id) AS min_u,
-      |    max(user_id) AS max_u, min(ts_us) AS min_t, max(ts_us) AS max_t
-      |   FROM z GROUP BY 1)""".stripMargin
-
-  private def zorderStatsOracleSql: String =
-    zorderCtes +
-      """
-        |SELECT cast(file_id as bigint) AS file_id, cast(n as bigint) AS n,
-        |  min_u, max_u, min_t, max_t,
-        |  CASE WHEN max_u < u_lo OR min_u > u_hi OR max_t < t_lo OR min_t > t_hi
-        |    THEN 0 ELSE 1 END AS survives
-        |FROM zs, g ORDER BY file_id""".stripMargin
-
-  private def zorderPruneOracleSql: String =
-    zorderCtes +
-      """,
-        | l AS (SELECT ((event_id - fmin_e) * 256) // span_e AS file_id,
-        |    user_id, ts_us FROM b, f),
-        | ls AS (SELECT file_id, count(*) AS n, min(user_id) AS min_u,
-        |    max(user_id) AS max_u, min(ts_us) AS min_t, max(ts_us) AS max_t
-        |   FROM l GROUP BY 1),
-        | zv AS (SELECT n, CASE WHEN max_u < u_lo OR min_u > u_hi
-        |     OR max_t < t_lo OR min_t > t_hi THEN 0 ELSE 1 END AS sv FROM zs, g),
-        | lv AS (SELECT n, CASE WHEN max_u < u_lo OR min_u > u_hi
-        |     OR max_t < t_lo OR min_t > t_hi THEN 0 ELSE 1 END AS sv FROM ls, g)
-        |SELECT layout, files_total, files_scanned, rows_total, rows_scanned FROM (
-        |  SELECT 'zorder' AS layout, cast(count(*) as bigint) AS files_total,
-        |    cast(sum(sv) as bigint) AS files_scanned, cast(sum(n) as bigint) AS rows_total,
-        |    cast(sum(CASE WHEN sv = 1 THEN n ELSE 0 END) as bigint) AS rows_scanned FROM zv
-        |  UNION ALL
-        |  SELECT 'linear', cast(count(*) as bigint), cast(sum(sv) as bigint),
-        |    cast(sum(n) as bigint), cast(sum(CASE WHEN sv = 1 THEN n ELSE 0 END) as bigint) FROM lv
-        |) u ORDER BY layout""".stripMargin
 
   /** fingerprints oracle: the same base-31 polynomial k-gram hash
     * (k = 8, window = 4) as TextAnalysis.fingerprints, spelled out as

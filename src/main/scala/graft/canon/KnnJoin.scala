@@ -241,7 +241,7 @@ object KnnJoin {
     // external SQL engine regenerates the identical hyperplanes — the
     // oracle gate for the positional-block machinery; seed is ignored.
     def planeCoef(t: Int, bit: Int, d: Int): Double =
-      if (portable) graft.ops.SimilaritySearch.portablePlaneCoef(s"${t}_${bit}_${d}")
+      if (portable) portablePlaneCoef(s"${t}_${bit}_${d}")
       else {
         val h = graft.core.Rng.mix(seed + t * 1000003L, bit * 131L + d)
         (h >>> 11) * 1.1102230246251565e-16 * 2.0 - 1.0
@@ -301,6 +301,16 @@ object KnnJoin {
           org.apache.spark.sql.Encoders.product[PartS]).toDF()
       }
     (partials, idType)
+  }
+
+  /** One md5-derived unit-cube coordinate for key `"<bit>_<dim>"` (or
+    * `"<table>_<bit>_<dim>"`): 8-hex parse, % 2001 − 1000, /1000 — the
+    * exact integer arithmetic a SQL engine reproduces from its own md5.
+    */
+  private[graft] def portablePlaneCoef(key: String): Double = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val hex = md.digest(key.getBytes("UTF-8")).map(x => f"$x%02x").mkString.take(8)
+    ((java.lang.Long.parseLong(hex, 16) % 2001L) - 1000L) / 1000.0
   }
 
   // ---- sliding-window pairing + task-local bounded top-k ------------

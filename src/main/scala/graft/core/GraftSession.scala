@@ -5,10 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Session factory with the engine's scale-oriented defaults.
   *
   * Tuned for correctness-at-scale, verified on local[N]: AQE on
-  * (runtime coalesce + skew-join split — the north rule's skew handling
-  * rides on this plus the explicit salted join in [[graft.ops.SkewJoin]]
-  * for hot-key large×large joins AQE can't pre-split),
-  * shuffle partitions sized to cores (not the 200 default).
+  * (runtime coalesce + skew-join split), shuffle partitions sized to
+  * cores (not the 200 default).
   */
 object GraftSession {
   /** `aqeOverride`: Some(b) forces AQE on/off regardless of
@@ -61,13 +59,6 @@ object GraftSession {
       // MB, well inside the executor budget (1M was tried: same wall,
       // more GC).
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      // report bucketed scans' sortBy ordering to the planner (only
-      // trusted when a bucket is a single file — Layout.bucketedRollup
-      // writes exactly that), so a bucketed co-located join needs no
-      // Exchange AND no Sort. Off by default since SPARK-28595 because
-      // multi-file buckets would need a merge-sort read; our layout op
-      // guarantees one file per bucket by pre-repartitioning on the key.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

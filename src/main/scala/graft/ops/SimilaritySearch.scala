@@ -231,17 +231,8 @@ object SimilaritySearch {
     */
   private[graft] def portablePlanes(bits: Int, dims: Int,
                                     prefix: String = ""): Array[Array[Double]] =
-    Array.tabulate(bits, dims)((b, d) => portablePlaneCoef(s"$prefix${b}_${d}"))
-
-  /** One md5-derived unit-cube coordinate for key `"<bit>_<dim>"` (or
-    * `"<table>_<bit>_<dim>"`): 8-hex parse, % 2001 − 1000, /1000 — the
-    * exact integer arithmetic a SQL engine reproduces from its own md5.
-    */
-  private[graft] def portablePlaneCoef(key: String): Double = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(key.getBytes("UTF-8")).map(x => f"$x%02x").mkString.take(8)
-    ((java.lang.Long.parseLong(hex, 16) % 2001L) - 1000L) / 1000.0
-  }
+    Array.tabulate(bits, dims)((b, d) =>
+      graft.canon.KnnJoin.portablePlaneCoef(s"$prefix${b}_${d}"))
 
   /** Product-quantization ANN — the memory-bounded scale path beyond
     * IVF: split each vector into `blocks` sub-vectors, quantize every

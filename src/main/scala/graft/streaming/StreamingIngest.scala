@@ -59,8 +59,8 @@ object StreamingIngest {
     * (`flatMapGroupsWithState`): the first document seen per content
     * hash passes (lowest doc_id inside a micro-batch, for determinism);
     * every later duplicate — same batch or any later batch — is dropped
-    * by the per-key seen-flag state. This is the streaming twin of
-    * `Dedup`'s exact path: at 100 TB the state store holds one boolean
+    * by the per-key seen-flag state. This is the streaming twin of an
+    * exact md5 group-by: at 100 TB the state store holds one boolean
     * per distinct content hash, partitioned by key.
     *
     * `stateTtl` (e.g. `Some("30 days")`) bounds that state for a real
@@ -107,7 +107,7 @@ object StreamingIngest {
 
   /** Streaming NEAR-duplicate candidates with keyed LSH-bucket state:
     * minhash signatures are banded exactly like the batch path
-    * ([[graft.ops.Dedup.bandedBuckets]]), and each (band, band_hash)
+    * ([[graft.canon.MinHash.bandedBuckets]]), and each (band, band_hash)
     * bucket keeps one anchor (the first-seen minimum doc_id) in
     * `flatMapGroupsWithState` state. Every arriving bucket member pairs
     * with its bucket's anchor — the streaming twin of the batch
@@ -116,7 +116,7 @@ object StreamingIngest {
     * duplicate GROUPS keep full recall under the transitive closure
     * that consumes these pairs. When all data arrives in one
     * micro-batch the emitted pair set equals
-    * `Dedup.minhashCandidates(sigs, maxBucket = 1)` (StreamingSpec
+    * `MinHash.minhashCandidates(sigs, maxBucket = 1)` (StreamingSpec
     * proves it). Pairs may repeat across bands — the consumer
     * distincts, as the batch path does.
     *
@@ -138,8 +138,8 @@ object StreamingIngest {
     import spark.implicits._
     val timeout = if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
                   else GroupStateTimeout.NoTimeout
-    val sigs = graft.ops.Dedup.minhashSignatures(docs, numHashes, shingle)
-    graft.ops.Dedup.bandedBuckets(sigs, bands)
+    val sigs = graft.canon.MinHash.minhashSignatures(docs, numHashes, shingle)
+    graft.canon.MinHash.bandedBuckets(sigs, bands)
       .as[(Long, Int, Int)]
       .groupByKey { case (_, band, bh) => (band, bh) }
       .flatMapGroupsWithState[Long, (Long, Long)](
@@ -160,7 +160,7 @@ object StreamingIngest {
   }
 
   /** Portable-arithmetic twin of [[neardupStream]]: signatures and band
-    * keys come from [[graft.ops.Dedup.portableMinhashSignatures]] /
+    * keys come from [[graft.canon.MinHash.portableMinhashSignatures]] /
     * `portableBandKeys` — no engine-internal hash anywhere in the
     * bucket keys — so the anchor-pair stream this emits is recomputable
     * by an external engine: the DuckDB oracle replays banding +
@@ -175,8 +175,8 @@ object StreamingIngest {
       implicit spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
-    val sigs = graft.ops.Dedup.portableMinhashSignatures(docs, numHashes, shingle)
-    graft.ops.Dedup.portableBandKeys(sigs, bands, numHashes)
+    val sigs = graft.canon.MinHash.portableMinhashSignatures(docs, numHashes, shingle)
+    graft.canon.MinHash.portableBandKeys(sigs, bands, numHashes)
       .as[(Long, Int, String)]
       .groupByKey { case (_, band, bk) => (band, bk) }
       .flatMapGroupsWithState[Long, (Long, Long)](

@@ -1,5 +1,6 @@
 package graft
 
+import graft.canon.MinHash
 import graft.ops.{Dedup, TextAnalysis}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,10 +22,10 @@ class DedupSpec extends AnyFunSuite {
 
   test("minhash candidate pairs: capped == uncapped when buckets fit the cap") {
     val docs = corpus(60)
-    val sigs = Dedup.minhashSignatures(docs)
-    val uncapped = Dedup.minhashCandidates(sigs, maxBucket = Int.MaxValue)
+    val sigs = MinHash.minhashSignatures(docs)
+    val uncapped = MinHash.minhashCandidates(sigs, maxBucket = Int.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val capped = Dedup.minhashCandidates(sigs, maxBucket = 64)
+    val capped = MinHash.minhashCandidates(sigs, maxBucket = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped === uncapped)
     assert(capped.nonEmpty)
@@ -35,8 +36,8 @@ class DedupSpec extends AnyFunSuite {
     val hot = (0 until 200).map(i =>
       (i.toLong, "identical boilerplate body repeated verbatim everywhere", "en", "s", 50L))
     val docs = hot.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val sigs = Dedup.minhashSignatures(docs)
-    val pairs = Dedup.minhashCandidates(sigs, maxBucket = 4)
+    val sigs = MinHash.minhashSignatures(docs)
+    val pairs = MinHash.minhashCandidates(sigs, maxBucket = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     // linear, not quadratic: <= cap * K pairs instead of K^2/2 = 19900
     assert(pairs.length <= 4 * 200)
@@ -129,7 +130,7 @@ class DedupSpec extends AnyFunSuite {
       (1L, "the quick brown fox jumps over the lazy dog again and again tonite", "en", "s", 0L),
       (2L, "completely different material with zero shared shingle windows here", "en", "s", 0L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val sigs = Dedup.portableMinhashSignatures(docs).collect()
+    val sigs = MinHash.portableMinhashSignatures(docs).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sigs.size === 3)
     // every slot is a value mod 2^31-1 (never the Long.MaxValue sentinel)

@@ -305,7 +305,7 @@ class OracleMarginSpec extends AnyFunSuite {
       .select((col("value") * 1e6).as("s")) // already rounded; audit the raw twin
     // recompute unrounded to audit the boundary the rounding crossed
     val planes = (0 until 8).map(b => Array.tabulate(64)(d =>
-      graft.ops.SimilaritySearch.portablePlaneCoef(s"rp_${b}_${d}")))
+      graft.canon.KnnJoin.portablePlaneCoef(s"rp_${b}_${d}")))
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(expr("transform(embedding, x -> cast(x as double))").as("vec"))
     val raw = e.select(array(planes.map(p =>

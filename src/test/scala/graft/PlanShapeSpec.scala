@@ -60,12 +60,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // register table and bottomk_distinct's over exactly k=64
     // TakeOrdered rows: their SinglePartition exchange carries one
     // partial-agg row per partition, never the corpus.
-    // ppjoin_pairs' global rarity-rank window touches one row per
-    // VOCAB entry after the df partial agg — shard_pack's bounded
-    // argument again. weighted_sample shares shard_pack's two-phase
-    // prefix sum (one row per bucket on the single partition);
-    // zorder_prune's global fold aggregates one row per FILE (≤256)
-    // after the per-file partial agg. dedup_growth's running sum walks
+    // weighted_sample shares shard_pack's two-phase prefix sum (one row
+    // per bucket on the single partition). dedup_growth's running sum walks
     // one row per 50-DOC BATCH after the bucket partial agg — the same
     // bounded prefix-sum shape as shard_pack.
     // rrf_fusion's two rank windows run over the ≤pool-row candidate
@@ -73,8 +69,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // MMR stage-2 class), never the corpus.
     val offenders = batchNames.filterNot(
       Set("shard_pack", "seq_pack", "corpus_shuffle", "hll_distinct",
-        "bottomk_distinct", "ppjoin_pairs", "weighted_sample",
-        "zorder_prune", "dedup_growth", "rrf_fusion"))
+        "bottomk_distinct", "weighted_sample", "dedup_growth", "rrf_fusion"))
       .filter(n => plan(n).contains("SinglePartition"))
     assert(offenders.isEmpty,
       s"unexpected single-partition exchange in: ${offenders.mkString(", ")}")

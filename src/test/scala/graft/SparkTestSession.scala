@@ -14,8 +14,6 @@ object SparkTestSession {
       // wide-alias kNN/lineage plans — every session in this repo
       // disables it (GraftSession, Verify, Explain do too)
       .config("spark.sql.constraintPropagation.enabled", "false")
-      // trust single-file-per-bucket sortBy metadata (Layout.bucketedRollup)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -192,8 +192,8 @@ class StreamingSpec extends AnyFunSuite {
     val streaming = spark.sql("SELECT DISTINCT a, b FROM neardup_full")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // batch twin: identical buckets, anchor = bucket minimum (rank 1)
-    val sigs = graft.ops.Dedup.minhashSignatures(docs)
-    val batch = graft.ops.Dedup.minhashCandidates(sigs, maxBucket = 1)
+    val sigs = graft.canon.MinHash.minhashSignatures(docs)
+    val batch = graft.canon.MinHash.minhashCandidates(sigs, maxBucket = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streaming === batch)
     assert(streaming.nonEmpty)
@@ -214,8 +214,8 @@ class StreamingSpec extends AnyFunSuite {
     val streaming = spark.sql("SELECT DISTINCT a, b FROM neardup_port")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // batch twin: identical portable buckets, anchor = bucket minimum
-    val keys = graft.ops.Dedup.portableBandKeys(
-      graft.ops.Dedup.portableMinhashSignatures(docs), bands = 4, numHashes = 16)
+    val keys = graft.canon.MinHash.portableBandKeys(
+      graft.canon.MinHash.portableMinhashSignatures(docs), bands = 4, numHashes = 16)
     val anchors = keys.groupBy("band", "bkey").agg(fmin("doc_id").as("anchor"))
     val batch = keys.join(anchors, Seq("band", "bkey"))
       .where(col("doc_id") =!= col("anchor"))
