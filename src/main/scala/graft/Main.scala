@@ -52,11 +52,14 @@ object Main {
     // empty corpus ⇒ empty partitioned dir ⇒ schema inference would fail
     val triples = scala.util.Try(spark.read.parquet(s"$outDir/triples"))
     val nTriples = triples.map(_.count()).getOrElse(0L)
+    // files per table: a write layout regression shows in every run
+    val files = Seq("triples", "frames", "nodes")
+      .map(t => s"$t:${KgPipeline.dataFiles(spark, s"$outDir/$t").size}").mkString(",")
     println(f"[graft] rows=$rows repos=$nRepos cores=$cores wall=$secs%.2fs " +
       f"triples=$nTriples rate=${nTriples / secs}%.0f triples/sec " +
       f"jobs=${jobCount.get} taskSec=${taskTime.get / 1000.0}%.0f " +
       f"util=${taskTime.get / 1000.0 / (cores * secs) * 100}%.0f%% " +
-      f"gcSec=${gcTime.get / 1000.0}%.0f")
+      f"gcSec=${gcTime.get / 1000.0}%.0f files=$files")
     triples.foreach(_.groupBy("pred").count().orderBy("pred").show(20, truncate = false))
     spark.stop()
   }

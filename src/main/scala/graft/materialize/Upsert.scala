@@ -20,8 +20,11 @@ object Upsert {
     */
   def upsert(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame = {
     val deduped = incoming.dropDuplicates(keys)
+    // the live keys are not deduplicated: repeats on the right of an
+    // anti-join cannot change which rows it keeps, and a distinct would
+    // cost a shuffle and an aggregate over the whole live graph per batch
     existing.unionByName(
-      deduped.join(existing.select(keys.map(col): _*).distinct(), keys, "left_anti"))
+      deduped.join(existing.select(keys.map(col): _*), keys, "left_anti"))
   }
 
   /** `fail_on_exists` analog (ship.py:10-16): throws if any incoming key

@@ -13,10 +13,12 @@ import org.apache.spark.sql.functions._
   *   fusion (A15) → broadcast entity-link join (A16) → triple union
   *   (A18/A19) → partitioned write.
   *
-  * Stage boundaries match the checkpoint/resume plan; only the final
-  * write repartitions (by `pred`), everything upstream is map-side +
-  * broadcast joins — the property that makes throughput scale ~linearly
-  * with cores (BASELINE.md §3 protocol).
+  * Stage boundaries match the checkpoint/resume plan; everything
+  * upstream of the write is map-side + broadcast joins — the property
+  * that makes throughput scale ~linearly with cores (BASELINE.md §3
+  * protocol). The write hash-partitions each table on its key, into as
+  * many partitions as AQE sizes the data to (`spark.sql.shuffle.partitions`
+  * when AQE is off).
   */
 object KgPipeline {
 
@@ -138,10 +140,12 @@ object KgPipeline {
     * deterministic sort within partitions for byte-stable resume).
     */
   def write(result: Result, outDir: String): Unit = {
-    val spark = result.triples.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // hash on (pred, subj) so every writer task carries work — a plain
-    // repartition(pred) would funnel each predicate through one task;
+    // No partition count: AQE coalesces a by-column repartition to the
+    // data size, so a small batch writes one file per partition value,
+    // and `parallelismFirst` still keeps at least one partition per core
+    // on a large write (`spark.sql.shuffle.partitions` when AQE is off).
+    // Hash on (pred, subj), not pred alone, so a large predicate is not
+    // funnelled through one task;
     // sortWithinPartitions leads with pred so the partitionBy writer
     // keeps a single open file per task.
     // The three writes are INDEPENDENT jobs submitted concurrently: the
@@ -155,22 +159,31 @@ object KgPipeline {
     val writes = Seq(
       Future {
         result.triples
-          .repartition(parts, col("pred"), col("subj"))
+          .repartition(col("pred"), col("subj"))
           .sortWithinPartitions("pred", "subj", "obj")
           .write.mode("overwrite").partitionBy("pred").parquet(s"$outDir/triples")
       },
       Future {
         result.frames
-          .repartition(parts, col("inspection_id"), col("frame_id"))
+          .repartition(col("inspection_id"), col("frame_id"))
           .sortWithinPartitions("inspection_id", "frame_id")
           .write.mode("overwrite").parquet(s"$outDir/frames")
       },
       Future {
         result.nodes
-          .repartition(parts, col("label"), col("id"))
+          .repartition(col("label"), col("id"))
           .sortWithinPartitions("label", "id")
           .write.mode("overwrite").partitionBy("label").parquet(s"$outDir/nodes")
       })
     writes.foreach(Await.result(_, Duration.Inf))
+  }
+
+  /** The data files under one table directory of a [[write]], at any
+    * partition depth (`_SUCCESS` and checksum files are not counted). */
+  def dataFiles(spark: SparkSession, tableDir: String): Seq[org.apache.hadoop.fs.Path] = {
+    val dir = new org.apache.hadoop.fs.Path(tableDir)
+    val it = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(dir, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(_.getName.startsWith("part-")).toSeq
   }
 }

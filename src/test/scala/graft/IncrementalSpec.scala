@@ -52,6 +52,18 @@ class IncrementalSpec extends AnyFunSuite {
     assert(tset(Upsert.upsert(retracted, tR, keys)) === fullSet)
   }
 
+  test("upsert: a key repeated in existing and incoming adds only the new key") {
+    import spark.implicits._
+    // `v` tells the copies of a key apart: existing rows are kept as they
+    // are, repeats included, and no incoming row of a live key gets in
+    val existing = Seq(("a", "P", "x", 1), ("a", "P", "x", 2), ("b", "P", "y", 3))
+    val incoming = Seq(("a", "P", "x", 7), ("a", "P", "x", 8), ("c", "P", "z", 9))
+    val cols = keys :+ "v"
+    val merged = Upsert.upsert(existing.toDF(cols: _*), incoming.toDF(cols: _*), keys)
+      .as[(String, String, String, Int)].collect().toSeq
+    assert(merged.sorted === (existing :+ (("c", "P", "z", 9))).sorted)
+  }
+
   test("asOfSnapshot: latest-op-wins time travel over an add/del ledger") {
     import spark.implicits._
     // (subj, op, ts_us, event_id): X add@10 del@20; Y add@10 del@20 add@30;

@@ -1,0 +1,80 @@
+package graft
+
+import graft.corpus.CorpusGen
+import graft.pipeline.KgPipeline
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+
+/** `KgPipeline.write`: each table reads back unchanged, laid out by its
+  * partition column, in files sized to the data — one per partition
+  * value for a small batch under AQE — and with the same rows when AQE
+  * is off and the write falls back to `spark.sql.shuffle.partitions`.
+  */
+class KgPipelineWriteSpec extends AnyFunSuite {
+  lazy implicit val spark: org.apache.spark.sql.SparkSession = SparkTestSession.spark
+
+  private lazy val result = {
+    val r = KgPipeline.runFull(
+      CorpusGen.corpus(spark, CorpusGen.Config(rows = 600, nRepos = 2, partitions = 4)),
+      exactKnn = false)
+    r.copy(triples = r.triples.persist(), frames = r.frames.persist(), nodes = r.nodes.persist())
+  }
+  private lazy val tables =
+    Seq("triples" -> result.triples, "frames" -> result.frames, "nodes" -> result.nodes)
+
+  private def multiset(df: DataFrame): Map[Row, Int] =
+    df.collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
+
+  /** Table `t` as written, read with the schema and column order of `in`. */
+  private def readBack(outDir: String, t: String, in: DataFrame): DataFrame =
+    spark.read.schema(in.schema).parquet(s"$outDir/$t")
+      .select(in.columns.toIndexedSeq.map(col): _*)
+
+  private def tempDir(): String =
+    java.nio.file.Files.createTempDirectory("kg-write").toString
+
+  private lazy val outDir = {
+    val d = tempDir()
+    KgPipeline.write(result, d)
+    d
+  }
+
+  test("every table reads back equal to its input as a multiset") {
+    for ((t, in) <- tables) {
+      val expected = multiset(in)
+      assert(expected.nonEmpty, t)
+      assert(multiset(readBack(outDir, t, in)) === expected, t)
+    }
+  }
+
+  test("triples are partitioned by pred and nodes by label") {
+    def dirs(table: String) =
+      new java.io.File(s"$outDir/$table").listFiles().filter(_.isDirectory).map(_.getName).toSet
+    val preds = result.triples.select("pred").distinct().collect().map(_.getString(0)).toSet
+    val labels = result.nodes.select("label").distinct().collect().map(_.getString(0)).toSet
+    assert(dirs("triples") === preds.map(p => s"pred=$p"))
+    assert(dirs("nodes") === labels.map(l => s"label=$l"))
+  }
+
+  test("a small batch writes at most one data file per partition value") {
+    for ((t, _) <- tables) {
+      val files = KgPipeline.dataFiles(spark, s"$outDir/$t")
+      assert(files.nonEmpty, t)
+      val perValue = files.groupBy(_.getParent.getName).map { case (v, fs) => v -> fs.size }
+      assert(perValue.values.forall(_ == 1), s"$t: $perValue")
+    }
+  }
+
+  test("with AQE off the write keeps the same rows") {
+    val key = "spark.sql.adaptive.enabled"
+    val before = spark.conf.get(key)
+    val off = tempDir()
+    try {
+      spark.conf.set(key, "false")
+      KgPipeline.write(result, off)
+    } finally spark.conf.set(key, before)
+    for ((t, in) <- tables)
+      assert(multiset(readBack(off, t, in)) === multiset(readBack(outDir, t, in)), t)
+  }
+}
