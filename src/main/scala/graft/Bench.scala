@@ -21,8 +21,8 @@ object Bench {
     * bench must measure the engine's tuned configuration — a default
     * /tmp shuffle was costing the 32-core pipeline 2× wall.
     */
-  def session(cores: Int, aqeOverride: Option[Boolean] = None): SparkSession =
-    graft.core.GraftSession(cores, "graft-bench", aqeOverride)
+  def session(cores: Int, aqe: Boolean = true): SparkSession =
+    graft.core.GraftSession(cores, "graft-bench", aqe)
 
   /** One full pipeline run; returns (seconds, triples). `warmupRows > 0`
     * first runs a miniature pipeline in the same session so the timed

@@ -19,7 +19,7 @@ package graft
 object ScaleLeg {
   def main(args: Array[String]): Unit = {
     val Array(rows, repos, cores, outDir) = args.take(4)
-    val aqe = Some(sys.env.getOrElse("SPARK_GRAFT_SCALE_AQE", "0") == "1")
+    val aqe = sys.env.getOrElse("SPARK_GRAFT_SCALE_AQE", "0") == "1"
     val spark = Bench.session(cores.toInt, aqe)
     // diagnostics mirroring graft.Main: Σ task time + GC per leg (stderr,
     // not part of the SCALELEG contract line)

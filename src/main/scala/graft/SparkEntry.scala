@@ -3,7 +3,7 @@ package graft
 import graft.core.{CorpusRow, Ontology}
 import graft.extract.MentionExtractor
 import graft.link.{EntityLinker, ShipCatalog}
-import graft.ops.{Dedup, Multimodal, SimilaritySearch, TextAnalysis}
+import graft.ops.{Dedup, SimilaritySearch, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -869,65 +869,6 @@ object SparkEntry {
         .select(col("doc_id"), explode(col("fingerprints")).as("fingerprint"))
         .orderBy("doc_id", "fingerprint")
     }),
-    // full decode surface: real PNG decode for images, synthetic-
-    // container header parse for audio/video — every output field is
-    // independently recomputable, so the whole table is hash-checked
-    "multimodal_decode" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Multimodal.decodeFeatures(Multimodal.syntheticMedia(s, 1000))
-        .select(col("media_id"), col("kind"), col("width"), col("height"),
-          col("nFrames").as("n_frames"), round(col("meanLuma"), 6).as("mean_luma"))
-        .orderBy("media_id")
-    }),
-    "multimodal_frame_sample" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Multimodal.sampleFrames(
-        Multimodal.decodeFeatures(Multimodal.syntheticMedia(s, 1000)), step = 30)
-        .orderBy("media_id", "frame_index")
-    }),
-    // REAL image decode (javax.imageio over real PNG bytes): the oracle
-    // never sees the images — it recomputes dims + mean luma from the
-    // closed-form pixel pattern, so a hash match proves the encoder →
-    // bytes → decoder → raster arithmetic round-trips exactly
-    "multimodal_image_decode" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Multimodal.decodeFeatures(Multimodal.syntheticMedia(s, 1000))
-        .where(col("kind") === "image")
-        .select(col("media_id"), col("width"), col("height"),
-          round(col("meanLuma"), 6).as("mean_luma"))
-        .orderBy("media_id")
-    }),
-    // REAL audio decode (javax.sound.sampled over real WAV/PCM bytes):
-    // the oracle never hears the audio — it recomputes rate, sample
-    // count and |amplitude| sum from the closed-form sample formula, so
-    // a hash match proves encoder → RIFF bytes → decoder → sample
-    // arithmetic round-trips exactly; every output is an exact integer
-    "multimodal_audio_decode" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Multimodal.decodeAudioFeatures(Multimodal.syntheticMedia(s, 1000))
-        .orderBy("media_id")
-    }),
-    // perceptual image near-dup: dHash over REAL decoded PNG rasters
-    // (9×8 integer block grid, cross-multiplied brightness compares) +
-    // exact-fingerprint canonicalization; the oracle recomputes grid,
-    // bits and keeper from the synthetic pixel formula without ever
-    // seeing an image — a hash match proves encoder → PNG bytes →
-    // decoder → grid/compare/canon arithmetic end to end
-    "image_dhash" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Multimodal.imageDhash(Multimodal.syntheticMedia(s, 1000))
-        .orderBy("media_id")
-    }),
-    // Hamming-ball (≤6 of 64 bits) image near-dup over the same dHash:
-    // 4×16-bit bands → capped equi-join buckets → exact popcount. The
-    // oracle replays fingerprint → banding → rank cap → popcount from
-    // the pixel formula, so the hash gate covers the full candidate
-    // machinery including the hot-bucket anchor rule
-    "image_neardup" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Multimodal.imageNearDup(Multimodal.syntheticMedia(s, 1000))
-        .orderBy("a", "b")
-    }),
     "fuzzy_link" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       import s.implicits._
@@ -1082,17 +1023,6 @@ object SparkEntry {
         .select(col("doc_id"), col("lang"), col("tokens"), col("quality"))
         .orderBy("doc_id")
     }),
-    // benchmark decontamination: distinct 8-grams vs a broadcast
-    // benchmark set (docs ≡ 0 mod 97 stand in for an eval suite)
-    "decontaminate" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val docs = t(s, dir, "documents")
-      graft.ops.Decontaminate.contamination(
-        docs, docs.where(col("doc_id") % 97 === 0), n = 8)
-        .select(col("doc_id"), col("n_grams"), col("n_contaminated"),
-          round(col("ratio"), 6).as("ratio"))
-        .orderBy("doc_id")
-    }),
     // PII scrubbing over deterministically planted emails/phones (the
     // synthetic corpus has none — the planting is the test harness, the
     // operator is generic)
@@ -1160,42 +1090,6 @@ object SparkEntry {
         .where(col("jaccard") >= 0.1)
       graft.ops.Dedup.canonicalize(docs, pairs).orderBy("doc_id")
     }),
-    // DoReMi-style domain reweighting: portable md5 keep-bucket per
-    // source, broadcast weights join — sources outside the mixture drop
-    "source_sample" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      graft.ops.Mixing.sourceSample(t(s, dir, "documents"),
-        Map("src0" -> 0.9, "src1" -> 0.5, "src2" -> 0.25, "src3" -> 0.1))
-        .orderBy("doc_id")
-    }),
-    // temperature-scaled (α = ½) source sampling: per-source quota
-    // budget·⌊√n⌋ div Σ⌊√n⌋, filled in the portable (md5(text), doc_id)
-    // order — the multilingual tail-up-weighting classic, admitted set
-    // replayed exactly by the oracle (OracleMarginSpec audits ⌊√n⌋)
-    "temperature_mix" -> ((s, dir) =>
-      graft.ops.Mixing.temperatureSample(t(s, dir, "documents"), budget = 200L)
-        .orderBy("doc_id")),
-    // data-constrained epoch mixing: budget 900 pushes every sf0.01
-    // source's quota past its 25 docs (quota 45 → one full epoch +
-    // 20-doc hash-order top-up), so n_copies ∈ {1, 2} is exercised;
-    // Σ n_copies per source = quota exactly
-    "epoch_mix" -> ((s, dir) =>
-      graft.ops.Mixing.epochSample(t(s, dir, "documents"), budget = 900L)
-        .orderBy("doc_id")),
-    // token-budget shard packing via the two-phase distributed prefix
-    // sum (bucketWidth 64 at test scale so the bucket-offset path is
-    // actually exercised across ~8 buckets)
-    "shard_pack" -> ((s, dir) =>
-      graft.ops.Mixing.shardPack(t(s, dir, "documents"),
-        shardTokens = 2000L, bucketWidth = 64L)
-        .orderBy("doc_id")),
-    // corpus-level rarity: mean fixed-point inverse document frequency
-    "idf_score" -> ((s, dir) =>
-      graft.ops.Mixing.idfScore(t(s, dir, "documents")).orderBy("doc_id")),
-    // content-keyed train/val/test split: exact duplicates cannot
-    // straddle the eval boundary by construction (portable md5 bucket)
-    "dataset_split" -> ((s, dir) =>
-      graft.ops.Mixing.datasetSplit(t(s, dir, "documents")).orderBy("doc_id")),
     // tokenizer vocabulary: top-k words, deterministic tie-break;
     // k=20 against the 31-word synthetic vocab so the selection
     // boundary (count ties broken by word) is actually exercised
@@ -1215,19 +1109,6 @@ object SparkEntry {
     "dsir_weights" -> ((s, dir) =>
       graft.ops.Selection.dsirWeights(t(s, dir, "documents"),
         targetSources = Seq("src0", "src1", "src2"), buckets = 64L)
-        .orderBy("doc_id")),
-    // fixed-length training-sequence packing: 128-token sequences over
-    // ~60-word docs, so most sequences contain a doc boundary and many
-    // docs span two sequences — the segment-map rows a trainer masks on
-    "seq_pack" -> ((s, dir) =>
-      graft.ops.Mixing.packSequences(t(s, dir, "documents"),
-        seqTokens = 128L, bucketWidth = 64L)
-        .orderBy("seq_id", "doc_id")),
-    // deterministic global corpus shuffle: seed-keyed md5 order with
-    // the dense training position materialized by the two-phase rank
-    // (256-bucket range offsets, never a corpus-wide window)
-    "corpus_shuffle" -> ((s, dir) =>
-      graft.ops.Mixing.shuffleOrder(t(s, dir, "documents"), seed = 7L)
         .orderBy("doc_id")),
     // HyperLogLog distinct-content sketch: the 64-row register table
     // (the mergeable state itself — shards combine by elementwise max)
@@ -1314,15 +1195,6 @@ object SparkEntry {
       graft.ops.GraphRank.triangleCounts(nodes, edges)
         .select(col("id").as("vec_id"), col("n_triangles"))
         .orderBy("vec_id")
-    }),
-    // Bloom-filter decontamination: same benchmark slice + 8-grams as
-    // `decontaminate`, membership via the 8192-bit/4-salt filter —
-    // bloom_hits ≥ n_contaminated always (no false negatives)
-    "bloom_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.ops.Decontaminate.bloomContamination(
-        docs, docs.where(col("doc_id") % 97 === 0), n = 8)
-        .orderBy("doc_id")
     }),
     // bottom-k content sample: deterministic mergeable uniform sample,
     // k smallest (md5-32bit, doc_id) — map-side top-k, no shuffle
@@ -1446,12 +1318,6 @@ object SparkEntry {
       graft.ops.GraphRank.randomWalks(nodes, edges, steps = 4)
         .orderBy("walk_id", "step")
     }),
-    // contrastive hard-negative mining: per anchor the top-5 most-
-    // similar CROSS-label vectors from its portable hyperplane bucket
-    // (rank-capped candidate side — linear, never all-pairs)
-    "hard_negatives" -> ((s, dir) =>
-      graft.ops.Contrastive.hardNegatives(t(s, dir, "embeddings"))
-        .orderBy("vec_id", "rank")),
     // multi-pass sorted-neighborhood blocking (prefix + reversed-suffix
     // keys), explode-probe successor pairing, exact integer word-3-gram
     // Jaccard verify — the classic ER family next to the hash ones
@@ -1490,7 +1356,7 @@ object SparkEntry {
       TextAnalysis.pmiPairs(t(s, dir, "documents"))),
     // deterministic stratified sample: EXACT ceil(n*0.2) docs per
     // source by (md5-bucket, doc_id) rank — the equal-allocation
-    // complement to source_sample's in-expectation hash thresholding
+    // complement to in-expectation hash thresholding
     "stratified_sample" -> ((s, dir) =>
       graft.ops.Selection.stratifiedSample(t(s, dir, "documents"))
         .orderBy("doc_id")),
@@ -1553,11 +1419,6 @@ object SparkEntry {
         .select(col("id").as("vec_id"), col("dist"))
         .orderBy("vec_id")
     }),
-    // per-source KL divergence from the corpus token mix, exact
-    // token·milli-log2 integers via the signed interpolated floor-log2
-    "source_kl" -> ((s, dir) =>
-      graft.ops.Mixing.sourceKl(t(s, dir, "documents"))
-        .orderBy("source")),
     // semi-structured extraction: the JSON props column parsed and
     // aggregated per event type (get_json_object ↔ json_extract_string)
     "q29_json_props" -> ((s, dir) =>
@@ -1567,13 +1428,7 @@ object SparkEntry {
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("k").as("sum_k"),
           min("k").as("min_k"), max("k").as("max_k"))
-        .orderBy("event_type")),
-    // PPS systematic weighted sampling: k grid points over the
-    // cumulative weight axis (two-phase distributed prefix sum); the
-    // oracle replays every pick count off its own window cumsum
-    "weighted_sample" -> ((s, dir) =>
-      graft.ops.Mixing.weightedSample(t(s, dir, "documents"))
-        .orderBy("doc_id"))
+        .orderBy("event_type"))
   )
 
   /** Shared CTE chain of the HLL oracles: register = first md5 hex byte
@@ -1958,138 +1813,6 @@ object SparkEntry {
       """SELECT doc_id, lang FROM documents
         | WHERE cast(concat('0x', substr(md5(text), 1, 8)) as bigint) % 1000000 < 300000
         | ORDER BY doc_id""".stripMargin,
-    // full decode table: image rows mirror the PNG pixel formula (as in
-    // multimodal_image_decode); audio rows mirror the WAV sample formula
-    // (real decode — width carries the sample rate, nFrames the sample
-    // count, mean_luma the mean |amplitude|); video rows mirror the
-    // synthetic container header fields the stub decoder parses
-    "multimodal_decode" ->
-      """WITH d AS (SELECT i,
-        |    CASE cast(i % 3 as int) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind
-        |  FROM generate_series(0, 999) t(i))
-        | SELECT cast(i as bigint) AS media_id, kind,
-        |  cast(CASE WHEN kind = 'image' THEN 8 + i % 16
-        |            WHEN kind = 'audio' THEN 8000 + (i % 8) * 1000
-        |            ELSE 64 + i % 256 END as int) AS width,
-        |  cast(CASE WHEN kind = 'image' THEN 8 + (i // 16) % 16
-        |            WHEN kind = 'audio' THEN 1
-        |            ELSE 64 + (i // 7) % 256 END as int) AS height,
-        |  cast(CASE WHEN kind = 'video' THEN 1 + i % 290
-        |            WHEN kind = 'audio' THEN 256 + i % 512
-        |            ELSE 1 END as int) AS n_frames,
-        |  round(CASE WHEN kind = 'image'
-        |    THEN cast(list_sum(list_transform(generate_series(0, (8 + i % 16) * (8 + (i // 16) % 16) - 1),
-        |      p -> ((p % (8 + i % 16)) * 7 + (p // (8 + i % 16)) * 13 + i) % 256)) as double)
-        |      / ((8 + i % 16) * (8 + (i // 16) % 16)) / 255.0
-        |    WHEN kind = 'audio'
-        |    THEN cast(list_sum(list_transform(generate_series(0, 255 + i % 512),
-        |      j -> abs(((i * 131 + j * 37) % 65536) - 32768))) as double)
-        |      / (256 + i % 512) / 32768.0
-        |    ELSE cast(i % 251 as double) / 255.0 END, 6) AS mean_luma
-        | FROM d ORDER BY media_id""".stripMargin,
-    // replays the REAL WAV decode analytically: rate/count from the id
-    // formulas, |amplitude| sum over the closed-form sample pattern —
-    // all-integer outputs, truncating milli division
-    "multimodal_audio_decode" ->
-      """WITH a AS (SELECT i, 8000 + (i % 8) * 1000 AS sample_rate, 256 + i % 512 AS n
-        |   FROM generate_series(0, 999) t(i) WHERE i % 3 = 1),
-        | s AS (SELECT i, sample_rate, n, unnest(generate_series(0, n - 1)) AS j FROM a),
-        | t AS (SELECT i, sample_rate, n,
-        |     sum(abs(((i * 131 + j * 37) % 65536) - 32768)) AS amp_sum
-        |   FROM s GROUP BY 1, 2, 3)
-        | SELECT cast(i as bigint) AS media_id,
-        |   cast(sample_rate as bigint) AS sample_rate,
-        |   cast(n as bigint) AS n_samples,
-        |   cast(amp_sum as bigint) AS amp_sum,
-        |   (1000 * cast(amp_sum as bigint)) // (cast(n as bigint) * 32768) AS amp_milli
-        | FROM t ORDER BY media_id""".stripMargin,
-    // replays the dHash from the synthetic pixel formula: pixels →
-    // 9-col × 8-row block cells keyed by (x*9//w, y*8//h) → exact
-    // cross-multiplied brightness bits → two unsigned-32 halves →
-    // min-media_id canon per fingerprint; all-integer throughout.
-    // Empty ninth-column cells (w = 8) drop out of the join and the
-    // engine's 0 > 0 compare is false — both contribute bit 0
-    "image_dhash" ->
-      """WITH d AS (SELECT i, cast(8 + i % 16 as int) AS w,
-        |     cast(8 + (i // 16) % 16 as int) AS h
-        |   FROM generate_series(0, 999) t(i) WHERE i % 3 = 0),
-        | px AS (SELECT i, w, h, unnest(generate_series(0, w * h - 1)) AS p FROM d),
-        | pv AS (SELECT i, w, h,
-        |     ((p % w) * 9) // w AS ci, ((p // w) * 8) // h AS cj,
-        |     ((p % w) * 7 + (p // w) * 13 + i) % 256 AS v
-        |   FROM px),
-        | c AS (SELECT i, w, h, ci, cj, sum(v) AS s, count(*) AS n
-        |   FROM pv GROUP BY 1, 2, 3, 4, 5),
-        | b AS (SELECT a.i, a.w, a.h, a.cj * 8 + a.ci AS k,
-        |     CASE WHEN a.s * bb.n > bb.s * a.n THEN 1 ELSE 0 END AS bit
-        |   FROM c a JOIN c bb ON a.i = bb.i AND a.cj = bb.cj AND bb.ci = a.ci + 1
-        |   WHERE a.ci < 8),
-        | hsh AS (SELECT i, w, h,
-        |     cast(sum(CASE WHEN k >= 32 THEN bit * (1::BIGINT << (k - 32)) ELSE 0 END) as bigint) AS dhash_hi,
-        |     cast(sum(CASE WHEN k < 32 THEN bit * (1::BIGINT << k) ELSE 0 END) as bigint) AS dhash_lo
-        |   FROM b GROUP BY 1, 2, 3)
-        | SELECT cast(i as bigint) AS media_id, w AS width, h AS height,
-        |   dhash_hi, dhash_lo,
-        |   cast(min(i) OVER (PARTITION BY dhash_hi, dhash_lo) as bigint) AS canon_id
-        | FROM hsh ORDER BY media_id""".stripMargin,
-    // same fingerprint CTE, then the banding/cap/popcount replay: 4×16-bit
-    // bands, row_number rank ≤ 64 anchors ordered by media_id (identical
-    // tie-free ordering both engines), popcount over both unsigned-32
-    // halves, radius 6
-    "image_neardup" ->
-      """WITH d AS (SELECT i, cast(8 + i % 16 as int) AS w,
-        |     cast(8 + (i // 16) % 16 as int) AS h
-        |   FROM generate_series(0, 999) t(i) WHERE i % 3 = 0),
-        | px AS (SELECT i, w, h, unnest(generate_series(0, w * h - 1)) AS p FROM d),
-        | pv AS (SELECT i, w, h,
-        |     ((p % w) * 9) // w AS ci, ((p // w) * 8) // h AS cj,
-        |     ((p % w) * 7 + (p // w) * 13 + i) % 256 AS v
-        |   FROM px),
-        | c AS (SELECT i, ci, cj, sum(v) AS s, count(*) AS n
-        |   FROM pv GROUP BY 1, 2, 3),
-        | bb AS (SELECT a.i, a.cj * 8 + a.ci AS k,
-        |     CASE WHEN a.s * r.n > r.s * a.n THEN 1 ELSE 0 END AS bit
-        |   FROM c a JOIN c r ON a.i = r.i AND a.cj = r.cj AND r.ci = a.ci + 1
-        |   WHERE a.ci < 8),
-        | hsh AS (SELECT i,
-        |     cast(sum(CASE WHEN k >= 32 THEN bit * (1::BIGINT << (k - 32)) ELSE 0 END) as bigint) AS hi,
-        |     cast(sum(CASE WHEN k < 32 THEN bit * (1::BIGINT << k) ELSE 0 END) as bigint) AS lo
-        |   FROM bb GROUP BY 1),
-        | band AS (SELECT i, hi, lo, bd AS band,
-        |     CASE bd WHEN 0 THEN lo & 65535 WHEN 1 THEN (lo >> 16) & 65535
-        |             WHEN 2 THEN hi & 65535 ELSE (hi >> 16) & 65535 END AS bval
-        |   FROM hsh CROSS JOIN (SELECT unnest(range(0, 4)) AS bd) bands),
-        | rk AS (SELECT i, band, bval,
-        |     row_number() OVER (PARTITION BY band, bval ORDER BY i) AS r FROM band),
-        | cand AS (SELECT DISTINCT a.i AS a, b.i AS b
-        |   FROM rk a JOIN band b USING (band, bval)
-        |   WHERE a.r <= 64 AND a.i < b.i),
-        | ham AS (SELECT c.a, c.b,
-        |     cast(bit_count(xor(ha.hi, hb.hi)) + bit_count(xor(ha.lo, hb.lo)) as int) AS hamming
-        |   FROM cand c JOIN hsh ha ON ha.i = c.a JOIN hsh hb ON hb.i = c.b)
-        | SELECT cast(a as bigint) AS a, cast(b as bigint) AS b, hamming
-        | FROM ham WHERE hamming <= 6 ORDER BY a, b""".stripMargin,
-    // every 30th frame index of each video row, dims from the container
-    // header formulas
-    "multimodal_frame_sample" ->
-      """WITH v AS (SELECT i, 1 + i % 290 AS nf FROM generate_series(0, 999) t(i) WHERE i % 3 = 2)
-        | SELECT cast(i as bigint) AS media_id,
-        |  cast(unnest(generate_series(0, nf - 1, 30)) as int) AS frame_index,
-        |  cast(64 + i % 256 as int) AS width, cast(64 + (i // 7) % 256 as int) AS height
-        | FROM v ORDER BY media_id, frame_index""".stripMargin,
-    // mirrors Multimodal.syntheticMedia's pixel formula analytically:
-    // pixel(x,y) = (x*7 + y*13 + id) % 256, integer sum then the same
-    // double division chain as decodeImage — the engine decodes real PNG
-    // bytes, the oracle never touches an image
-    "multimodal_image_decode" ->
-      """WITH d AS (SELECT i, cast(8 + i % 16 as int) AS width,
-        |    cast(8 + (i // 16) % 16 as int) AS height
-        |  FROM generate_series(0, 999) t(i) WHERE i % 3 = 0)
-        | SELECT cast(i as bigint) AS media_id, width, height,
-        |  round(cast(list_sum(list_transform(generate_series(0, width * height - 1),
-        |    p -> ((p % width) * 7 + (p // width) * 13 + i) % 256)) as double)
-        |    / (width * height) / 255.0, 6) AS mean_luma
-        | FROM d ORDER BY media_id""".stripMargin,
     // grams are murmur-hashed on the Spark side, strings here: set SIZES
     // agree (the deterministic sf0.01 corpus has no colliding grams —
     // verified; a collision would fail the hash gate loudly, not silently)
@@ -2414,21 +2137,6 @@ object SparkEntry {
         | FROM reach GROUP BY a ORDER BY id""".stripMargin,
     "fuzzy_link" -> fuzzyLinkOracleSql,
     "pca_reduce" -> pcaReduceOracleSql,
-    // grams are murmur-hashed Spark-side, strings here (ngram_jaccard
-    // precedent: set sizes agree on the deterministic corpus)
-    "decontaminate" ->
-      """WITH g AS (SELECT doc_id, list_distinct(list_transform(
-        |     generate_series(1, greatest(len(string_split(text, ' ')) - 7, 1)),
-        |     i -> array_to_string(string_split(text, ' ')[i:i+7], ' '))) AS grams
-        |   FROM documents),
-        | bg AS (SELECT DISTINCT unnest(grams) AS g FROM g WHERE doc_id % 97 = 0),
-        | ex AS (SELECT doc_id, len(grams) AS n_grams, unnest(grams) AS g FROM g),
-        | m AS (SELECT e.doc_id, e.n_grams,
-        |       cast(sum(CASE WHEN bg.g IS NOT NULL THEN 1 ELSE 0 END) as bigint) AS n_contaminated
-        |       FROM ex e LEFT JOIN bg ON e.g = bg.g GROUP BY 1, 2)
-        | SELECT doc_id, cast(n_grams as int) AS n_grams, n_contaminated,
-        |  round(n_contaminated / n_grams, 6) AS ratio
-        | FROM m ORDER BY doc_id""".stripMargin,
     "pii_scrub" -> piiScrubOracleSql,
     "q28_length_quantiles" ->
       """SELECT lang, count(*) AS n,
@@ -2457,42 +2165,6 @@ object SparkEntry {
         | FROM (SELECT doc_id FROM documents WHERE doc_id < 200) d
         | LEFT JOIN comp c ON d.doc_id = c.doc_id
         | ORDER BY d.doc_id""".stripMargin,
-    "source_sample" ->
-      """SELECT doc_id, source, lang FROM documents
-        | WHERE source IN ('src0', 'src1', 'src2', 'src3')
-        |  AND cast(concat('0x', substr(md5(text), 1, 8)) as bigint) % 1000000 <
-        |   CASE source WHEN 'src0' THEN 900000 WHEN 'src1' THEN 500000
-        |    WHEN 'src2' THEN 250000 ELSE 100000 END
-        | ORDER BY doc_id""".stripMargin,
-    // replays the α=½ temperature quotas: per-source ⌊√n⌋ weights,
-    // integer 200·w div Σw quota, admission in (md5-hash, doc_id) order
-    "temperature_mix" ->
-      """WITH c AS (SELECT source, cast(count(*) as bigint) AS n
-        |   FROM documents GROUP BY source),
-        | w AS (SELECT source, cast(floor(sqrt(n)) as bigint) AS wt FROM c),
-        | tq AS (SELECT source, (200 * wt) // (SELECT sum(wt) FROM w) AS quota FROM w),
-        | rk AS (SELECT doc_id, source, row_number() OVER (PARTITION BY source
-        |     ORDER BY cast(concat('0x', substr(md5(text), 1, 8)) as bigint), doc_id) AS rank
-        |   FROM documents)
-        | SELECT rk.doc_id, rk.source, cast(rk.rank as bigint) AS rank
-        | FROM rk JOIN tq USING (source) WHERE rk.rank <= tq.quota
-        | ORDER BY doc_id""".stripMargin,
-    // replays the data-constrained epoch plan: quota div n full epochs
-    // for every doc + a quota mod n hash-order top-up copy
-    "epoch_mix" ->
-      """WITH c AS (SELECT source, cast(count(*) as bigint) AS n
-        |   FROM documents GROUP BY source),
-        | w AS (SELECT source, n, cast(floor(sqrt(n)) as bigint) AS wt FROM c),
-        | tq AS (SELECT source, n, (900 * wt) // (SELECT sum(wt) FROM w) AS quota FROM w),
-        | fr AS (SELECT source, quota // n AS f, quota % n AS rem FROM tq),
-        | rk AS (SELECT doc_id, source, row_number() OVER (PARTITION BY source
-        |     ORDER BY cast(concat('0x', substr(md5(text), 1, 8)) as bigint), doc_id) AS rank
-        |   FROM documents)
-        | SELECT rk.doc_id, rk.source,
-        |   cast(fr.f + CASE WHEN rk.rank <= fr.rem THEN 1 ELSE 0 END as bigint) AS n_copies
-        | FROM rk JOIN fr USING (source)
-        | WHERE fr.f + CASE WHEN rk.rank <= fr.rem THEN 1 ELSE 0 END > 0
-        | ORDER BY doc_id""".stripMargin,
     // replays streaming first-seen bucket anchors: with a single-batch
     // source the anchor is the bucket MINIMUM, so the pair set is
     // (anchor, member) over the portable band buckets
@@ -2506,15 +2178,6 @@ object SparkEntry {
          |  FROM band b JOIN anchors a USING (band, bkey)
          |  WHERE b.doc_id <> a.anchor)
          | SELECT a, b FROM pairs ORDER BY a, b""".stripMargin,
-    "dataset_split" ->
-      """WITH b AS (SELECT doc_id,
-        |   cast(concat('0x', substr(md5(text), 1, 8)) as bigint) % 1000 AS bucket
-        |  FROM documents)
-        | SELECT doc_id, bucket,
-        |  CASE WHEN bucket < 980 THEN 'train'
-        |       WHEN bucket < 990 THEN 'validation'
-        |       ELSE 'test' END AS split
-        | FROM b ORDER BY doc_id""".stripMargin,
     // replays the NB quality classifier: md5-content train slice,
     // per-class add-one word likelihoods, interpolated milli-log2
     // ratio per token + prior — identical L(num, den) arithmetic
@@ -2570,16 +2233,6 @@ object SparkEntry {
         | SELECT doc_id, cast(count(*) as bigint) AS n_grams,
         |   cast(sum(s_milli) as bigint) AS dsir_milli
         | FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // replays the deterministic shuffle as ONE global row_number over
-    // the seed-keyed md5 order — equal to the engine's two-phase rank
-    // because the first-hex-byte bucket order is a prefix of key order
-    "corpus_shuffle" ->
-      """WITH k AS (SELECT doc_id,
-        |   md5(concat('7', '_', cast(doc_id as varchar))) AS shuffle_key
-        |  FROM documents)
-        | SELECT doc_id, shuffle_key,
-        |   cast(row_number() OVER (ORDER BY shuffle_key, doc_id) - 1 as bigint) AS pos
-        | FROM k ORDER BY doc_id""".stripMargin,
     // replays the HLL register build digit for digit
     "hll_registers" ->
       s"""$hllCtes
@@ -2648,29 +2301,6 @@ object SparkEntry {
         |   FROM pv GROUP BY id)
         | SELECT nodes.id AS vec_id, coalesce(cnt.n_triangles, 0) AS n_triangles
         | FROM nodes LEFT JOIN cnt ON nodes.id = cnt.id ORDER BY vec_id""".stripMargin,
-    // replays the Bloom build (salt 'bloom<i>_', 8192 bits) and the
-    // all-4-bits membership fold over the decontaminate gram CTEs
-    "bloom_decontaminate" ->
-      """WITH g AS (SELECT doc_id, list_distinct(list_transform(
-        |     generate_series(1, greatest(len(string_split(text, ' ')) - 7, 1)),
-        |     i -> array_to_string(string_split(text, ' ')[i:i+7], ' '))) AS grams
-        |   FROM documents),
-        | bg AS (SELECT DISTINCT unnest(grams) AS g FROM g WHERE doc_id % 97 = 0),
-        | bits AS (SELECT DISTINCT
-        |     cast(concat('0x', substr(md5(concat('bloom', d.d, '_', g)), 1, 8)) as bigint) % 8192 AS bit
-        |   FROM bg CROSS JOIN generate_series(0, 3) d(d)),
-        | ex AS (SELECT doc_id, len(grams) AS n_grams, unnest(grams) AS g FROM g),
-        | pb AS (SELECT doc_id, n_grams, g,
-        |     cast(concat('0x', substr(md5(concat('bloom', d.d, '_', g)), 1, 8)) as bigint) % 8192 AS bit
-        |   FROM ex CROSS JOIN generate_series(0, 3) d(d)),
-        | pg AS (SELECT pb.doc_id, pb.n_grams, pb.g,
-        |     CASE WHEN sum(CASE WHEN b.bit IS NOT NULL THEN 1 ELSE 0 END) = 4
-        |          THEN 1 ELSE 0 END AS m
-        |   FROM pb LEFT JOIN bits b ON pb.bit = b.bit
-        |   GROUP BY pb.doc_id, pb.n_grams, pb.g)
-        | SELECT doc_id, cast(n_grams as int) AS n_grams,
-        |   cast(sum(m) as bigint) AS bloom_hits
-        | FROM pg GROUP BY doc_id, n_grams ORDER BY doc_id""".stripMargin,
     "bottomk_sample" ->
       """SELECT cast(concat('0x', substr(md5(text), 1, 8)) as bigint) AS h, doc_id
         | FROM documents ORDER BY h, doc_id LIMIT 100""".stripMargin,
@@ -2682,21 +2312,6 @@ object SparkEntry {
         |   (63 * 4294967296) // greatest(max(h), 1) AS est_distinct
         | FROM k""".stripMargin,
     "label_prop" -> labelPropOracleSql,
-    // replays sequence packing: prefix-sum starts in doc_id order, each
-    // doc exploded over the sequence ids it spans, segment arithmetic
-    "seq_pack" ->
-      s"""WITH t AS (SELECT doc_id, cast($tokSql as bigint) AS tokens FROM documents),
-        | tt AS (SELECT * FROM t WHERE tokens > 0),
-        | c AS (SELECT doc_id, tokens, cast(sum(tokens) OVER (ORDER BY doc_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tokens as bigint) AS start FROM tt),
-        | e AS (SELECT doc_id, tokens, start,
-        |   unnest(generate_series(start // 128, (start + tokens - 1) // 128)) AS seq_id
-        |   FROM c)
-        | SELECT seq_id, doc_id,
-        |   greatest(seq_id * 128 - start, 0) AS doc_from,
-        |   least((seq_id + 1) * 128 - start, tokens) - 1 AS doc_to,
-        |   greatest(start - seq_id * 128, 0) AS seq_off
-        | FROM e ORDER BY seq_id, doc_id""".stripMargin,
     "vocab_topk" ->
       """SELECT word, cast(count(*) as bigint) AS n
         | FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
@@ -2828,25 +2443,6 @@ object SparkEntry {
         | ham AS (SELECT c.a, c.b, cast(bit_count(xor(sa.sig, sb.sig)) as int) AS hamming
         |  FROM cand c JOIN sig sa ON sa.doc_id = c.a JOIN sig sb ON sb.doc_id = c.b)
         | SELECT a, b, hamming FROM ham WHERE hamming <= 3 ORDER BY a, b""".stripMargin,
-    "shard_pack" ->
-      s"""WITH t AS (SELECT doc_id, cast($tokSql as bigint) AS tokens FROM documents),
-         | c AS (SELECT doc_id, tokens, sum(tokens) OVER (ORDER BY doc_id
-         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM t)
-         | SELECT doc_id, tokens, cast((cum - tokens) // 2000 as bigint) AS shard_id,
-         |   cast((cum - tokens) % 2000 as bigint) AS pack_offset
-         | FROM c ORDER BY doc_id""".stripMargin,
-    // per-word floor(1e6/df) is IEEE division + floor (no transcendental),
-    // then everything stays int64 (order-free sum, truncating mean) —
-    // bit-exact both engines with NO rounding boundary
-    "idf_score" ->
-      """WITH occ AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
-        | df AS (SELECT word, count(DISTINCT doc_id) AS df FROM occ GROUP BY 1),
-        | j AS (SELECT o.doc_id, cast(floor(1000000.0 / d.df) as bigint) AS idf_micro
-        |       FROM occ o JOIN df d ON o.word = d.word),
-        | a AS (SELECT doc_id, count(*) AS n_words,
-        |       cast(sum(idf_micro) as bigint) AS s FROM j GROUP BY 1)
-        | SELECT doc_id, n_words, cast(s // n_words as bigint) AS idf_micro_mean
-        | FROM a ORDER BY doc_id""".stripMargin,
     // both engines work on the segment/gram STRINGS (no hash), so these
     // are bit-exact cross-engine; integer counts, one rounded division
     // replays the per-doc unigram entropy: (doc, word) counts, doc
@@ -3165,30 +2761,6 @@ object SparkEntry {
         |   UNION ALL SELECT walk_id, 4, node FROM f4)
         | ORDER BY walk_id, step""".stripMargin
     },
-    // the embedding_neardup_portable plane/bucket replay, kept per-label:
-    // capped candidate side, cross-label filter, per-anchor top-5 by
-    // (cosine DESC, neg_id) — ordering on the raw doubles both engines
-    // compute in the same op order, round-6 only at output
-    "hard_negatives" ->
-      """WITH e AS (SELECT vec_id, label, cast(embedding as double[]) AS v FROM embeddings),
-        | planes AS (SELECT b, list_transform(generate_series(0, 63),
-        |     d -> ((cast(concat('0x', substr(md5(concat(b, '_', d)), 1, 8)) as bigint) % 2001) - 1000) / 1000.0) AS p
-        |   FROM generate_series(0, 7) t(b)),
-        | sigs AS (SELECT e.vec_id,
-        |     string_agg(CASE WHEN list_inner_product(e.v, pl.p) >= 0 THEN '1' ELSE '0' END, '' ORDER BY pl.b) AS bucket
-        |   FROM e CROSS JOIN planes pl GROUP BY e.vec_id),
-        | sv AS (SELECT s.vec_id, s.bucket, e.label, e.v FROM sigs s JOIN e USING (vec_id)),
-        | cand AS (SELECT vec_id, bucket, label, v,
-        |     row_number() OVER (PARTITION BY bucket ORDER BY vec_id) AS rk FROM sv),
-        | scored AS (SELECT a.vec_id, c.vec_id AS neg_id,
-        |     list_cosine_similarity(a.v, c.v) AS cos_raw
-        |   FROM sv a JOIN cand c USING (bucket)
-        |   WHERE c.rk <= 64 AND a.label <> c.label),
-        | rk AS (SELECT vec_id, neg_id, cos_raw,
-        |     row_number() OVER (PARTITION BY vec_id ORDER BY cos_raw DESC, neg_id) AS rnk
-        |   FROM scored)
-        | SELECT vec_id, neg_id, cast(rnk as bigint) AS rank, round(cos_raw, 6) AS cosine
-        | FROM rk WHERE rnk <= 5 ORDER BY vec_id, rank""".stripMargin,
     // both SNM passes (prefix / reversed-suffix keys), the per-(pass,
     // block) rank, the w=2 successor window, first-pass pair dedup, and
     // the exact integer gram counts + truncating permille
@@ -3325,25 +2897,6 @@ object SparkEntry {
         | SELECT e.vec_id, cast(pl.b as bigint) AS dim,
         |   round(list_inner_product(e.v, pl.p), 6) AS value
         | FROM e CROSS JOIN planes pl ORDER BY vec_id, dim""".stripMargin,
-    // per-source KL: (source, word) token counts, corpus word totals,
-    // the signed interpolated milli-log2 of c_sw·T / t_w·T_s, summed
-    // token-weighted — identical integer arithmetic to the engine
-    "source_kl" ->
-      s"""WITH t AS (SELECT source, w FROM (
-        |     SELECT source, unnest(string_split(text, ' ')) AS w FROM documents) u
-        |   WHERE length(w) > 0),
-        | sw AS (SELECT source, w, cast(count(*) as bigint) AS csw FROM t GROUP BY 1, 2),
-        | tw AS (SELECT w, cast(count(*) as bigint) AS tw FROM t GROUP BY 1),
-        | ts AS (SELECT source, cast(sum(csw) as bigint) AS tsrc FROM sw GROUP BY 1),
-        | n AS (SELECT cast(count(*) as bigint) AS total FROM t),
-        | j AS (SELECT sw.source, sw.csw,
-        |     CASE WHEN sw.csw * total >= tw.tw * ts.tsrc
-        |       THEN ${lrmSql("sw.csw * total", "tw.tw * ts.tsrc")}
-        |       ELSE -(${lrmSql("tw.tw * ts.tsrc", "sw.csw * total")}) END AS slm
-        |   FROM sw JOIN tw USING (w) JOIN ts USING (source) CROSS JOIN n)
-        | SELECT source, cast(sum(csw) as bigint) AS n_tokens,
-        |   cast(sum(csw * slm) as bigint) AS kl_milli_tokens
-        | FROM j GROUP BY source ORDER BY source""".stripMargin,
     "hist_quantiles" ->
       """WITH b AS (SELECT lang, n_chars // 50 AS bin FROM documents),
         | c AS (SELECT lang, bin, cast(count(*) as bigint) AS c FROM b GROUP BY 1, 2),
@@ -3360,24 +2913,7 @@ object SparkEntry {
         | cast(sum(cast(json_extract_string(props, '$.k') as bigint)) as bigint) AS sum_k,
         | min(cast(json_extract_string(props, '$.k') as bigint)) AS min_k,
         | max(cast(json_extract_string(props, '$.k') as bigint)) AS max_k
-        | FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // PPS systematic sampling replayed off the window cumsum: every
-    // division has a CASE-guarded nonnegative numerator, where
-    // DuckDB's // and Spark's div agree exactly
-    "weighted_sample" ->
-      """WITH w AS (SELECT doc_id, cast(n_chars as bigint) AS weight
-        |   FROM documents WHERE n_chars > 0),
-        | c AS (SELECT doc_id, weight, coalesce(sum(weight) OVER (ORDER BY doc_id
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start_off FROM w),
-        | p AS (SELECT sum(weight) // 100 AS step, (sum(weight) // 100) // 2 AS phase FROM w)
-        |SELECT doc_id, weight, cast(start_off as bigint) AS start_off,
-        |  cast(n_picks as bigint) AS n_picks FROM (
-        | SELECT doc_id, weight, start_off,
-        |   greatest(least(CASE WHEN start_off + weight <= phase THEN 0
-        |       ELSE (start_off + weight - 1 - phase) // step + 1 END, 100)
-        |     - CASE WHEN start_off <= phase THEN 0
-        |       ELSE (start_off - phase + step - 1) // step END, 0) AS n_picks
-        | FROM c, p) q WHERE n_picks > 0 ORDER BY doc_id""".stripMargin
+        | FROM events GROUP BY 1 ORDER BY 1""".stripMargin
   )
 
   /** fingerprints oracle: the same base-31 polynomial k-gram hash

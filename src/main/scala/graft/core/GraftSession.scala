@@ -9,16 +9,16 @@ import org.apache.spark.sql.SparkSession
   * cores (not the 200 default).
   */
 object GraftSession {
-  /** `aqeOverride`: Some(b) forces AQE on/off regardless of
-    * SPARK_GRAFT_AQE — used by the bench's scaling legs, where the AQE
-    * planning constant (75 vs 20 driver-serial jobs on the pipeline) is
+  /** `aqe` turns adaptive query execution on (the default) or off. The
+    * bench's scaling legs turn it off, because there the AQE planning
+    * constant (75 vs 20 driver-serial jobs on the pipeline) is
     * pure overhead at both parallelism levels and AQE's runtime levers
     * (skew split, coalesce) don't bind at scaling-run sizes. Protocol,
     * not a cheat: BASELINE.md §5 measured AQE-off as ratio-neutral or
     * better at BOTH levels; the headline run keeps AQE on.
     */
   def apply(cores: Int, appName: String = "graft",
-            aqeOverride: Option[Boolean] = None): SparkSession = {
+            aqe: Boolean = true): SparkSession = {
     // 3x cores: straggler tails idle the fleet when partitions == cores;
     // AQE coalesces the small ones back
     val shufflePartitions = math.max(cores * 3, 24)
@@ -32,8 +32,7 @@ object GraftSession {
       .appName(appName)
       .config("spark.local.dir", localDir)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled",
-        aqeOverride.getOrElse(sys.env.getOrElse("SPARK_GRAFT_AQE", "1") == "1").toString)
+      .config("spark.sql.adaptive.enabled", aqe.toString)
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -46,11 +45,6 @@ object GraftSession {
       .config("spark.sql.constraintPropagation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // shuffle/spill codec. Default lz4; SPARK_GRAFT_CODEC=zstd trades
-      // CPU for fewer shuffle bytes — the right direction when the host
-      // memory bus, not the cores, is the limiter (BASELINE.md §4).
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_CODEC", "lz4"))
       // ObjectHashAggregate (typed Aggregators: top-k kNN ranker, union
       // coverage) falls back to SORT-BASED aggregation after 128 distinct
       // keys by default — with millions of src keys the ranking degraded

@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
 object Upsert {
 
   /** MERGE-style upsert: keep all existing rows, add incoming rows whose
-    * key is absent. Incoming dupes collapse to one row per key
-    * (deterministic: first by sort on all columns).
+    * key is absent. Incoming dupes collapse to one row per key via
+    * `dropDuplicates(keys)`, which keeps an arbitrary one of them: rows
+    * that share a key but differ in other columns give no guaranteed
+    * winner.
     */
   def upsert(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame = {
     val deduped = incoming.dropDuplicates(keys)

@@ -247,11 +247,10 @@ object Dedup {
 
   // ---------- n-gram Jaccard (exact, for candidate verification) ----------
 
-  /** Distinct hashed word-n-grams per document — the ONE gram builder
-    * shared by [[ngramJaccard]] and [[Decontaminate]] so the two
-    * oracle-gated operators cannot silently diverge. Splits once per
-    * row (an inlined split(text) would re-tokenize per gram); short
-    * docs yield their whole text as one gram.
+  /** Distinct hashed word-n-grams per document, the gram builder of
+    * [[ngramJaccard]]. Splits once per row (an inlined split(text)
+    * would re-tokenize per gram); short docs yield their whole text as
+    * one gram.
     */
   def gramSets(docs: DataFrame, n: Int): DataFrame =
     docs.select(col("doc_id"), split(col("text"), " ").as("words"))

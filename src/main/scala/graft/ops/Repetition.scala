@@ -177,9 +177,9 @@ object Repetition {
     * Integer outputs only — bit-exact cross-engine. Scale shape: the
     * same segment-keyed first-occurrence rank as [[segmentDedup]], a
     * bucket partial-agg (one row per batch survives), then a running
-    * sum over the bounded bucket table — shard_pack's two-phase
-    * prefix-sum argument: the SinglePartition exchange carries one row
-    * per BATCH, never the corpus.
+    * sum over the bounded bucket table — the two-phase prefix-sum
+    * argument: the SinglePartition exchange carries one row per BATCH,
+    * never the corpus.
     */
   def dedupGrowth(docs: DataFrame, segWords: Int = 10,
                   bucketDocs: Long = 50): DataFrame = {

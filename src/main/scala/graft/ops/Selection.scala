@@ -176,11 +176,11 @@ object Selection {
 
   /** Deterministic stratified sampling with EXACT per-stratum counts:
     * every source keeps ⌈n·permille/1000⌉ documents — the equal-rate
-    * allocation a mixture audit needs, where [[Mixing]]'s DoReMi
-    * hash-threshold sampler only hits its rate in expectation. The
-    * within-stratum order is (md5-bucket of doc_id, doc_id) — the
-    * portable hashBucket recipe — so the kept set is content-blind,
-    * reproducible, and replayable by any engine with md5.
+    * allocation a mixture audit needs, where a hash-threshold sampler
+    * only hits its rate in expectation. The within-stratum order is
+    * (md5-bucket of doc_id, doc_id) — the portable hashBucket recipe —
+    * so the kept set is content-blind, reproducible, and replayable by
+    * any engine with md5.
     *
     * Scale shape: one shuffle on source, a per-stratum window count +
     * row_number (each stratum streams through one task's sorter —

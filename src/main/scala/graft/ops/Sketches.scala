@@ -79,7 +79,7 @@ object Sketches {
     *
     * The final agg folds ≤ 64 rows — its single-partition exchange
     * carries one pre-aggregated row per partition, never the corpus
-    * (allow-listed in PlanShapeSpec next to shard_pack's prefix sum).
+    * (allow-listed in PlanShapeSpec next to dedup_growth's prefix sum).
     */
   def hllDistinct(df: DataFrame, key: Column): DataFrame =
     hllRegisters(df, key, HllM)
@@ -139,11 +139,11 @@ object Sketches {
   }
 
   /** Bloom filter: m = 8192 bits, k = 4 salted md5 positions. */
-  val BloomM = 8192L
-  val BloomK = 4
+  private val BloomM = 8192L
+  private val BloomK = 4
 
   /** Position-i bit of a key (salt `bloom<i>_`). */
-  def bloomPos(key: Column, i: Int): Column =
+  private def bloomPos(key: Column, i: Int): Column =
     pmod(conv(substring(md5(concat(lit(s"bloom${i}_"), key)), 1, 8), 16, 10)
       .cast("long"), lit(BloomM))
 

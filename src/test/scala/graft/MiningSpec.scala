@@ -1,11 +1,11 @@
 package graft
 
-import graft.ops.{Contrastive, Dedup, GraphRank}
+import graft.ops.{Dedup, GraphRank}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Random-walk corpus generation, hard-negative mining, and multi-pass
-  * sorted-neighborhood blocking.
+/** Random-walk corpus generation and multi-pass sorted-neighborhood
+  * blocking.
   */
 class MiningSpec extends AnyFunSuite {
   lazy implicit val spark: org.apache.spark.sql.SparkSession = SparkTestSession.spark
@@ -44,26 +44,6 @@ class MiningSpec extends AnyFunSuite {
     val b = GraphRank.randomWalks(nodes.repartition(7), edges.repartition(11), steps = 2)
       .orderBy("walk_id", "step").collect().toSeq
     assert(a === b)
-  }
-
-  test("hardNegatives: never emits a same-label pair, ranks contiguous, cosines non-increasing") {
-    val labels = emb.select(col("vec_id"), col("label").cast("long").as("l"))
-    val negs = Contrastive.hardNegatives(emb, k = 4).localCheckpoint(true)
-    assert(negs.count() > 0)
-    val joined = negs
-      .join(labels.withColumnRenamed("l", "la"), Seq("vec_id"))
-      .join(labels.select(col("vec_id").as("neg_id"), col("l").as("ln")), Seq("neg_id"))
-    assert(joined.where(col("la") === col("ln")).count() === 0,
-      "a hard negative shares the anchor's label")
-    val perAnchor = negs.groupBy("vec_id")
-      .agg(count(lit(1)).as("n"), max("rank").as("mx"), min("rank").as("mn"))
-    assert(perAnchor.where(col("mx") =!= col("n") || col("mn") =!= 1).count() === 0,
-      "ranks are not contiguous 1..n")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id").orderBy("rank")
-    assert(negs.withColumn("prev", lag("cosine", 1).over(w))
-      .where(col("prev").isNotNull && col("cosine") > col("prev")).count() === 0,
-      "cosines increase with rank")
   }
 
   test("sortedNeighborhood: pass 1 catches tail edits, pass 2 catches head edits") {

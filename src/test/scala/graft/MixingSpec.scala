@@ -1,201 +1,33 @@
 package graft
 
-import org.apache.spark.sql.Row
+import graft.ops.TextAnalysis
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.Mixing
 
-/** Corpus-mixing operators (ops/Mixing.scala): shard packing's
-  * two-phase prefix sum, source reweighting, and fixed-point IDF.
+/** Corpus-level TextAnalysis statistics: per-doc token entropy and the
+  * top-k vocabulary with its deterministic tie-break.
   */
 class MixingSpec extends AnyFunSuite {
   lazy implicit val spark: org.apache.spark.sql.SparkSession = SparkTestSession.spark
   import spark.implicits._
 
-  test("shardPack two-phase prefix sum is bucketWidth-invariant") {
-    val docs = (0L until 200L).map { i =>
-      (i, ("w " * (1 + (i % 37)).toInt).trim)
-    }.toDF("doc_id", "text")
-    val narrow = Mixing.shardPack(docs, shardTokens = 100L, bucketWidth = 7L)
-      .orderBy("doc_id").collect()
-    val single = Mixing.shardPack(docs, shardTokens = 100L, bucketWidth = 100000L)
-      .orderBy("doc_id").collect()
-    assert(narrow.toSeq === single.toSeq)
-    // shards fill in doc_id order: shard ids are non-decreasing
-    val ids = narrow.map(_.getAs[Long]("shard_id"))
-    assert(ids.zip(ids.tail).forall { case (a, b) => a <= b })
-  }
-
-  test("shardPack assigns by the token offset at the start of the doc") {
-    // tokens: 3, 3, 3 with budget 5 -> start offsets 0, 3, 6 -> shards 0, 0, 1
-    val docs = Seq((1L, "a b c"), (2L, "d e f"), (3L, "g h i"))
-      .toDF("doc_id", "text")
-    val out = Mixing.shardPack(docs, shardTokens = 5L).orderBy("doc_id").collect()
-    assert(out.map(_.getAs[Long]("shard_id")).toSeq === Seq(0L, 0L, 1L))
-    // pack_offset = start offset within the shard (greedy spillover:
-    // doc 2 starts at 3 of shard 0 and runs into shard 1)
-    assert(out.map(_.getAs[Long]("pack_offset")).toSeq === Seq(0L, 3L, 1L))
-  }
-
   test("entropyScore: hand-computed milli-bit entropies") {
-    import spark.implicits._
     val docs = Seq(
       (0L, "a a a a"),      // uniform single token → 0 bits
       (1L, "a b"),          // 2 equiprobable → exactly 1000 milli-bits
       (2L, "a a b b c c d d") // 4 equiprobable → exactly 2000 milli-bits
     ).toDF("doc_id", "text")
-    val out = graft.ops.TextAnalysis.entropyScore(docs).orderBy("doc_id")
+    val out = TextAnalysis.entropyScore(docs).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(4))).toSeq
     assert(out === Seq((0L, 4L, 1L, 0L), (1L, 2L, 2L, 1000L),
       (2L, 8L, 4L, 2000L)))
   }
 
-  test("temperatureSample: sqrt-damped quotas, filled in portable hash order") {
-    import spark.implicits._
-    // big: 100 docs → w=10; small: 4 docs → w=2; Σw=12, budget 24
-    // → quotas (24·10) div 12 = 20 and (24·2) div 12 = 4
-    val docs = ((0L until 100L).map(i => (i, s"t$i", "big")) ++
-      (100L until 104L).map(i => (i, s"t$i", "small")))
-      .toDF("doc_id", "text", "source")
-    val got = Mixing.temperatureSample(docs, budget = 24L).collect()
-    val bySrc = got.groupBy(_.getString(1)).view.mapValues(_.length).toMap
-    assert(bySrc === Map("big" -> 20, "small" -> 4))
-    // admission is exactly the 20 lowest (md5-prefix, doc_id) keys of 'big'
-    def hk(s: String): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(8)
-      java.lang.Long.parseLong(hex, 16)
-    }
-    val expectBig = (0L until 100L).map(i => (hk(s"t$i"), i))
-      .sorted.take(20).map(_._2).toSet
-    val gotBig = got.filter(_.getString(1) == "big").map(_.getLong(0)).toSet
-    assert(gotBig === expectBig)
-    // ranks are the contiguous 1..quota prefix
-    assert(got.filter(_.getString(1) == "big").map(_.getLong(2)).sorted.toSeq
-      === (1L to 20L))
-  }
-
-  test("epochSample: quotas past the source size become full epochs + hash top-up") {
-    import spark.implicits._
-    // big: 9 docs → w=3; small: 1 doc → w=1; Σw=4, budget 8
-    // → quotas 6 and 2: big = 6 single copies, small = 2 full epochs
-    val docs = ((0L until 9L).map(i => (i, s"e$i", "big")) :+
-      ((9L, "e9", "small"))).toDF("doc_id", "text", "source")
-    val got = Mixing.epochSample(docs, budget = 8L).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    val bySrc = got.groupBy(_._2).view.mapValues(_.map(_._3).sum).toMap
-    assert(bySrc === Map("big" -> 6L, "small" -> 2L),
-      s"per-source copy totals must equal the quotas: $bySrc")
-    assert(got.filter(_._2 == "big").forall(_._3 == 1L))
-    assert(got.filter(_._2 == "small").map(_._3).toSeq === Seq(2L))
-    // the admitted 'big' six are the lowest-hash prefix, as in
-    // temperatureSample (same window, same portable key)
-    assert(got.count(_._2 == "big") === 6)
-  }
-
-  test("sourceSample honors degenerate weights and drops unlisted sources") {
-    val docs = (0L until 60L).map { i =>
-      (i, s"doc $i content", s"src${i % 3}", "en")
-    }.toDF("doc_id", "text", "source", "lang")
-    val out = Mixing.sourceSample(docs, Map("src0" -> 1.0, "src1" -> 0.0))
-      .collect()
-    assert(out.forall(_.getAs[String]("source") == "src0"))
-    assert(out.length === 20) // all of src0, none of src1, src2 unlisted
-  }
-
-  test("datasetSplit: exact duplicates share a split; thresholds partition") {
-    val docs = ((0L until 200L).map(i => (i, s"unique document body number $i")) ++
-      Seq((900L, "duplicated body"), (901L, "duplicated body")))
-      .toDF("doc_id", "text")
-    val out = Mixing.datasetSplit(docs).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
-    assert(out.size === 202)
-    // content-keyed: the byte-identical pair lands in the same split
-    assert(out(900L) === out(901L))
-    out.values.foreach { case (bucket, split) =>
-      val want = if (bucket < 980) "train"
-        else if (bucket < 990) "validation" else "test"
-      assert(split === want)
-      assert(bucket >= 0L && bucket < 1000L)
-    }
-  }
-
   test("vocabTopK: frequency order with deterministic tie-break at the k boundary") {
     // b and c tie at 2; k=2 must keep (a,3) and (b,2) — never c
     val docs = Seq((1L, "a a a b"), (2L, "b c"), (3L, "c")).toDF("doc_id", "text")
-    val out = graft.ops.TextAnalysis.vocabTopK(docs, k = 2).collect()
+    val out = TextAnalysis.vocabTopK(docs, k = 2).collect()
       .map(r => (r.getString(0), r.getLong(1)))
     assert(out.toSeq === Seq(("a", 3L), ("b", 2L)))
-  }
-
-  test("idfScore matches hand-computed fixed-point values") {
-    val docs = Seq((1L, "a b"), (2L, "a c")).toDF("doc_id", "text")
-    // df: a=2, b=1, c=1 -> micro 500000 / 1000000; each doc:
-    // (500000 + 1000000) div 2 = 750000 micro, pure int64
-    val out = Mixing.idfScore(docs).orderBy("doc_id").collect()
-    assert(out(0) === Row(1L, 2L, 750000L))
-    assert(out(1) === Row(2L, 2L, 750000L))
-  }
-
-  test("shuffleOrder: two-phase rank == global md5 order, dense, seed-sensitive") {
-    val docs = (0L until 300L).map(i => (i, s"text $i")).toDF("doc_id", "text")
-    val got = Mixing.shuffleOrder(docs, seed = 7L).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    // dense 0..n-1 positions, one per doc
-    assert(got.map(_._3).sorted.toSeq === (0L until 300L).toSeq)
-    // two-phase rank equals the single global row_number truth
-    val truth = got.sortBy(g => (g._2, g._1)).zipWithIndex
-      .map { case ((d, _, _), i) => d -> i.toLong }.toMap
-    got.foreach { case (d, _, p) => assert(p === truth(d)) }
-    // a different seed produces a different order (not a shifted copy)
-    val other = Mixing.shuffleOrder(docs, seed = 8L).collect()
-      .map(r => r.getLong(0) -> r.getLong(2)).toMap
-    assert(got.exists { case (d, _, p) => other(d) != p })
-    // decorrelated from doc_id order: not the identity permutation
-    assert(got.exists { case (d, _, p) => d != p })
-  }
-
-  test("source KL: zero for the corpus mix, hand-exact for a skewed pair") {
-    import spark.implicits._
-    def mk(rows: (Long, String, String)*) =
-      rows.map { case (id, txt, src) => (id, txt, "en", src, txt.length.toLong) }
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-    // identical distributions: every signed milli-log term is exactly 0
-    val unif = Mixing.sourceKl(mk((1L, "x y", "A"), (2L, "x y", "B")))
-      .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
-    assert(unif === Map("A" -> 0L, "B" -> 0L))
-    // A = "x x y", B = "x y y": T=6, t_x=t_y=3, T_s=3.
-    // x-term in A: 2·lrm(12,9) = 2·333; y-term: 1·(−lrm(9,6)) = −500
-    val skew = Mixing.sourceKl(mk((1L, "x x y", "A"), (2L, "x y y", "B")))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(skew("A") === ((3L, 166L)))
-    assert(skew("B") === ((3L, 166L)))
-  }
-
-  test("weightedSample: exactly k picks, PPS-bounded, bucketWidth-invariant") {
-    val docs = (0L until 150L).map(i => (i, 1L + (i * 7) % 23))
-      .toDF("doc_id", "n_chars")
-    val k = 40L
-    val a = Mixing.weightedSample(docs, k = k, bucketWidth = 11L)
-      .orderBy("doc_id").collect()
-    val b = Mixing.weightedSample(docs, k = k, bucketWidth = 100000L)
-      .orderBy("doc_id").collect()
-    assert(a.toSeq === b.toSeq, "two-phase prefix sum must be width-invariant")
-    // systematic PPS: the grid places exactly k points inside [0, total)
-    assert(a.map(_.getAs[Long]("n_picks")).sum === k)
-    // per-doc picks are bounded by the interval/step ratio
-    val total = (0L until 150L).map(i => 1L + (i * 7) % 23).sum
-    val step = total / k
-    a.foreach { r =>
-      val (w, n) = (r.getAs[Long]("weight"), r.getAs[Long]("n_picks"))
-      assert(n >= 1L && n <= w / step + 1L)
-    }
-    // start offsets are the exact cumulative weights in doc_id order
-    val byId = a.map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("start_off")).toMap
-    var cum = 0L
-    (0L until 150L).foreach { i =>
-      byId.get(i).foreach(s => assert(s === cum))
-      cum += 1L + (i * 7) % 23
-    }
   }
 }

@@ -31,21 +31,6 @@ class OracleMarginSpec extends AnyFunSuite {
     .select(col("vec_id"), col("label"),
       expr("transform(embedding, x -> cast(x as double))").as("v"))
 
-  test("temperature_mix: floor(sqrt(n)) agrees with exact integer isqrt on fixture counts") {
-    // the quota weight is floor of the IEEE double sqrt — safe for
-    // n < 2^51 (a non-square's sqrt can't round ONTO an integer); this
-    // audits the actual per-source counts against an exact isqrt
-    val counts = spark.read.parquet(s"$dir/documents.parquet")
-      .groupBy("source").count().collect().map(_.getLong(1))
-    assert(counts.nonEmpty)
-    for (n <- counts) {
-      val viaDouble = math.floor(math.sqrt(n.toDouble)).toLong
-      var k = math.max(viaDouble - 2, 0L)
-      while ((k + 1) * (k + 1) <= n) k += 1
-      assert(viaDouble === k, s"floor(sqrt($n)): double says $viaDouble, exact isqrt $k")
-    }
-  }
-
   test("q27: all-pairs cosine keeps margin from the 0.45 threshold and round-4 grid") {
     val a = emb.select(col("vec_id").as("a"), col("v").as("va"))
     val b = emb.select(col("vec_id").as("b"), col("v").as("vb"))
@@ -290,13 +275,6 @@ class OracleMarginSpec extends AnyFunSuite {
     audit("segment_dedup dup_frac",
       graft.ops.Repetition.segmentDedupRaw(docs)
         .select("dup_frac").collect().map(_.getDouble(0)).toSeq)
-    // idf_score needs no audit: this guard caught its original rounded
-    // float mean sitting EXACTLY on round-6 boundaries (2564.5 micro
-    // etc.), so the operator was moved to pure int64 micro units.
-    audit("decontaminate ratio",
-      graft.ops.Decontaminate.contamination(docs,
-          docs.where(col("doc_id") % 97 === 0), n = 8)
-        .select("ratio").collect().map(_.getDouble(0)).toSeq)
   }
 
   test("rp_reduce: projection values keep margin from the round-6 grid") {
@@ -345,26 +323,5 @@ class OracleMarginSpec extends AnyFunSuite {
       .agg(min(roundMargin(col("c"), 6))).collect()(0).getDouble(0)
     info(f"min round-6 boundary margin of dropped-vector cosines: $r6%.2e")
     assert(r6 > 1e-6, f"a dropped cosine sits $r6%.2e from a round-6 boundary")
-  }
-
-  test("hard_negatives: emitted cosines keep round-6 margin, rank cut is untied") {
-    // selection is rank-based on RAW doubles (identical cross-engine),
-    // so the only portability surface is the round-6 output column —
-    // plus the rank-5/6 boundary, which must not be decided by a
-    // cosine TIE between different neg_ids (the neg_id tie-break is
-    // deterministic, but a tie AT the cut would make the emitted SET
-    // depend on it, worth pinning on the fixture)
-    val raw = graft.ops.Contrastive.hardNegativesRaw(emb
-        .select(col("vec_id"), col("label"), col("v").as("embedding")), k = 6)
-      .localCheckpoint(true)
-    val r6 = raw.where(col("rank") <= 5)
-      .agg(min(roundMargin(col("cos_raw"), 6))).collect()(0).getDouble(0)
-    info(f"min round-6 boundary margin of emitted cosines: $r6%.2e")
-    assert(r6 > 1e-6, f"an emitted cosine sits $r6%.2e from a round-6 boundary")
-    val cut = raw.groupBy("vec_id")
-      .agg(min(when(col("rank") === 5, col("cos_raw"))).as("c5"),
-        min(when(col("rank") === 6, col("cos_raw"))).as("c6"))
-      .where(col("c6").isNotNull && col("c5") === col("c6")).count()
-    assert(cut === 0, s"$cut anchors have a cosine tie exactly at the rank-5 cut")
   }
 }

@@ -50,31 +50,23 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("no single-partition exchange outside the bounded prefix-sum") {
-    // shard_pack's phase 2 is the documented two-phase prefix sum: the
-    // SinglePartition exchange carries one row PER BUCKET (post
-    // partial+final agg), not the corpus — the only allowed occurrence.
-    // seq_pack and corpus_shuffle share shard_pack's two-phase prefix
-    // sum / rank — their one SinglePartition exchange also carries one
-    // row per bucket (256 rows for the shuffle), never the corpus.
+    // dedup_growth's running sum is the documented two-phase prefix sum:
+    // the SinglePartition exchange walks one row per 50-DOC BATCH (post
+    // partial+final agg), never the corpus.
     // hll_distinct's final fold is a global agg over the ≤64-row
     // register table and bottomk_distinct's over exactly k=64
     // TakeOrdered rows: their SinglePartition exchange carries one
     // partial-agg row per partition, never the corpus.
-    // weighted_sample shares shard_pack's two-phase prefix sum (one row
-    // per bucket on the single partition). dedup_growth's running sum walks
-    // one row per 50-DOC BATCH after the bucket partial agg — the same
-    // bounded prefix-sum shape as shard_pack.
     // rrf_fusion's two rank windows run over the ≤pool-row candidate
     // lists AFTER each leg's bounded top-k — serving-side tables (the
     // MMR stage-2 class), never the corpus.
     val offenders = batchNames.filterNot(
-      Set("shard_pack", "seq_pack", "corpus_shuffle", "hll_distinct",
-        "bottomk_distinct", "weighted_sample", "dedup_growth", "rrf_fusion"))
+      Set("hll_distinct", "bottomk_distinct", "dedup_growth", "rrf_fusion"))
       .filter(n => plan(n).contains("SinglePartition"))
     assert(offenders.isEmpty,
       s"unexpected single-partition exchange in: ${offenders.mkString(", ")}")
-    assert(plan("shard_pack").contains("partial_sum"),
-      "shard_pack must partial-aggregate per bucket before the global cumsum")
+    assert(plan("dedup_growth").contains("partial_sum"),
+      "dedup_growth must partial-aggregate per bucket before the global cumsum")
   }
 
   test("q01: pushdown, pruning, partial agg, vectorized scan") {

@@ -1,31 +1,12 @@
 package graft
 
-import graft.ops.{Decontaminate, TextAnalysis}
-import org.apache.spark.sql.functions._
+import graft.ops.TextAnalysis
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Benchmark decontamination + PII scrubbing semantics. */
+/** PII scrubbing semantics. */
 class ScrubSpec extends AnyFunSuite {
   lazy implicit val spark: org.apache.spark.sql.SparkSession = SparkTestSession.spark
   import spark.implicits._
-
-  test("contamination flags docs sharing n-grams with the benchmark") {
-    val bench = Seq((100L, "alpha beta gamma delta epsilon zeta"))
-      .toDF("doc_id", "text")
-    val docs = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta trailing words here"), // contains bench grams
-      (2L, "totally unrelated content with no overlap at all present"),
-      (3L, "alpha beta gamma delta epsilon zeta")                      // identical
-    ).toDF("doc_id", "text")
-    val c = Decontaminate.contamination(docs, bench, n = 3)
-      .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2))).toMap
-    assert(c(3L) === ((4, 4L))) // 6 words → 4 trigrams, all contaminated
-    assert(c(1L)._2 === 4L)     // the 4 bench trigrams appear, later grams don't
-    assert(c(2L)._2 === 0L)
-    val clean = Decontaminate.decontaminated(docs, bench, threshold = 0.5, n = 3)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(clean === Set(2L))
-  }
 
   test("piiScrub redacts emails and phones with exact counts") {
     val docs = Seq(

@@ -1,11 +1,10 @@
 package graft
 
-import graft.ops.{Mixing, Selection}
+import graft.ops.Selection
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Data-selection operators: NB quality classifier sign/separation,
-  * DSIR importance ordering + selection, fixed-length sequence packing
-  * segment arithmetic.
+  * DSIR importance ordering + selection, exact stratified sampling.
   */
 class SelectionSpec extends AnyFunSuite {
   lazy implicit val spark: org.apache.spark.sql.SparkSession = SparkTestSession.spark
@@ -59,41 +58,6 @@ class SelectionSpec extends AnyFunSuite {
     val kept = Selection.dsirSelect(docs, Seq("tgt"), k = 3, buckets = 1024L)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept === Set(1L, 2L, 3L)) // the three target-gram docs
-  }
-
-  test("sequence packing: exact segment map, boundary-crossing docs span sequences") {
-    // token counts 3, 6, 2 at L=4: starts 0, 3, 9
-    val docs = Seq(
-      doc(1L, "a b c", "s"),
-      doc(2L, "d e f g h i", "s"),
-      doc(3L, "j k", "s"),
-      doc(4L, "", "s") // empty: no tokens, no segment
-    ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val got = Mixing.packSequences(docs, seqTokens = 4L, bucketWidth = 2L)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .toSet
-    assert(got === Set(
-      (0L, 1L, 0L, 2L, 0L), // doc 1 fully inside seq 0 at offset 0
-      (0L, 2L, 0L, 0L, 3L), // doc 2's first token finishes seq 0
-      (1L, 2L, 1L, 4L, 0L), // ...its middle fills seq 1
-      (2L, 2L, 5L, 5L, 0L), // ...its last token opens seq 2
-      (2L, 3L, 0L, 1L, 1L)  // doc 3 follows inside seq 2
-    ))
-    // per-doc coverage: segment lengths sum to the doc's token count
-    val cover = got.groupBy(_._2).view.mapValues(_.toSeq.map(s => s._4 - s._3 + 1).sum)
-    assert(cover(1L) === 3 && cover(2L) === 6 && cover(3L) === 2)
-  }
-
-  test("sequence packing: bucketed prefix sum == single-partition truth") {
-    val docs = (0L until 40L).map(i =>
-      doc(i, (0 to (i % 7).toInt).map(j => s"w$j").mkString(" "), "s"))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val wide = Mixing.packSequences(docs, seqTokens = 8L, bucketWidth = 5L)
-      .collect().map(_.toSeq).toSet
-    val one = Mixing.packSequences(docs, seqTokens = 8L, bucketWidth = 1000000L)
-      .collect().map(_.toSeq).toSet
-    assert(wide === one && wide.nonEmpty)
   }
 
   test("stratified sample: exact ceil(n*rate) per stratum, deterministic, content-blind") {
