@@ -108,34 +108,6 @@ object SparkEntry {
     s"($bits * 1000 + (1000 * ($num)) // (($den) * (1 << $bits)) - 1000)"
   }
 
-  /** Shared CTE chain of the bigram-LM oracles: md5-content train
-    * slice, add-one bigram/context counts, bigram-participating train
-    * vocab V (matching the engine's single-pass derivation), per-doc
-    * integer surprisal sums — ends at the `per` relation
-    * (doc_id, is_train, n_bigrams, oov_bigrams, total_bits).
-    */
-  private val lmScoreCtes =
-    """WITH d AS (SELECT doc_id, string_split(text, ' ') AS w,
-      |   CASE WHEN cast(concat('0x', substr(md5(text), 1, 8)) as bigint) % 1000 < 500
-      |        THEN 1 ELSE 0 END AS is_train FROM documents),
-      | big AS (SELECT doc_id, is_train,
-      |     unnest(list_transform(generate_series(1, len(w) - 1),
-      |       i -> concat(w[i], ' ', w[i + 1]))) AS g FROM d),
-      | cnts AS (SELECT g, count(*) AS c FROM big WHERE is_train = 1 GROUP BY g),
-      | ctx AS (SELECT split_part(g, ' ', 1) AS w1, count(*) AS cc
-      |   FROM big WHERE is_train = 1 GROUP BY 1),
-      | v AS (SELECT count(DISTINCT x) AS vv
-      |   FROM (SELECT unnest(string_split(g, ' ')) AS x FROM big WHERE is_train = 1)),
-      | sc AS (SELECT b.doc_id, b.is_train,
-      |     coalesce(c.c, 0) AS c, coalesce(x.cc, 0) AS cc
-      |   FROM big b LEFT JOIN cnts c ON b.g = c.g
-      |   LEFT JOIN ctx x ON split_part(b.g, ' ', 1) = x.w1),
-      | per AS (SELECT doc_id, is_train,
-      |     cast(count(*) as bigint) AS n_bigrams,
-      |     cast(sum(CASE WHEN c = 0 THEN 1 ELSE 0 END) as bigint) AS oov_bigrams,
-      |     cast(sum(length(bin((cc + vv) // (c + 1))) - 1) as bigint) AS total_bits
-      |   FROM sc, v GROUP BY doc_id, is_train)""".stripMargin
-
   /** Shared CTE chain of the substring-dedup oracles: stride-1 10-word
     * grams, per-gram first/second owners, cross-doc hit positions, the
     * pos−prev ≤ k island merge — ends at the `spans` relation
@@ -599,7 +571,7 @@ object SparkEntry {
 
     "q24_det_sample" -> ((s, dir) =>
       t(s, dir, "documents")
-        .where(graft.ops.CurationPipeline.hashBucket(col("text")) < 300000L)
+        .where(graft.ops.hashBucket(col("text")) < 300000L)
         .select("doc_id", "lang").orderBy("doc_id")),
 
     // A12-A14 mosaic sessionization against a window-SQL oracle: frames
@@ -1038,12 +1010,6 @@ object SparkEntry {
           .otherwise(col("text")))
       TextAnalysis.piiScrub(planted).orderBy("doc_id")
     }),
-    // Gopher-style intra-doc repetition signals (dup-word fraction,
-    // top-2-gram coverage, duplicated-5-gram occurrence fraction) —
-    // exact arithmetic, value-checked against the DuckDB mirror
-    "repetition_stats" -> ((s, dir) =>
-      graft.ops.Repetition.repetitionStats(t(s, dir, "documents"))
-        .orderBy("doc_id")),
     // TextRank keyword extraction: integer PageRank composed over the
     // adjacent-token co-occurrence graph (string vertex ids), top-10
     // by (rank desc, word) — every iteration oracle-unrolled
@@ -1055,21 +1021,6 @@ object SparkEntry {
     "entropy_score" -> ((s, dir) =>
       TextAnalysis.entropyScore(t(s, dir, "documents"))
         .orderBy("doc_id")),
-    // CCNet-style corpus-level segment dedup: 10-word segments, first
-    // occurrence by (doc_id, pos) keeps, later identical segments are
-    // duplicates
-    "segment_dedup" -> ((s, dir) =>
-      graft.ops.Repetition.segmentDedup(t(s, dir, "documents"))
-        .orderBy("doc_id")),
-    // cross-source duplicate-overlap matrix: shared 10-word segments per
-    // source pair + integer-permille Jaccard (provenance audit before
-    // source mixing); only pairs sharing >= 1 segment appear
-    "source_overlap" -> ((s, dir) =>
-      graft.ops.Repetition.sourceOverlap(t(s, dir, "documents"))),
-    // dedup growth curve: cumulative total vs first-occurrence segments
-    // per 50-doc batch — the diminishing-returns curve of new content
-    "dedup_growth" -> ((s, dir) =>
-      graft.ops.Repetition.dedupGrowth(t(s, dir, "documents"))),
     // inverted-index build: (term, doc_id, tf, df) postings, the batch
     // index-construction job behind bm25_topk's serving path
     "inverted_index" -> ((s, dir) =>
@@ -1110,23 +1061,6 @@ object SparkEntry {
       graft.ops.Selection.dsirWeights(t(s, dir, "documents"),
         targetSources = Seq("src0", "src1", "src2"), buckets = 64L)
         .orderBy("doc_id")),
-    // HyperLogLog distinct-content sketch: the 64-row register table
-    // (the mergeable state itself — shards combine by elementwise max)
-    "hll_registers" -> ((s, dir) =>
-      graft.ops.Sketches.hllRegisters(t(s, dir, "documents"), col("text"))
-        .orderBy("register")),
-    // ... and the raw integer estimator over it: one row, approximate
-    // count(distinct text) without shuffling the corpus (the fixture's
-    // ~366 distinct contents sit in the raw-estimator regime n > 2.5m)
-    "hll_distinct" -> ((s, dir) =>
-      graft.ops.Sketches.hllDistinct(t(s, dir, "documents"), col("text"))),
-    // Count-Min frequency sketch: every word estimated from the 4×512
-    // counter grid; est ≥ true by construction, the gap = collision
-    // mass (the fixture vocab is small but the grid is salted-md5, so
-    // specific collisions are deterministic and the oracle replays them)
-    "cms_estimate" -> ((s, dir) =>
-      graft.ops.Sketches.cmsEstimate(t(s, dir, "documents"))
-        .orderBy("word")),
     // fixed-point PageRank over the exact kNN similarity graph (k=5
     // within label groups, same edges as knn_graph): 5 integer
     // iterations, damping 85/100 — graph centrality as a curation
@@ -1196,14 +1130,6 @@ object SparkEntry {
         .select(col("id").as("vec_id"), col("n_triangles"))
         .orderBy("vec_id")
     }),
-    // bottom-k content sample: deterministic mergeable uniform sample,
-    // k smallest (md5-32bit, doc_id) — map-side top-k, no shuffle
-    "bottomk_sample" -> ((s, dir) =>
-      graft.ops.Sketches.bottomK(t(s, dir, "documents"), col("text"), k = 100)),
-    // ... and the KMV distinct estimator off the k-th smallest
-    // DISTINCT hash: est = (k−1)·2^32 div h_k, one row, all int64
-    "bottomk_distinct" -> ((s, dir) =>
-      graft.ops.Sketches.bottomKDistinct(t(s, dir, "documents"), col("text"), k = 64)),
     // deterministic synchronous label propagation over the kNN graph:
     // 4 rounds, most-frequent neighbor label, smallest-label ties —
     // every round replayed by the oracle
@@ -1217,13 +1143,6 @@ object SparkEntry {
         .select(col("id").as("vec_id"), col("label").as("community"))
         .orderBy("vec_id")
     }),
-    // CCNet-style LM quality scoring: add-one bigram model on the
-    // md5-content train slice, every doc scored by INTEGER quantized
-    // surprisal (floor-log2 via unpadded bin() — no transcendental
-    // reaches a value, so the oracle replays fit + scoring bit-exactly)
-    "lm_perplexity" -> ((s, dir) =>
-      graft.ops.LanguageModel.perplexityScore(t(s, dir, "documents"))
-        .orderBy("doc_id")),
     // quantized-integer BM25 keyword retrieval: "dup" is the corpus's
     // one rare term (df 25/500 — exercises the floor-log2 idf AND its
     // linear-interpolation milli fraction); the common terms clamp to
@@ -1232,11 +1151,6 @@ object SparkEntry {
     "bm25_topk" -> ((s, dir) =>
       graft.ops.Retrieval.bm25TopK(t(s, dir, "documents"),
         Seq("dup", "key", "merge", "vector"), k = 15)),
-    // CCNet head/middle/tail per source on the integer bpb rank — the
-    // tier boundary is 1000*rank <= permille*count, never a float
-    "lm_tiers" -> ((s, dir) =>
-      graft.ops.LanguageModel.perplexityTiers(t(s, dir, "documents"))
-        .orderBy("doc_id")),
     // overlapping word-window chunking (window 16, stride 12 against
     // ~60-word docs so multi-chunk overlap + truncated tails both occur)
     "chunk_docs" -> ((s, dir) =>
@@ -1374,12 +1288,6 @@ object SparkEntry {
         .select(col("id").as("vec_id"), col("layer"))
         .orderBy("vec_id")
     }),
-    // mergeable equi-width histogram quantiles (the deterministic
-    // fixed-memory quantile sketch): per-lang p50/p90/p99 as bin lower
-    // edges, ceil-threshold rank arithmetic in exact int64
-    "hist_quantiles" -> ((s, dir) =>
-      graft.ops.Sketches.histQuantiles(t(s, dir, "documents"))
-        .orderBy("lang")),
     // Johnson-Lindenstrauss random projection onto 8 portable
     // md5-derived directions ('rp_' plane namespace) — map-only, no
     // fit; the oracle regenerates the planes and replays every inner
@@ -1430,24 +1338,6 @@ object SparkEntry {
           min("k").as("min_k"), max("k").as("max_k"))
         .orderBy("event_type"))
   )
-
-  /** Shared CTE chain of the HLL oracles: register = first md5 hex byte
-    * mod 64, rho = 1 + leading zero bits of the 120-bit suffix read off
-    * hex digits (ASCII order: c >= '8' ⇔ top bit set) — ends at `regs`
-    * (register, max_rho), the mergeable sketch state.
-    */
-  private val hllCtes =
-    """WITH h AS (SELECT md5(text) AS h FROM documents),
-      | rr AS (SELECT cast(concat('0x', substr(h, 1, 2)) as bigint) % 64 AS register,
-      |     ltrim(substr(h, 3, 30), '0') AS t FROM h),
-      | rho AS (SELECT register, CASE WHEN length(t) = 0 THEN 121
-      |     ELSE 4 * (30 - length(t)) +
-      |       (CASE WHEN substr(t, 1, 1) >= '8' THEN 0
-      |             WHEN substr(t, 1, 1) >= '4' THEN 1
-      |             WHEN substr(t, 1, 1) >= '2' THEN 2 ELSE 3 END) + 1 END AS rho
-      |   FROM rr),
-      | regs AS (SELECT register, cast(max(rho) as bigint) AS max_rho
-      |   FROM rho GROUP BY register)""".stripMargin
 
   /** Shared CTE chain of the kNN-graph oracles (pagerank,
     * knn_triangles): the same exact kNN-within-label edge set
@@ -2233,36 +2123,6 @@ object SparkEntry {
         | SELECT doc_id, cast(count(*) as bigint) AS n_grams,
         |   cast(sum(s_milli) as bigint) AS dsir_milli
         | FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // replays the HLL register build digit for digit
-    "hll_registers" ->
-      s"""$hllCtes
-        | SELECT register, max_rho FROM regs ORDER BY register""".stripMargin,
-    // ... and the raw integer estimator: denom = Σ 2^(30 − min(ρ,30))
-    // with absent registers contributing 2^30, one truncating divide
-    "hll_distinct" ->
-      s"""$hllCtes,
-        | agg AS (SELECT cast(count(*) as bigint) AS observed_regs,
-        |     cast(sum(1::BIGINT << cast(30 - least(max_rho, 30) as int)) as bigint) AS dsum
-        |   FROM regs),
-        | d AS (SELECT observed_regs,
-        |     dsum + (64 - observed_regs) * 1073741824 AS denom FROM agg)
-        | SELECT observed_regs, denom,
-        |   ${graft.ops.Sketches.HllEstNumer} // (1000 * denom) AS est_distinct
-        | FROM d""".stripMargin,
-    // replays the Count-Min grid (salt 'cms<depth>_', 4×512) and the
-    // min-over-depths point estimate from the same word-count table
-    "cms_estimate" ->
-      """WITH wc AS (SELECT word, cast(count(*) as bigint) AS true_n
-        |   FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |   GROUP BY word),
-        | wb AS (SELECT word, true_n, d.d AS depth,
-        |     cast(concat('0x', substr(md5(concat('cms', d.d, '_', word)), 1, 8)) as bigint) % 512 AS bucket
-        |   FROM wc CROSS JOIN generate_series(0, 3) d(d)),
-        | ctr AS (SELECT depth, bucket, cast(sum(true_n) as bigint) AS cnt
-        |   FROM wb GROUP BY depth, bucket)
-        | SELECT w.word, w.true_n, cast(min(c.cnt) as bigint) AS est_n
-        | FROM wb w JOIN ctr c USING (depth, bucket)
-        | GROUP BY w.word, w.true_n ORDER BY w.word""".stripMargin,
     "pagerank" -> pagerankOracleSql,
     "hits_scores" -> hitsOracleSql,
     "ppr_scores" -> pprOracleSql,
@@ -2301,45 +2161,11 @@ object SparkEntry {
         |   FROM pv GROUP BY id)
         | SELECT nodes.id AS vec_id, coalesce(cnt.n_triangles, 0) AS n_triangles
         | FROM nodes LEFT JOIN cnt ON nodes.id = cnt.id ORDER BY vec_id""".stripMargin,
-    "bottomk_sample" ->
-      """SELECT cast(concat('0x', substr(md5(text), 1, 8)) as bigint) AS h, doc_id
-        | FROM documents ORDER BY h, doc_id LIMIT 100""".stripMargin,
-    "bottomk_distinct" ->
-      """WITH h AS (SELECT DISTINCT cast(concat('0x', substr(md5(text), 1, 8)) as bigint) AS h
-        |   FROM documents),
-        | k AS (SELECT h FROM h ORDER BY h LIMIT 64)
-        | SELECT max(h) AS kth_hash,
-        |   (63 * 4294967296) // greatest(max(h), 1) AS est_distinct
-        | FROM k""".stripMargin,
     "label_prop" -> labelPropOracleSql,
     "vocab_topk" ->
       """SELECT word, cast(count(*) as bigint) AS n
         | FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
         | GROUP BY word ORDER BY n DESC, word LIMIT 20""".stripMargin,
-    // replays the bigram LM stage for stage: md5-content train slice,
-    // add-one bigram/context counts, V = train vocab, per-bigram
-    // integer surprisal length(bin((cc+V)//(c+1)))-1 (bin is unpadded
-    // in both engines), order-free sums, truncating int division
-    "lm_perplexity" ->
-      s"""$lmScoreCtes
-        | SELECT doc_id, is_train, n_bigrams, oov_bigrams, total_bits,
-        |   (1000 * total_bits) // n_bigrams AS bpb_milli
-        | FROM per ORDER BY doc_id""".stripMargin,
-    // the scoring CTEs above, then CCNet's per-source head/middle/tail:
-    // integer boundary 1000*rank <= permille*count, (bpb, doc_id) rank
-    "lm_tiers" ->
-      s"""$lmScoreCtes,
-        | sc2 AS (SELECT p.doc_id, doc.source,
-        |     (1000 * p.total_bits) // p.n_bigrams AS bpb_milli
-        |   FROM per p JOIN documents doc USING (doc_id)),
-        | rk AS (SELECT doc_id, source, bpb_milli,
-        |     row_number() OVER (PARTITION BY source ORDER BY bpb_milli, doc_id) AS r,
-        |     count(*) OVER (PARTITION BY source) AS cnt FROM sc2)
-        | SELECT doc_id, source, bpb_milli,
-        |   CASE WHEN 1000 * r <= 100 * cnt THEN 'head'
-        |        WHEN 1000 * r <= 500 * cnt THEN 'middle'
-        |        ELSE 'tail' END AS tier
-        | FROM rk ORDER BY doc_id""".stripMargin,
     // window/stride slicing: Spark slice(arr, start, LENGTH) ==
     // DuckDB list_slice(arr, start, start+len-1) (inclusive end)
     "chunk_docs" ->
@@ -2461,79 +2287,6 @@ object SparkEntry {
         |   cast(sum(c * bm) as bigint) AS h_milli_tokens,
         |   cast(sum(c * bm) // min(t) as bigint) AS entropy_milli
         | FROM b GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "repetition_stats" ->
-      """WITH d AS (SELECT doc_id, len(text) AS n_chars,
-        |     string_split(text, ' ') AS words FROM documents),
-        | w AS (SELECT doc_id, len(words) AS n_words,
-        |     len(list_distinct(words)) AS n_distinct FROM d),
-        | g2 AS (SELECT doc_id, n_chars, unnest(list_transform(
-        |     generate_series(1, greatest(len(words) - 1, 1)),
-        |     i -> array_to_string(words[i:i+1], ' '))) AS g FROM d),
-        | c2 AS (SELECT doc_id, n_chars, g, count(*) AS cnt FROM g2 GROUP BY 1, 2, 3),
-        | t2 AS (SELECT doc_id, g AS top_2gram,
-        |     round(cnt * len(g) / n_chars, 6) AS top2gram_frac,
-        |     row_number() OVER (PARTITION BY doc_id ORDER BY cnt DESC, g DESC) AS rn
-        |     FROM c2),
-        | g5 AS (SELECT doc_id, unnest(list_transform(
-        |     generate_series(1, greatest(len(words) - 4, 1)),
-        |     i -> array_to_string(words[i:i+4], ' '))) AS g FROM d),
-        | c5 AS (SELECT doc_id, g, count(*) AS cnt FROM g5 GROUP BY 1, 2),
-        | d5 AS (SELECT doc_id,
-        |     round(sum(CASE WHEN cnt >= 2 THEN cnt ELSE 0 END) / sum(cnt), 6)
-        |       AS dup_5gram_frac FROM c5 GROUP BY 1)
-        | SELECT w.doc_id, cast(n_words as int) AS n_words,
-        |  round(cast(n_words - n_distinct as double) / n_words, 6) AS dup_word_frac,
-        |  t2.top_2gram, t2.top2gram_frac, d5.dup_5gram_frac
-        | FROM w JOIN t2 ON w.doc_id = t2.doc_id AND t2.rn = 1
-        | JOIN d5 ON w.doc_id = d5.doc_id ORDER BY w.doc_id""".stripMargin,
-    "segment_dedup" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-        | i AS (SELECT doc_id, words, unnest(generate_series(1,
-        |     cast(ceil(len(words) / 10.0) as bigint))) AS i FROM d),
-        | s AS (SELECT doc_id, i - 1 AS pos,
-        |     array_to_string(words[(i-1)*10+1:(i-1)*10+10], ' ') AS seg FROM i),
-        | r AS (SELECT doc_id, row_number() OVER
-        |     (PARTITION BY seg ORDER BY doc_id, pos) AS occ FROM s)
-        | SELECT doc_id, count(*) AS n_segments,
-        |  cast(sum(CASE WHEN occ > 1 THEN 1 ELSE 0 END) as bigint) AS n_dup_segments,
-        |  round(sum(CASE WHEN occ > 1 THEN 1 ELSE 0 END) / count(*), 6) AS dup_frac
-        | FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // all integers: distinct shared segments per source pair + permille
-    // Jaccard with a truncating div — bit-exact cross-engine
-    "source_overlap" ->
-      """WITH d AS (SELECT source, string_split(text, ' ') AS words FROM documents),
-        | i AS (SELECT source, words, unnest(generate_series(1,
-        |     cast(ceil(len(words) / 10.0) as bigint))) AS i FROM d),
-        | seg AS (SELECT DISTINCT source,
-        |     array_to_string(words[(i-1)*10+1:(i-1)*10+10], ' ') AS seg FROM i),
-        | sizes AS (SELECT source, count(*) AS n FROM seg GROUP BY 1),
-        | sh AS (SELECT a.source AS src_a, b.source AS src_b, count(*) AS n_shared
-        |   FROM seg a JOIN seg b ON a.seg = b.seg AND a.source < b.source
-        |   GROUP BY 1, 2)
-        | SELECT sh.src_a, sh.src_b, sh.n_shared, sa.n AS n_a, sb.n AS n_b,
-        |  cast(sh.n_shared * 1000 // (sa.n + sb.n - sh.n_shared) as bigint)
-        |    AS jaccard_permille
-        | FROM sh JOIN sizes sa ON sh.src_a = sa.source
-        | JOIN sizes sb ON sh.src_b = sb.source
-        | ORDER BY 1, 2""".stripMargin,
-    // segment first-occurrence rank (segment_dedup's keeper rule) →
-    // per-50-doc-batch counts → running sums; integers only
-    "dedup_growth" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-        | i AS (SELECT doc_id, words, unnest(generate_series(1,
-        |     cast(ceil(len(words) / 10.0) as bigint))) AS i FROM d),
-        | s AS (SELECT doc_id, i - 1 AS pos,
-        |     array_to_string(words[(i-1)*10+1:(i-1)*10+10], ' ') AS seg FROM i),
-        | r AS (SELECT doc_id, CASE WHEN row_number() OVER
-        |     (PARTITION BY seg ORDER BY doc_id, pos) = 1 THEN 1 ELSE 0 END AS f FROM s),
-        | b AS (SELECT doc_id // 50 AS bucket, count(*) AS ns,
-        |     sum(f) AS nf FROM r GROUP BY 1),
-        | c AS (SELECT bucket, sum(ns) OVER (ORDER BY bucket) AS segs_cum,
-        |     sum(nf) OVER (ORDER BY bucket) AS uniq_cum FROM b)
-        | SELECT bucket, cast(segs_cum as bigint) AS segs_cum,
-        |  cast(uniq_cum as bigint) AS uniq_cum,
-        |  cast((segs_cum - uniq_cum) * 1000 // segs_cum as bigint) AS dup_permille
-        | FROM c ORDER BY bucket""".stripMargin,
     // strings + int64 counts, no rounding anywhere
     "inverted_index" ->
       """WITH occ AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
@@ -2897,17 +2650,6 @@ object SparkEntry {
         | SELECT e.vec_id, cast(pl.b as bigint) AS dim,
         |   round(list_inner_product(e.v, pl.p), 6) AS value
         | FROM e CROSS JOIN planes pl ORDER BY vec_id, dim""".stripMargin,
-    "hist_quantiles" ->
-      """WITH b AS (SELECT lang, n_chars // 50 AS bin FROM documents),
-        | c AS (SELECT lang, bin, cast(count(*) as bigint) AS c FROM b GROUP BY 1, 2),
-        | m AS (SELECT lang, bin, c,
-        |     sum(c) OVER (PARTITION BY lang ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cum,
-        |     sum(c) OVER (PARTITION BY lang) AS n FROM c)
-        | SELECT lang,
-        |   min(CASE WHEN cum * 100 >= n * 50 THEN bin * 50 END) AS p50_lo,
-        |   min(CASE WHEN cum * 100 >= n * 90 THEN bin * 50 END) AS p90_lo,
-        |   min(CASE WHEN cum * 100 >= n * 99 THEN bin * 50 END) AS p99_lo
-        | FROM m GROUP BY lang ORDER BY lang""".stripMargin,
     "q29_json_props" ->
       """SELECT event_type, count(*) AS n,
         | cast(sum(cast(json_extract_string(props, '$.k') as bigint)) as bigint) AS sum_k,

@@ -24,7 +24,7 @@ object SimilarityPipeline {
   val K = 5
 
   /** Widths of the two fixed feature spaces (see [[telemetryFeatures]]
-    * / [[contentFeatures]]) — the known-dims standardize fast path.
+    * / [[contentFeatures]]) — the `dims` argument of [[standardize]].
     */
   val TeleDims = 5
   def contentDims(labels: Seq[String]): Int = 2 * labels.size + 1
@@ -39,40 +39,14 @@ object SimilarityPipeline {
     * balanced — an unscaled dominant dimension (framenumber) collapses
     * every row into a handful of signatures and the bucket join goes
     * quadratic.
-    */
-  def standardize(feat: DataFrame): DataFrame = {
-    val stats = feat
-      .select(col("group"), posexplode(col("vec")).as(Seq("dim", "v")))
-      .groupBy("group", "dim")
-      .agg(avg("v").as("mu"), stddev_pop("v").as("sigma"))
-      .groupBy("group")
-      .agg(array_sort(collect_list(struct(col("dim"), col("mu"), col("sigma")))).as("st"))
-      .select(col("group"),
-        transform(col("st"), s => s("mu")).as("mu"),
-        transform(col("st"), s => s("sigma")).as("sigma"))
-    // native codegen'd z-score (bit-identical to the transform() HOF it
-    // replaced, which evaluated an interpreted lambda per element —
-    // graft.core.VectorExprs.ZScore scaladoc)
-    feat.join(stats, Seq("group"))
-      .withColumn("vec",
-        graft.core.VectorExprs.vec_zscore(col("vec"), col("mu"), col("sigma")))
-      .select("id", "group", "vec")
-  }
-
-  /** [[standardize]] for a KNOWN uniform vector width (every internal
-    * caller constructs fixed-width vecs): per-dimension column
-    * aggregates replace the posexplode — the generic path generated
-    * |vec| rows per input row (41M at the content space's 51 dims ×
-    * 800k rows) just to feed a (group, dim) hash aggregate, plus a
-    * second collect_list shuffle to reassemble arrays. Here each
-    * partition applies avg/stddev_pop per dimension directly (same
-    * aggregate functions over the same per-partition value sequence →
-    * identical partials, merged in the same deterministic map-order →
-    * bit-identical mu/sigma; `get` returns null past a short vec
-    * exactly where posexplode emitted nothing), and the arrays are
-    * assembled with a plain `array()` in dim order — no second shuffle.
-    * `dims` MUST equal the uniform vec length; a wider/narrower value
-    * changes which dimensions are standardized.
+    *
+    * Every caller builds fixed-width vecs, so `dims` per-dimension
+    * column aggregates compute mu/sigma in one group-keyed aggregate —
+    * no posexplode to |vec| rows per input row, no second collect_list
+    * shuffle to reassemble arrays (`get` returns null past a short vec,
+    * which avg/stddev_pop skip). `dims` MUST equal the uniform vec
+    * length; a wider/narrower value changes which dimensions are
+    * standardized.
     */
   def standardize(feat: DataFrame, dims: Int): DataFrame = {
     val aggs = (0 until dims).flatMap(d => Seq(

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,14 +23,6 @@ object CurationPipeline {
       nearDupJaccard: Double = 0.85,
       tokenBudget: Long = Long.MaxValue
   )
-
-  /** Deterministic sampling bucket in [0, m): first 8 hex digits of the
-    * md5 of the key. Engine-portable (md5 is md5 everywhere), so sampled
-    * subsets are reproducible across Spark, DuckDB, and reruns — the
-    * property a training-data sample must have for audits.
-    */
-  def hashBucket(key: Column, m: Long = 1000000L): Column =
-    pmod(conv(substring(md5(key), 1, 8), 16, 10).cast("long"), lit(m))
 
   def run(docs: DataFrame, cfg: Config = Config())(
       implicit spark: SparkSession): DataFrame = {

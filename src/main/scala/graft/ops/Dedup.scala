@@ -138,10 +138,10 @@ object Dedup {
     * plus one within-delta [[portableMinhashPairs]] pass:
     * `dup_corpus` if the doc near-dups anything already in the corpus,
     * else `dup_delta` if it near-dups an EARLIER delta doc
-    * (first-occurrence-keeps, [[graft.ops.Repetition]] segmentDedup's
-    * keeper rule), else `admit`. Docs shorter than the shingle have no
-    * signature, match nothing, and admit. Both inputs are broadcastable
-    * verdict sets (bounded by the dup rate, not the corpus).
+    * (first-occurrence-keeps), else `admit`. Docs shorter than the
+    * shingle have no signature, match nothing, and admit. Both inputs
+    * are broadcastable verdict sets (bounded by the dup rate, not the
+    * corpus).
     */
   def deltaAdmit(corpus: DataFrame, delta: DataFrame, numHashes: Int = 16,
                  bands: Int = 4, shingle: Int = 5, minMatch: Int = 13,
@@ -315,11 +315,10 @@ object Dedup {
 
   // ---------- substring-level cross-document dedup ----------
 
-  /** Variable-length duplicated-span detection — the third dedup family
-    * next to whole-document (exact/minhash) and fixed-tile
-    * ([[Repetition.segmentDedup]]) dedup: find every MAXIMAL word span
-    * of length ≥ `k` that some other document also contains (the
-    * exact-substring semantics of suffix-array corpus dedup à la
+  /** Variable-length duplicated-span detection — span-level dedup next
+    * to whole-document (exact and minhash) dedup: find every MAXIMAL
+    * word span of length ≥ `k` that some other document also contains
+    * (the exact-substring semantics of suffix-array corpus dedup à la
     * deduplicate-text-datasets, here anchored on overlapping k-word
     * grams instead of a suffix array: any shared span of length L ≥ k
     * contains exactly L − k + 1 shared k-grams at stride 1, so merging
@@ -335,8 +334,8 @@ object Dedup {
     * the corpus), a partial-agg min per gram, a join back on the gram
     * key, then a per-doc window to merge islands — shuffles on the gram
     * key and the doc key only, state per gram is one long. At 100 TB
-    * the gram key would be a 64-bit digest ([[Repetition.segmentDedup]]
-    * precedent); the string key is kept for bit-exact oracle parity.
+    * the gram key would be a 64-bit digest; the string key is kept for
+    * bit-exact oracle parity.
     */
   def duplicateSpans(docs: DataFrame, k: Int = 10): DataFrame = {
     // the gram stream feeds the owner table AND the hit join: checkpoint

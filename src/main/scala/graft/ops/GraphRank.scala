@@ -210,9 +210,8 @@ object GraphRank {
     * unrolls every round as chained CTEs. Magnitudes grow as
     * maxdeg^(2·iters) — bounded on a kNN graph (deg ≤ 2k); production
     * on a power-law graph adds the usual per-round scalar normalization
-    * (a one-row fold, the hll-estimator shape), which this fixed-round
-    * exact variant deliberately omits to keep the contract
-    * division-free.
+    * (a one-row fold), which this fixed-round exact variant deliberately
+    * omits to keep the contract division-free.
     *
     * Scale shape per round: two vertex-keyed equi-joins + partial-agg
     * sums (messages reduce map-side before the shuffle), work O(|E|),
@@ -408,7 +407,7 @@ object GraphRank {
       frontier = frontier
         .join(ed.withColumnRenamed("src", "node"), Seq("node"))
         .select(col("walk_id"), col("dst"),
-          CurationPipeline.hashBucket(
+          hashBucket(
             concat_ws("_", col("walk_id"), lit(t), col("dst"))).as("h"))
         .groupBy("walk_id")
         .agg(min_by(col("dst"), struct(col("h"), col("dst"))).as("node"))

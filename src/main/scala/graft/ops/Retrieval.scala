@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * training-data engine needs for corpus exploration, targeted
   * decontamination probes and eval-set leakage hunts.
   *
-  * Cross-engine determinism, same discipline as [[LanguageModel]]:
+  * Cross-engine determinism, same discipline as [[Selection]]:
   * no transcendental reaches a value. The Robertson idf
   * log2((N − df + 0.5)/(df + 0.5)) is computed on the EXACT rational
   * (2(N − df) + 1)/(2df + 1) as integer floor-log2 (unpadded `bin`)
@@ -149,8 +149,8 @@ object Retrieval {
   def hashedTf(docs: DataFrame, dims: Int = 256): DataFrame =
     docs.select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
       .select(col("doc_id"),
-        CurationPipeline.hashBucket(col("token"), dims).as("bucket"),
-        when(CurationPipeline.hashBucket(concat(lit("s_"), col("token")), 2) === 1,
+        hashBucket(col("token"), dims).as("bucket"),
+        when(hashBucket(concat(lit("s_"), col("token")), 2) === 1,
           lit(1L)).otherwise(lit(-1L)).as("sgn"))
       .groupBy("doc_id", "bucket").agg(sum("sgn").as("v"))
       .where(col("v") =!= 0)

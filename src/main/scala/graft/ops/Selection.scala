@@ -12,10 +12,9 @@ import org.apache.spark.sql.functions._
   * the log-likelihood ratio of a TARGET distribution vs the RAW corpus
   * distribution over a FIXED-SIZE hashed gram profile).
   *
-  * Cross-engine determinism, same discipline as [[LanguageModel]] and
-  * [[Retrieval]]: no transcendental ever reaches a value. Every
-  * log2 is the integer floor-log2 (unpadded `bin`) plus a
-  * linear-interpolation milli fraction on the EXACT integer rational —
+  * Cross-engine determinism, same discipline as [[Retrieval]]: no
+  * transcendental ever reaches a value. Every log2 is the integer
+  * floor-log2 (unpadded `bin`) plus a linear-interpolation milli fraction on the EXACT integer rational —
   * [[Retrieval.bm25TopK]]'s idf recipe — so scores are exact int64
   * milli units, bit-identical on any engine replaying the formula.
   *
@@ -56,7 +55,7 @@ object Selection {
 
   /** Naive-Bayes quality score: fit add-one-smoothed per-class word
     * likelihoods on a deterministic md5-content training slice (the
-    * [[CurationPipeline.hashBucket]] recipe every split/twin here
+    * [[graft.ops.hashBucket]] recipe every split/twin here
     * uses), label = document source ∈ `positiveSources`, then score
     * EVERY document by the summed per-token milli log-likelihood ratio
     * plus the class-prior term. `nb_milli` > 0 reads "looks like the
@@ -75,13 +74,12 @@ object Selection {
                      trainPermille: Int = 500): DataFrame = {
     val base = docs.select(col("doc_id"),
       col("source").isin(positiveSources: _*).cast("long").as("label"),
-      (CurationPipeline.hashBucket(col("text"), 1000L) < trainPermille)
+      (hashBucket(col("text"), 1000L) < trainPermille)
         .cast("int").as("is_train"),
       split(col("text"), " ").as("words"))
     // occurrence stream feeds the model table, the scalar totals AND
     // the scoring join: LAZY localCheckpoint so the explode runs once
     // and every consumer's analyzer walk starts from a truncated plan
-    // (the lm_perplexity cold-path lesson)
     val occ = base.select(col("doc_id"), col("label"), col("is_train"),
         explode(col("words")).as("w"))
       .localCheckpoint(false)
@@ -144,7 +142,7 @@ object Selection {
           "i -> concat(element_at(words, i), ' ', element_at(words, i + 1)))"))
           .as("g"))
       .select(col("doc_id"), col("is_target"),
-        CurationPipeline.hashBucket(col("g"), buckets).as("b"))
+        hashBucket(col("g"), buckets).as("b"))
       .localCheckpoint(false)
     val prof = grams.groupBy("b").agg(
       sum(col("is_target")).as("ct"), count(lit(1)).as("cr"))
@@ -195,7 +193,7 @@ object Selection {
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     docs
       .select(col("doc_id"), col("source"),
-        CurationPipeline.hashBucket(col("doc_id").cast("string")).as("h"))
+        hashBucket(col("doc_id").cast("string")).as("h"))
       .withColumn("rk", row_number().over(byHash))
       .withColumn("n", count(lit(1)).over(all))
       .where(col("rk") <= expr(s"(n * $permille + 999) div 1000"))

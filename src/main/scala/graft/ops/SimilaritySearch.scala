@@ -175,7 +175,7 @@ object SimilaritySearch {
     embeddings
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("vec"),
-        CurationPipeline.hashBucket(col("vec_id").cast("string")).as("h"))
+        hashBucket(col("vec_id").cast("string")).as("h"))
       .orderBy("h", "vec_id").limit(c)
       .select("vec").collect().map(_.getSeq[Double](0).toArray)
 

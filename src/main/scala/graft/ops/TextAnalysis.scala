@@ -206,7 +206,7 @@ object TextAnalysis {
     * doc-keyed window for the totals → doc-keyed final agg; Spark
     * reuses the window's hash partitioning for the final agg, so the
     * corpus shuffles ONCE (on the (doc, word) key) plus the doc-keyed
-    * exchange — the repetition_stats shape.
+    * exchange.
     */
   def entropyScore(docs: DataFrame): DataFrame = {
     val byDoc = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")

@@ -110,7 +110,8 @@ class CanonSpec extends AnyFunSuite {
     val frames = graft.pipeline.KgPipeline.run(
       graft.corpus.CorpusGen.corpus(spark, cfg)).frames
     val feat = graft.canon.SimilarityPipeline.standardize(
-      graft.canon.SimilarityPipeline.telemetryFeatures(frames))
+      graft.canon.SimilarityPipeline.telemetryFeatures(frames),
+      graft.canon.SimilarityPipeline.TeleDims)
       .localCheckpoint(true)
     def edges(df: org.apache.spark.sql.DataFrame) =
       df.select("src", "dst").collect()

@@ -1,10 +1,8 @@
 package graft
 
 import graft.canon.Reduce
-import graft.core.Salting
-import graft.extract.{Nms, TelemetryInterpolation}
+import graft.extract.TelemetryInterpolation
 import graft.materialize.Upsert
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class OperatorSpec extends AnyFunSuite {
@@ -91,34 +89,6 @@ class OperatorSpec extends AnyFunSuite {
     val kept = Upsert.retractSimilarity(triples, Seq(100L))
       .select("subj", "pred").collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(kept === Set(("200.1", "SIMILAR_TO"), ("100.1", "DEPICTS")))
-  }
-
-  // ---- salting ----
-
-  test("salted join equals plain join") {
-    val big = (0 until 5000).map(i => (if (i % 10 < 9) "hot" else s"k$i", i))
-      .toDF("key", "v")
-    val small = Seq(("hot", 1), ("k7", 2), ("k17", 3)).toDF("key", "w")
-    val plain = big.join(small, Seq("key")).agg(sum(col("v") * col("w")))
-      .collect()(0).getLong(0)
-    val salted = Salting.saltedJoin(big, small, "key", saltCol = "v")
-      .agg(sum(col("v") * col("w"))).collect()(0).getLong(0)
-    assert(plain === salted)
-  }
-
-  // ---- A7 NMS ----
-
-  test("greedy NMS: prob threshold, IoU suppression, top-k, per-label") {
-    import Nms.Box
-    val boxes = Seq(
-      Box(0, 0, 10, 10, 0.9, "a"),
-      Box(1, 1, 11, 11, 0.8, "a"),  // IoU > 0.45 with first -> suppressed
-      Box(50, 50, 60, 60, 0.7, "a"), // far away -> kept
-      Box(1, 1, 11, 11, 0.75, "b"), // other label -> kept
-      Box(0, 0, 5, 5, 0.1, "a")     // below prob threshold
-    )
-    val kept = Nms.suppress(boxes)
-    assert(kept.map(_.prob).toSet === Set(0.9, 0.7, 0.75))
   }
 
   // ---- A11 intersection percentage / A29 anonymize ----

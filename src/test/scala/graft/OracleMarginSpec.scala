@@ -236,47 +236,6 @@ class OracleMarginSpec extends AnyFunSuite {
     assert(sqm > 1e-9, "an SQ score sits on the round-6 grid boundary")
   }
 
-  test("round-6 boundaries of the corpus-ratio oracles decide identically cross-engine") {
-    // These oracles compute their ratio with IDENTICAL IEEE arithmetic
-    // on both engines, but the final round(x, 6) is implemented
-    // differently: Spark rounds HALF_UP on x's EXACT decimal expansion
-    // (BigDecimal), DuckDB rounds the FLOAT product x·10⁶ half away
-    // from zero. The two agree except in a sliver: a non-dyadic x whose
-    // float product lands exactly on k+0.5 (or within a ulp of it)
-    // while the exact expansion sits on the other side. A value is safe
-    // iff it is EXACTLY on the boundary in BOTH views (dyadic x — both
-    // engines see precisely .5 and round up together; this corpus has
-    // such values) or keeps clear margin in both. Regenerated corpora
-    // that violate this fail HERE, not in the driver gate.
-    import java.math.{BigDecimal => JBD, RoundingMode}
-    def audit(name: String, vals: Seq[Double]): Unit = {
-      var exactHalves = 0
-      val bad = vals.filter { x =>
-        val bd = new JBD(x).movePointRight(6)
-        val bdFrac = bd.subtract(bd.setScale(0, RoundingMode.FLOOR))
-        val exactHalf = bdFrac.compareTo(new JBD("0.5")) == 0
-        val fl = (x * 1e6) % 1.0
-        if (exactHalf) exactHalves += 1
-        val bothOnBoundary = exactHalf && fl == 0.5
-        val bothClear = math.abs(bdFrac.doubleValue - 0.5) > 1e-9 &&
-          math.abs(fl - 0.5) > 1e-9
-        !(bothOnBoundary || bothClear)
-      }
-      info(s"$name: ${vals.size} values, $exactHalves exact-boundary dyadics, ${bad.size} unsafe")
-      assert(bad.isEmpty,
-        s"$name: round-6 decision could differ cross-engine for ${bad.take(3).mkString(", ")}")
-    }
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val rep = graft.ops.Repetition.repetitionStatsRaw(docs)
-      .select("dup_word_frac", "top2gram_frac", "dup_5gram_frac").collect()
-    audit("repetition dup_word_frac", rep.map(_.getDouble(0)).toSeq)
-    audit("repetition top2gram_frac", rep.map(_.getDouble(1)).toSeq)
-    audit("repetition dup_5gram_frac", rep.map(_.getDouble(2)).toSeq)
-    audit("segment_dedup dup_frac",
-      graft.ops.Repetition.segmentDedupRaw(docs)
-        .select("dup_frac").collect().map(_.getDouble(0)).toSeq)
-  }
-
   test("rp_reduce: projection values keep margin from the round-6 grid") {
     val m = graft.ops.SimilaritySearch.rpReduce(
         spark.read.parquet(s"$dir/embeddings.parquet"))

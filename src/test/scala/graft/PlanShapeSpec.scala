@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * broadcast joins for dimensions and semi/anti joins, global top-k as
   * TakeOrderedAndProject, and — across the ENTIRE query surface — no
   * unintended cartesian / broadcast-nested-loop join and no
-  * single-partition exchange outside the one bounded prefix-sum.
+  * single-partition exchange outside rrf_fusion's bounded rank windows.
   *
   * Plans are built (analyzed + optimized + planned), not executed; the
   * assertions read the physical plan string. AQE wrapping is fine: the
@@ -50,23 +50,13 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("no single-partition exchange outside the bounded prefix-sum") {
-    // dedup_growth's running sum is the documented two-phase prefix sum:
-    // the SinglePartition exchange walks one row per 50-DOC BATCH (post
-    // partial+final agg), never the corpus.
-    // hll_distinct's final fold is a global agg over the ≤64-row
-    // register table and bottomk_distinct's over exactly k=64
-    // TakeOrdered rows: their SinglePartition exchange carries one
-    // partial-agg row per partition, never the corpus.
-    // rrf_fusion's two rank windows run over the ≤pool-row candidate
-    // lists AFTER each leg's bounded top-k — serving-side tables (the
-    // MMR stage-2 class), never the corpus.
-    val offenders = batchNames.filterNot(
-      Set("hll_distinct", "bottomk_distinct", "dedup_growth", "rrf_fusion"))
+    // rrf_fusion's two rank windows (running row counts) run over the
+    // ≤pool-row candidate lists AFTER each leg's bounded top-k —
+    // serving-side tables (the MMR stage-2 class), never the corpus.
+    val offenders = batchNames.filterNot(_ == "rrf_fusion")
       .filter(n => plan(n).contains("SinglePartition"))
     assert(offenders.isEmpty,
       s"unexpected single-partition exchange in: ${offenders.mkString(", ")}")
-    assert(plan("dedup_growth").contains("partial_sum"),
-      "dedup_growth must partial-aggregate per bucket before the global cumsum")
   }
 
   test("q01: pushdown, pruning, partial agg, vectorized scan") {
