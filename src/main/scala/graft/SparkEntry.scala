@@ -966,7 +966,7 @@ object SparkEntry {
         graft.canon.SimilarityPipeline.standardize(
           graft.canon.SimilarityPipeline.telemetryFeatures(docFrames(s, dir)),
           graft.canon.SimilarityPipeline.TeleDims),
-        eps = 2.0, minPts = 5, maxDegree = 16)
+        eps = 2.0, minPts = 5)
         .orderBy("id")
     }),
     "curation_pipeline" -> ((s, dir) => {

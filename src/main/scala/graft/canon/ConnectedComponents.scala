@@ -1,5 +1,6 @@
 package graft.canon
 
+import graft.core.SmallSide
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,48 +22,25 @@ object ConnectedComponents {
   /** edges: (src: long, dst: long). Returns (id: long, component: long)
     * where component = min vertex id of the component.
     *
-    * Below `collectThreshold` edges the computation collapses to one
-    * collect + driver union-find (the [[runString]] fast path, added
-    * for long ids in optimization round 6): min-root union produces
-    * exactly the min-vertex-id representative the hash-min fixpoint
-    * converges to, and it removes the ~4 barrier stages + checkpoint
-    * per distributed iteration. Above the threshold the distributed
-    * loop runs as before, so a billion-edge graph never lands on the
-    * driver (≤ threshold longs ≈ 8 MB).
+    * Up to `collectThreshold` edges are fetched once
+    * ([[graft.core.SmallSide]]) and joined on the driver by [[minRoots]],
+    * which saves the ~4 barrier stages + checkpoint of every distributed
+    * iteration; above it the distributed loop runs, so a billion-edge
+    * graph never lands on the driver (≤ threshold longs ≈ 8 MB).
     */
   def run(edges: DataFrame, maxIter: Int = 25,
           collectThreshold: Long = 500000L)(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     val e0 = edges.select(col("src"), col("dst"))
-    // the typed probe only applies to long vertex ids — runString's
-    // distributed fallback re-enters here with string columns
-    if (e0.schema("src").dataType != org.apache.spark.sql.types.LongType)
-      return runDistributed(e0, maxIter)
-    val probe = e0.limit((collectThreshold + 1).toInt).as[(Long, Long)].collect()
-    if (probe.length <= collectThreshold) {
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      probe.foreach { case (a, b) =>
-        if (a != b) {
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) {
-            if (ra < rb) parent(rb) = ra else parent(ra) = rb
-          }
-        }
-      }
+    SmallSide.collect(e0, collectThreshold) match {
       // same vertex set as the distributed path: every endpoint of a
-      // non-self edge (self-loop-only vertices are their own component
-      // there too, via the symmetrized-distinct edge set — but those
-      // rows are filtered before label init, so a vertex appearing
-      // ONLY in self-loops is absent in both paths)
-      val verts = probe.iterator.filter { case (a, b) => a != b }
-        .flatMap { case (a, b) => Iterator(a, b) }.toSet
-      verts.iterator.map(v => (v, find(v))).toSeq.toDF("id", "component")
-    } else runDistributed(e0, maxIter)
+      // non-self edge (a vertex appearing ONLY in self-loops is absent
+      // in both paths)
+      case Some(rows) => minRoots(rows.map(r => (r.getLong(0), r.getLong(1)))
+        .filter { case (a, b) => a != b }).toSeq.toDF("id", "component")
+      case None => runDistributed(e0, maxIter)
+    }
   }
 
   private def runDistributed(edges: DataFrame, maxIter: Int)(
@@ -116,38 +94,29 @@ object ConnectedComponents {
   /** Same algorithm over string vertex ids (used for contracted graphs
     * like grid cells); representative = lexicographic min id.
     * edges: (srcS, dstS) → (sid, component_s).
-    *
-    * Contracted graphs are usually tiny relative to the input (cells,
-    * not points), so below `collectThreshold` edges the component
-    * computation collapses to one collect + driver union-find + one
-    * small broadcastable result — removing ~4 barrier stages per
-    * iteration of the distributed loop. Above the threshold the
-    * distributed hash-min loop runs as usual.
     */
-  def runString(edges: DataFrame, maxIter: Int = 25,
-                collectThreshold: Long = 500000L)(
-      implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val e = edges.select(col("srcS").as("src"), col("dstS").as("dst"))
-    // one execution decides AND fetches: the previous limit+count probe
-    // re-ran the whole edge derivation a second time for the collect
-    val probe = e.limit((collectThreshold + 1).toInt).as[(String, String)].collect()
-    if (probe.length <= collectThreshold) {
-      val local = probe
-      val parent = scala.collection.mutable.Map[String, String]()
-      def find(x: String): String = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      local.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      parent.keys.toSeq.map(k => (k, find(k))).toDF("sid", "component_s")
-    } else {
-      run(e, maxIter).select(col("id").as("sid"), col("component").as("component_s"))
+  def runString(edges: DataFrame, maxIter: Int = 25)(
+      implicit spark: SparkSession): DataFrame =
+    runDistributed(edges.select(col("srcS").as("src"), col("dstS").as("dst")), maxIter)
+      .select(col("id").as("sid"), col("component").as("component_s"))
+
+  /** Driver union-find: each endpoint of `edges` → the minimum vertex
+    * of its component, the hash-min loop's representative (min-root union
+    * keeps every root the minimum of its set). `find` halves paths in a
+    * loop: min-root union can chain a whole component, too deep to recurse. */
+  private[graft] def minRoots[T](edges: Iterable[(T, T)])(
+      implicit ord: Ordering[T]): Map[T, T] = {
+    val parent = scala.collection.mutable.Map[T, T]()
+    @annotation.tailrec def find(x: T): T = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { parent(x) = parent(p); find(parent(x)) }
     }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) {
+        if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    parent.keys.toList.map(k => k -> find(k)).toMap
   }
 }

@@ -1,5 +1,6 @@
 package graft.canon
 
+import graft.core.SmallSide
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,35 +34,74 @@ object Dbscan {
     * iterative CC converges on a contracted problem. Density semantics
     * are the standard grid approximation of DBSCAN (cell diagonal ≤ ε
     * merge guarantee in each axis direction).
+    *
+    * The core cells are fetched once (graft.core.SmallSide). Up to
+    * `collectThreshold` of them, the driver finishes the cell graph and
+    * broadcasts the cell→cluster map; above it the cell graph, its
+    * components and the numbering run distributed.
     */
   def clusterApprox(points: DataFrame, eps: Double, minPts: Int,
-                    maxDegree: Int = 16)(implicit spark: SparkSession): DataFrame = {
+                    collectThreshold: Long = 2000000L)(
+      implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
     // project early (guide §2.3): the vectors are consumed entirely by
-    // the cell expression — dropping them here keeps them out of the
-    // persisted rows and every downstream exchange (the final
-    // cell→cluster join used to shuffle the full vec payload)
+    // the cell expression — dropping them keeps them out of every exchange
     val pts = points.select(col("id"), col("group"),
-        concat_ws(",", col("group"),
-          expr("array_join(transform(vec, v -> cast(floor(v / " + eps + ") as string)), '_')"))
-          .as("cell"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      concat_ws(",", col("group"),
+        expr("array_join(transform(vec, v -> cast(floor(v / " + eps + ") as string)), '_')"))
+        .as("cell"))
 
-    val cellCounts = pts.groupBy("group", "cell").agg(count(lit(1)).as("cnt"))
-    val coreCells = cellCounts.where(col("cnt") >= minPts)
+    val coreCells = pts.groupBy("group", "cell").agg(count(lit(1)).as("cnt"))
+      .where(col("cnt") >= minPts)
       .select("group", "cell")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cellMap = SmallSide.collect(coreCells.select("cell"), collectThreshold) match {
+      case Some(rows) => broadcast(numberCells(rows.map(_.getString(0))).toDF("cell", "cluster"))
+      case None => numberCellsDistributed(
+        coreCells.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    }
+    pts.join(cellMap, Seq("cell"), "left")
+      .select(col("id"), col("group"), coalesce(col("cluster"), lit(-1L)).as("cluster"))
+  }
 
-    // face-adjacent neighbor cells (±1 along each axis)
-    val dims = points.select(size(col("vec"))).first().getInt(0)
-    val offsets = (0 until dims).flatMap(d => Seq((d, 1), (d, -1)))
+  /** The cell→cluster map of [[clusterApprox]] on the driver, equal to
+    * [[numberCellsDistributed]]'s: a cell "<group>,<c0>_<c1>_…" links to
+    * each face-adjacent core cell (one coordinate ±1, spelled as the SQL
+    * spells it); a component is named by its lexicographically smallest
+    * cell (`String` order is Spark's for these ASCII ids), and clusters
+    * number the components of a group densely in that order. The edges
+    * are a lazy view: only the union-find map (≤ one entry per cell) is held.
+    */
+  private def numberCells(cells: Array[String]): Seq[(String, Long)] = {
+    val core = cells.toSet
+    val edges = for {
+      cell <- cells.view
+      comma = cell.indexOf(',')
+      coords = cell.substring(comma + 1).split('_').filter(_.nonEmpty).map(_.toLong)
+      d <- coords.indices
+      off <- Seq(1L, -1L)
+      nbr = cell.substring(0, comma + 1) + coords.updated(d, coords(d) + off).mkString("_")
+      if core(nbr)
+    } yield (cell, nbr)
+    val root = ConnectedComponents.minRoots(edges)
+    cells.groupBy(c => c.substring(0, c.indexOf(','))).values.toSeq.flatMap { group =>
+      val comp = group.map(c => c -> root.getOrElse(c, c))
+      val rank = comp.map(_._2).distinct.sorted.zipWithIndex.toMap
+      comp.map { case (c, k) => (c, rank(k).toLong) }
+    }
+  }
+
+  /** [[numberCells]] as Spark jobs, for more core cells than the driver
+    * holds: the cell graph's components via
+    * [[ConnectedComponents.runString]], numbered by a window per group. */
+  private def numberCellsDistributed(coreCells: DataFrame)(
+      implicit spark: SparkSession): DataFrame = {
+    // face-adjacent neighbor cells (±1 along each axis d)
     val withCoords = coreCells.withColumn("coords",
       split(element_at(split(col("cell"), ","), 2), "_").cast("array<long>"))
-    val nbrCells = withCoords.select(col("group"), col("cell"),
-      explode(array(offsets.map { case (d, off) =>
-        concat_ws(",", col("group"),
-          array_join(transform(col("coords"), (v, i) =>
-            when(i === d, v + off).otherwise(v).cast("string")), "_"))
-      }: _*)).as("nbr"))
+    val nbrCells = withCoords.select(col("group"), col("cell"), explode(flatten(
+      transform(sequence(lit(0), size(col("coords")) - 1), d => array(Seq(1, -1).map(off =>
+        concat_ws(",", col("group"), array_join(transform(col("coords"), (v, i) =>
+          when(i === d, v + off).otherwise(v).cast("string")), "_"))): _*)))).as("nbr"))
     val cellEdges = nbrCells
       .join(coreCells.select(col("cell").as("nbr")), Seq("nbr"), "left_semi")
       .select(col("cell").as("srcS"), col("nbr").as("dstS"))
@@ -74,23 +114,8 @@ object Dbscan {
         coalesce(col("component_s"), col("cell")).as("component"))
 
     val w = Window.partitionBy("group").orderBy("component")
-    val numbered = cellComp
-      .select(col("group"), col("cell"), col("component")).distinct()
-      .withColumn("cluster", (dense_rank().over(w) - 1).cast("long"))
-
-    // cell→cluster attach: with AQE off (scaling legs) the static
-    // planner has no size estimate for `numbered` and picks a
-    // sort-merge join — a full sort+shuffle of the point table to
-    // attach a small cell map. Decide from the measured core-cell
-    // count (coreCells is persisted; the count is an O(cells) agg):
-    // broadcast when the cell map is provably small, keep the shuffle
-    // join above the cap so a billion-cell corpus can't OOM the driver.
-    val cellMap = numbered.select("cell", "cluster")
-    val smallCellMap = coreCells.count() <= 2000000L
-    val assigned = pts.join(
-      if (smallCellMap) broadcast(cellMap) else cellMap, Seq("cell"), "left")
-    assigned.select(col("id"), col("group"),
-      coalesce(col("cluster"), lit(-1L)).as("cluster"))
+    cellComp.withColumn("cluster", (dense_rank().over(w) - 1).cast("long"))
+      .select("cell", "cluster")
   }
 
   /** Exact in-group ε-ball join (fixture scale). */

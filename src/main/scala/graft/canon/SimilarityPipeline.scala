@@ -1,6 +1,6 @@
 package graft.canon
 
-import graft.core.Ontology
+import graft.core.{Ontology, SmallSide}
 import graft.materialize.TripleBuilder
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -47,6 +47,10 @@ object SimilarityPipeline {
     * which avg/stddev_pop skip). `dims` MUST equal the uniform vec
     * length; a wider/narrower value changes which dimensions are
     * standardized.
+    *
+    * The stats (one row per group) are broadcast while they hold at most
+    * 8M cells, groups × (2·dims + 1) ([[graft.core.SmallSide]]); above
+    * that the shuffle join runs, and the aggregate runs again in it.
     */
   def standardize(feat: DataFrame, dims: Int): DataFrame = {
     val aggs = (0 until dims).flatMap(d => Seq(
@@ -56,17 +60,7 @@ object SimilarityPipeline {
       .select(col("group"),
         array((0 until dims).map(d => col(s"mu_$d")): _*).as("mu"),
         array((0 until dims).map(d => col(s"sd_$d")): _*).as("sigma"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // stats⋈feat strategy, decided like Dbscan.clusterApprox's cell map:
-    // stats is one row per group, but the static planner has no estimate
-    // for an aggregate, so with AQE off (the scaling legs' protocol) it
-    // picks a sort-merge join — a full-width exchange + sort of the
-    // VECTOR stream just to attach mu/sigma. The count is O(groups) over
-    // the persisted aggregate (feat is still scanned exactly twice in
-    // total, same as the sort-merge plan); broadcast only below a cap so
-    // a 100M-group corpus can't OOM driver or executors.
-    val smallStats = stats.count() * (2L * dims + 1) <= 8000000L
-    feat.join(if (smallStats) broadcast(stats) else stats, Seq("group"))
+    feat.join(SmallSide.broadcastIfSmall(stats, 8000000L / (2L * dims + 1)), Seq("group"))
       .withColumn("vec",
         graft.core.VectorExprs.vec_zscore(col("vec"), col("mu"), col("sigma")))
       .select("id", "group", "vec")
@@ -174,7 +168,7 @@ object SimilarityPipeline {
         // preStdTele (run()'s checkpointed standardization) avoids
         // recomputing the identical standardize the kNN leg already ran
         Dbscan.clusterApprox(preStdTele.getOrElse(standardize(raw, TeleDims)),
-          1.0, minPts, maxDegree = 16)
+          1.0, minPts)
     val member = clusters.where(col("cluster") >= 0)
       .withColumn("cluster_id",
         concat(lit("c"), col("group"), lit("."), col("cluster")))

@@ -1,6 +1,6 @@
 package graft.materialize
 
-import graft.core.Ontology
+import graft.core.{Ontology, SmallSide}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
@@ -149,16 +149,10 @@ object Mosaics {
       .withColumn("mosaic_id", concat(lit("m"), col("start_frame")))
       .localCheckpoint(true)
 
-    val mosaicKeys = mosaics.select("inspection_id", "session", "mosaic_id")
-    // key-attach strategy, decided like the grid-DBSCAN cell map: the
-    // checkpointed mosaics table has no stats, so with AQE off (the
-    // scaling legs) the static planner sort-merge-joined the sessioned
-    // table against a 3-column key map — an extra exchange + two sorts.
-    // The count is O(sessions) over the already-materialized checkpoint;
-    // keep the shuffle join above the cap so a billion-session corpus
-    // can't OOM.
-    val keysSide = if (mosaics.count() <= 2000000L) broadcast(mosaicKeys)
-                   else mosaicKeys
+    // key attach: the checkpointed keys are fetched once and broadcast up
+    // to 2M sessions (graft.core.SmallSide); above that the shuffle join runs
+    val keysSide = SmallSide.broadcastIfSmall(
+      mosaics.select("inspection_id", "session", "mosaic_id"), 2000000L)
     // IN_MOSAIC with homography: deterministic per-frame 3x3 (translation
     // by in-session offset — the stitcher's accumulated-H analog)
     val inMosaic = sessioned

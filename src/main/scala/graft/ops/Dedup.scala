@@ -23,13 +23,6 @@ object Dedup {
     docs.groupBy(md5(col("text")).as("content_hash"))
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Rows to drop under exact dedup (doc_id != canonical). */
-  def exactDuplicates(docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy(md5(col("text"))).orderBy("doc_id")
-    docs.withColumn("rn", row_number().over(w))
-      .where(col("rn") > 1).drop("rn")
-  }
-
   // ---------- MinHash + LSH ----------
 
   /** Deterministic 64-bit hash of a string (FNV + splitmix avalanche). */

@@ -37,11 +37,6 @@ object StreamingIngest {
     }.toDF("repo", "path", "total_score", "total_mentions")
   }
 
-  /** Per-repo rolling aggregates over the scored stream. */
-  def repoAggregates(scored: DataFrame): DataFrame =
-    scored.groupBy("repo")
-      .agg(count(lit(1)).as("n_docs"), sum("total_score").as("score_sum"))
-
   /** Session windows over an event stream (gap-based, watermark for
     * late data): streaming twin of the batch q12 sessionization.
     */
