@@ -3,7 +3,7 @@ package graft
 import graft.core.{CorpusRow, Ontology}
 import graft.extract.MentionExtractor
 import graft.link.{EntityLinker, ShipCatalog}
-import graft.ops.{Dedup, SimilaritySearch, TextAnalysis}
+import graft.ops.{SimilaritySearch, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -101,41 +101,12 @@ object SparkEntry {
 
   /** DuckDB twin of Selection.logRatioMilli: interpolated milli-log2 of
     * num/den, REQUIRING num >= den >= 1 — floor-log2 via unpadded bin
-    * length plus the linear milli fraction (bm25's idf recipe).
+    * length plus the linear milli fraction.
     */
   private def lrmSql(num: String, den: String): String = {
     val bits = s"(length(bin(($num) // ($den))) - 1)"
     s"($bits * 1000 + (1000 * ($num)) // (($den) * (1 << $bits)) - 1000)"
   }
-
-  /** Shared CTE chain of the substring-dedup oracles: stride-1 10-word
-    * grams, per-gram first/second owners, cross-doc hit positions, the
-    * pos−prev ≤ k island merge — ends at the `spans` relation
-    * (doc_id, span_start, span_len, n_grams, other_doc).
-    */
-  private val substringSpanCtes =
-    """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-      | p AS (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 9)) AS pos
-      |   FROM w WHERE len(ws) >= 10),
-      | g AS (SELECT doc_id, pos, array_to_string(list_slice(ws, pos, pos + 9), ' ') AS gram FROM p),
-      | own AS (SELECT gram, min(doc_id) AS m1 FROM g GROUP BY gram),
-      | dup AS (SELECT g.gram, o.m1, min(g.doc_id) AS m2 FROM g JOIN own o USING (gram)
-      |   WHERE g.doc_id > o.m1 GROUP BY g.gram, o.m1),
-      | hits AS (SELECT g.doc_id, g.pos,
-      |     CASE WHEN g.doc_id = d.m1 THEN d.m2 ELSE d.m1 END AS other_doc
-      |   FROM g JOIN dup d USING (gram)),
-      | isl AS (SELECT doc_id, pos, other_doc,
-      |     CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= 10
-      |          THEN 0 ELSE 1 END AS brk
-      |   FROM hits),
-      | i2 AS (SELECT doc_id, pos, other_doc,
-      |     sum(brk) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS island
-      |   FROM isl),
-      | spans AS (SELECT doc_id, cast(min(pos) as bigint) AS span_start,
-      |     cast(max(pos) + 10 - min(pos) as bigint) AS span_len,
-      |     cast(count(*) as bigint) AS n_grams,
-      |     cast(min(other_doc) as bigint) AS other_doc
-      |   FROM i2 GROUP BY doc_id, island)""".stripMargin
 
   /** MMR oracle: candidate pool (round-6 cosine top-`pool`), pairwise
     * round-6 sims, then the k greedy steps UNROLLED as a CTE chain
@@ -351,9 +322,6 @@ object SparkEntry {
           sum(floor(col("o_totalprice") * 100 + 0.5).cast("long")).as("total_cents"))
         .orderBy(asc_nulls_first("o_orderpriority"), asc_nulls_first("o_orderstatus"))),
 
-    "q20_dedup_exact" -> ((s, dir) =>
-      Dedup.exact(t(s, dir, "documents")).orderBy("content_hash")),
-
     "q21_token_stats" -> ((s, dir) => {
       val tok = TextAnalysis.tokenCount(col("text"))
       t(s, dir, "documents").select(col("lang"), tok.as("tok"))
@@ -493,21 +461,6 @@ object SparkEntry {
         .select(expr("transform(embedding, x -> cast(x as double))"))
         .collect()(0).getSeq[Double](0).toArray
       SimilaritySearch.matryoshkaTopK(emb.where(col("vec_id") =!= 0), q, k = 20)
-    }),
-
-    // hybrid retrieval: reciprocal-rank fusion of the BM25 keyword leg
-    // (bm25_topk's terms) and the dense cosine leg (vec 0 as the query)
-    // — integer 1000000 div (60 + rank) contributions, both legs' ranks
-    // replayed by the oracle (the dense leg on RAW doubles, no rounding)
-    "rrf_fusion" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(expr("transform(embedding, x -> cast(x as double))"))
-        .collect()(0).getSeq[Double](0).toArray
-      graft.ops.Retrieval.rrfFusion(
-        t(s, dir, "documents").where(col("doc_id") =!= 0),
-        emb.where(col("vec_id") =!= 0),
-        Seq("dup", "key", "merge", "vector"), q, k = 20, pool = 50)
     }),
 
     "knn_graph" -> ((s, dir) =>
@@ -749,90 +702,6 @@ object SparkEntry {
         .collect()(0).getSeq[Double](0).toArray
       SimilaritySearch.sqTopK(emb.where(col("vec_id") =!= 0), q, 20)
     }),
-    "minhash_pairs" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Dedup.minhashPairs(t(s, dir, "documents"), threshold = 0.0)
-    }),
-    // variable-length duplicated-span detection (the exact-substring
-    // dedup family): maximal cross-doc word spans >= 10 reconstructed
-    // from stride-1 gram hits — oracle replays grams → owners → hit
-    // positions → island merge exactly
-    "substring_spans" -> ((s, dir) =>
-      Dedup.duplicateSpans(t(s, dir, "documents"))
-        .orderBy("doc_id", "span_start")),
-    // keep-first span REMOVAL over the same spans: docs rewritten with
-    // every non-canonical duplicated span dropped, word-position HOF
-    // filter replayed by the oracle's nested list lambdas
-    "substring_scrub" -> ((s, dir) =>
-      Dedup.removeDuplicateSpans(t(s, dir, "documents")).orderBy("doc_id")),
-    "simhash_pairs" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Dedup.simhashPairs(t(s, dir, "documents"), maxHamming = 16)
-    }),
-    // the FULL minhash+LSH machinery (shingle → signature → band key →
-    // capped bucket join → signature-agreement verify) in portable
-    // mod-2³¹−1 arithmetic, hash-proven end to end by a DuckDB oracle
-    // that recomputes every stage; minhash_pairs stays the avalanche-
-    // hash production variant (rows-only by construction)
-    "minhash_portable" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Dedup.portableMinhashPairs(t(s, dir, "documents")).orderBy("a", "b")
-    }),
-    // incremental dedup: the delta batch (doc_id % 8 = 7) probes the
-    // corpus's capped band-key index — |delta| × bucket-fanout work,
-    // never corpus² — and the oracle replays signatures → bands →
-    // corpus-side rank cap → agreement count stage for stage
-    "delta_pairs" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val docs = t(s, dir, "documents")
-      Dedup.deltaPairs(
-        docs.where(col("doc_id") % 8 =!= 7),
-        docs.where(col("doc_id") % 8 === 7))
-        .orderBy("delta_id", "corpus_id")
-    }),
-    // per-delta-doc admission verdict on the same split: dup_corpus
-    // beats dup_delta (first-occurrence-keeps within the batch) beats
-    // admit; short docs have no signature and admit
-    "delta_dedup" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val docs = t(s, dir, "documents")
-      Dedup.deltaAdmit(
-        docs.where(col("doc_id") % 8 =!= 7),
-        docs.where(col("doc_id") % 8 === 7))
-        .orderBy("doc_id")
-    }),
-    // the simhash machinery (token hash → bit-majority vote → nibble
-    // bands → Hamming verify) with md5-derived 16-bit token hashes —
-    // recomputable in any engine, so the DuckDB oracle hash-proves it;
-    // simhash_pairs stays the 64-bit avalanche production variant
-    "simhash_portable" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      Dedup.portableSimhashPairs(t(s, dir, "documents")).orderBy("a", "b")
-    }),
-    "ngram_jaccard" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val docs = t(s, dir, "documents")
-      // deterministic exact candidate set (all pairs among doc_id < 200,
-      // a < b — fuzzy_link precedent) so the Jaccard arithmetic is
-      // oracle-checkable end to end; the hash-dependent minhash candidate
-      // variant of the same operator stays in minhash_pairs (rows-only)
-      val ids = docs.where(col("doc_id") < 200).select(col("doc_id"))
-      val pairs = ids.select(col("doc_id").as("a"))
-        .join(ids.select(col("doc_id").as("b")), col("a") < col("b"))
-      Dedup.ngramJaccard(docs, pairs, n = 3).orderBy("a", "b")
-    }),
-    "embedding_neardup" -> ((s, dir) =>
-      // synthetic embeddings are near-orthogonal; -1 returns all bucketed
-      // candidate pairs with their cosine (the op's 0.95 default is for
-      // real near-dup corpora)
-      Dedup.embeddingNearDup(t(s, dir, "embeddings"), threshold = -1.0)),
-    // PORTABLE twin of embedding_neardup: md5-derived hyperplanes →
-    // sign buckets → capped anchor pairing → exact cosine, every stage
-    // recomputable by the oracle; threshold -1 keeps the full candidate
-    // set so the cosine verify arithmetic is hash-checked too
-    "embedding_neardup_portable" -> ((s, dir) =>
-      Dedup.embeddingNearDupPortable(t(s, dir, "embeddings"), threshold = -1.0)
-        .orderBy("a", "b")),
     "fingerprints" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       // exploded to scalar (doc_id, fingerprint) rows — the driver's
@@ -920,8 +789,8 @@ object SparkEntry {
     // streaming LSH near-dup candidates (first-seen bucket anchors in
     // keyed state); single-batch source → pair set == batch
     // minhashCandidates(maxBucket = 1), proven by StreamingSpec.
-    // Rows-only here: bucket keys are engine-internal hashes (the exact
-    // Jaccard arithmetic is hash-proven separately by ngram_jaccard)
+    // Rows-only here: bucket keys are engine-internal hashes
+    // (streaming_neardup_portable is the hash-gated twin)
     "streaming_neardup" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       import org.apache.spark.sql.streaming.Trigger
@@ -969,32 +838,6 @@ object SparkEntry {
         eps = 2.0, minPts = 5)
         .orderBy("id")
     }),
-    "curation_pipeline" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      graft.ops.CurationPipeline.run(t(s, dir, "documents"),
-        graft.ops.CurationPipeline.Config(minQuality = 0.1, tokenBudget = 20000L))
-    }),
-    // exact-stage curation twin (no minhash stage): every stage is plain
-    // SQL, so the composite's stage WIRING is hash-proven by the driver
-    // gate; curation_pipeline above stays the rows-only full variant
-    "curation_exact" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      graft.ops.CurationPipeline.runExact(t(s, dir, "documents"),
-        graft.ops.CurationPipeline.Config(minQuality = 0.1, tokenBudget = 20000L))
-        .select(col("doc_id"), col("lang"), col("tokens"), col("quality"))
-        .orderBy("doc_id")
-    }),
-    // the FULL five-stage curation composite with the near-dup stage on
-    // portable minhash — the one stage that kept curation_pipeline
-    // rows-only is now recomputed by the oracle too (candidates, bands,
-    // caps and all), so the whole composite is hash-proven
-    "curation_portable" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      graft.ops.CurationPipeline.runPortable(t(s, dir, "documents"),
-        graft.ops.CurationPipeline.Config(minQuality = 0.1, tokenBudget = 20000L))
-        .select(col("doc_id"), col("lang"), col("tokens"), col("quality"))
-        .orderBy("doc_id")
-    }),
     // PII scrubbing over deterministically planted emails/phones (the
     // synthetic corpus has none — the planting is the test harness, the
     // operator is generic)
@@ -1021,26 +864,6 @@ object SparkEntry {
     "entropy_score" -> ((s, dir) =>
       TextAnalysis.entropyScore(t(s, dir, "documents"))
         .orderBy("doc_id")),
-    // inverted-index build: (term, doc_id, tf, df) postings, the batch
-    // index-construction job behind bm25_topk's serving path
-    "inverted_index" -> ((s, dir) =>
-      graft.ops.Retrieval.invertedIndex(t(s, dir, "documents"))
-        .orderBy("term", "doc_id")),
-    // near-dup canonicalization end-step: CC over exact verified pairs
-    // (3-gram Jaccard >= 0.1 among all doc_id < 200 pairs — the same
-    // deterministic candidate recipe as ngram_jaccard/fuzzy_link), one
-    // keeper per duplicate cluster; the production path feeds
-    // minhashPairs-verified candidates into the same canonicalize()
-    "neardup_canon" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val docs = t(s, dir, "documents").where(col("doc_id") < 200)
-      val ids = docs.select(col("doc_id"))
-      val allPairs = ids.select(col("doc_id").as("a"))
-        .join(ids.select(col("doc_id").as("b")), col("a") < col("b"))
-      val pairs = graft.ops.Dedup.ngramJaccard(docs, allPairs, n = 3)
-        .where(col("jaccard") >= 0.1)
-      graft.ops.Dedup.canonicalize(docs, pairs).orderBy("doc_id")
-    }),
     // tokenizer vocabulary: top-k words, deterministic tie-break;
     // k=20 against the 31-word synthetic vocab so the selection
     // boundary (count ties broken by word) is actually exercised
@@ -1143,14 +966,6 @@ object SparkEntry {
         .select(col("id").as("vec_id"), col("label").as("community"))
         .orderBy("vec_id")
     }),
-    // quantized-integer BM25 keyword retrieval: "dup" is the corpus's
-    // one rare term (df 25/500 — exercises the floor-log2 idf AND its
-    // linear-interpolation milli fraction); the common terms clamp to
-    // idf 0 exactly where Lucene clamps (df > N/2), so the zero branch
-    // is exercised too
-    "bm25_topk" -> ((s, dir) =>
-      graft.ops.Retrieval.bm25TopK(t(s, dir, "documents"),
-        Seq("dup", "key", "merge", "vector"), k = 15)),
     // overlapping word-window chunking (window 16, stride 12 against
     // ~60-word docs so multi-chunk overlap + truncated tails both occur)
     "chunk_docs" -> ((s, dir) =>
@@ -1209,17 +1024,6 @@ object SparkEntry {
           lo + (hi - lo) / 4, lo + 3L * (hi - lo) / 4)
         .orderBy("subj", "pred", "obj", "change")
     }),
-    // SemDeDup-style semantic dedup: portable md5-ranked centroids →
-    // Euclidean argmin clusters → within-cluster rank<=64 anchor pairs →
-    // cosine >= tau drops the later vector; the oracle replays centroid
-    // choice, assignment, anchor pairing and the smallest-anchor argmin.
-    // tau = 0.40 sits where this fixture's diffuse embedding space has
-    // duplicates to find (max within-cluster cosine 0.474; a real
-    // embedding corpus runs the production 0.95+) — OracleMarginSpec
-    // audits the tau and round-6 margins
-    "semantic_dedup" -> ((s, dir) =>
-      graft.ops.Dedup.semanticDedup(t(s, dir, "embeddings"), tau = 0.40)
-        .orderBy("vec_id")),
     // DeepWalk-style random-walk corpus over the exact kNN graph:
     // per hop one frontier⋈edges equi-join + a min_by partial agg on
     // the md5-derandomized choice key; the oracle unrolls all 4 hops
@@ -1232,12 +1036,6 @@ object SparkEntry {
       graft.ops.GraphRank.randomWalks(nodes, edges, steps = 4)
         .orderBy("walk_id", "step")
     }),
-    // multi-pass sorted-neighborhood blocking (prefix + reversed-suffix
-    // keys), explode-probe successor pairing, exact integer word-3-gram
-    // Jaccard verify — the classic ER family next to the hash ones
-    "snm_pairs" -> ((s, dir) =>
-      graft.ops.Dedup.sortedNeighborhoodPairs(t(s, dir, "documents"))
-        .orderBy("a", "b")),
     // greedy facility-location (max-coverage) selection: 8 exact greedy
     // rounds, argmax marginal distinct-3-gram gain, doc_id tie-break;
     // the oracle unrolls every round as chained CTEs
@@ -1246,11 +1044,6 @@ object SparkEntry {
       graft.ops.Selection.greedyCoverageSelect(t(s, dir, "documents"))
         .orderBy("round")
     }),
-    // signed feature hashing (hashing-trick vectorizer) + exact integer
-    // sparse-dot retrieval: broadcast query vector, bucket-keyed
-    // multiply, partial-agg per-doc sum, TakeOrdered cut — no floats
-    "hashtf_topk" -> ((s, dir) =>
-      graft.ops.Retrieval.hashedTfTopK(t(s, dir, "documents"))),
     // Adamic-Adar link prediction over the exact kNN graph: top-50
     // non-adjacent pairs by integer-micro sum of 1/log2(deg) over
     // common neighbors — wedge join + anti-join + partial agg, every
@@ -1662,9 +1455,6 @@ object SparkEntry {
         | cast(sum(cast(floor(o_totalprice * 100 + 0.5) as bigint)) as bigint) AS total_cents
         | FROM orders GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
         | ORDER BY 1 NULLS FIRST, 2 NULLS FIRST""".stripMargin,
-    "q20_dedup_exact" ->
-      """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_copies
-        | FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
     "q21_token_stats" ->
       s"""SELECT lang, cast(sum(tok) as bigint) AS total_tokens, min(tok) AS min_tokens, max(tok) AS max_tokens
          | FROM (SELECT lang, $tokSql AS tok FROM documents) t
@@ -1703,84 +1493,6 @@ object SparkEntry {
       """SELECT doc_id, lang FROM documents
         | WHERE cast(concat('0x', substr(md5(text), 1, 8)) as bigint) % 1000000 < 300000
         | ORDER BY doc_id""".stripMargin,
-    // grams are murmur-hashed on the Spark side, strings here: set SIZES
-    // agree (the deterministic sf0.01 corpus has no colliding grams —
-    // verified; a collision would fail the hash gate loudly, not silently)
-    "ngram_jaccard" ->
-      """WITH g AS (SELECT doc_id,
-        |   list_distinct(list_transform(
-        |     generate_series(1, greatest(len(string_split(text, ' ')) - 2, 1)),
-        |     i -> array_to_string(string_split(text, ' ')[i:i+2], ' '))) AS grams
-        |  FROM documents WHERE doc_id < 200)
-        | SELECT a.doc_id AS a, b.doc_id AS b,
-        |  len(list_intersect(a.grams, b.grams)) / len(list_distinct(list_concat(a.grams, b.grams))) AS jaccard
-        | FROM g a JOIN g b ON a.doc_id < b.doc_id ORDER BY a, b""".stripMargin,
-    // replays the entire portable minhash pipeline: polynomial shingle
-    // hash, 16 affine min-hashes mod 2^31-1, 4-slot band keys, the
-    // rank<=64 hot-bucket cap, and the agreement count — stage for stage
-    // the same arithmetic as Dedup.portableMinhashPairs
-    "minhash_portable" ->
-      s"""WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 5),
-         |${portableMinhashCtes("d")}
-         | SELECT a, b, cast(n_match as bigint) AS n_match
-         | FROM scored WHERE n_match >= 13 ORDER BY a, b""".stripMargin,
-    // replays the incremental probe: same signature/band arithmetic,
-    // corpus-side-only rank cap, delta probes every bucket it lands in
-    "delta_pairs" ->
-      s"""WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 5),
-         |${portableMinhashCtes("d")},
-         |${deltaProbeCtes}
-         | SELECT delta_id, corpus_id, cast(n_match as bigint) AS n_match
-         | FROM vs WHERE n_match >= 13 ORDER BY delta_id, corpus_id""".stripMargin,
-    // the admission verdict on the same split: corpus match beats
-    // within-delta first-occurrence-keeps beats admit; short docs have
-    // no signature rows and fall through to admit
-    "delta_dedup" ->
-      s"""WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 5),
-         |${portableMinhashCtes("d")},
-         |${deltaProbeCtes},
-         | drk AS (SELECT doc_id, band, bkey,
-         |  row_number() OVER (PARTITION BY band, bkey ORDER BY doc_id) AS r
-         |  FROM band WHERE doc_id % 8 = 7),
-         | dc AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-         |  FROM drk a JOIN band b USING (band, bkey)
-         |  WHERE b.doc_id % 8 = 7 AND a.r <= 64 AND a.doc_id < b.doc_id),
-         | ds AS (SELECT c.a, c.b,
-         |  sum(CASE WHEN ha.h = hb.h THEN 1 ELSE 0 END) AS n_match
-         |  FROM dc c JOIN hj ha ON ha.doc_id = c.a
-         |  JOIN hj hb ON hb.doc_id = c.b AND hb.j = ha.j
-         |  GROUP BY c.a, c.b),
-         | dupc AS (SELECT DISTINCT delta_id AS doc_id FROM vs WHERE n_match >= 13),
-         | dupd AS (SELECT DISTINCT b AS doc_id FROM ds WHERE n_match >= 13)
-         | SELECT dd.doc_id,
-         |  CASE WHEN dupc.doc_id IS NOT NULL THEN 'dup_corpus'
-         |       WHEN dupd.doc_id IS NOT NULL THEN 'dup_delta'
-         |       ELSE 'admit' END AS verdict
-         | FROM (SELECT doc_id FROM documents WHERE doc_id % 8 = 7) dd
-         | LEFT JOIN dupc USING (doc_id) LEFT JOIN dupd USING (doc_id)
-         | ORDER BY doc_id""".stripMargin,
-    // replays the substring-dedup span detection stage for stage (see
-    // substringSpanCtes): any shared span of length L >= 10 is exactly
-    // the island of its L-9 stride-1 gram hits
-    "substring_spans" ->
-      s"""$substringSpanCtes
-        | SELECT doc_id, span_start, span_len, n_grams, other_doc
-        | FROM spans ORDER BY doc_id, span_start""".stripMargin,
-    // the same spans, then keep-first removal: non-canonical spans
-    // (other_doc < doc_id) drop their word positions via the identical
-    // nested-lambda filter the engine runs
-    "substring_scrub" ->
-      s"""$substringSpanCtes,
-        | sp AS (SELECT doc_id,
-        |     list(struct_pack(s := span_start, l := span_len)) AS rm
-        |   FROM spans WHERE other_doc < doc_id GROUP BY doc_id)
-        | SELECT d.doc_id,
-        |   CASE WHEN sp.rm IS NULL THEN d.text
-        |   ELSE coalesce(array_to_string(list_transform(
-        |     list_filter(generate_series(1, len(string_split(d.text, ' '))),
-        |       p -> NOT len(list_filter(sp.rm, x -> p >= x.s AND p < x.s + x.l)) > 0),
-        |     p -> string_split(d.text, ' ')[p]), ' '), '') END AS text
-        | FROM documents d LEFT JOIN sp USING (doc_id) ORDER BY d.doc_id""".stripMargin,
     "cc_sizes" ->
       """WITH o AS (SELECT doc_id, lang,
         |   CASE WHEN lag(lang) OVER w = lang AND lag(doc_id) OVER w = doc_id - 1
@@ -1853,27 +1565,6 @@ object SparkEntry {
         | FROM e JOIN sigs s USING (vec_id), q
         | WHERE e.vec_id <> 0 AND s.bucket = q.qbucket
         | ORDER BY list_distance(e.v, q.qv), e.vec_id LIMIT 20""".stripMargin,
-    // replays the PORTABLE embedding near-dup stage for stage: the 8
-    // md5-derived hyperplanes (same '<bit>_<dim>' recipe as
-    // ann_lsh_portable), sign-pattern buckets, the rank<=64 anchor
-    // pairing (anchor < member, portableMinhashPairs shape), exact
-    // cosine on every surviving candidate
-    "embedding_neardup_portable" ->
-      """WITH e AS (SELECT vec_id, cast(embedding as double[]) AS v FROM embeddings),
-        | planes AS (SELECT b, list_transform(generate_series(0, 63),
-        |     d -> ((cast(concat('0x', substr(md5(concat(b, '_', d)), 1, 8)) as bigint) % 2001) - 1000) / 1000.0) AS p
-        |   FROM generate_series(0, 7) t(b)),
-        | sigs AS (SELECT e.vec_id,
-        |     string_agg(CASE WHEN list_inner_product(e.v, pl.p) >= 0 THEN '1' ELSE '0' END, '' ORDER BY pl.b) AS bucket
-        |   FROM e CROSS JOIN planes pl GROUP BY e.vec_id),
-        | anch AS (SELECT vec_id, bucket,
-        |     row_number() OVER (PARTITION BY bucket ORDER BY vec_id) AS rk FROM sigs),
-        | pairs AS (SELECT DISTINCT a.vec_id AS a, m.vec_id AS b
-        |   FROM anch a JOIN sigs m USING (bucket)
-        |   WHERE a.rk <= 64 AND a.vec_id < m.vec_id)
-        | SELECT p.a, p.b, round(list_cosine_similarity(ea.v, eb.v), 6) AS cosine
-        | FROM pairs p JOIN e ea ON p.a = ea.vec_id JOIN e eb ON p.b = eb.vec_id
-        | ORDER BY a, b""".stripMargin,
     // replays the PQ stage for stage: md5-ranked codebook rows sliced
     // per block, per-(vec, block) argmin by (list_distance, cid), ADC
     // squared distances via a left-to-right dimension loop, then the
@@ -1966,8 +1657,6 @@ object SparkEntry {
         |   round(cast(idot as double) * qs * vs / 16129.0, 6) AS dot_approx
         | FROM d ORDER BY cast(idot as double) * qs * vs / 16129.0 DESC, vec_id
         | LIMIT 20""".stripMargin,
-    "curation_exact" -> curationExactOracleSql,
-    "curation_portable" -> curationPortableOracleSql,
     // tie order inside the engine's top-k aggregator is (distance, dst
     // as string) — mirrored by the varchar cast in the window order
     "knn_graph" ->
@@ -2034,27 +1723,6 @@ object SparkEntry {
         | round(quantile_cont(n_chars, 0.5), 6) AS p50,
         | round(quantile_cont(n_chars, 0.75), 6) AS p75
         | FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    // same reachability-closure oracle shape as cc_components; grams
-    // are murmur-hashed Spark-side, strings here (ngram_jaccard
-    // precedent: distinct-set sizes agree on the deterministic corpus)
-    "neardup_canon" ->
-      """WITH RECURSIVE g AS (SELECT doc_id, list_distinct(list_transform(
-        |     generate_series(1, greatest(len(string_split(text, ' ')) - 2, 1)),
-        |     i -> array_to_string(string_split(text, ' ')[i:i+2], ' '))) AS grams
-        |   FROM documents WHERE doc_id < 200),
-        | e0 AS (SELECT a.doc_id AS a, b.doc_id AS b FROM g a JOIN g b
-        |   ON a.doc_id < b.doc_id
-        |   WHERE len(list_intersect(a.grams, b.grams)) /
-        |     len(list_distinct(list_concat(a.grams, b.grams))) >= 0.1),
-        | e AS (SELECT a, b FROM e0 UNION SELECT b, a FROM e0),
-        | reach(s, d) AS (SELECT a, a FROM (SELECT a FROM e UNION SELECT b FROM e) u(a)
-        |   UNION SELECT r.s, e.b FROM reach r JOIN e ON r.d = e.a),
-        | comp AS (SELECT s AS doc_id, min(d) AS component FROM reach GROUP BY s)
-        | SELECT d.doc_id, coalesce(c.component, d.doc_id) AS canonical_id,
-        |  coalesce(c.component, d.doc_id) = d.doc_id AS is_keeper
-        | FROM (SELECT doc_id FROM documents WHERE doc_id < 200) d
-        | LEFT JOIN comp c ON d.doc_id = c.doc_id
-        | ORDER BY d.doc_id""".stripMargin,
     // replays streaming first-seen bucket anchors: with a single-batch
     // source the anchor is the bucket MINIMUM, so the pair set is
     // (anchor, member) over the portable band buckets
@@ -2177,98 +1845,6 @@ object SparkEntry {
         |   cast(len(list_slice(w, cid * 12 + 1, cid * 12 + 16)) as bigint) AS n_tokens,
         |   array_to_string(list_slice(w, cid * 12 + 1, cid * 12 + 16), ' ') AS chunk
         | FROM c WHERE cid * 12 < len(w) ORDER BY doc_id, chunk_id""".stripMargin,
-    // replays the quantized BM25: floor-log2 idf on the exact rational
-    // (2(N-df)+1)/(2df+1) with the milli interpolation fraction,
-    // Lucene-style clamp at df > N/2, milli tf saturation with the
-    // identical truncating division points, (score desc, doc_id) top-k
-    "bm25_topk" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        | st AS (SELECT count(*) AS n, (1000 * sum(len(w))) // count(*) AS avgmilli FROM d),
-        | hits AS (SELECT doc_id, len(w) AS len, unnest(w) AS t FROM d),
-        | h AS (SELECT * FROM hits WHERE t IN ('dup', 'key', 'merge', 'vector')),
-        | tf AS (SELECT doc_id, t, max(len) AS len, count(*) AS tf FROM h GROUP BY 1, 2),
-        | dfs AS (SELECT t, count(DISTINCT doc_id) AS df FROM h GROUP BY 1),
-        | sc AS (SELECT f.doc_id, f.tf, f.len, 2 * (st.n - x.df) + 1 AS aa,
-        |     2 * x.df + 1 AS bb, st.avgmilli
-        |   FROM tf f JOIN dfs x USING (t), st),
-        | q AS (SELECT *, CASE WHEN aa >= bb THEN length(bin(aa // bb)) - 1
-        |     ELSE -1 END AS bits FROM sc),
-        | i AS (SELECT *, CASE WHEN bits < 0 THEN 0 ELSE bits * 1000
-        |     + (1000 * aa) // (bb * (1 << bits)) - 1000 END AS idf_milli FROM q),
-        | z AS (SELECT doc_id, idf_milli *
-        |     ((1000 * tf * (100 + 120)) //
-        |      (100 * tf + (120 * (1000 - 10 * 75
-        |        + (75 * ((1000000 * len) // avgmilli)) // 100)) // 1000)) AS contrib
-        |   FROM i)
-        | SELECT doc_id, cast(sum(contrib) as bigint) AS score_micro
-        | FROM z GROUP BY doc_id ORDER BY score_micro DESC, doc_id LIMIT 15""".stripMargin,
-    // hybrid-retrieval fusion: the bm25_topk integer chain (corpus
-    // minus doc 0, pool 50) ranked, the dense leg ranked on the RAW
-    // double cosine (bit-identical fold both engines, vec_id
-    // tie-break), then the integer 1000000 // (60 + rank) RRF sum
-    "rrf_fusion" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |   WHERE doc_id <> 0),
-        | st AS (SELECT count(*) AS n, (1000 * sum(len(w))) // count(*) AS avgmilli FROM d),
-        | hits AS (SELECT doc_id, len(w) AS len, unnest(w) AS t FROM d),
-        | h AS (SELECT * FROM hits WHERE t IN ('dup', 'key', 'merge', 'vector')),
-        | tf AS (SELECT doc_id, t, max(len) AS len, count(*) AS tf FROM h GROUP BY 1, 2),
-        | dfs AS (SELECT t, count(DISTINCT doc_id) AS df FROM h GROUP BY 1),
-        | sc AS (SELECT f.doc_id, f.tf, f.len, 2 * (st.n - x.df) + 1 AS aa,
-        |     2 * x.df + 1 AS bb, st.avgmilli
-        |   FROM tf f JOIN dfs x USING (t), st),
-        | qq AS (SELECT *, CASE WHEN aa >= bb THEN length(bin(aa // bb)) - 1
-        |     ELSE -1 END AS bits FROM sc),
-        | i AS (SELECT *, CASE WHEN bits < 0 THEN 0 ELSE bits * 1000
-        |     + (1000 * aa) // (bb * (1 << bits)) - 1000 END AS idf_milli FROM qq),
-        | z AS (SELECT doc_id, idf_milli *
-        |     ((1000 * tf * (100 + 120)) //
-        |      (100 * tf + (120 * (1000 - 10 * 75
-        |        + (75 * ((1000000 * len) // avgmilli)) // 100)) // 1000)) AS contrib
-        |   FROM i),
-        | bs AS (SELECT doc_id, cast(sum(contrib) as bigint) AS score_micro
-        |   FROM z GROUP BY doc_id ORDER BY score_micro DESC, doc_id LIMIT 50),
-        | sr AS (SELECT doc_id,
-        |     row_number() OVER (ORDER BY score_micro DESC, doc_id) AS rank FROM bs),
-        | e AS (SELECT vec_id, cast(embedding as double[]) AS v FROM embeddings
-        |   WHERE vec_id <> 0),
-        | qv AS (SELECT cast(embedding as double[]) AS q FROM embeddings WHERE vec_id = 0),
-        | dn AS (SELECT vec_id AS doc_id,
-        |     list_inner_product(v, q) /
-        |       (sqrt(list_inner_product(v, v)) * sqrt(list_inner_product(q, q))) AS cos
-        |   FROM e CROSS JOIN qv ORDER BY cos DESC, doc_id LIMIT 50),
-        | dr AS (SELECT doc_id,
-        |     row_number() OVER (ORDER BY cos DESC, doc_id) AS rank FROM dn),
-        | u AS (SELECT doc_id, rank FROM sr UNION ALL SELECT doc_id, rank FROM dr)
-        | SELECT doc_id, cast(count(*) as int) AS n_legs,
-        |   cast(sum(1000000 // (60 + rank)) as bigint) AS rrf_micro
-        | FROM u GROUP BY doc_id ORDER BY rrf_micro DESC, doc_id LIMIT 20""".stripMargin,
-    // full replay of the portable simhash: md5-nibble token values,
-    // bit-majority vote per doc, nibble band buckets with the rank<=64
-    // cap, Hamming verify on the 16-bit signatures
-    "simhash_portable" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        | tv AS (SELECT doc_id,
-        |  (strpos('0123456789abcdef', substr(md5(tok),1,1)) - 1) * 4096
-        | + (strpos('0123456789abcdef', substr(md5(tok),2,1)) - 1) * 256
-        | + (strpos('0123456789abcdef', substr(md5(tok),3,1)) - 1) * 16
-        | + (strpos('0123456789abcdef', substr(md5(tok),4,1)) - 1) AS v
-        | FROM tok),
-        | bits AS (SELECT doc_id, b, sum(CASE WHEN (v // (1 << b)) % 2 = 1 THEN 1 ELSE -1 END) AS s
-        |  FROM tv CROSS JOIN (SELECT unnest(range(0, 16)) AS b) bs
-        |  GROUP BY doc_id, b),
-        | sig AS (SELECT doc_id, cast(sum(CASE WHEN s > 0 THEN 1 << b ELSE 0 END) as bigint) AS sig
-        |  FROM bits GROUP BY doc_id),
-        | band AS (SELECT doc_id, sig, bd AS band, (sig >> cast(bd * 4 as int)) & 15 AS bval
-        |  FROM sig CROSS JOIN (SELECT unnest(range(0, 4)) AS bd) bands),
-        | rk AS (SELECT doc_id, band, bval,
-        |  row_number() OVER (PARTITION BY band, bval ORDER BY doc_id) AS r FROM band),
-        | cand AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-        |  FROM rk a JOIN band b USING (band, bval)
-        |  WHERE a.r <= 64 AND a.doc_id < b.doc_id),
-        | ham AS (SELECT c.a, c.b, cast(bit_count(xor(sa.sig, sb.sig)) as int) AS hamming
-        |  FROM cand c JOIN sig sa ON sa.doc_id = c.a JOIN sig sb ON sb.doc_id = c.b)
-        | SELECT a, b, hamming FROM ham WHERE hamming <= 3 ORDER BY a, b""".stripMargin,
     // both engines work on the segment/gram STRINGS (no hash), so these
     // are bit-exact cross-engine; integer counts, one rounded division
     // replays the per-doc unigram entropy: (doc, word) counts, doc
@@ -2287,13 +1863,6 @@ object SparkEntry {
         |   cast(sum(c * bm) as bigint) AS h_milli_tokens,
         |   cast(sum(c * bm) // min(t) as bigint) AS entropy_milli
         | FROM b GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // strings + int64 counts, no rounding anywhere
-    "inverted_index" ->
-      """WITH occ AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |   FROM documents),
-        | p AS (SELECT term, doc_id, count(*) AS tf FROM occ GROUP BY 1, 2)
-        | SELECT term, doc_id, tf, count(*) OVER (PARTITION BY term) AS df
-        | FROM p ORDER BY term, doc_id""".stripMargin,
     "ann_mmr" -> annMmrOracleSql(10, 24),
     // replays the two-tier matryoshka serve: prefix-16 cosine pool on
     // raw doubles (identical fold), full-dim round-6 re-rank
@@ -2465,33 +2034,6 @@ object SparkEntry {
         | WHERE NOT EXISTS (SELECT 1 FROM s2
         |   WHERE s2.subj = s1.subj AND s2.pred = s1.pred AND s2.obj = s1.obj)
         | ORDER BY subj, pred, obj, change""".stripMargin,
-    // replays SemDeDup stage for stage: md5-ranked seed centroids
-    // (ann_ivf_portable's recipe, over ALL vectors), Euclidean argmin
-    // assignment, within-cluster rank<=64 anchor pairs, cosine >= tau,
-    // smallest-anchor argmin per dropped vector
-    "semantic_dedup" ->
-      """WITH e AS (SELECT vec_id, cast(embedding as double[]) AS v FROM embeddings),
-        | hb AS (SELECT vec_id, v,
-        |    cast(concat('0x', substr(md5(cast(vec_id as varchar)), 1, 8)) as bigint) % 1000000 AS h
-        |  FROM e),
-        | cents AS (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS cid, v AS cv
-        |   FROM hb ORDER BY h, vec_id LIMIT 8),
-        | assign AS (SELECT t.vec_id, t.v, c.cid,
-        |     row_number() OVER (PARTITION BY t.vec_id
-        |       ORDER BY list_distance(t.v, c.cv), c.cid) AS rk
-        |   FROM hb t CROSS JOIN cents c),
-        | cl AS (SELECT vec_id, v, cast(cid as bigint) AS cluster FROM assign WHERE rk = 1),
-        | rkd AS (SELECT vec_id, v, cluster,
-        |     row_number() OVER (PARTITION BY cluster ORDER BY vec_id) AS rk FROM cl),
-        | hits AS (SELECT m.vec_id, m.cluster, a.vec_id AS anchor,
-        |     list_cosine_similarity(a.v, m.v) AS cos
-        |   FROM rkd a JOIN rkd m ON a.cluster = m.cluster AND a.vec_id < m.vec_id
-        |   WHERE a.rk <= 64),
-        | best AS (SELECT vec_id, cluster, anchor, cos,
-        |     row_number() OVER (PARTITION BY vec_id ORDER BY anchor) AS rn
-        |   FROM hits WHERE cos >= 0.40)
-        | SELECT vec_id, cluster, anchor AS dup_of, round(cos, 6) AS cosine
-        | FROM best WHERE rn = 1 ORDER BY vec_id""".stripMargin,
     // replays every hop of the derandomized walk: the shared kNN edge
     // CTE, then per hop the md5("walk_t_dst") % 10^6 choice key and the
     // (h, dst) row_number argmin — identical to the engine's min_by
@@ -2514,37 +2056,6 @@ object SparkEntry {
         |   UNION ALL SELECT walk_id, 4, node FROM f4)
         | ORDER BY walk_id, step""".stripMargin
     },
-    // both SNM passes (prefix / reversed-suffix keys), the per-(pass,
-    // block) rank, the w=2 successor window, first-pass pair dedup, and
-    // the exact integer gram counts + truncating permille
-    "snm_pairs" ->
-      """WITH nrm AS (SELECT doc_id, regexp_replace(lower(text), '[^a-z0-9]', '', 'g') AS nt, text FROM documents),
-        | keyed AS (
-        |   SELECT doc_id, 1 AS pass, substr(nt, 1, 16) AS key FROM nrm
-        |   UNION ALL
-        |   SELECT doc_id, 2 AS pass, substr(reverse(nt), 1, 16) AS key FROM nrm),
-        | ranked AS (SELECT doc_id, pass, key, substr(key, 1, 8) AS block,
-        |     row_number() OVER (PARTITION BY pass, substr(key, 1, 8) ORDER BY key, doc_id) AS rk
-        |   FROM keyed),
-        | pairs AS (SELECT p.pass, least(p.doc_id, q.doc_id) AS a, greatest(p.doc_id, q.doc_id) AS b
-        |   FROM ranked p JOIN ranked q
-        |     ON p.pass = q.pass AND p.block = q.block
-        |    AND q.rk > p.rk AND q.rk <= p.rk + 2),
-        | uniq AS (SELECT pass, a, b,
-        |     row_number() OVER (PARTITION BY a, b ORDER BY pass) AS pn FROM pairs),
-        | grams AS (SELECT doc_id, list_distinct(list_transform(
-        |     range(0, greatest(len(string_split(text, ' ')) - 3, 0) + 1),
-        |     i -> array_to_string(string_split(text, ' ')[i + 1: i + 3], ' '))) AS g FROM nrm),
-        | sel AS (SELECT u.pass, u.a, u.b,
-        |     len(list_intersect(ga.g, gb.g)) AS inter_grams,
-        |     len(list_distinct(list_concat(ga.g, gb.g))) AS union_grams
-        |   FROM uniq u JOIN grams ga ON u.a = ga.doc_id JOIN grams gb ON u.b = gb.doc_id
-        |   WHERE u.pn = 1)
-        | SELECT cast(pass as bigint) AS pass, a, b,
-        |   cast(inter_grams as bigint) AS inter_grams,
-        |   cast(union_grams as bigint) AS union_grams,
-        |   cast((1000 * inter_grams) // union_grams as bigint) AS jac_permille
-        | FROM sel ORDER BY a, b""".stripMargin,
     // every greedy round unrolled: marginal gain = distinct 3-grams not
     // yet covered by earlier picks, argmax by (gain DESC, doc_id)
     "coverage_select" -> {
@@ -2574,21 +2085,6 @@ object SparkEntry {
         |   cast(gain as bigint) AS marginal_gain
         | FROM ($union) ORDER BY round""".stripMargin
     },
-    // the hashing-trick vectorizer replayed from DuckDB's own md5:
-    // bucket = md5(token) % 256, sign = md5('s_'+token) % 2, exact
-    // integer sparse dot against the doc-0 query vector
-    "hashtf_topk" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-        | tf0 AS (SELECT doc_id,
-        |     cast(concat('0x', substr(md5(token), 1, 8)) as bigint) % 256 AS bucket,
-        |     sum(CASE WHEN cast(concat('0x', substr(md5(concat('s_', token)), 1, 8)) as bigint) % 2 = 1
-        |       THEN 1 ELSE -1 END) AS v
-        |   FROM tok GROUP BY doc_id, bucket),
-        | tf AS (SELECT * FROM tf0 WHERE v <> 0),
-        | q AS (SELECT bucket, v AS qv FROM tf WHERE doc_id = 0)
-        | SELECT t.doc_id, cast(sum(t.v * q.qv) as bigint) AS dot
-        | FROM tf t JOIN q USING (bucket) WHERE t.doc_id <> 0
-        | GROUP BY t.doc_id ORDER BY dot DESC, doc_id LIMIT 20""".stripMargin,
     // the shared kNN edge CTE symmetrized, then wedge enumeration,
     // existing-edge exclusion, and the integer 1000000//milliLog2(deg)
     // Adamic-Adar weights — identical arithmetic to the engine
@@ -2698,10 +2194,10 @@ object SparkEntry {
        | ORDER BY doc_id""".stripMargin
   }
 
-  /** The rounded quality-score expression (TextAnalysis.qualityScore
-    * arithmetic, mirrored exactly) — shared by q22 and curation_exact.
+  /** q22 oracle: the rounded quality score, mirroring
+    * TextAnalysis.qualityScore arithmetic exactly.
     */
-  private def qualityExprSql: String = {
+  private def qualityOracleSql: String = {
     val tok = s"($tokSql)"
     val meanWordLen = s"(cast(length(text) - $tok + 1 as double) / $tok)"
     val stopHits = s"((length(text) - length(replace(text, 'the', ''))) / 3 + " +
@@ -2709,65 +2205,16 @@ object SparkEntry {
     val stopRatio = s"(cast($stopHits as double) / $tok)"
     val lenScore = s"(1.0 - least(abs($meanWordLen - 5.5) / 5.5, 1.0))"
     val stopScore = s"(1.0 - least(abs($stopRatio - 0.1) * 5.0, 1.0))"
-    s"round($lenScore * 0.6 + $stopScore * 0.4, 6)"
-  }
-
-  /** q22 oracle: mirrors TextAnalysis.qualityScore arithmetic exactly. */
-  private def qualityOracleSql: String =
-    s"SELECT doc_id, $qualityExprSql AS quality FROM documents ORDER BY doc_id"
-
-  /** curation_exact oracle: exact dedup (q20's min-doc_id-per-md5 rule) →
-    * token floor → quality gate on the ROUNDED score (both engines decide
-    * the boundary on the same 1e-6 grid) → hash-threshold token budget
-    * with the engine's exact `trunc(budget/total · 10^6)` arithmetic
-    * (integer bucket vs integer threshold — no float boundary).
-    */
-  private def curationExactOracleSql: String = {
-    val budget = 20000L; val minTokens = 5; val minQuality = "0.1"
-    s"""WITH exact AS (
-       |  SELECT doc_id, lang, text,
-       |    row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-       |  FROM documents),
-       | g AS (
-       |  SELECT doc_id, lang, text, $tokSql AS tokens, $qualityExprSql AS quality
-       |  FROM exact WHERE rn = 1),
-       | gated AS (SELECT * FROM g WHERE tokens >= $minTokens AND quality >= $minQuality),
-       | tot AS (SELECT sum(tokens) AS total FROM gated)
-       | SELECT doc_id, lang, cast(tokens as int) AS tokens, quality
-       | FROM gated, tot
-       | WHERE total <= $budget OR
-       |   (cast(concat('0x', substr(md5(text), 1, 8)) as bigint) % 1000000)
-       |     < cast(trunc(cast($budget as double) / total * 1000000) as bigint)
-       | ORDER BY doc_id""".stripMargin
+    s"SELECT doc_id, round($lenScore * 0.6 + $stopScore * 0.4, 6) AS quality " +
+      "FROM documents ORDER BY doc_id"
   }
 
   /** The portable-minhash CTE chain over an input relation
     * `src(doc_id, text)` (rows already length-filtered): positions →
     * polynomial shingle hashes → 16 affine min-hashes mod 2³¹−1 →
-    * 4-slot band keys → rank ≤ 64 hot-bucket cap → candidate pairs →
-    * `scored(a, b, n_match)`. One definition feeds both the standalone
-    * minhash_portable oracle and the curation composite's near-dup
-    * stage so the two cannot drift apart.
+    * `band(doc_id, band, bkey)`, the 4-slot band keys of
+    * MinHash.portableBandKeys.
     */
-  /** The delta-vs-corpus probe CTEs shared by the delta_pairs and
-    * delta_dedup oracles: corpus rows (doc_id % 8 ≠ 7) get the rank≤64
-    * bucket cap, delta rows (doc_id % 8 = 7) probe uncapped, agreement
-    * is counted over the same 16 per-doc hash slots. Assumes
-    * portableMinhashCtes' hj/band CTEs are in scope.
-    */
-  private val deltaProbeCtes: String =
-    """ crk AS (SELECT doc_id, band, bkey,
-      |  row_number() OVER (PARTITION BY band, bkey ORDER BY doc_id) AS r
-      |  FROM band WHERE doc_id % 8 <> 7),
-      | vc AS (SELECT DISTINCT db.doc_id AS delta_id, c.doc_id AS corpus_id
-      |  FROM band db JOIN crk c USING (band, bkey)
-      |  WHERE db.doc_id % 8 = 7 AND c.r <= 64),
-      | vs AS (SELECT v.delta_id, v.corpus_id,
-      |  sum(CASE WHEN ha.h = hb.h THEN 1 ELSE 0 END) AS n_match
-      |  FROM vc v JOIN hj ha ON ha.doc_id = v.delta_id
-      |  JOIN hj hb ON hb.doc_id = v.corpus_id AND hb.j = ha.j
-      |  GROUP BY v.delta_id, v.corpus_id)""".stripMargin
-
   private def portableMinhashCtes(src: String): String =
     s""" pos AS (SELECT doc_id, text, unnest(range(1, length(text) - 3)) AS i FROM $src),
        | gr AS (SELECT doc_id,
@@ -2782,48 +2229,7 @@ object SparkEntry {
        |  FROM gr CROSS JOIN (SELECT unnest(range(0, 16)) AS j) seeds
        |  GROUP BY doc_id, j),
        | band AS (SELECT doc_id, j // 4 AS band, string_agg(h::VARCHAR, ',' ORDER BY j) AS bkey
-       |  FROM hj GROUP BY doc_id, j // 4),
-       | rk AS (SELECT doc_id, band, bkey,
-       |  row_number() OVER (PARTITION BY band, bkey ORDER BY doc_id) AS r FROM band),
-       | cand AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-       |  FROM rk a JOIN band b USING (band, bkey)
-       |  WHERE a.r <= 64 AND a.doc_id < b.doc_id),
-       | scored AS (SELECT c.a, c.b,
-       |  sum(CASE WHEN ha.h = hb.h THEN 1 ELSE 0 END) AS n_match
-       |  FROM cand c
-       |  JOIN hj ha ON ha.doc_id = c.a
-       |  JOIN hj hb ON hb.doc_id = c.b AND hb.j = ha.j
-       |  GROUP BY c.a, c.b)""".stripMargin
-
-  /** curation_portable oracle: curationExactOracleSql's stages PLUS the
-    * near-dup drop, whose candidate pairs the oracle recomputes with the
-    * same portable minhash pipeline as the standalone minhash_portable
-    * oracle — run over the exact-dedup SURVIVORS, exactly as the engine
-    * does. minMatch 14/16 ≈ the production 0.85 Jaccard threshold.
-    */
-  private def curationPortableOracleSql: String = {
-    val budget = 20000L; val minTokens = 5; val minQuality = "0.1"
-    val minMatch = 14
-    s"""WITH exact AS (
-       |  SELECT doc_id, lang, text,
-       |    row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-       |  FROM documents),
-       | surv AS (SELECT doc_id, lang, text FROM exact WHERE rn = 1),
-       | d5 AS (SELECT doc_id, text FROM surv WHERE length(text) >= 5),
-       |${portableMinhashCtes("d5")},
-       | losers AS (SELECT DISTINCT b AS doc_id FROM scored WHERE n_match >= $minMatch),
-       | kept AS (SELECT s.doc_id, s.lang, s.text FROM surv s
-       |  LEFT JOIN losers l ON s.doc_id = l.doc_id WHERE l.doc_id IS NULL),
-       | g AS (SELECT doc_id, lang, text, $tokSql AS tokens, $qualityExprSql AS quality FROM kept),
-       | gated AS (SELECT * FROM g WHERE tokens >= $minTokens AND quality >= $minQuality),
-       | tot AS (SELECT sum(tokens) AS total FROM gated)
-       | SELECT doc_id, lang, cast(tokens as int) AS tokens, quality
-       | FROM gated, tot
-       | WHERE total <= $budget OR
-       |   (cast(concat('0x', substr(md5(text), 1, 8)) as bigint) % 1000000)
-       |     < cast(trunc(cast($budget as double) / total * 1000000) as bigint)
-       | ORDER BY doc_id""".stripMargin
-  }
+       |  FROM hj GROUP BY doc_id, j // 4)""".stripMargin
 
   /** kg_scores oracle: per-label fused score via substring counting. */
   private def kgScoresOracleSql: String = {

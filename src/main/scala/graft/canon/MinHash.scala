@@ -6,11 +6,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** MinHash signatures and LSH band keys over a
-  * `(doc_id long, text string)` relation — the buckets the batch
-  * near-duplicate pair joins and the streaming near-duplicate operators
+  * `(doc_id long, text string)` relation — the buckets the streaming
+  * near-duplicate operators
   * ([[graft.streaming.StreamingIngest.neardupStream]] and its portable
-  * twin) share. Shingle → signature → band → bucket, so
-  * the candidate set stays near-linear (never all-pairs).
+  * twin) and their batch reference [[minhashCandidates]] share.
+  * Shingle → signature → band → bucket, so the candidate set stays
+  * near-linear (never all-pairs).
   */
 object MinHash {
 
@@ -87,8 +88,8 @@ object MinHash {
     * band keys, capped buckets and match counts bit-for-bit. The
     * production path ([[minhashSignatures]]) keeps the avalanche hash
     * for better bucket entropy; this twin exists to hash-prove the
-    * MACHINERY — shingle → signature → band → capped bucket join →
-    * verify — against an independent engine, which the avalanche
+    * MACHINERY — shingle → signature → band → bucket anchors —
+    * against an independent engine, which the avalanche
     * variant cannot (its hash is engine-internal by construction).
     * Same mapPartitions single-pass shape, so the scale behavior it
     * proves is the production one.
@@ -129,8 +130,8 @@ object MinHash {
   /** (doc_id, band, bkey) portable band keys over
     * [[portableMinhashSignatures]] output: the band's signature slice
     * joined as text — no engine hash in the bucket key. Shared by the
-    * batch pair join, the streaming keyed-state twin and the specs so
-    * every consumer sees identical buckets.
+    * streaming keyed-state twin and the specs so every consumer sees
+    * identical buckets.
     */
   def portableBandKeys(signatures: DataFrame, bands: Int,
                        numHashes: Int): DataFrame = {

@@ -49,7 +49,8 @@ final class StageManager(runDir: String)(implicit spark: SparkSession) {
       val lineage = out.groupBy(input_file_name().as("file"))
         .agg(count(lit(1)).as("rows"))
       lineage.coalesce(1).write.mode("overwrite").json(s"$runDir/$name/lineage")
-      val total = lineage.agg(sum("rows")).collect()(0).getLong(0)
+      // a sum over no rows is NULL: an empty stage totals 0
+      val total = lineage.agg(coalesce(sum("rows"), lit(0L))).collect()(0).getLong(0)
 
       Files.writeString(marker(name), s"""{"rows":$total}""")
       log(name, "computed", total, (System.nanoTime() - t0) / 1e9)

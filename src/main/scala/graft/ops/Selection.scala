@@ -12,11 +12,11 @@ import org.apache.spark.sql.functions._
   * the log-likelihood ratio of a TARGET distribution vs the RAW corpus
   * distribution over a FIXED-SIZE hashed gram profile).
   *
-  * Cross-engine determinism, same discipline as [[Retrieval]]: no
-  * transcendental ever reaches a value. Every log2 is the integer
-  * floor-log2 (unpadded `bin`) plus a linear-interpolation milli fraction on the EXACT integer rational —
-  * [[Retrieval.bm25TopK]]'s idf recipe — so scores are exact int64
-  * milli units, bit-identical on any engine replaying the formula.
+  * Cross-engine determinism: no transcendental ever reaches a value.
+  * Every log2 is the integer floor-log2 (unpadded `bin`) plus a
+  * linear-interpolation milli fraction on the EXACT integer rational
+  * ([[logRatioMilli]]), so scores are exact int64 milli units,
+  * bit-identical on any engine replaying the formula.
   *
   * Scale shape: both operators are one explode to the token/gram
   * occurrence stream, a partial-agg count table (vocabulary-bounded for

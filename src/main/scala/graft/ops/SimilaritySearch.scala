@@ -186,7 +186,7 @@ object SimilaritySearch {
     * raw squared distances against an oracle that sorts by sqrt values
     * has a corner where two unequal squares round to one sqrt.)
     */
-  private[graft] def nearestCentroidL2(vecCol: Column, cents: Array[Array[Double]]): Column = {
+  private def nearestCentroidL2(vecCol: Column, cents: Array[Array[Double]]): Column = {
     val centsLit = typedlit(cents.map(_.toSeq).toSeq)
     aggregate(
       sequence(lit(0), lit(cents.length - 1)),

@@ -254,7 +254,7 @@ object TextAnalysis {
     * Presence-based counts: c_x = df(x), c_xy = |docs containing both|,
     * PMI = log2(c_xy·N / (c_x·c_y)) kept only when ≥ 0 and emitted in
     * exact int64 milli units via the interpolated floor-log2 recipe
-    * ([[Retrieval.bm25TopK]]'s idf) — no transcendental, bit-identical
+    * ([[Selection.logRatioMilli]]) — no transcendental, bit-identical
     * on any engine.
     *
     * Scale shape: the quadratic blowup is bounded BY CONSTRUCTION to

@@ -1,12 +1,10 @@
 package graft
 
-import graft.ops.{Dedup, GraphRank}
+import graft.ops.GraphRank
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Random-walk corpus generation and multi-pass sorted-neighborhood
-  * blocking.
-  */
+/** Random-walk corpus generation and greedy coverage selection. */
 class MiningSpec extends AnyFunSuite {
   lazy implicit val spark: org.apache.spark.sql.SparkSession = SparkTestSession.spark
   import spark.implicits._
@@ -46,37 +44,6 @@ class MiningSpec extends AnyFunSuite {
     assert(a === b)
   }
 
-  test("sortedNeighborhood: pass 1 catches tail edits, pass 2 catches head edits") {
-    val base = (1 to 30).map(i => s"alpha beta gamma delta epsilon zeta eta theta iota kappa w$i")
-    val docs = (base.zipWithIndex.map { case (t, i) => (i.toLong, t) } ++ Seq(
-      // 100/101: same head, edited tail -> adjacent under the PREFIX key
-      (100L, "zulu yankee xray whiskey victor uniform tango sierra romeo quebec papa"),
-      (101L, "zulu yankee xray whiskey victor uniform tango sierra romeo quebec oscar"),
-      // 200/201: edited head, same tail -> only the reversed-SUFFIX key
-      // sorts them together (their prefixes land in different blocks)
-      (200L, "mike november lima kilo juliett india hotel golf foxtrot echo delta charlie"),
-      (201L, "bravo different start kilo juliett india hotel golf foxtrot echo delta charlie")))
-      .toDF("doc_id", "text")
-    val pairs = Dedup.sortedNeighborhoodPairs(docs, win = 2).localCheckpoint(true)
-    val p1 = pairs.where(col("a") === 100L && col("b") === 101L).collect()
-    assert(p1.length === 1 && p1(0).getLong(0) === 1L, "prefix pass missed the tail-edit pair")
-    val p2 = pairs.where(col("a") === 200L && col("b") === 201L).collect()
-    assert(p2.length === 1 && p2(0).getLong(0) === 2L, "suffix pass missed the head-edit pair")
-    // exact gram arithmetic: doc 100/101 share 8 of their 9 distinct
-    // word-3-grams (11 words -> 9 grams, one differs) -> 8/10 = 800‰
-    val r = p1(0)
-    assert(r.getLong(3) === 8L && r.getLong(4) === 10L && r.getLong(5) === 800L,
-      s"gram counts off: $r")
-  }
-
-  test("sortedNeighborhood: each unordered pair appears once, lowest pass wins") {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val pairs = Dedup.sortedNeighborhoodPairs(docs).localCheckpoint(true)
-    val dup = pairs.groupBy("a", "b").count().where(col("count") > 1).count()
-    assert(dup === 0, "a pair was emitted by both passes")
-    assert(pairs.where(col("a") >= col("b")).count() === 0, "pair not normalized a < b")
-  }
-
   test("greedyCoverageSelect: gains non-increasing, picks distinct, coverage adds up") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val picks = graft.ops.Selection.greedyCoverageSelect(docs, k = 5)
@@ -99,24 +66,5 @@ class MiningSpec extends AnyFunSuite {
           "i -> array_join(slice(split(text, ' '), i + 1, 3), ' '))))").as("n"))
       .orderBy(desc("n"), asc("doc_id")).head()
     assert(picks(0).getLong(1) === best.getLong(0) && gains(0) === best.getInt(1).toLong)
-  }
-
-  test("hashedTfTopK: integer dots match a direct per-pair computation") {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val got = graft.ops.Retrieval.hashedTfTopK(docs, queryDoc = 0L, k = 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.size === 10 && !got.contains(0L))
-    // recompute the dot for the returned docs straight from the token
-    // streams (no bucket join) — same vectors, independent plan
-    val tf = graft.ops.Retrieval.hashedTf(docs).localCheckpoint(true)
-    val q = tf.where(col("doc_id") === 0L)
-      .collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
-    val direct = tf.where(col("doc_id").isInCollection(got.keys.toSeq))
-      .collect().groupBy(_.getLong(0)).map { case (d, rows) =>
-        d -> rows.map(r => q.getOrElse(r.getLong(1), 0L) * r.getLong(2)).sum
-      }
-    got.foreach { case (d, dot) =>
-      assert(direct(d) === dot, s"doc $d: joined dot $dot != direct ${direct(d)}")
-    }
   }
 }

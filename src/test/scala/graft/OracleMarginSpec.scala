@@ -253,34 +253,4 @@ class OracleMarginSpec extends AnyFunSuite {
     assert(margin > 1e-9, f"an rp projection sits $margin%.2e from a round-6 boundary")
     assert(m.limit(1).count() === 1) // sanity: the gated shape materializes
   }
-
-  test("semantic_dedup: anchor-pair cosines keep margin from tau 0.40 and round-6") {
-    // the same portable pipeline as the gate query, unthresholded:
-    // every anchor-pair cosine must sit clear of the tau boundary, and
-    // the kept (dropped-vector) cosines clear of the round-6 grid
-    import org.apache.spark.sql.expressions.Window
-    val cents = graft.ops.SimilaritySearch.portableSeedCentroids(
-      spark.read.parquet(s"$dir/embeddings.parquet"), 8)
-    val assigned = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"),
-        expr("transform(embedding, x -> cast(x as double))").as("vec"))
-      .withColumn("cluster",
-        graft.ops.SimilaritySearch.nearestCentroidL2(col("vec"), cents))
-      .localCheckpoint(true)
-    val ranked = assigned.withColumn("rk",
-      row_number().over(Window.partitionBy("cluster").orderBy("vec_id")))
-    val cos = ranked.where(col("rk") <= 64)
-      .select(col("cluster"), col("vec_id").as("anchor"), col("vec").as("va"))
-      .join(ranked.select(col("cluster"), col("vec_id"), col("vec")), Seq("cluster"))
-      .where(col("anchor") < col("vec_id"))
-      .select(SimilaritySearch.cosine(col("va"), col("vec")).as("c"))
-      .localCheckpoint(true)
-    val thr = cos.agg(min(abs(col("c") - 0.40))).collect()(0).getDouble(0)
-    info(f"min |cosine - 0.40| over anchor pairs: $thr%.2e")
-    assert(thr > 1e-4, f"an anchor pair's cosine sits $thr%.2e from the tau boundary")
-    val r6 = cos.where(col("c") >= 0.40)
-      .agg(min(roundMargin(col("c"), 6))).collect()(0).getDouble(0)
-    info(f"min round-6 boundary margin of dropped-vector cosines: $r6%.2e")
-    assert(r6 > 1e-6, f"a dropped cosine sits $r6%.2e from a round-6 boundary")
-  }
 }

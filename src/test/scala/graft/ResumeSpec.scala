@@ -53,4 +53,24 @@ class ResumeSpec extends AnyFunSuite {
         assert(Files.exists(Path.of(s"$resDir/$st/lineage")), s"missing lineage for $st")
       }
   }
+
+  test("a zero-row stage completes with rows 0 and resumes without recomputing") {
+    import spark.implicits._
+    val dir = tmpDir("graft_empty")
+    val out = new graft.lineage.StageManager(dir).stage("empty", Seq("id")) {
+      Seq.empty[Long].toDF("id")
+    }
+    assert(out.count() === 0)
+    assert(Files.readString(Path.of(s"$dir/empty/_GRAFT_COMPLETE")) === """{"rows":0}""")
+    assert(Files.readString(Path.of(s"$dir/metrics.jsonl"))
+      .contains(""""stage":"empty","how":"computed","rows":0,"""))
+
+    var evaluated = false
+    val again = new graft.lineage.StageManager(dir).stage("empty", Seq("id")) {
+      evaluated = true
+      Seq.empty[Long].toDF("id")
+    }
+    assert(!evaluated, "a completed empty stage was recomputed")
+    assert(again.count() === 0)
+  }
 }
