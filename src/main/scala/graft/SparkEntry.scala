@@ -530,7 +530,7 @@ object SparkEntry {
     // A12-A14 mosaic sessionization against a window-SQL oracle: frames
     // synthesized from `events` with SQL-visible arithmetic (the pipeline's
     // own telemetry comes from the Scala Rng, which DuckDB cannot replay),
-    // then the REAL operator (Mosaics.withSessions + gate + UnionCoverage)
+    // then the REAL operator (Mosaics.withSessions + gate + unionCoverage)
     "q25_mosaic_sessions" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       val w = Window.partitionBy("user_id")
@@ -2066,8 +2066,8 @@ object SparkEntry {
           |   FROM documents),
           | m1 AS (SELECT doc_id, count(*) AS gain FROM g GROUP BY doc_id),
           | p1 AS (SELECT 1 AS round, doc_id, gain FROM m1 ORDER BY gain DESC, doc_id LIMIT 1),
-          | s1 AS (SELECT DISTINCT gram FROM g JOIN p1 USING (doc_id)),
-          | d1 AS (SELECT doc_id FROM p1)""".stripMargin
+          | s1 AS MATERIALIZED (SELECT DISTINCT gram FROM g JOIN p1 USING (doc_id)),
+          | d1 AS MATERIALIZED (SELECT doc_id FROM p1)""".stripMargin
       val rounds = (2 to 8).map { i =>
         s""",
           | m$i AS (SELECT g.doc_id, count(*) AS gain FROM g
@@ -2075,9 +2075,9 @@ object SparkEntry {
           |     AND g.gram NOT IN (SELECT gram FROM s${i - 1})
           |   GROUP BY g.doc_id),
           | p$i AS (SELECT $i AS round, doc_id, gain FROM m$i ORDER BY gain DESC, doc_id LIMIT 1),
-          | s$i AS (SELECT gram FROM s${i - 1} UNION
+          | s$i AS MATERIALIZED (SELECT gram FROM s${i - 1} UNION
           |   SELECT gram FROM g JOIN p$i USING (doc_id)),
-          | d$i AS (SELECT doc_id FROM d${i - 1} UNION SELECT doc_id FROM p$i)""".stripMargin
+          | d$i AS MATERIALIZED (SELECT doc_id FROM d${i - 1} UNION SELECT doc_id FROM p$i)""".stripMargin
       }.mkString
       val union = (1 to 8).map(i => s"SELECT * FROM p$i").mkString(" UNION ALL ")
       s"""$head$rounds

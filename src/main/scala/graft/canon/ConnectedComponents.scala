@@ -4,7 +4,7 @@ import graft.core.SmallSide
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Iterative connected components over a `Dataset[Edge]` — the
+/** Iterative connected components over a (src, dst) edge table — the
   * canonicalization primitive (reference A25's DBSCAN grouping and the
   * north rule's entity-canonicalization stage), with no GraphFrames
   * dependency.

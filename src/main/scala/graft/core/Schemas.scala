@@ -22,42 +22,5 @@ final case class CorpusRow(
     content: String
 )
 
-/** One (subj, pred, obj) edge. Preds mirror the reference's relationship
-  * types (SURVEY.md §1.1): HAS, HAS_INSPECTION, HAS_FRAME, DEPICTS,
-  * IN_MOSAIC, IN_CLUSTER, SIMILAR_TO, VISUALLY_SIMILAR_TO.
-  */
-final case class Triple(
-    subj: String,
-    pred: String,
-    obj: String,
-    classification: Option[Double] = None, // DEPICTS (frame.py:68-72)
-    segmentation: Option[Double] = None,   // DEPICTS
-    distance: Option[Double] = None,       // (VISUALLY_)SIMILAR_TO (frame.py:77-81)
-    homography: Option[Array[Double]] = None // IN_MOSAIC, 3x3 flattened (frame.py:85)
-)
-
-/** Graph node: fixed identity columns + long-tail props as a map.
-  * Labels mirror the reference: Ship, Classification, Inspection, Frame,
-  * Mosaic, Cluster (SURVEY.md §1.1 node table).
-  */
-final case class NodeRow(
-    id: String,
-    label: String,
-    props: Map[String, String]
-)
-
-/** A detected dictionary mention inside one corpus row (extract stage). */
-final case class Mention(
-    frameId: String,
-    repo: String,
-    label: String,
-    count: Int,
-    classification: Double, // classifier-analog channel, reference image_node.py:36
-    segmentation: Double    // segmenter-analog channel, reference image_node.py:41
-)
-
-/** Undirected edge for canonicalization (connected components). */
-final case class Edge(src: Long, dst: Long)
-
 /** Ontology dimension row (25 rows/ship template, data/access/ship.py:21-155). */
 final case class OntologyEntry(visCode: String, name: String, parentVisCode: String)

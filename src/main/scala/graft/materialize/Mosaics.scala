@@ -1,8 +1,8 @@
 package graft.materialize
 
 import graft.core.{Ontology, SmallSide}
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Mosaic sessionization (reference A12-A14, LIACI_stitcher.py).
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * adjacent telemetry (heading jump or depth jump — SURVEY §7.4.3
   * documents this semantic mapping), sessions are `lag` + running
   * `sum(when(break,1))` window ids, the gate is a HAVING-style filter,
-  * and mask-union coverage is a custom typed [[Aggregator]]
+  * and mask-union coverage is a declarative product aggregate
   * (1 − Π(1−cov_i): union of per-frame coverage fractions under an
   * independence model — the OR-merge analog).
   */
@@ -44,29 +44,16 @@ object Mosaics {
     */
   val sizeIncreaseKeep = 1.5
 
-  /** Union-coverage UDAF: 1 − Π(1 − cov). Commutative+associative via
-    * the product of complements — safe for partial aggregation.
-    * Kept as the semantic reference; [[unionCoverage]] below evaluates
-    * the same arithmetic through Catalyst's declarative Product
-    * aggregate instead (optimization round 6): 25 typed-Aggregator
-    * columns forced the whole mosaic rollup into ObjectHashAggregate
-    * with a boxed encoder round-trip per label per row, where the
-    * declarative form stays in codegen'd HashAggregate with primitive
-    * doubles. Bit-identical: Product's update chain is
-    * ((1·v₁)·v₂)·… and its merge is pairwise partial multiplication —
-    * exactly [[UnionCoverage]].reduce/merge — and the clamp CASE below
-    * reproduces max(0, min(1, c)) including NaN propagation (a −0.0 vs
-    * +0.0 clamp difference is erased by the 1−x complement).
+  /** Union coverage 1 − Π(1 − clamp(cov, 0, 1)), commutative and
+    * associative through the product of complements, so safe for
+    * partial aggregation. Catalyst's declarative Product aggregate keeps
+    * the mosaic rollup in codegen'd HashAggregate with primitive doubles;
+    * 25 typed-Aggregator columns forced it into ObjectHashAggregate with
+    * a boxed encoder round-trip per label per row. Product's update chain
+    * is ((1·v₁)·v₂)·… and its merge is pairwise multiplication; the clamp
+    * CASE keeps NaN (a −0.0 vs +0.0 clamp difference is erased by the 1−x
+    * complement).
     */
-  class UnionCoverage extends Aggregator[Double, Double, Double] {
-    def zero: Double = 1.0
-    def reduce(b: Double, a: Double): Double = b * (1.0 - math.max(0.0, math.min(1.0, a)))
-    def merge(b1: Double, b2: Double): Double = b1 * b2
-    def finish(r: Double): Double = 1.0 - r
-    def bufferEncoder: Encoder[Double] = Encoders.scalaDouble
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
-
   def unionCoverage(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.graftbridge.Bridge
     val clamped = when(c < 0.0, 0.0).when(c > 1.0, 1.0).otherwise(c)

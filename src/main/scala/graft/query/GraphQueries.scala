@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.core.Ontology
+import graft.core.{Ontology, SmallSide}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,6 +12,16 @@ import org.apache.spark.sql.functions._
   * fall out of Catalyst.
   */
 object GraphQueries {
+
+  /** `df` sorted by `order` in one partition. A global `orderBy` range-
+    * partitions its input: a sampling job, then a shuffle job. Only for a
+    * small result that the caller collects whole, and that ends in a
+    * shuffle (an aggregate or a distinct): `coalesce(1)` runs only the
+    * stage after that shuffle in one task, so the scans before it keep
+    * their parallelism and no job is added.
+    */
+  private def sortedInOnePartition(df: DataFrame, order: Column*): DataFrame =
+    df.coalesce(1).sortWithinPartitions(order: _*)
 
   /** B1 (data_manager.py:19-28): quality ∧ (∨ parts > .8) ∧ (∨ defects > .8).
     * Reference's `i.{label} > 0.8` reads the FUSED integer score property
@@ -73,7 +83,7 @@ object GraphQueries {
           .select(coalesce(col("m_seg_image"), col("thumbnail")).as("image_path"),
             coalesce(col("m_uciqe"), col("uciqe")).as("uciqe"))
       }
-    projected.distinct().orderBy(desc("uciqe"))
+    sortedInOnePartition(projected.distinct(), desc("uciqe"))
   }
 
   /** B4 (:46-50): frames of (inspection, cluster n), ORDER BY framenumber. */
@@ -81,11 +91,13 @@ object GraphQueries {
                     inspectionId: Long, clusterNumber: Long): DataFrame = {
     val inCluster = triples.where(col("pred") === "IN_CLUSTER")
       .select(col("subj").as("frame_id"), col("obj").as("cluster_id"))
+    // no shuffle precedes the sort, so `coalesce(1)` would scan frames in
+    // one task: one small exchange gathers the cluster's rows instead
     frames.where(col("inspection_id") === inspectionId)
       .join(inCluster, Seq("frame_id"))
       .where(col("cluster_id") === concat(lit("c"), lit(inspectionId), lit("."), lit(clusterNumber)))
-      .orderBy("framenumber")
       .select("frame_id", "framenumber", "uciqe")
+      .repartition(1).sortWithinPartitions("framenumber")
   }
 
   /** B5 (:53-54): base scan — frames of selected inspections + B1 pred. */
@@ -149,16 +161,53 @@ object GraphQueries {
       .distinct()
   }
 
-  /** Transitive closure of the HAS tree (2 levels in practice) —
-    * closure SQUARING (closure ∘ closure each round), so a tree of depth
-    * d converges in O(log d) driver round-trips instead of one per
-    * level: a deep ontology costs 5 rounds for depth 32, not 32.
+  /** Transitive closure of the HAS tree (2 levels, 25 edges per ship in
+    * practice): every (anc, desc) joined by a path of one or more edges.
     * Powers B11's variable-length path.
+    *
+    * Up to `ClosureCollectCap` edges are fetched once
+    * ([[graft.core.SmallSide]]) and closed on the driver by a walk from
+    * each ancestor into a local relation: one Spark job. Above it
+    * [[closeDistributed]] runs instead.
     */
   def ontologyClosure(triples: DataFrame): DataFrame = {
-    var closure = triples.where(col("pred") === "HAS")
+    val has = triples.where(col("pred") === "HAS")
       .select(col("subj").as("anc"), col("obj").as("desc"))
-      .localCheckpoint(eager = true)
+    SmallSide.collect(has, ClosureCollectCap) match {
+      case Some(rows) =>
+        import has.sparkSession.implicits._
+        closeLocally(rows.map(r => (r.getString(0), r.getString(1)))).toDF("anc", "desc")
+      case None => closeDistributed(has)
+    }
+  }
+
+  /** Every (a, c) with a path of ≥ 1 edge from a to c. A null end stays
+    * on its own edge but continues no path, as in the equi-join. */
+  private def closeLocally(edges: Array[(String, String)]): Seq[(String, String)] = {
+    val next = edges.groupMap(_._1)(_._2)
+    next.keys.toSeq.flatMap { a =>
+      val seen = scala.collection.mutable.HashSet[String]()
+      var todo = next(a).toList
+      while (todo.nonEmpty) {
+        val c = todo.head
+        todo = todo.tail
+        if (seen.add(c) && c != null) todo = next.getOrElse(c, Array.empty[String]) ++: todo
+      }
+      seen.toSeq.map(a -> _)
+    }
+  }
+
+  /** Most HAS edges [[ontologyClosure]] closes on the driver (the cap of
+    * [[graft.canon.ConnectedComponents.run]]). */
+  private val ClosureCollectCap = 500000L
+
+  /** The closure of `has` (anc, desc) on the cluster: SQUARED (closure ∘
+    * closure each round) with a checkpoint and a count per round, so a
+    * tree of depth d converges in O(log d) rounds instead of one per
+    * level: 5 rounds for depth 32, not 32.
+    */
+  private[graft] def closeDistributed(has: DataFrame): DataFrame = {
+    var closure = has.localCheckpoint(eager = true)
     var n = closure.count()
     var grown = true
     while (grown) {
@@ -191,7 +240,9 @@ object GraphQueries {
     * computed per DISTINCT Mosaic reachable from the frame set
     * (`m.marine_growth_percentage / m.ship_hull_percentage`, coalesced to
     * 0, guarded `shp < 0.05 → 0`, capped at 1 — data_manager.py:174-177),
-    * NOT per frame: the Mosaic node props carry the union coverage.
+    * NOT per frame: the Mosaic node props carry the union coverage. The
+    * left-semi join reads each reachable mosaic once however many frames
+    * reach it, so `reachable` needs no `distinct`.
     */
   def histogramData(frames: DataFrame, triples: DataFrame,
                     nodes: DataFrame): Map[String, DataFrame] = {
@@ -199,7 +250,7 @@ object GraphQueries {
       .select(col("subj").as("frame_id"), col("obj").as("mosaic_id"))
     val reachable = inMosaic
       .join(frames.select("frame_id"), Seq("frame_id"), "left_semi")
-      .select("mosaic_id").distinct()
+      .select("mosaic_id")
     val mg = nodes.where(col("label") === "Mosaic")
       .join(reachable, nodes("id") === reachable("mosaic_id"), "left_semi")
       .select(
@@ -223,11 +274,10 @@ object GraphQueries {
     */
   def headingsHist(frames: DataFrame,
                    shipHeading: Column = coalesce(col("ship_heading"), lit(0.0))): DataFrame =
-    frames
+    sortedInOnePartition(frames
       .groupBy(col("inspection_id"),
         headingBin(col("Heading"), shipHeading).as("heading_bin"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy("inspection_id", "heading_bin")
+      .agg(count(lit(1)).as("n")), col("inspection_id"), col("heading_bin"))
 
   /** B14 (:223-248): per-ship (q6) and per-part (q7) conditional sums —
     * `sum(CASE WHEN i.{label} > 0.8 THEN 1 END)` per defect label, on the
@@ -240,22 +290,20 @@ object GraphQueries {
   }
 
   def shipTable(frames: DataFrame): DataFrame =
-    frames.groupBy(col("ship_name").as("name"), col("imo"))
+    sortedInOnePartition(frames.groupBy(col("ship_name").as("name"), col("imo"))
       .agg(tableDefects.map(l =>
-        sum(when(col(l) > 0.8, 1).otherwise(0)).as(l)))
-      .orderBy("name")
+        sum(when(col(l) > 0.8, 1).otherwise(0)).as(l))), col("name"))
 
   def partTable(frames: DataFrame, triples: DataFrame, nodes: DataFrame): DataFrame = {
     val depicts = triples.where(col("pred") === "DEPICTS")
       .select(col("subj").as("frame_id"), col("obj").as("part_id"))
     val partNames = nodes.where(col("label") === "Classification")
       .select(col("id").as("part_id"), col("props")("name").as("name"))
-    frames.join(depicts, Seq("frame_id"))
+    sortedInOnePartition(frames.join(depicts, Seq("frame_id"))
       .join(partNames, Seq("part_id"))
       .groupBy("name")
       .agg(tableDefects.map(l =>
-        sum(when(col(l) > 0.8, 1).otherwise(0)).as(l)))
-      .orderBy("name")
+        sum(when(col(l) > 0.8, 1).otherwise(0)).as(l))), col("name"))
   }
 
   /** B15 (:251-294): per (inspection, cluster ≠ −1): 9 conditional sums
@@ -281,8 +329,8 @@ object GraphQueries {
       ) ++ labelSums)
     val keywords = array(Ontology.findingLabels.map(l =>
       when(col(s"${l}_n") > col("n") / 3, lit(l))): _*)
-    aggd.withColumn("keywords", filter(keywords, _.isNotNull))
-      .orderBy("inspection_id", "cluster_id")
+    sortedInOnePartition(aggd.withColumn("keywords", filter(keywords, _.isNotNull)),
+      col("inspection_id"), col("cluster_id"))
   }
 
   /** B16 (query.py:10-15): DISTINCT node labels. */

@@ -78,6 +78,31 @@ class GraphQueriesSpec extends AnyFunSuite {
     assert(paths.where(!col("ship_id").startsWith("ship_")).count() === 0)
   }
 
+  /** A HAS forest: a depth-7 chain under ship_a, a diamond (two paths
+    * from ship_a to `d`), a part `d` that ship_b also has, and a loose
+    * edge under no ship. */
+  private lazy val hasFixture = {
+    import spark.implicits._
+    Seq("ship_a" -> "a1", "a1" -> "a2", "a2" -> "a3", "a3" -> "a4", "a4" -> "a5",
+      "a5" -> "a6", "a6" -> "a7", "ship_a" -> "b1", "ship_a" -> "b2", "b1" -> "d", "b2" -> "d",
+      "d" -> "e", "ship_b" -> "x1", "x1" -> "x2", "ship_b" -> "d", "loose" -> "y")
+      .map { case (s, o) => (s, "HAS", o) }.toDF("subj", "pred", "obj")
+  }
+
+  test("HAS closure on the driver equals the distributed squaring loop") {
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1)))
+    val local = pairs(GraphQueries.ontologyClosure(hasFixture))
+    val distributed = pairs(GraphQueries.closeDistributed(
+      hasFixture.select(col("subj").as("anc"), col("obj").as("desc"))))
+    assert(local.length === local.distinct.length)
+    assert(local.toSet === distributed.toSet)
+    // the chain closed end to end, the diamond once, and ship_b's share
+    assert(Set("ship_a" -> "a7", "a1" -> "a7", "ship_a" -> "e", "ship_b" -> "e")
+      .subsetOf(local.toSet))
+    assert(!local.contains("ship_a" -> "x1") && !local.exists(_._1 == "a7"))
+  }
+
   test("B15 cluster table: keywords only for labels above n/3, key frame has max uciqe") {
     val ct = GraphQueries.clusterTable(frames, triples)
     assert(ct.count() > 0)

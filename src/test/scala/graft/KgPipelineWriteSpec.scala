@@ -2,7 +2,6 @@ package graft
 
 import graft.corpus.CorpusGen
 import graft.pipeline.KgPipeline
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -81,35 +80,9 @@ class KgPipelineWriteSpec extends AnyFunSuite {
       assert(multiset(readBack(off, t, in)) === multiset(readBack(outDir, t, in)), t)
   }
 
-  /** The job group of every job `body` starts, in start order. The
-    * listener bus delivers events in order, so once a marker job run
-    * after `body` has been seen, every job of `body` has been too. */
-  private def jobGroups(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val marker = s"marker-${System.nanoTime()}"
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse("<none>"))
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup(marker, "listener drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val seen = Seq.newBuilder[String]
-      def next() = groups.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      var g = next()
-      while (g != null && g != marker) { seen += g; g = next() }
-      assert(g == marker, "the listener bus did not deliver the marker job")
-      seen.result()
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("every write job runs in the caller's job group") {
     val dir = tempDir()
-    val groups = jobGroups {
+    val groups = SparkTestSession.jobGroups {
       spark.sparkContext.setJobGroup("g", "write")
       try KgPipeline.write(result, dir) finally spark.sparkContext.clearJobGroup()
     }
@@ -125,7 +98,8 @@ class KgPipelineWriteSpec extends AnyFunSuite {
     // (graft.core.SmallSide). A count job added back fails this.
     val corpus = CorpusGen.corpus(spark, CorpusGen.Config(rows = 800, nRepos = 2, partitions = 4))
     val dir = tempDir()
-    val jobs = jobGroups(KgPipeline.write(KgPipeline.runFull(corpus, exactKnn = false), dir)).size
+    val jobs = SparkTestSession.jobGroups(
+      KgPipeline.write(KgPipeline.runFull(corpus, exactKnn = false), dir)).size
     assert(jobs <= 33, s"$jobs jobs")
   }
 }
