@@ -307,7 +307,7 @@ object SparkEntry {
           sum(col("c") * col("c")).as("sumsq_cents"))
         .orderBy("event_type")),
 
-    // --- dedup / text analysis over documents ---
+    // --- distinct counts and rollups ---
 
     "q16_distinct_count" -> ((s, dir) =>
       t(s, dir, "events").groupBy("event_type")
@@ -321,20 +321,6 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"),
           sum(floor(col("o_totalprice") * 100 + 0.5).cast("long")).as("total_cents"))
         .orderBy(asc_nulls_first("o_orderpriority"), asc_nulls_first("o_orderstatus"))),
-
-    "q21_token_stats" -> ((s, dir) => {
-      val tok = TextAnalysis.tokenCount(col("text"))
-      t(s, dir, "documents").select(col("lang"), tok.as("tok"))
-        .groupBy("lang")
-        .agg(sum("tok").as("total_tokens"), min("tok").as("min_tokens"),
-          max("tok").as("max_tokens"))
-        .orderBy("lang")
-    }),
-
-    "q22_doc_quality" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.qualityScore(col("text")).as("quality"))
-        .orderBy("doc_id")),
 
     // --- the KG pipeline over documents (extract → link → aggregate) ---
 
@@ -702,14 +688,6 @@ object SparkEntry {
         .collect()(0).getSeq[Double](0).toArray
       SimilaritySearch.sqTopK(emb.where(col("vec_id") =!= 0), q, 20)
     }),
-    "fingerprints" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      // exploded to scalar (doc_id, fingerprint) rows — the driver's
-      // pandas comparer cannot sort array columns
-      TextAnalysis.fingerprints(t(s, dir, "documents"))
-        .select(col("doc_id"), explode(col("fingerprints")).as("fingerprint"))
-        .orderBy("doc_id", "fingerprint")
-    }),
     "fuzzy_link" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       import s.implicits._
@@ -838,37 +816,6 @@ object SparkEntry {
         eps = 2.0, minPts = 5)
         .orderBy("id")
     }),
-    // PII scrubbing over deterministically planted emails/phones (the
-    // synthetic corpus has none — the planting is the test harness, the
-    // operator is generic)
-    "pii_scrub" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val planted = t(s, dir, "documents")
-        .withColumn("text", when(col("doc_id") % 7 === 0,
-          concat(col("text"), lit(" contact user"),
-            col("doc_id").cast("string"), lit("@example.com soon")))
-          .otherwise(col("text")))
-        .withColumn("text", when(col("doc_id") % 11 === 0,
-          concat(col("text"), lit(" call 555-867-5309 today")))
-          .otherwise(col("text")))
-      TextAnalysis.piiScrub(planted).orderBy("doc_id")
-    }),
-    // TextRank keyword extraction: integer PageRank composed over the
-    // adjacent-token co-occurrence graph (string vertex ids), top-10
-    // by (rank desc, word) — every iteration oracle-unrolled
-    "textrank_words" -> ((s, dir) =>
-      TextAnalysis.textRank(t(s, dir, "documents"))),
-    // per-doc unigram entropy in exact milli-bits/token (interpolated
-    // floor-log2, order-free integer sums) — the low-entropy
-    // spam/template filter next to q22's surface-quality ratios
-    "entropy_score" -> ((s, dir) =>
-      TextAnalysis.entropyScore(t(s, dir, "documents"))
-        .orderBy("doc_id")),
-    // tokenizer vocabulary: top-k words, deterministic tie-break;
-    // k=20 against the 31-word synthetic vocab so the selection
-    // boundary (count ties broken by word) is actually exercised
-    "vocab_topk" -> ((s, dir) =>
-      TextAnalysis.vocabTopK(t(s, dir, "documents"), k = 20)),
     // fastText/GPT-3-style NB quality classifier: per-class word
     // likelihoods fit on the md5-content train slice, label = curated
     // source set, every doc scored by integer milli log-likelihood
@@ -884,93 +831,6 @@ object SparkEntry {
       graft.ops.Selection.dsirWeights(t(s, dir, "documents"),
         targetSources = Seq("src0", "src1", "src2"), buckets = 64L)
         .orderBy("doc_id")),
-    // fixed-point PageRank over the exact kNN similarity graph (k=5
-    // within label groups, same edges as knn_graph): 5 integer
-    // iterations, damping 85/100 — graph centrality as a curation
-    // signal, every iteration replayed by the oracle
-    "pagerank" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val edges = SimilaritySearch.neighborGraph(emb, k = 5, exact = true)
-        .select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-      val nodes = emb.select(col("vec_id").cast("long").as("id"))
-      graft.ops.GraphRank.pageRank(nodes, edges)
-        .select(col("id").as("vec_id"), col("rank_fp"))
-        .orderBy("vec_id")
-    }),
-    // personalized PageRank from the vec_id % 97 seed set (bfs_dist's
-    // anchors): teleport mass restarts at the seeds only, rank decays
-    // with graph distance — seed-expansion as a curation signal, all 5
-    // integer iterations oracle-unrolled
-    "ppr_scores" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val edges = SimilaritySearch.neighborGraph(emb, k = 5, exact = true)
-        .select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-      val nodes = emb.select(col("vec_id").cast("long").as("id"))
-      graft.ops.GraphRank.personalizedPageRank(nodes, edges,
-          nodes.where(col("id") % 97 === 0))
-        .select(col("id").as("vec_id"), col("ppr_fp"))
-        .orderBy("vec_id")
-    }),
-    // GraphSAGE-style one-hop neighbor MEAN aggregation over the
-    // symmetrized kNN graph: micro-unit quantized coordinates
-    // (floor(x·1e6+0.5) — pure IEEE arithmetic, identical both
-    // engines), order-free integer sums, one truncating division
-    "neighbor_agg" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val edges = SimilaritySearch.neighborGraph(emb, k = 5, exact = true)
-        .select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-      val feats = emb.select(col("vec_id").cast("long").as("id"),
-        expr("transform(embedding, x -> cast(x as double))").as("vec"))
-      graft.ops.GraphRank.neighborMean(feats, edges)
-        .withColumnRenamed("id", "vec_id")
-        .orderBy("vec_id", "dim")
-    }),
-    // HITS hubs & authorities on the directed kNN graph: 4 rounds of
-    // the UNNORMALIZED integer mutual recursion (pure order-free int64
-    // sums, no division) — bit-exact, every round oracle-unrolled
-    "hits_scores" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val edges = SimilaritySearch.neighborGraph(emb, k = 5, exact = true)
-        .select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-      val nodes = emb.select(col("vec_id").cast("long").as("id"))
-      graft.ops.GraphRank.hits(nodes, edges)
-        .select(col("id").as("vec_id"), col("hub_score"), col("auth_score"))
-        .orderBy("vec_id")
-    }),
-    // per-vertex triangle counts on the symmetrized kNN graph — the
-    // a<b<c oriented two-join enumeration, each triangle exactly once
-    "knn_triangles" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val edges = SimilaritySearch.neighborGraph(emb, k = 5, exact = true)
-        .select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-      val nodes = emb.select(col("vec_id").cast("long").as("id"))
-      graft.ops.GraphRank.triangleCounts(nodes, edges)
-        .select(col("id").as("vec_id"), col("n_triangles"))
-        .orderBy("vec_id")
-    }),
-    // deterministic synchronous label propagation over the kNN graph:
-    // 4 rounds, most-frequent neighbor label, smallest-label ties —
-    // every round replayed by the oracle
-    "label_prop" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val edges = SimilaritySearch.neighborGraph(emb, k = 5, exact = true)
-        .select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-      val nodes = emb.select(col("vec_id").cast("long").as("id"))
-      graft.ops.GraphRank.labelPropagation(nodes, edges)
-        .select(col("id").as("vec_id"), col("label").as("community"))
-        .orderBy("vec_id")
-    }),
-    // overlapping word-window chunking (window 16, stride 12 against
-    // ~60-word docs so multi-chunk overlap + truncated tails both occur)
-    "chunk_docs" -> ((s, dir) =>
-      TextAnalysis.chunk(t(s, dir, "documents"), window = 16, stride = 12)
-        .orderBy("doc_id", "chunk_id")),
     "pca_reduce" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       // deterministic PCA twin (sign-canonicalized, integer-sum fit) —
@@ -982,9 +842,8 @@ object SparkEntry {
         .orderBy("id", "dim")
     }),
 
-    // --- round 5: ledger time-travel, semantic dedup, graph link
-    //     prediction, PMI collocations, stratified sampling,
-    //     semi-structured extraction ---
+    // --- round 5: ledger time-travel, greedy coverage selection,
+    //     stratified sampling, semi-structured extraction ---
 
     // ledger time-travel: events become an add/del triple change ledger
     // (any engagement asserts (user, ENGAGED_WITH, item-k); an 'error'
@@ -1024,18 +883,6 @@ object SparkEntry {
           lo + (hi - lo) / 4, lo + 3L * (hi - lo) / 4)
         .orderBy("subj", "pred", "obj", "change")
     }),
-    // DeepWalk-style random-walk corpus over the exact kNN graph:
-    // per hop one frontier⋈edges equi-join + a min_by partial agg on
-    // the md5-derandomized choice key; the oracle unrolls all 4 hops
-    "walk_corpus" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val edges = SimilaritySearch.neighborGraph(emb, k = 5, exact = true)
-        .select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-      val nodes = emb.select(col("vec_id").cast("long").as("id"))
-      graft.ops.GraphRank.randomWalks(nodes, edges, steps = 4)
-        .orderBy("walk_id", "step")
-    }),
     // greedy facility-location (max-coverage) selection: 8 exact greedy
     // rounds, argmax marginal distinct-3-gram gain, doc_id tie-break;
     // the oracle unrolls every round as chained CTEs
@@ -1044,43 +891,12 @@ object SparkEntry {
       graft.ops.Selection.greedyCoverageSelect(t(s, dir, "documents"))
         .orderBy("round")
     }),
-    // Adamic-Adar link prediction over the exact kNN graph: top-50
-    // non-adjacent pairs by integer-micro sum of 1/log2(deg) over
-    // common neighbors — wedge join + anti-join + partial agg, every
-    // weight the interpolated floor-log2 recipe the oracle replays
-    "link_predict" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val edges = SimilaritySearch.neighborGraph(emb, k = 5, exact = true)
-        .select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-      val nodes = emb.select(col("vec_id").cast("long").as("id"))
-      graft.ops.GraphRank.adamicAdar(nodes, edges, k = 50)
-    }),
-    // top-50 positive-PMI collocations within the df-top-100 vocab:
-    // presence counts, exact int64 milli-log2 scores, quadratic work
-    // bounded by the broadcast vocabulary
-    "pmi_pairs" -> ((s, dir) =>
-      TextAnalysis.pmiPairs(t(s, dir, "documents"))),
     // deterministic stratified sample: EXACT ceil(n*0.2) docs per
     // source by (md5-bucket, doc_id) rank — the equal-allocation
     // complement to in-expectation hash thresholding
     "stratified_sample" -> ((s, dir) =>
       graft.ops.Selection.stratifiedSample(t(s, dir, "documents"))
         .orderBy("doc_id")),
-    // k-core onion peel over the kNN graph: synchronous
-    // Batagelj-Zaveršnik rounds at k=6 — layer = the round a vertex
-    // fell out (1..4), 0 = survives; this fixture peels 207/250/43
-    // across three rounds to an empty core, every round oracle-unrolled
-    "kcore" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val edges = SimilaritySearch.neighborGraph(emb, k = 5, exact = true)
-        .select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-      val nodes = emb.select(col("vec_id").cast("long").as("id"))
-      graft.ops.GraphRank.kCorePeel(nodes, edges, k = 6, rounds = 4)
-        .select(col("id").as("vec_id"), col("layer"))
-        .orderBy("vec_id")
-    }),
     // Johnson-Lindenstrauss random projection onto 8 portable
     // md5-derived directions ('rp_' plane namespace) — map-only, no
     // fit; the oracle regenerates the planes and replays every inner
@@ -1088,38 +904,6 @@ object SparkEntry {
     "rp_reduce" -> ((s, dir) =>
       SimilaritySearch.rpReduce(t(s, dir, "embeddings"))
         .orderBy("vec_id", "dim")),
-    // multi-source BFS layers from the vec_id % 97 seed set over the
-    // kNN graph: dist = first-reach round (0 seeds, -1 unreached at 4
-    // rounds — label blocking keeps distant groups unreached), every
-    // frontier expansion oracle-unrolled
-    "bfs_dist" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val edges = SimilaritySearch.neighborGraph(emb, k = 5, exact = true)
-        .select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-      val nodes = emb.select(col("vec_id").cast("long").as("id"))
-      graft.ops.GraphRank.bfsLayers(nodes, edges,
-          nodes.where(col("id") % 97 === 0), rounds = 4)
-        .select(col("id").as("vec_id"), col("dist"))
-        .orderBy("vec_id")
-    }),
-    // weighted shortest path over the kNN graph: portable integer edge
-    // weights from the unordered endpoint pair, 4 Bellman-Ford sweeps —
-    // exact ≤-4-hop distances, every relaxation replayed by the oracle
-    "sssp_dist" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val edges = SimilaritySearch.neighborGraph(emb, k = 5, exact = true)
-        .select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-        .withColumn("w", lit(1L) + pmod(
-          least(col("src"), col("dst")) * 31 +
-            greatest(col("src"), col("dst")) * 17, lit(97L)))
-      val nodes = emb.select(col("vec_id").cast("long").as("id"))
-      graft.ops.GraphRank.ssspRounds(nodes, edges,
-          nodes.where(col("id") % 97 === 0), rounds = 4)
-        .select(col("id").as("vec_id"), col("dist"))
-        .orderBy("vec_id")
-    }),
     // semi-structured extraction: the JSON props column parsed and
     // aggregated per event type (get_json_object ↔ json_extract_string)
     "q29_json_props" -> ((s, dir) =>
@@ -1132,248 +916,7 @@ object SparkEntry {
         .orderBy("event_type"))
   )
 
-  /** Shared CTE chain of the kNN-graph oracles (pagerank,
-    * knn_triangles): the same exact kNN-within-label edge set
-    * knn_graph gates — ends at `ed` (src, dst) and `nodes` (id).
-    */
-  private val knnEdgeCtes =
-    """WITH e AS (SELECT vec_id, label, cast(embedding as double[]) AS v FROM embeddings),
-      | p AS (SELECT a.vec_id AS src, b.vec_id AS dst,
-      |     row_number() OVER (PARTITION BY a.vec_id
-      |       ORDER BY list_distance(a.v, b.v), cast(b.vec_id as varchar)) AS rn
-      |   FROM e a JOIN e b ON a.label = b.label AND a.vec_id <> b.vec_id),
-      | ed AS (SELECT cast(src as bigint) AS src, cast(dst as bigint) AS dst FROM p WHERE rn <= 5),
-      | nodes AS (SELECT cast(vec_id as bigint) AS id FROM embeddings)""".stripMargin
-
-  /** pagerank oracle: the shared kNN edge CTE, then every fixed-point
-    * iteration unrolled as chained CTEs with identical integer op
-    * order — truncating `//` at the same three points (init, per-edge
-    * contribution, damped sum) as the engine's `div`s.
-    */
-  private val pagerankOracleSql: String = {
-    val S = 1000000000000L
-    val head =
-      s"""$knnEdgeCtes,
-        | deg AS (SELECT src, cast(count(*) as bigint) AS deg FROM ed GROUP BY src),
-        | nn AS (SELECT cast(count(*) as bigint) AS n FROM nodes),
-        | r0 AS (SELECT id, $S // n AS r FROM nodes CROSS JOIN nn)""".stripMargin
-    val its = (0 until 5).map { k =>
-      s""",
-        | m$k AS (SELECT ed.dst AS id, cast(sum(rk.r // deg.deg) as bigint) AS s
-        |   FROM ed JOIN deg USING (src) JOIN r$k rk ON ed.src = rk.id
-        |   GROUP BY ed.dst),
-        | r${k + 1} AS (SELECT nodes.id,
-        |     (15 * ($S // nn.n)) // 100 + (85 * coalesce(mk.s, 0)) // 100 AS r
-        |   FROM nodes CROSS JOIN nn LEFT JOIN m$k mk ON nodes.id = mk.id)""".stripMargin
-    }.mkString
-    head + its +
-      "\n SELECT id AS vec_id, cast(r as bigint) AS rank_fp FROM r5 ORDER BY vec_id"
-  }
-
-  /** ppr_scores oracle: pagerank's chained-CTE replay with the restart
-    * mass confined to the id % 97 seed set — seeds start at S div |sd|
-    * and alone receive the 15% base term each iteration.
-    */
-  private val pprOracleSql: String = {
-    val S = 1000000000000L
-    val head =
-      s"""$knnEdgeCtes,
-        | deg AS (SELECT src, cast(count(*) as bigint) AS deg FROM ed GROUP BY src),
-        | sd AS (SELECT id FROM nodes WHERE id % 97 = 0),
-        | nn AS (SELECT cast(count(*) as bigint) AS n FROM sd),
-        | r0 AS (SELECT nodes.id,
-        |     CASE WHEN sd.id IS NOT NULL THEN $S // nn.n ELSE 0 END AS r
-        |   FROM nodes CROSS JOIN nn LEFT JOIN sd ON nodes.id = sd.id)""".stripMargin
-    val its = (0 until 5).map { k =>
-      s""",
-        | m$k AS (SELECT ed.dst AS id, cast(sum(rk.r // deg.deg) as bigint) AS s
-        |   FROM ed JOIN deg USING (src) JOIN r$k rk ON ed.src = rk.id
-        |   GROUP BY ed.dst),
-        | r${k + 1} AS (SELECT nodes.id,
-        |     CASE WHEN sd.id IS NOT NULL THEN (15 * ($S // nn.n)) // 100 ELSE 0 END
-        |       + (85 * coalesce(mk.s, 0)) // 100 AS r
-        |   FROM nodes CROSS JOIN nn LEFT JOIN sd ON nodes.id = sd.id
-        |   LEFT JOIN m$k mk ON nodes.id = mk.id)""".stripMargin
-    }.mkString
-    head + its +
-      "\n SELECT id AS vec_id, cast(r as bigint) AS ppr_fp FROM r5 ORDER BY vec_id"
-  }
-
-  /** textrank_words oracle: rebuilds the adjacent-token co-occurrence
-    * graph (least/greatest dedup, symmetrize), then the pagerank
-    * iteration chain over STRING ids — identical integer op order.
-    */
-  private val textrankOracleSql: String = {
-    val S = 1000000000000L
-    val head =
-      s"""WITH tok AS (SELECT string_split(text, ' ') AS w FROM documents),
-        | pr AS (SELECT unnest(list_transform(generate_series(1, len(w) - 1),
-        |     i -> {'a': w[i], 'b': w[i + 1]})) AS s FROM tok),
-        | p AS (SELECT DISTINCT least(s.a, s.b) AS x, greatest(s.a, s.b) AS y
-        |   FROM pr WHERE s.a <> s.b AND length(s.a) > 0 AND length(s.b) > 0),
-        | ed AS (SELECT x AS src, y AS dst FROM p UNION ALL SELECT y, x FROM p),
-        | nodes AS (SELECT DISTINCT src AS id FROM ed),
-        | deg AS (SELECT src, cast(count(*) as bigint) AS deg FROM ed GROUP BY src),
-        | nn AS (SELECT cast(count(*) as bigint) AS n FROM nodes),
-        | r0 AS (SELECT id, $S // n AS r FROM nodes CROSS JOIN nn)""".stripMargin
-    val its = (0 until 5).map { k =>
-      s""",
-        | m$k AS (SELECT ed.dst AS id, cast(sum(rk.r // deg.deg) as bigint) AS s
-        |   FROM ed JOIN deg USING (src) JOIN r$k rk ON ed.src = rk.id
-        |   GROUP BY ed.dst),
-        | r${k + 1} AS (SELECT nodes.id,
-        |     (15 * ($S // nn.n)) // 100 + (85 * coalesce(mk.s, 0)) // 100 AS r
-        |   FROM nodes CROSS JOIN nn LEFT JOIN m$k mk ON nodes.id = mk.id)""".stripMargin
-    }.mkString
-    head + its +
-      """
-        | SELECT id AS word, cast(r as bigint) AS rank_fp FROM r5
-        | ORDER BY rank_fp DESC, word LIMIT 10""".stripMargin
-  }
-
-  /** hits_scores oracle: the shared kNN edge CTE, then every
-    * UNNORMALIZED integer round unrolled — aʳ = per-dst sum of hʳ⁻¹,
-    * hʳ = per-src sum of aʳ; pure order-free sums, no division, so the
-    * replay is bit-exact by construction.
-    */
-  private val hitsOracleSql: String = {
-    val head =
-      s"""$knnEdgeCtes,
-        | h0 AS (SELECT id, cast(1 as bigint) AS h FROM nodes)""".stripMargin
-    val its = (0 until 4).map { k =>
-      s""",
-        | am$k AS (SELECT ed.dst AS id, cast(sum(hk.h) as bigint) AS s
-        |   FROM ed JOIN h$k hk ON ed.src = hk.id GROUP BY ed.dst),
-        | a${k + 1} AS (SELECT nodes.id, cast(coalesce(mk.s, 0) as bigint) AS a
-        |   FROM nodes LEFT JOIN am$k mk ON nodes.id = mk.id),
-        | hm$k AS (SELECT ed.src AS id, cast(sum(ak.a) as bigint) AS s
-        |   FROM ed JOIN a${k + 1} ak ON ed.dst = ak.id GROUP BY ed.src),
-        | h${k + 1} AS (SELECT nodes.id, cast(coalesce(mk2.s, 0) as bigint) AS h
-        |   FROM nodes LEFT JOIN hm$k mk2 ON nodes.id = mk2.id)""".stripMargin
-    }.mkString
-    head + its +
-      """
-        | SELECT h4.id AS vec_id, h4.h AS hub_score, a4.a AS auth_score
-        | FROM h4 JOIN a4 ON h4.id = a4.id ORDER BY vec_id""".stripMargin
-  }
-
-  /** label_prop oracle: the shared kNN edge CTE symmetrized, then all
-    * 4 synchronous rounds unrolled — the same (count desc, label asc)
-    * argmax via row_number the engine's window uses.
-    */
-  private val labelPropOracleSql: String = {
-    val head =
-      s"""$knnEdgeCtes,
-        | und AS (SELECT DISTINCT src, dst FROM (
-        |     SELECT src, dst FROM ed
-        |     UNION ALL SELECT dst AS src, src AS dst FROM ed) u
-        |   WHERE src <> dst),
-        | l0 AS (SELECT id, id AS label FROM nodes)""".stripMargin
-    val its = (0 until 4).map { k =>
-      s""",
-        | c$k AS (SELECT und.dst AS id, lk.label, count(*) AS c
-        |   FROM und JOIN l$k lk ON und.src = lk.id GROUP BY und.dst, lk.label),
-        | w$k AS (SELECT id, label,
-        |     row_number() OVER (PARTITION BY id ORDER BY c DESC, label) AS rn FROM c$k),
-        | l${k + 1} AS (SELECT nodes.id, coalesce(wk.label, nodes.id) AS label
-        |   FROM nodes LEFT JOIN (SELECT id, label FROM w$k WHERE rn = 1) wk
-        |   ON nodes.id = wk.id)""".stripMargin
-    }.mkString
-    head + its +
-      "\n SELECT id AS vec_id, cast(label as bigint) AS community FROM l4 ORDER BY vec_id"
-  }
-
-  /** kcore oracle: the shared kNN edge CTE symmetrized, then every
-    * peel round unrolled — alive-vertex degrees via LEFT JOIN (isolated
-    * survivors count 0), drop at < k with the round as the layer.
-    */
-  private val kcoreOracleSql: String = {
-    val K = 6; val R = 4
-    val head =
-      s"""$knnEdgeCtes,
-        | u0 AS (SELECT DISTINCT src, dst FROM (
-        |     SELECT src, dst FROM ed
-        |     UNION ALL SELECT dst AS src, src AS dst FROM ed) x
-        |   WHERE src <> dst),
-        | v0 AS (SELECT id FROM nodes)""".stripMargin
-    val its = (1 to R).map { r =>
-      s""",
-        | d$r AS (SELECT v.id, coalesce(c.d, 0) AS d FROM v${r - 1} v
-        |   LEFT JOIN (SELECT dst AS id, cast(count(*) as bigint) AS d
-        |     FROM u${r - 1} GROUP BY dst) c USING (id)),
-        | drop$r AS (SELECT id, $r AS layer FROM d$r WHERE d < $K),
-        | v$r AS (SELECT id FROM d$r WHERE d >= $K),
-        | u$r AS (SELECT src, dst FROM u${r - 1}
-        |   WHERE src IN (SELECT id FROM v$r) AND dst IN (SELECT id FROM v$r))""".stripMargin
-    }.mkString
-    head + its +
-      s"""
-        | SELECT id AS vec_id, cast(layer as bigint) AS layer FROM (
-        |   ${(1 to R).map(r => s"SELECT id, layer FROM drop$r").mkString(" UNION ALL ")}
-        |   UNION ALL SELECT id, 0 AS layer FROM v$R)
-        | ORDER BY vec_id""".stripMargin
-  }
-
-  /** bfs_dist oracle: the shared kNN edge CTE symmetrized, seeds at
-    * vec_id % 97 = 0, then every frontier round unrolled (reach = join
-    * on the previous frontier, minus everything already settled).
-    */
-  private val bfsOracleSql: String = {
-    val R = 4
-    val head =
-      s"""$knnEdgeCtes,
-        | und AS (SELECT DISTINCT src, dst FROM (
-        |     SELECT src, dst FROM ed
-        |     UNION ALL SELECT dst AS src, src AS dst FROM ed) x
-        |   WHERE src <> dst),
-        | n0 AS (SELECT id, 0 AS dist FROM nodes WHERE id % 97 = 0),
-        | a0 AS (SELECT id, dist FROM n0)""".stripMargin
-    val its = (1 to R).map { r =>
-      s""",
-        | n$r AS (SELECT DISTINCT u.dst AS id, $r AS dist FROM und u
-        |   WHERE u.src IN (SELECT id FROM n${r - 1})
-        |     AND u.dst NOT IN (SELECT id FROM a${r - 1})),
-        | a$r AS (SELECT id, dist FROM a${r - 1} UNION ALL SELECT id, dist FROM n$r)""".stripMargin
-    }.mkString
-    head + its +
-      s"""
-        | SELECT n.id AS vec_id, cast(coalesce(a.dist, -1) as bigint) AS dist
-        | FROM nodes n LEFT JOIN a$R a ON n.id = a.id ORDER BY vec_id""".stripMargin
-  }
-
-  /** sssp_dist oracle: the shared kNN edge CTE symmetrized and weighted
-    * (1 + (least·31 + greatest·17) mod 97 — the same direction-symmetric
-    * integer recipe as the engine), seeds at vec_id % 97 = 0, then every
-    * Bellman-Ford sweep unrolled: settled ∪ (settled ⋈ edges relax) →
-    * per-vertex min.
-    */
-  private val ssspOracleSql: String = {
-    val R = 4
-    val head =
-      s"""$knnEdgeCtes,
-        | und AS (SELECT DISTINCT src, dst FROM (
-        |     SELECT src, dst FROM ed
-        |     UNION ALL SELECT dst AS src, src AS dst FROM ed) x
-        |   WHERE src <> dst),
-        | wed AS (SELECT src, dst,
-        |     1 + (least(src, dst) * 31 + greatest(src, dst) * 17) % 97 AS w
-        |   FROM und),
-        | a0 AS (SELECT id, 0 AS dist FROM nodes WHERE id % 97 = 0)""".stripMargin
-    val its = (1 to R).map { r =>
-      s""",
-        | a$r AS (SELECT id, min(dist) AS dist FROM (
-        |     SELECT id, dist FROM a${r - 1}
-        |     UNION ALL SELECT e.dst AS id, a.dist + e.w AS dist
-        |     FROM a${r - 1} a JOIN wed e ON e.src = a.id) x GROUP BY id)""".stripMargin
-    }.mkString
-    head + its +
-      s"""
-        | SELECT n.id AS vec_id, cast(coalesce(a.dist, -1) as bigint) AS dist
-        | FROM nodes n LEFT JOIN a$R a ON n.id = a.id ORDER BY vec_id""".stripMargin
-  }
-
   def oracleSql: Map[String, String] = Map(
-    "sssp_dist" -> ssspOracleSql,
     "q01_pricing_agg" ->
       """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty, count(*) AS n,
         | cast(sum(cast(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) as bigint)) as bigint) AS revenue_cents
@@ -1455,11 +998,6 @@ object SparkEntry {
         | cast(sum(cast(floor(o_totalprice * 100 + 0.5) as bigint)) as bigint) AS total_cents
         | FROM orders GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
         | ORDER BY 1 NULLS FIRST, 2 NULLS FIRST""".stripMargin,
-    "q21_token_stats" ->
-      s"""SELECT lang, cast(sum(tok) as bigint) AS total_tokens, min(tok) AS min_tokens, max(tok) AS max_tokens
-         | FROM (SELECT lang, $tokSql AS tok FROM documents) t
-         | GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q22_doc_quality" -> qualityOracleSql,
     "kg_scores" -> kgScoresOracleSql,
     "kg_depicts" -> kgDepictsOracleSql,
     "kg_ship_table" -> kgShipTableOracleSql,
@@ -1503,7 +1041,6 @@ object SparkEntry {
         |       count(*) OVER (PARTITION BY grp) AS n FROM r)
         | SELECT doc_id AS id, component FROM c WHERE n >= 2 ORDER BY id""".stripMargin,
     "lang_id" -> langIdOracleSql,
-    "fingerprints" -> fingerprintsOracleSql,
     "ann_topk" ->
       """SELECT e.vec_id,
         | round(list_cosine_similarity(cast(e.embedding as double[]),
@@ -1716,7 +1253,6 @@ object SparkEntry {
         | FROM reach GROUP BY a ORDER BY id""".stripMargin,
     "fuzzy_link" -> fuzzyLinkOracleSql,
     "pca_reduce" -> pcaReduceOracleSql,
-    "pii_scrub" -> piiScrubOracleSql,
     "q28_length_quantiles" ->
       """SELECT lang, count(*) AS n,
         | round(quantile_cont(n_chars, 0.25), 6) AS p25,
@@ -1791,78 +1327,6 @@ object SparkEntry {
         | SELECT doc_id, cast(count(*) as bigint) AS n_grams,
         |   cast(sum(s_milli) as bigint) AS dsir_milli
         | FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "pagerank" -> pagerankOracleSql,
-    "hits_scores" -> hitsOracleSql,
-    "ppr_scores" -> pprOracleSql,
-    "textrank_words" -> textrankOracleSql,
-    // one-hop neighbor mean in micro fixed point; DuckDB's // floors,
-    // so the truncating-toward-zero div is replayed with a sign split
-    "neighbor_agg" ->
-      s"""$knnEdgeCtes,
-        | und AS (SELECT DISTINCT src, dst FROM (
-        |     SELECT src, dst FROM ed
-        |     UNION ALL SELECT dst AS src, src AS dst FROM ed) u
-        |   WHERE src <> dst),
-        | f AS (SELECT cast(vec_id as bigint) AS id, cast(d as bigint) AS dim,
-        |     cast(floor(v[d + 1] * 1000000 + 0.5) as bigint) AS q
-        |   FROM e CROSS JOIN generate_series(0, 63) t(d)),
-        | g AS (SELECT und.dst AS vec_id, f.dim,
-        |     cast(count(*) as bigint) AS n_nbrs, cast(sum(f.q) as bigint) AS s
-        |   FROM und JOIN f ON und.src = f.id
-        |   GROUP BY und.dst, f.dim)
-        | SELECT vec_id, dim, n_nbrs,
-        |   CASE WHEN s >= 0 THEN s // n_nbrs
-        |        ELSE -((-s) // n_nbrs) END AS mean_fp
-        | FROM g ORDER BY vec_id, dim""".stripMargin,
-    // replays the oriented triangle enumeration over the proven kNN
-    // edge set: symmetrize a<b, wedge join, closing join, per-vertex
-    // fan-out with zero-filled non-participants
-    "knn_triangles" ->
-      s"""$knnEdgeCtes,
-        | und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        |   FROM ed WHERE src <> dst),
-        | tri AS (SELECT e1.a AS a, e1.b AS b, e2.b AS c
-        |   FROM und e1 JOIN und e2 ON e1.b = e2.a
-        |   JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
-        | pv AS (SELECT unnest([a, b, c]) AS id FROM tri),
-        | cnt AS (SELECT id, cast(count(*) as bigint) AS n_triangles
-        |   FROM pv GROUP BY id)
-        | SELECT nodes.id AS vec_id, coalesce(cnt.n_triangles, 0) AS n_triangles
-        | FROM nodes LEFT JOIN cnt ON nodes.id = cnt.id ORDER BY vec_id""".stripMargin,
-    "label_prop" -> labelPropOracleSql,
-    "vocab_topk" ->
-      """SELECT word, cast(count(*) as bigint) AS n
-        | FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        | GROUP BY word ORDER BY n DESC, word LIMIT 20""".stripMargin,
-    // window/stride slicing: Spark slice(arr, start, LENGTH) ==
-    // DuckDB list_slice(arr, start, start+len-1) (inclusive end)
-    "chunk_docs" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        | c AS (SELECT doc_id, w,
-        |     unnest(generate_series(0, greatest(len(w) - 1, 0) // 12)) AS cid
-        |   FROM d)
-        | SELECT doc_id, cast(cid as bigint) AS chunk_id,
-        |   cast(len(list_slice(w, cid * 12 + 1, cid * 12 + 16)) as bigint) AS n_tokens,
-        |   array_to_string(list_slice(w, cid * 12 + 1, cid * 12 + 16), ' ') AS chunk
-        | FROM c WHERE cid * 12 < len(w) ORDER BY doc_id, chunk_id""".stripMargin,
-    // both engines work on the segment/gram STRINGS (no hash), so these
-    // are bit-exact cross-engine; integer counts, one rounded division
-    // replays the per-doc unigram entropy: (doc, word) counts, doc
-    // totals, c·milliLog2(T/c) order-free sums, truncating div by T
-    "entropy_score" ->
-      s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        |   FROM documents),
-        | t2 AS (SELECT doc_id, w FROM tok WHERE length(w) > 0),
-        | c AS (SELECT doc_id, w, cast(count(*) as bigint) AS c
-        |   FROM t2 GROUP BY 1, 2),
-        | tt AS (SELECT doc_id, c,
-        |     cast(sum(c) OVER (PARTITION BY doc_id) as bigint) AS t,
-        |     cast(count(*) OVER (PARTITION BY doc_id) as bigint) AS nd FROM c),
-        | b AS (SELECT doc_id, c, t, nd, ${lrmSql("t", "c")} AS bm FROM tt)
-        | SELECT doc_id, min(t) AS n_tokens, min(nd) AS n_distinct,
-        |   cast(sum(c * bm) as bigint) AS h_milli_tokens,
-        |   cast(sum(c * bm) // min(t) as bigint) AS entropy_milli
-        | FROM b GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     "ann_mmr" -> annMmrOracleSql(10, 24),
     // replays the two-tier matryoshka serve: prefix-16 cosine pool on
     // raw doubles (identical fold), full-dim round-6 re-rank
@@ -2034,28 +1498,6 @@ object SparkEntry {
         | WHERE NOT EXISTS (SELECT 1 FROM s2
         |   WHERE s2.subj = s1.subj AND s2.pred = s1.pred AND s2.obj = s1.obj)
         | ORDER BY subj, pred, obj, change""".stripMargin,
-    // replays every hop of the derandomized walk: the shared kNN edge
-    // CTE, then per hop the md5("walk_t_dst") % 10^6 choice key and the
-    // (h, dst) row_number argmin — identical to the engine's min_by
-    "walk_corpus" -> {
-      def hop(t: Int) =
-        s""",
-          | s$t AS (SELECT f.walk_id, e.dst,
-          |     cast(concat('0x', substr(md5(concat(cast(f.walk_id as varchar), '_${t}_', cast(e.dst as varchar))), 1, 8)) as bigint) % 1000000 AS h
-          |   FROM f${t - 1} f JOIN ed e ON f.node = e.src),
-          | f$t AS (SELECT walk_id, dst AS node FROM (
-          |     SELECT walk_id, dst, row_number() OVER (PARTITION BY walk_id ORDER BY h, dst) AS rn
-          |     FROM s$t) WHERE rn = 1)""".stripMargin
-      s"""$knnEdgeCtes,
-        | f0 AS (SELECT id AS walk_id, id AS node FROM nodes)${(1 to 4).map(hop).mkString}
-        | SELECT walk_id, cast(st as bigint) AS step, node FROM (
-        |   SELECT walk_id, 0 AS st, node FROM f0
-        |   UNION ALL SELECT walk_id, 1, node FROM f1
-        |   UNION ALL SELECT walk_id, 2, node FROM f2
-        |   UNION ALL SELECT walk_id, 3, node FROM f3
-        |   UNION ALL SELECT walk_id, 4, node FROM f4)
-        | ORDER BY walk_id, step""".stripMargin
-    },
     // every greedy round unrolled: marginal gain = distinct 3-grams not
     // yet covered by earlier picks, argmax by (gain DESC, doc_id)
     "coverage_select" -> {
@@ -2085,45 +1527,6 @@ object SparkEntry {
         |   cast(gain as bigint) AS marginal_gain
         | FROM ($union) ORDER BY round""".stripMargin
     },
-    // the shared kNN edge CTE symmetrized, then wedge enumeration,
-    // existing-edge exclusion, and the integer 1000000//milliLog2(deg)
-    // Adamic-Adar weights — identical arithmetic to the engine
-    "link_predict" ->
-      s"""$knnEdgeCtes,
-        | und AS (SELECT DISTINCT src, dst FROM (
-        |     SELECT src, dst FROM ed
-        |     UNION ALL SELECT dst AS src, src AS dst FROM ed) u
-        |   WHERE src <> dst),
-        | degs AS (SELECT dst AS z, cast(count(*) as bigint) AS deg FROM und GROUP BY dst),
-        | inv AS (SELECT z, 1000000 // (${lrmSql("deg", "1")}) AS inv_micro
-        |   FROM degs WHERE deg >= 2),
-        | wed AS (SELECT e1.src AS a, e2.dst AS b, e1.dst AS z
-        |   FROM und e1 JOIN und e2 ON e1.dst = e2.src AND e1.src < e2.dst),
-        | cand AS (SELECT a, b, z FROM wed
-        |   WHERE NOT EXISTS (SELECT 1 FROM und u WHERE u.src = wed.a AND u.dst = wed.b))
-        | SELECT a, b, cast(count(*) as bigint) AS n_common,
-        |   cast(sum(inv_micro) as bigint) AS aa_micro
-        | FROM cand JOIN inv USING (z)
-        | GROUP BY a, b ORDER BY aa_micro DESC, a, b LIMIT 50""".stripMargin,
-    // presence-based PMI: distinct (doc, word), df-top-100 vocab with
-    // the (df desc, word) cut, per-doc pair enumeration, the exact
-    // interpolated milli-log2 of the integer rational
-    "pmi_pairs" ->
-      s"""WITH dw AS (SELECT DISTINCT doc_id, w FROM (
-        |     SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents) u
-        |   WHERE length(w) > 0),
-        | voc AS (SELECT w, cast(count(*) as bigint) AS df FROM dw GROUP BY w
-        |   ORDER BY count(*) DESC, w LIMIT 100),
-        | dv AS (SELECT doc_id, w, df FROM dw JOIN voc USING (w)),
-        | pr AS (SELECT a.w AS w1, b.w AS w2, cast(count(*) as bigint) AS n_co,
-        |     min(a.df) AS c1, min(b.df) AS c2
-        |   FROM dv a JOIN dv b ON a.doc_id = b.doc_id AND a.w < b.w
-        |   GROUP BY a.w, b.w),
-        | n AS (SELECT cast(count(*) as bigint) AS n FROM documents)
-        | SELECT w1, w2, n_co,
-        |   cast(${lrmSql("n_co * n", "c1 * c2")} as bigint) AS pmi_milli
-        | FROM pr, n WHERE n_co * n >= c1 * c2
-        | ORDER BY pmi_milli DESC, w1, w2 LIMIT 50""".stripMargin,
     "stratified_sample" ->
       """WITH d AS (SELECT doc_id, source,
         |     cast(concat('0x', substr(md5(cast(doc_id as varchar)), 1, 8)) as bigint) % 1000000 AS h
@@ -2134,8 +1537,6 @@ object SparkEntry {
         |   FROM d)
         | SELECT doc_id, source FROM r
         | WHERE rk <= (n * 200 + 999) // 1000 ORDER BY doc_id""".stripMargin,
-    "kcore" -> kcoreOracleSql,
-    "bfs_dist" -> bfsOracleSql,
     // regenerates the 'rp_' md5 planes (ann_lsh_portable's coordinate
     // recipe) and replays every inner product
     "rp_reduce" ->
@@ -2153,61 +1554,6 @@ object SparkEntry {
         | max(cast(json_extract_string(props, '$.k') as bigint)) AS max_k
         | FROM events GROUP BY 1 ORDER BY 1""".stripMargin
   )
-
-  /** fingerprints oracle: the same base-31 polynomial k-gram hash
-    * (k = 8, window = 4) as TextAnalysis.fingerprints, spelled out as
-    * list-lambda SQL (character positions are 1-based in DuckDB).
-    */
-  private def fingerprintsOracleSql: String = {
-    val k = 8; val window = 4
-    val pow = Iterator.iterate(1L)(_ * 31L).take(k).toArray // 31^0..31^(k-1)
-    val gram = (0 until k)
-      .map(j => s"cast(unicode(text[i+$j:i+$j]) as bigint) * ${pow(k - 1 - j)}")
-      .mkString(" + ")
-    s"""WITH h AS (SELECT doc_id,
-       |   list_transform(generate_series(1, greatest(length(text) - ${k - 1}, 0)),
-       |     i -> $gram) AS hs
-       |  FROM documents),
-       | f AS (SELECT doc_id,
-       |   list_distinct(list_transform(generate_series(1, greatest(len(hs) - ${window - 1}, 0)),
-       |     w -> list_min(hs[w:w+${window - 1}]))) AS fps FROM h)
-       | SELECT doc_id, unnest(fps) AS fingerprint FROM f
-       | ORDER BY doc_id, fingerprint""".stripMargin
-  }
-
-  /** lang_id oracle: per-language n-gram hit counts via `contains`,
-    * argmax in the same fixed order as TextAnalysis.langProfiles
-    * (ties → earlier language, zero hits → 'und').
-    */
-  private def langIdOracleSql: String = {
-    val scores = TextAnalysis.langProfiles.map { case (l, ps) =>
-      l -> ps.map(p => s"CASE WHEN contains(text, '$p') THEN 1 ELSE 0 END")
-        .mkString("(", " + ", ")")
-    }
-    val scoreCols = scores.map { case (l, e) => s"$e AS s_$l" }.mkString(", ")
-    val m = scores.map { case (l, _) => s"s_$l" }.mkString("greatest(", ", ", ")")
-    val pick = scores.map { case (l, _) => s"WHEN s_$l = m THEN '$l'" }.mkString(" ")
-    s"""SELECT doc_id, CASE WHEN m = 0 THEN 'und' $pick END AS lang_pred,
-       | cast(m as int) AS lang_votes
-       | FROM (SELECT doc_id, $m AS m, ${scores.map(s => "s_" + s._1).mkString(", ")}
-       |       FROM (SELECT doc_id, $scoreCols FROM documents) s0) s1
-       | ORDER BY doc_id""".stripMargin
-  }
-
-  /** q22 oracle: the rounded quality score, mirroring
-    * TextAnalysis.qualityScore arithmetic exactly.
-    */
-  private def qualityOracleSql: String = {
-    val tok = s"($tokSql)"
-    val meanWordLen = s"(cast(length(text) - $tok + 1 as double) / $tok)"
-    val stopHits = s"((length(text) - length(replace(text, 'the', ''))) / 3 + " +
-      s"(length(text) - length(replace(text, ' a ', ''))) / 3)"
-    val stopRatio = s"(cast($stopHits as double) / $tok)"
-    val lenScore = s"(1.0 - least(abs($meanWordLen - 5.5) / 5.5, 1.0))"
-    val stopScore = s"(1.0 - least(abs($stopRatio - 0.1) * 5.0, 1.0))"
-    s"SELECT doc_id, round($lenScore * 0.6 + $stopScore * 0.4, 6) AS quality " +
-      "FROM documents ORDER BY doc_id"
-  }
 
   /** The portable-minhash CTE chain over an input relation
     * `src(doc_id, text)` (rows already length-filtered): positions →
@@ -2230,6 +1576,25 @@ object SparkEntry {
        |  GROUP BY doc_id, j),
        | band AS (SELECT doc_id, j // 4 AS band, string_agg(h::VARCHAR, ',' ORDER BY j) AS bkey
        |  FROM hj GROUP BY doc_id, j // 4)""".stripMargin
+
+  /** lang_id oracle: per-language n-gram hit counts via `contains`,
+    * argmax in the same fixed order as TextAnalysis.langProfiles
+    * (ties → earlier language, zero hits → 'und').
+    */
+  private def langIdOracleSql: String = {
+    val scores = TextAnalysis.langProfiles.map { case (l, ps) =>
+      l -> ps.map(p => s"CASE WHEN contains(text, '$p') THEN 1 ELSE 0 END")
+        .mkString("(", " + ", ")")
+    }
+    val scoreCols = scores.map { case (l, e) => s"$e AS s_$l" }.mkString(", ")
+    val m = scores.map { case (l, _) => s"s_$l" }.mkString("greatest(", ", ", ")")
+    val pick = scores.map { case (l, _) => s"WHEN s_$l = m THEN '$l'" }.mkString(" ")
+    s"""SELECT doc_id, CASE WHEN m = 0 THEN 'und' $pick END AS lang_pred,
+       | cast(m as int) AS lang_votes
+       | FROM (SELECT doc_id, $m AS m, ${scores.map(s => "s_" + s._1).mkString(", ")}
+       |       FROM (SELECT doc_id, $scoreCols FROM documents) s0) s1
+       | ORDER BY doc_id""".stripMargin
+  }
 
   /** kg_scores oracle: per-label fused score via substring counting. */
   private def kgScoresOracleSql: String = {
@@ -2290,33 +1655,6 @@ object SparkEntry {
        | SELECT cast(mention_id as bigint) AS mention_id, entity_id,
        |   round(score, 6) AS score, 'minhash_lsh' AS method
        | FROM best WHERE rn = 1 ORDER BY mention_id""".stripMargin
-  }
-
-  /** pii_scrub oracle: the same planting CASEs and the same regexes
-    * (chosen inside the Java-regex ∩ RE2-compatible subset, so Spark's
-    * regexp_replace and DuckDB's agree match-for-match).
-    */
-  private def piiScrubOracleSql: String = {
-    // DuckDB standard strings keep backslashes literal — the Scala
-    // constants interpolate verbatim
-    val e = TextAnalysis.emailRe
-    val p = TextAnalysis.phoneRe
-    s"""WITH p1 AS (SELECT doc_id,
-       |    CASE WHEN doc_id % 7 = 0
-       |         THEN text || ' contact user' || cast(doc_id as varchar) || '@example.com soon'
-       |         ELSE text END AS t1
-       |  FROM documents),
-       | p2 AS (SELECT doc_id,
-       |    CASE WHEN doc_id % 11 = 0 THEN t1 || ' call 555-867-5309 today' ELSE t1 END AS text
-       |  FROM p1),
-       | s1 AS (SELECT doc_id,
-       |    cast(len(string_split_regex(text, '$e')) - 1 as int) AS n_emails,
-       |    regexp_replace(text, '$e', '<EMAIL>', 'g') AS te
-       |  FROM p2)
-       | SELECT doc_id,
-       |  regexp_replace(te, '$p', '<PHONE>', 'g') AS text_scrubbed, n_emails,
-       |  cast(len(string_split_regex(te, '$p')) - 1 as int) AS n_phones
-       | FROM s1 ORDER BY doc_id""".stripMargin
   }
 
   /** pca_reduce oracle: mirrors Reduce.pcaDet operation-for-operation.

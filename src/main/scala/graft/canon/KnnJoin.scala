@@ -168,8 +168,7 @@ object KnnJoin {
     */
   def approxTopK(feat: DataFrame, k: Int, tables: Int = 4, bits: Int = 8,
                  seed: Long = 42L, selfRank: Boolean = false,
-                 window: Int = 8, compact: Boolean = false,
-                 portable: Boolean = false): DataFrame = {
+                 window: Int = 8, portable: Boolean = false): DataFrame = {
     // final cross-task merge: repartition the per-task top-k PARTIALS
     // (≤ k entries per (src, task), one array row each) by src and run
     // the same bounded-insert merge in a typed mapPartitions. This
@@ -179,7 +178,7 @@ object KnnJoin {
     // per-dst min dedup then k smallest by (distance, dst) — so results
     // are identical to the aggregator path exactTopK still uses.
     val (partials, idType) = lshPartials(feat, k, tables, bits, seed,
-      selfRank, window, compact, portable)
+      selfRank, window, portable)
     val merged: DataFrame =
       if (idType == org.apache.spark.sql.types.LongType)
         partials.repartition(col("src"))
@@ -202,10 +201,9 @@ object KnnJoin {
   private[graft] def lshCandidates(
                  feat: DataFrame, k: Int, tables: Int = 4, bits: Int = 8,
                  seed: Long = 42L, selfRank: Boolean = false,
-                 window: Int = 8, compact: Boolean = false,
-                 portable: Boolean = false): DataFrame = {
+                 window: Int = 8, portable: Boolean = false): DataFrame = {
     val (partials, idType) = lshPartials(feat, k, tables, bits, seed,
-      selfRank, window, compact, portable)
+      selfRank, window, portable)
     partials.select(col("src"), posexplode(col("ds")).as(Seq("i", "distance")),
         col("ids"))
       .select(col("src").cast(idType).as("src"),
@@ -219,21 +217,7 @@ object KnnJoin {
   private def lshPartials(
                  feat: DataFrame, k: Int, tables: Int = 4, bits: Int = 8,
                  seed: Long = 42L, selfRank: Boolean = false,
-                 window: Int = 8, compact: Boolean = false,
-                 portable: Boolean = false): (DataFrame, org.apache.spark.sql.types.DataType) = {
-    // compact: carry the vectors through the candidate shuffle as
-    // array<float> — half the bytes on the highest-volume stream in the
-    // engine (distances still accumulate in double; ranking shifts only
-    // on 1e-7-relative near-ties). Opt-in: on a NETWORK shuffle the
-    // bytes dominate and this is the right default, but on this box's
-    // tmpfs shuffle it measured neutral-to-slightly-negative (pinned
-    // 8-core leg: 575-653 task-s float vs 541-593 double — the per-
-    // element float→double conversion costs what the bus saves), so the
-    // single-box bench keeps doubles. The full-probe oracle path
-    // (lshTopKFull) must keep compact=false to stay bit-exact against
-    // the double-arithmetic SQL oracle.
-    val featIn = if (compact)
-      feat.withColumn("vec", col("vec").cast("array<float>")) else feat
+                 window: Int = 8, portable: Boolean = false): (DataFrame, org.apache.spark.sql.types.DataType) = {
     val dims = 64 // upper bound on vec length used for plane generation
     // signature per table: sum over bits of sign(dot(vec, plane)) << bit.
     // portable=true swaps the avalanche-mixed coefficients for the
@@ -263,7 +247,7 @@ object KnnJoin {
     // used by the signature), so bucket order is independent of the bits
     def orderProj(t: Int): Column =
       graft.core.VectorExprs.vec_dot(col("vec"), plane(t, bits))
-    val tagged = featIn.select(
+    val tagged = feat.select(
       col("id"), col("group"), col("vec"),
       explode(array((0 until tables).map(t =>
         struct(lit(t).as("t"), signature(t).as("sig"), orderProj(t).as("p"))): _*)).as("h"))
@@ -272,10 +256,6 @@ object KnnJoin {
 
     // the ONE exchange: co-locate each (group, t, sig) bucket, order it
     // by (p, id) — exactly the row_number order of the previous plan.
-    // `compact` vecs cross this shuffle as float; the cast to double
-    // happens AFTER the exchange and equals the (double)getFloat(i)
-    // widening the float sq_dist path performed, so distances are
-    // bit-identical in both modes.
     val bucketed = tagged
       .repartition(col("group"), col("t"), col("sig"))
       .sortWithinPartitions(col("group"), col("t"), col("sig"), col("p"), col("id"))

@@ -37,7 +37,7 @@ object Selection {
     * plus the (1000·num) div (den·2^bits) − 1000 linear fraction.
     * Identical text-for-text to the DuckDB oracle's arithmetic.
     */
-  private[ops] def logRatioMilli(num: String, den: String): String = {
+  private def logRatioMilli(num: String, den: String): String = {
     val bits = s"(length(bin(($num) div ($den))) - 1)"
     s"($bits * 1000L + (1000L * ($num)) div " +
       s"(($den) * shiftleft(1L, cast($bits as int))) - 1000L)"

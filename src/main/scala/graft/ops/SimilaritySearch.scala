@@ -42,10 +42,8 @@ object SimilaritySearch {
     val qdf = feat.sparkSession.createDataFrame(
       java.util.List.of(org.apache.spark.sql.Row("__query__", 1L, query)),
       feat.schema)
-    // compact=false: the full-probe variant is hash-gated against a
-    // double-arithmetic SQL oracle — distances must stay bit-exact
     val knn = graft.canon.KnnJoin.approxTopK(feat.unionByName(qdf), k, tables, bits,
-      window = window, compact = false)
+      window = window)
     knn.where(col("src") === "__query__")
       .select(col("dst").cast("long").as("vec_id"), col("distance"))
   }
@@ -394,30 +392,6 @@ object SimilaritySearch {
       .select(col("vec_id"), round(col("dist"), 6).as("distance"))
   }
 
-  /** All-pairs top-k neighbor edges (per-label groups): the batch ANN
-    * used for embedding-space graph building.
-    */
-  def neighborGraph(embeddings: DataFrame, k: Int, exact: Boolean): DataFrame = {
-    val feat = embeddings.select(col("vec_id").cast("string").as("id"),
-      col("label").cast("long").as("group"),
-      expr("transform(embedding, x -> cast(x as double))").as("vec"))
-    if (exact) graft.canon.KnnJoin.exactTopK(feat, k)
-    else graft.canon.KnnJoin.approxTopK(feat, k)
-  }
-
-  /** Johnson–Lindenstrauss random projection with PORTABLE planes: the
-    * md5-derived unit-cube coordinates ([[portablePlanes]], `rp_`
-    * namespace) define `dims` fixed projection directions, and every
-    * vector maps to its `dims` inner products — the standard
-    * dimensionality-reduction front-end for sketching/clustering when
-    * PCA's data-dependent fit is unnecessary. Purely map-side (the
-    * planes are literals baked into codegen): no fit pass, no shuffle,
-    * embarrassingly parallel at any scale — and the oracle regenerates
-    * the identical planes from its own md5, so the projection is
-    * engine-replayable end to end.
-    *
-    * Output: (vec_id, dim, value) rows, pca_reduce's exploded shape.
-    */
   /** MMR (maximal-marginal-relevance) diversified re-ranking: fetch the
     * `pool` exact-cosine-nearest candidates, then greedily pick k of
     * them, each step maximizing λ·relevance − (1−λ)·max-similarity-to-
@@ -560,6 +534,19 @@ object SimilaritySearch {
       .limit(k)
   }
 
+  /** Johnson–Lindenstrauss random projection with PORTABLE planes: the
+    * md5-derived unit-cube coordinates ([[portablePlanes]], `rp_`
+    * namespace) define `dims` fixed projection directions, and every
+    * vector maps to its `dims` inner products — the standard
+    * dimensionality-reduction front-end for sketching/clustering when
+    * PCA's data-dependent fit is unnecessary. Purely map-side (the
+    * planes are literals baked into codegen): no fit pass, no shuffle,
+    * embarrassingly parallel at any scale — and the oracle regenerates
+    * the identical planes from its own md5, so the projection is
+    * engine-replayable end to end.
+    *
+    * Output: (vec_id, dim, value) rows, pca_reduce's exploded shape.
+    */
   def rpReduce(embeddings: DataFrame, dims: Int = 8): DataFrame = {
     val planes = portablePlanes(dims, 64, prefix = "rp_")
     embeddings

@@ -55,13 +55,19 @@ object KgPipeline {
     else framesAll)
       .localCheckpoint(true)
 
-    val triples = TripleBuilder.hasOntology(ships)
+    Result(ships, frames, phase1Triples(ships, frames, labels),
+      TripleBuilder.nodes(ships, frames))
+  }
+
+  /** The phase-1 triples: HAS (ship ontology), HAS_INSPECTION, HAS_FRAME
+    * and DEPICTS, shared by [[run]] and [[runCheckpointed]].
+    */
+  private def phase1Triples(ships: DataFrame, frames: DataFrame, labels: Seq[String])(
+      implicit spark: SparkSession): DataFrame =
+    TripleBuilder.hasOntology(ships)
       .unionByName(TripleBuilder.hasInspection(ships))
       .unionByName(TripleBuilder.hasFrame(frames))
       .unionByName(EntityLinker.depicts(frames, labels))
-
-    Result(ships, frames, triples, TripleBuilder.nodes(ships, frames))
-  }
 
   /** Phase 1 + phase 2 (`similarities`, reference §3.2): mosaics
     * (sessionization + IN_MOSAIC), k-NN similarity edges, clusters.
@@ -98,11 +104,7 @@ object KgPipeline {
       MentionExtractor.frames(MentionExtractor.extract(corpus, dict), labels, ships)
     }
     val phase1 = mgr.stage("triples_phase1", Seq("subj", "pred", "obj")) {
-      val ships = ShipCatalog.dim(corpus)
-      TripleBuilder.hasOntology(ships)
-        .unionByName(TripleBuilder.hasInspection(ships))
-        .unionByName(TripleBuilder.hasFrame(frames))
-        .unionByName(EntityLinker.depicts(frames, labels))
+      phase1Triples(ShipCatalog.dim(corpus), frames, labels)
     }
     val mosaics = mgr.stage("triples_mosaic", Seq("subj", "pred", "obj")) {
       graft.materialize.Mosaics.build(frames, labels)._1

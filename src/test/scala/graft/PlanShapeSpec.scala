@@ -86,7 +86,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("global top-k plans as TakeOrderedAndProject, not sort+limit") {
-    for (n <- Seq("q03_topk_orders", "ann_topk", "kg_topk_quality", "vocab_topk"))
+    for (n <- Seq("q03_topk_orders", "ann_topk", "kg_topk_quality"))
       assert(plan(n).contains("TakeOrderedAndProject"),
         s"$n should plan the global top-k as TakeOrderedAndProject")
   }

@@ -23,6 +23,9 @@ class ResumeSpec extends AnyFunSuite {
     val fullDir = tmpDir("graft_full")
     val want = KgPipeline.runCheckpointed(corpus, fullDir)
       .select("subj", "pred", "obj").collect().map(_.toSeq).toSet
+    // the checkpointed and in-memory entry points build the same graph
+    assert(KgPipeline.runFull(corpus).triples
+      .select("subj", "pred", "obj").collect().map(_.toSeq).toSet === want)
 
     // partial run: compute only the first two stages, then "crash"
     val resDir = tmpDir("graft_resume")
