@@ -3,8 +3,8 @@ package graft
 import graft.core.{CorpusRow, Ontology}
 import graft.extract.MentionExtractor
 import graft.link.{EntityLinker, ShipCatalog}
-import graft.ops.{SimilaritySearch, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ops.TextAnalysis
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -84,6 +84,13 @@ object SparkEntry {
       col("label").cast("long").as("group"),
       expr("transform(embedding, x -> cast(x as double))").as("vec"))
 
+  /** Deterministic sampling bucket in [0, m): first 8 hex digits of the
+    * md5 of the key. Engine-portable (md5 is md5 everywhere), so sampled
+    * subsets are reproducible across Spark, DuckDB, and reruns.
+    */
+  private def hashBucket(key: Column, m: Long = 1000000L): Column =
+    pmod(conv(substring(md5(key), 1, 8), 16, 10).cast("long"), lit(m))
+
   // ---- SQL fragments shared by the generated oracles ----
 
   /** Non-overlapping substring count of `term` in documents.text. */
@@ -98,54 +105,6 @@ object SparkEntry {
 
   private val tokSql =
     "CASE WHEN length(text) = 0 THEN 0 ELSE length(text) - length(replace(text, ' ', '')) + 1 END"
-
-  /** DuckDB twin of Selection.logRatioMilli: interpolated milli-log2 of
-    * num/den, REQUIRING num >= den >= 1 — floor-log2 via unpadded bin
-    * length plus the linear milli fraction.
-    */
-  private def lrmSql(num: String, den: String): String = {
-    val bits = s"(length(bin(($num) // ($den))) - 1)"
-    s"($bits * 1000 + (1000 * ($num)) // (($den) * (1 << $bits)) - 1000)"
-  }
-
-  /** MMR oracle: candidate pool (round-6 cosine top-`pool`), pairwise
-    * round-6 sims, then the k greedy steps UNROLLED as a CTE chain
-    * (one CTE per step) — step i picks the argmax of
-    * 0.7·rel − 0.3·max(sim to s1..s(i-1)), ties by vec_id. DuckDB's
-    * `list_cosine_similarity` is bit-identical to the engine's
-    * dot/(√·√) left-to-right fold, and 0.7e0/0.3e0 are double literals,
-    * so every score double matches the engine's exactly.
-    */
-  private def annMmrOracleSql(k: Int, pool: Int): String = {
-    // MATERIALIZED: the unrolled chain references c/sim/s_j many times;
-    // inlined CTEs would re-open the parquet per reference and exhaust
-    // the process file-handle budget
-    val base =
-      s"""WITH e AS MATERIALIZED (SELECT vec_id, cast(embedding as double[]) AS v FROM embeddings),
-         | q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-         | c AS MATERIALIZED (SELECT e.vec_id, e.v,
-         |     round(list_cosine_similarity(e.v, q.qv), 6) AS rel
-         |   FROM e, q WHERE e.vec_id <> 0
-         |   ORDER BY rel DESC, e.vec_id LIMIT $pool),
-         | sim AS MATERIALIZED (SELECT a.vec_id AS a, b.vec_id AS b,
-         |     round(list_cosine_similarity(a.v, b.v), 6) AS s
-         |   FROM c a JOIN c b ON a.vec_id <> b.vec_id),
-         | s1 AS MATERIALIZED (SELECT vec_id, rel, rel AS score FROM c
-         |   ORDER BY rel DESC, vec_id LIMIT 1)""".stripMargin
-    val steps = (2 to k).map { i =>
-      val sel = (1 until i).map(j => s"SELECT vec_id FROM s$j").mkString(" UNION ALL ")
-      s""",
-         | s$i AS MATERIALIZED (SELECT c.vec_id, c.rel,
-         |     0.7e0 * c.rel - 0.3e0 * (SELECT max(s.s) FROM sim s
-         |       WHERE s.a = c.vec_id AND s.b IN ($sel)) AS score
-         |   FROM c WHERE c.vec_id NOT IN ($sel)
-         |   ORDER BY score DESC, c.vec_id LIMIT 1)""".stripMargin
-    }.mkString
-    val out = (1 to k).map(i =>
-      s" SELECT cast($i as bigint) AS mmr_rank, vec_id, rel AS relevance," +
-        s" score AS mmr_score FROM s$i").mkString("\n UNION ALL\n")
-    s"$base$steps\n$out\n ORDER BY mmr_rank"
-  }
 
   val tableDefectLabels = Seq("marine_growth", "corrosion", "paint_peel", "defect")
 
@@ -366,21 +325,6 @@ object SparkEntry {
         .select(col("framenumber").as("doc_id"), round(col("uciqe"), 6).as("uciqe"))
         .orderBy(desc("uciqe"), asc("doc_id")).limit(100)),
 
-    "ann_cosine" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(expr("transform(embedding, x -> cast(x as double))"))
-        .collect()(0).getSeq[Double](0).toArray
-      val v = expr("transform(embedding, x -> cast(x as double))")
-      emb.where(col("vec_id") =!= 0)
-        .select(col("vec_id"),
-          round(SimilaritySearch.cosine(v, lit(q)), 4).as("cosine"))
-        .orderBy("vec_id")
-    }),
-
-    // exact twin of the embedding near-dup operator: all-pairs cosine
-    // above a threshold chosen 550x the engines' arithmetic noise away
-    // from the nearest pair (0.45; closest pair at 0.4494)
     // corpus-distribution monitoring: EXACT type-7 quantiles of doc
     // length per language. Quantile points are quarter-multiples so the
     // interpolation weight (frac of p*(n-1)) is a power-of-2 fraction —
@@ -393,60 +337,19 @@ object SparkEntry {
           round(expr("percentile(n_chars, 0.5D)"), 6).as("p50"),
           round(expr("percentile(n_chars, 0.75D)"), 6).as("p75"))
         .orderBy("lang")),
+    // all-pairs cosine above a threshold chosen 550x the engines'
+    // arithmetic noise away from the nearest pair (0.45; closest pair
+    // at 0.4494)
     "q27_cosine_pairs" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
       val a = emb.select(col("vec_id").as("a"), col("v").as("va"))
       val b = emb.select(col("vec_id").as("b"), col("v").as("vb"))
       a.join(b, col("a") < col("b"))
-        .withColumn("cos", SimilaritySearch.cosine(col("va"), col("vb")))
+        .withColumn("cos", graft.core.VectorExprs.cosine(col("va"), col("vb")))
         .where(col("cos") >= 0.45)
         .select(col("a"), col("b"), round(col("cos"), 4).as("cosine"))
         .orderBy("a", "b")
-    }),
-
-    // --- exact ANN baselines vs list-arithmetic oracles ---
-
-    "ann_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(expr("transform(embedding, x -> cast(x as double))"))
-        .collect()(0).getSeq[Double](0).toArray
-      SimilaritySearch.bruteForceTopK(emb.where(col("vec_id") =!= 0), q, 20)
-    }),
-
-    // MMR diversified re-ranking over the exact top-24 candidate pool:
-    // the greedy λ·rel − (1−λ)·maxsim selection, oracle-replayed step
-    // for step (unrolled CTE chain, one CTE per greedy step)
-    "ann_mmr" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(expr("transform(embedding, x -> cast(x as double))"))
-        .collect()(0).getSeq[Double](0).toArray
-      SimilaritySearch.mmrTopK(emb.where(col("vec_id") =!= 0), q, k = 10, pool = 24)
-    }),
-
-    // binary sign quantization (1-bit rung under SQ/PQ): 32 portable
-    // md5-derived hyperplanes → int64 codes, candidates ranked by
-    // popcount(xor) — pure-integer output, the oracle regenerates the
-    // planes from its own md5 and replays code → xor → popcount
-    "ann_hamming" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(expr("transform(embedding, x -> cast(x as double))"))
-        .collect()(0).getSeq[Double](0).toArray
-      SimilaritySearch.hammingTopK(emb.where(col("vec_id") =!= 0), q, k = 20)
-    }),
-
-    // Matryoshka adaptive retrieval: coarse rank on the first 16 dims
-    // (raw-double ordering), pool-50 candidates, full-dim round-6
-    // cosine re-rank — the two-tier serving shape, oracle-replayed
-    "ann_matryoshka" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(expr("transform(embedding, x -> cast(x as double))"))
-        .collect()(0).getSeq[Double](0).toArray
-      SimilaritySearch.matryoshkaTopK(emb.where(col("vec_id") =!= 0), q, k = 20)
     }),
 
     "knn_graph" -> ((s, dir) =>
@@ -510,7 +413,7 @@ object SparkEntry {
 
     "q24_det_sample" -> ((s, dir) =>
       t(s, dir, "documents")
-        .where(graft.ops.hashBucket(col("text")) < 300000L)
+        .where(hashBucket(col("text")) < 300000L)
         .select("doc_id", "lang").orderBy("doc_id")),
 
     // A12-A14 mosaic sessionization against a window-SQL oracle: frames
@@ -591,103 +494,14 @@ object SparkEntry {
     })
   ) ++ rowsOnlyQueries
 
-  // --- operator queries added after the first wave; most have no
-  // SQL-expressible oracle (driver rows-only check), but any key that
-  // also appears in oracleSql (cc_components, fuzzy_link, ...) is
-  // hash-gated like the main set ---
+  // --- operator queries added after the first wave; the five with no
+  // SQL-expressible oracle (kg_similar_edges, kg_clusters, kg_mosaics,
+  // kg_clusters_grid, streaming_neardup) get the driver's rows-only
+  // check, every key that also appears in oracleSql is hash-gated like
+  // the main set ---
 
   def rowsOnlyQueries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
-    "ann_lsh_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(expr("transform(embedding, x -> cast(x as double))"))
-        .collect()(0).getSeq[Double](0).toArray
-      SimilaritySearch.lshTopK(emb.where(col("vec_id") =!= 0), q, 20)
-    }),
-    "ann_ivf_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(expr("transform(embedding, x -> cast(x as double))"))
-        .collect()(0).getSeq[Double](0).toArray
-      SimilaritySearch.ivfTopK(emb.where(col("vec_id") =!= 0), q, 20)
-    }),
-    // FULL-PROBE twins, hash-gated against the brute-force oracle: with
-    // nProbe = centroids (IVF) / one zero-bit table + corpus-wide pairing
-    // window (LSH) the approximate machinery — assignment, probing,
-    // positional blocking, top-k re-rank — runs end-to-end but must
-    // reproduce the exact answer. Proves the ANN plumbing, not just its
-    // recall floor (AnnSpec covers that).
-    "ann_ivf_full" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(expr("transform(embedding, x -> cast(x as double))"))
-        .collect()(0).getSeq[Double](0).toArray
-      SimilaritySearch.ivfTopK(emb.where(col("vec_id") =!= 0), q, 20,
-        centroids = 16, nProbe = 16)
-    }),
-    "ann_lsh_full" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(expr("transform(embedding, x -> cast(x as double))"))
-        .collect()(0).getSeq[Double](0).toArray
-      val base = emb.where(col("vec_id") =!= 0)
-      SimilaritySearch.lshTopKFull(base, q, 20, n = base.count().toInt + 1)
-        .select(col("vec_id"), round(col("distance"), 6).as("distance"))
-    }),
-    // PORTABLE twins with REAL probing (candidates a strict subset, unlike
-    // the full-probe gates): md5-ranked seed centroids / md5-derived
-    // hyperplanes, Euclidean argmin with index tie-break — every stage
-    // recomputable in plain SQL, so the DuckDB oracle replays centroid
-    // choice → inverted lists → probing → exact re-rank (IVF) and plane
-    // generation → sign buckets → probe → re-rank (LSH) bit-for-bit.
-    // ann_ivf_topk / ann_lsh_topk stay the engine-hash production variants.
-    "ann_ivf_portable" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(expr("transform(embedding, x -> cast(x as double))"))
-        .collect()(0).getSeq[Double](0).toArray
-      SimilaritySearch.ivfTopKPortable(emb.where(col("vec_id") =!= 0), q, 20)
-    }),
-    "ann_lsh_portable" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(expr("transform(embedding, x -> cast(x as double))"))
-        .collect()(0).getSeq[Double](0).toArray
-      SimilaritySearch.lshTopKPortable(emb.where(col("vec_id") =!= 0), q, 20)
-    }),
-    // product-quantization ANN: 8 blocks x 8 codes from the md5-ranked
-    // seed rows; encode argmin, driver ADC table, two-level
-    // left-to-right sums — the oracle replays codebook, per-block code
-    // assignment, ADC lookup and the block fold bit-for-bit
-    "ann_pq_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(expr("transform(embedding, x -> cast(x as double))"))
-        .collect()(0).getSeq[Double](0).toArray
-      SimilaritySearch.pqTopK(emb.where(col("vec_id") =!= 0), q, 20)
-    }),
-    // IVF-PQ composite (the faiss-default shape): probe 2 of 8
-    // portable inverted lists, PQ-score only the candidates with the
-    // same md5-ranked codebook — assignment, probing, encode and ADC
-    // all replayed by the oracle end to end
-    "ann_ivfpq_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(expr("transform(embedding, x -> cast(x as double))"))
-        .collect()(0).getSeq[Double](0).toArray
-      SimilaritySearch.ivfPqTopK(emb.where(col("vec_id") =!= 0), q, 20)
-    }),
-    // int8 scalar quantization MIPS: exact-int64 code dot, one
-    // fixed-order float product at the end — oracle replays the
-    // quantization and scoring bit-for-bit
-    "ann_sq_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(expr("transform(embedding, x -> cast(x as double))"))
-        .collect()(0).getSeq[Double](0).toArray
-      SimilaritySearch.sqTopK(emb.where(col("vec_id") =!= 0), q, 20)
-    }),
     "fuzzy_link" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       import s.implicits._
@@ -816,21 +630,6 @@ object SparkEntry {
         eps = 2.0, minPts = 5)
         .orderBy("id")
     }),
-    // fastText/GPT-3-style NB quality classifier: per-class word
-    // likelihoods fit on the md5-content train slice, label = curated
-    // source set, every doc scored by integer milli log-likelihood
-    // ratio + class prior — no transcendental reaches a value
-    "nb_quality" -> ((s, dir) =>
-      graft.ops.Selection.nbQualityScore(t(s, dir, "documents"),
-        positiveSources = Seq("src0", "src1", "src2", "src3", "src4"))
-        .orderBy("doc_id")),
-    // DSIR hashed-bigram importance weights toward a target source
-    // set — 64 buckets at fixture scale so bucket collisions (the
-    // hashing approximation being gated) actually occur
-    "dsir_weights" -> ((s, dir) =>
-      graft.ops.Selection.dsirWeights(t(s, dir, "documents"),
-        targetSources = Seq("src0", "src1", "src2"), buckets = 64L)
-        .orderBy("doc_id")),
     "pca_reduce" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       // deterministic PCA twin (sign-canonicalized, integer-sum fit) —
@@ -842,8 +641,7 @@ object SparkEntry {
         .orderBy("id", "dim")
     }),
 
-    // --- round 5: ledger time-travel, greedy coverage selection,
-    //     stratified sampling, semi-structured extraction ---
+    // --- round 5: ledger time-travel, semi-structured extraction ---
 
     // ledger time-travel: events become an add/del triple change ledger
     // (any engagement asserts (user, ENGAGED_WITH, item-k); an 'error'
@@ -883,27 +681,6 @@ object SparkEntry {
           lo + (hi - lo) / 4, lo + 3L * (hi - lo) / 4)
         .orderBy("subj", "pred", "obj", "change")
     }),
-    // greedy facility-location (max-coverage) selection: 8 exact greedy
-    // rounds, argmax marginal distinct-3-gram gain, doc_id tie-break;
-    // the oracle unrolls every round as chained CTEs
-    "coverage_select" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      graft.ops.Selection.greedyCoverageSelect(t(s, dir, "documents"))
-        .orderBy("round")
-    }),
-    // deterministic stratified sample: EXACT ceil(n*0.2) docs per
-    // source by (md5-bucket, doc_id) rank — the equal-allocation
-    // complement to in-expectation hash thresholding
-    "stratified_sample" -> ((s, dir) =>
-      graft.ops.Selection.stratifiedSample(t(s, dir, "documents"))
-        .orderBy("doc_id")),
-    // Johnson-Lindenstrauss random projection onto 8 portable
-    // md5-derived directions ('rp_' plane namespace) — map-only, no
-    // fit; the oracle regenerates the planes and replays every inner
-    // product (pca_reduce's exploded output shape)
-    "rp_reduce" -> ((s, dir) =>
-      SimilaritySearch.rpReduce(t(s, dir, "embeddings"))
-        .orderBy("vec_id", "dim")),
     // semi-structured extraction: the JSON props column parsed and
     // aggregated per event type (get_json_object ↔ json_extract_string)
     "q29_json_props" -> ((s, dir) =>
@@ -1005,11 +782,6 @@ object SparkEntry {
     "kg_topk_quality" ->
       s"""SELECT doc_id, round(((length(text) % 101) / 101.0) * 20.0 + ((($tokSql) % 97) / 97.0) * 30.0, 6) AS uciqe
          | FROM documents ORDER BY uciqe DESC, doc_id LIMIT 100""".stripMargin,
-    "ann_cosine" ->
-      """SELECT e.vec_id,
-        | round(list_cosine_similarity(cast(e.embedding as double[]),
-        |   (SELECT cast(embedding as double[]) FROM embeddings WHERE vec_id = 0)), 4) AS cosine
-        | FROM embeddings e WHERE e.vec_id <> 0 ORDER BY e.vec_id""".stripMargin,
     "q18_heading_bins" ->
       """SELECT cast(((round((value - 77.0 + 180) / 30) * 30) % 360 + 360) % 360 as int) AS heading_bin,
         | count(*) AS n FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
@@ -1041,159 +813,6 @@ object SparkEntry {
         |       count(*) OVER (PARTITION BY grp) AS n FROM r)
         | SELECT doc_id AS id, component FROM c WHERE n >= 2 ORDER BY id""".stripMargin,
     "lang_id" -> langIdOracleSql,
-    "ann_topk" ->
-      """SELECT e.vec_id,
-        | round(list_cosine_similarity(cast(e.embedding as double[]),
-        |   (SELECT cast(embedding as double[]) FROM embeddings WHERE vec_id = 0)), 6) AS cosine
-        | FROM embeddings e WHERE e.vec_id <> 0 ORDER BY cosine DESC, e.vec_id LIMIT 20""".stripMargin,
-    // full-probe IVF reduces to brute force — same oracle as ann_topk
-    "ann_ivf_full" ->
-      """SELECT e.vec_id,
-        | round(list_cosine_similarity(cast(e.embedding as double[]),
-        |   (SELECT cast(embedding as double[]) FROM embeddings WHERE vec_id = 0)), 6) AS cosine
-        | FROM embeddings e WHERE e.vec_id <> 0 ORDER BY cosine DESC, e.vec_id LIMIT 20""".stripMargin,
-    // full-probe LSH reduces to exact k-NN by L2; tie order inside the
-    // engine's top-k ranker is (distance, dst as string) — mirrored by
-    // the varchar cast (knn_graph precedent)
-    "ann_lsh_full" ->
-      """WITH e AS (SELECT vec_id, cast(embedding as double[]) AS v FROM embeddings),
-        | q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-        | SELECT e.vec_id, round(list_distance(e.v, q.qv), 6) AS distance
-        | FROM e, q WHERE e.vec_id <> 0
-        | ORDER BY list_distance(e.v, q.qv), cast(e.vec_id as varchar) LIMIT 20""".stripMargin,
-    // replays the PORTABLE IVF stage for stage: md5-ranked seed
-    // centroids (cid = rank), Euclidean argmin assignment (ties by cid —
-    // matching the engine's strict-< fold), nProbe=2 probe set, exact
-    // cosine re-rank. Real probing: the candidate set is a strict
-    // subset of the corpus, and the oracle must still match bit-for-bit.
-    "ann_ivf_portable" ->
-      """WITH e AS (SELECT vec_id, cast(embedding as double[]) AS v FROM embeddings),
-        | q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        | hb AS (SELECT vec_id, v,
-        |    cast(concat('0x', substr(md5(cast(vec_id as varchar)), 1, 8)) as bigint) % 1000000 AS h
-        |  FROM e WHERE vec_id <> 0),
-        | cents AS (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS cid, v AS cv
-        |   FROM hb ORDER BY h, vec_id LIMIT 8),
-        | assign AS (SELECT t.vec_id, t.v, c.cid,
-        |     row_number() OVER (PARTITION BY t.vec_id
-        |       ORDER BY list_distance(t.v, c.cv), c.cid) AS rk
-        |   FROM hb t CROSS JOIN cents c),
-        | probe AS (SELECT c.cid FROM cents c, q
-        |   ORDER BY list_distance(c.cv, q.qv), c.cid LIMIT 2)
-        | SELECT a.vec_id, round(list_cosine_similarity(a.v, q.qv), 6) AS cosine
-        | FROM assign a, q
-        | WHERE a.rk = 1 AND a.cid IN (SELECT cid FROM probe)
-        | ORDER BY cosine DESC, a.vec_id LIMIT 20""".stripMargin,
-    // replays the PORTABLE sign-projection LSH: hyperplane coordinates
-    // from the md5 of '<bit>_<dim>' (8-hex parse, % 2001 − 1000, /1000),
-    // bucket = the 4-bit sign pattern of the dot products, query probes
-    // only its own bucket, exact Euclidean re-rank
-    "ann_lsh_portable" ->
-      """WITH e AS (SELECT vec_id, cast(embedding as double[]) AS v FROM embeddings),
-        | planes AS (SELECT b, list_transform(generate_series(0, 63),
-        |     d -> ((cast(concat('0x', substr(md5(concat(b, '_', d)), 1, 8)) as bigint) % 2001) - 1000) / 1000.0) AS p
-        |   FROM generate_series(0, 3) t(b)),
-        | sigs AS (SELECT e.vec_id,
-        |     string_agg(CASE WHEN list_inner_product(e.v, pl.p) >= 0 THEN '1' ELSE '0' END, '' ORDER BY pl.b) AS bucket
-        |   FROM e CROSS JOIN planes pl GROUP BY e.vec_id),
-        | q AS (SELECT e.v AS qv, s.bucket AS qbucket
-        |   FROM e JOIN sigs s USING (vec_id) WHERE e.vec_id = 0)
-        | SELECT e.vec_id, round(list_distance(e.v, q.qv), 6) AS distance
-        | FROM e JOIN sigs s USING (vec_id), q
-        | WHERE e.vec_id <> 0 AND s.bucket = q.qbucket
-        | ORDER BY list_distance(e.v, q.qv), e.vec_id LIMIT 20""".stripMargin,
-    // replays the PQ stage for stage: md5-ranked codebook rows sliced
-    // per block, per-(vec, block) argmin by (list_distance, cid), ADC
-    // squared distances via a left-to-right dimension loop, then the
-    // per-vector block fold as an explicit list_reduce over the
-    // b-ordered list — summation order is part of the contract
-    "ann_pq_topk" ->
-      """WITH e AS (SELECT vec_id, cast(embedding as double[]) AS v FROM embeddings),
-        | q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        | hb AS (SELECT vec_id, v,
-        |    cast(concat('0x', substr(md5(cast(vec_id as varchar)), 1, 8)) as bigint) % 1000000 AS h
-        |  FROM e WHERE vec_id <> 0),
-        | cents AS (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS cid, v AS cv
-        |   FROM hb ORDER BY h, vec_id LIMIT 8),
-        | bl AS (SELECT unnest(generate_series(0, 7)) AS b),
-        | enc AS (SELECT t.vec_id, bl.b, c.cid,
-        |     row_number() OVER (PARTITION BY t.vec_id, bl.b
-        |       ORDER BY list_distance(list_slice(t.v, bl.b * 8 + 1, bl.b * 8 + 8),
-        |                              list_slice(c.cv, bl.b * 8 + 1, bl.b * 8 + 8)),
-        |         c.cid) AS rk
-        |   FROM hb t CROSS JOIN bl CROSS JOIN cents c),
-        | adc AS (SELECT bl.b, c.cid,
-        |     list_sum(list_transform(generate_series(1, 8),
-        |       d -> (q.qv[bl.b * 8 + d] - c.cv[bl.b * 8 + d])
-        |          * (q.qv[bl.b * 8 + d] - c.cv[bl.b * 8 + d]))) AS sq
-        |   FROM bl CROSS JOIN cents c, q),
-        | per AS (SELECT n.vec_id,
-        |     list_reduce(list(a.sq ORDER BY n.b), (x, y) -> x + y) AS s
-        |   FROM enc n JOIN adc a ON n.b = a.b AND n.cid = a.cid
-        |   WHERE n.rk = 1 GROUP BY n.vec_id)
-        | SELECT vec_id, round(sqrt(s), 6) AS distance_approx
-        | FROM per ORDER BY sqrt(s), vec_id LIMIT 20""".stripMargin,
-    // composes the ann_ivf_portable and ann_pq_topk replays: the SAME
-    // md5-ranked rows serve as IVF centroids and PQ codebook; the
-    // candidate set is the nProbe=2 probed lists, then per-block
-    // encode + ADC + the b-ordered left fold, exactly as ann_pq_topk
-    "ann_ivfpq_topk" ->
-      """WITH e AS (SELECT vec_id, cast(embedding as double[]) AS v FROM embeddings),
-        | q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        | hb AS (SELECT vec_id, v,
-        |    cast(concat('0x', substr(md5(cast(vec_id as varchar)), 1, 8)) as bigint) % 1000000 AS h
-        |  FROM e WHERE vec_id <> 0),
-        | cents AS (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS cid, v AS cv
-        |   FROM hb ORDER BY h, vec_id LIMIT 8),
-        | assign AS (SELECT t.vec_id, t.v, c.cid,
-        |     row_number() OVER (PARTITION BY t.vec_id
-        |       ORDER BY list_distance(t.v, c.cv), c.cid) AS rk
-        |   FROM hb t CROSS JOIN cents c),
-        | probe AS (SELECT c.cid FROM cents c, q
-        |   ORDER BY list_distance(c.cv, q.qv), c.cid LIMIT 2),
-        | cand AS (SELECT a.vec_id, a.v FROM assign a
-        |   WHERE a.rk = 1 AND a.cid IN (SELECT cid FROM probe)),
-        | bl AS (SELECT unnest(generate_series(0, 7)) AS b),
-        | enc AS (SELECT t.vec_id, bl.b, c.cid,
-        |     row_number() OVER (PARTITION BY t.vec_id, bl.b
-        |       ORDER BY list_distance(list_slice(t.v, bl.b * 8 + 1, bl.b * 8 + 8),
-        |                              list_slice(c.cv, bl.b * 8 + 1, bl.b * 8 + 8)),
-        |         c.cid) AS rk
-        |   FROM cand t CROSS JOIN bl CROSS JOIN cents c),
-        | adc AS (SELECT bl.b, c.cid,
-        |     list_sum(list_transform(generate_series(1, 8),
-        |       d -> (q.qv[bl.b * 8 + d] - c.cv[bl.b * 8 + d])
-        |          * (q.qv[bl.b * 8 + d] - c.cv[bl.b * 8 + d]))) AS sq
-        |   FROM bl CROSS JOIN cents c, q),
-        | per AS (SELECT n.vec_id,
-        |     list_reduce(list(a.sq ORDER BY n.b), (x, y) -> x + y) AS s
-        |   FROM enc n JOIN adc a ON n.b = a.b AND n.cid = a.cid
-        |   WHERE n.rk = 1 GROUP BY n.vec_id)
-        | SELECT vec_id, round(sqrt(s), 6) AS distance_approx
-        | FROM per ORDER BY sqrt(s), vec_id LIMIT 20""".stripMargin,
-    // replays the int8 scalar quantization: per-vector max-abs scale,
-    // floor(x*127/scale + 0.5) codes, exact integer dot, then the one
-    // float product in the engine's exact order ((dot*qs)*vs)/16129
-    "ann_sq_topk" ->
-      """WITH e AS (SELECT vec_id, cast(embedding as double[]) AS v FROM embeddings),
-        | q AS (SELECT v AS qv,
-        |     CASE WHEN list_max(list_transform(v, x -> abs(x))) > 0
-        |          THEN list_max(list_transform(v, x -> abs(x))) ELSE 1.0 END AS qs
-        |   FROM e WHERE vec_id = 0),
-        | qc AS (SELECT list_transform(qv, x -> cast(floor(x * 127.0 / qs + 0.5) as bigint)) AS qc, qs FROM q),
-        | sc AS (SELECT t.vec_id,
-        |     CASE WHEN list_max(list_transform(t.v, x -> abs(x))) > 0
-        |          THEN list_max(list_transform(t.v, x -> abs(x))) ELSE 1.0 END AS vs, t.v
-        |   FROM e t WHERE t.vec_id <> 0),
-        | d AS (SELECT s.vec_id,
-        |     list_sum(list_transform(generate_series(1, len(s.v)), i ->
-        |       c.qc[i] * cast(floor(s.v[i] * 127.0 / s.vs + 0.5) as bigint))) AS idot,
-        |     s.vs, c.qs
-        |   FROM sc s, qc c)
-        | SELECT vec_id,
-        |   round(cast(idot as double) * qs * vs / 16129.0, 6) AS dot_approx
-        | FROM d ORDER BY cast(idot as double) * qs * vs / 16129.0 DESC, vec_id
-        | LIMIT 20""".stripMargin,
     // tie order inside the engine's top-k aggregator is (distance, dst
     // as string) — mirrored by the varchar cast in the window order
     "knn_graph" ->
@@ -1272,92 +891,6 @@ object SparkEntry {
          |  FROM band b JOIN anchors a USING (band, bkey)
          |  WHERE b.doc_id <> a.anchor)
          | SELECT a, b FROM pairs ORDER BY a, b""".stripMargin,
-    // replays the NB quality classifier: md5-content train slice,
-    // per-class add-one word likelihoods, interpolated milli-log2
-    // ratio per token + prior — identical L(num, den) arithmetic
-    "nb_quality" ->
-      s"""WITH base AS (SELECT doc_id,
-        |   CASE WHEN source IN ('src0','src1','src2','src3','src4') THEN 1 ELSE 0 END AS label,
-        |   CASE WHEN cast(concat('0x', substr(md5(text), 1, 8)) as bigint) % 1000 < 500
-        |        THEN 1 ELSE 0 END AS is_train,
-        |   string_split(text, ' ') AS words FROM documents),
-        | occ AS (SELECT doc_id, label, is_train, unnest(words) AS w FROM base),
-        | train AS (SELECT * FROM occ WHERE is_train = 1),
-        | wc AS (SELECT w, cast(sum(label) as bigint) AS cpos,
-        |     cast(sum(1 - label) as bigint) AS cneg FROM train GROUP BY w),
-        | tot AS (SELECT cast(sum(label) as bigint) AS tpos,
-        |     cast(sum(1 - label) as bigint) AS tneg,
-        |     cast(count(DISTINCT w) as bigint) AS v FROM train),
-        | dc AS (SELECT cast(sum(label) as bigint) AS dpos,
-        |     cast(count(*) - sum(label) as bigint) AS dneg
-        |   FROM base WHERE is_train = 1),
-        | pr AS (SELECT CASE WHEN dpos >= dneg
-        |     THEN ${lrmSql("dpos + 1", "dneg + 1")}
-        |     ELSE -${lrmSql("dneg + 1", "dpos + 1")} END AS prior FROM dc),
-        | j AS (SELECT o.doc_id, coalesce(c.cpos, 0) AS cpos,
-        |     coalesce(c.cneg, 0) AS cneg, t.tpos, t.tneg, t.v
-        |   FROM occ o LEFT JOIN wc c USING (w), tot t),
-        | sc AS (SELECT doc_id,
-        |     ${lrmSql("tneg + v", "cneg + 1")} - ${lrmSql("tpos + v", "cpos + 1")}
-        |     AS s_milli FROM j)
-        | SELECT doc_id, cast(count(*) as bigint) AS n_tokens,
-        |   cast(sum(s_milli) + (SELECT prior FROM pr) as bigint) AS nb_milli,
-        |   CASE WHEN sum(s_milli) + (SELECT prior FROM pr) >= 0 THEN 1 ELSE 0 END AS predicted
-        | FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // replays DSIR: hashed md5 bigram buckets, target-vs-raw add-one
-    // milli log-likelihood ratio per gram occurrence
-    "dsir_weights" ->
-      s"""WITH d AS (SELECT doc_id,
-        |   CASE WHEN source IN ('src0','src1','src2') THEN 1 ELSE 0 END AS is_target,
-        |   string_split(text, ' ') AS ws FROM documents),
-        | g0 AS (SELECT doc_id, is_target, ws,
-        |     unnest(generate_series(1, len(ws) - 1)) AS i
-        |   FROM d WHERE len(ws) >= 2),
-        | g AS (SELECT doc_id, is_target,
-        |   cast(concat('0x', substr(md5(concat(ws[i], ' ', ws[i+1])), 1, 8)) as bigint) % 64 AS b
-        |   FROM g0),
-        | prof AS (SELECT b, cast(sum(is_target) as bigint) AS ct,
-        |     cast(count(*) as bigint) AS cr FROM g GROUP BY b),
-        | tot AS (SELECT cast(sum(is_target) as bigint) AS tt,
-        |     cast(count(*) as bigint) AS tr FROM g),
-        | sc AS (SELECT doc_id,
-        |     ${lrmSql("tr + 64", "cr + 1")} - ${lrmSql("tt + 64", "ct + 1")}
-        |     AS s_milli
-        |   FROM g JOIN prof USING (b), tot)
-        | SELECT doc_id, cast(count(*) as bigint) AS n_grams,
-        |   cast(sum(s_milli) as bigint) AS dsir_milli
-        | FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "ann_mmr" -> annMmrOracleSql(10, 24),
-    // replays the two-tier matryoshka serve: prefix-16 cosine pool on
-    // raw doubles (identical fold), full-dim round-6 re-rank
-    "ann_matryoshka" ->
-      """WITH e AS (SELECT vec_id, cast(embedding as double[]) AS v FROM embeddings
-        |   WHERE vec_id <> 0),
-        | qv AS (SELECT cast(embedding as double[]) AS q FROM embeddings WHERE vec_id = 0),
-        | c AS (SELECT vec_id, v,
-        |     list_inner_product(v[1:16], q[1:16]) /
-        |       (sqrt(list_inner_product(v[1:16], v[1:16]))
-        |        * sqrt(list_inner_product(q[1:16], q[1:16]))) AS pcos
-        |   FROM e CROSS JOIN qv ORDER BY pcos DESC, vec_id LIMIT 50)
-        | SELECT c.vec_id, round(list_inner_product(c.v, qv.q) /
-        |     (sqrt(list_inner_product(c.v, c.v))
-        |      * sqrt(list_inner_product(qv.q, qv.q))), 6) AS cosine
-        | FROM c CROSS JOIN qv ORDER BY cosine DESC, c.vec_id LIMIT 20""".stripMargin,
-    // regenerates the 32 bq_ hyperplanes from md5, recodes every vector
-    // to its 32 sign bits, ranks by popcount(xor) — all-integer replay
-    "ann_hamming" ->
-      """WITH e AS (SELECT vec_id, cast(embedding as double[]) AS v FROM embeddings),
-        | planes AS (SELECT b, list_transform(generate_series(0, 63),
-        |     d -> ((cast(concat('0x', substr(md5(concat('bq_', b, '_', d)), 1, 8)) as bigint) % 2001) - 1000) / 1000.0) AS p
-        |   FROM generate_series(0, 31) t(b)),
-        | codes AS (SELECT e.vec_id,
-        |     cast(sum(CASE WHEN list_inner_product(e.v, pl.p) >= 0
-        |       THEN cast(1 as bigint) << pl.b ELSE 0 END) as bigint) AS code
-        |   FROM e CROSS JOIN planes pl GROUP BY e.vec_id),
-        | q AS (SELECT code AS qc FROM codes WHERE vec_id = 0)
-        | SELECT c.vec_id, cast(bit_count(xor(c.code, q.qc)) as int) AS hamming
-        | FROM codes c CROSS JOIN q WHERE c.vec_id <> 0
-        | ORDER BY hamming, c.vec_id LIMIT 20""".stripMargin,
     // element-order list_sum mirrors sq_dist's index-order accumulation;
     // 1.25*1.25 is exact in binary on both engines
     "q26_dbscan" ->
@@ -1498,55 +1031,6 @@ object SparkEntry {
         | WHERE NOT EXISTS (SELECT 1 FROM s2
         |   WHERE s2.subj = s1.subj AND s2.pred = s1.pred AND s2.obj = s1.obj)
         | ORDER BY subj, pred, obj, change""".stripMargin,
-    // every greedy round unrolled: marginal gain = distinct 3-grams not
-    // yet covered by earlier picks, argmax by (gain DESC, doc_id)
-    "coverage_select" -> {
-      val head =
-        """WITH g AS (SELECT doc_id, unnest(list_distinct(list_transform(
-          |     range(0, greatest(len(string_split(text, ' ')) - 3, 0) + 1),
-          |     i -> array_to_string(string_split(text, ' ')[i + 1: i + 3], ' ')))) AS gram
-          |   FROM documents),
-          | m1 AS (SELECT doc_id, count(*) AS gain FROM g GROUP BY doc_id),
-          | p1 AS (SELECT 1 AS round, doc_id, gain FROM m1 ORDER BY gain DESC, doc_id LIMIT 1),
-          | s1 AS MATERIALIZED (SELECT DISTINCT gram FROM g JOIN p1 USING (doc_id)),
-          | d1 AS MATERIALIZED (SELECT doc_id FROM p1)""".stripMargin
-      val rounds = (2 to 8).map { i =>
-        s""",
-          | m$i AS (SELECT g.doc_id, count(*) AS gain FROM g
-          |   WHERE g.doc_id NOT IN (SELECT doc_id FROM d${i - 1})
-          |     AND g.gram NOT IN (SELECT gram FROM s${i - 1})
-          |   GROUP BY g.doc_id),
-          | p$i AS (SELECT $i AS round, doc_id, gain FROM m$i ORDER BY gain DESC, doc_id LIMIT 1),
-          | s$i AS MATERIALIZED (SELECT gram FROM s${i - 1} UNION
-          |   SELECT gram FROM g JOIN p$i USING (doc_id)),
-          | d$i AS MATERIALIZED (SELECT doc_id FROM d${i - 1} UNION SELECT doc_id FROM p$i)""".stripMargin
-      }.mkString
-      val union = (1 to 8).map(i => s"SELECT * FROM p$i").mkString(" UNION ALL ")
-      s"""$head$rounds
-        | SELECT cast(round as bigint) AS round, doc_id,
-        |   cast(gain as bigint) AS marginal_gain
-        | FROM ($union) ORDER BY round""".stripMargin
-    },
-    "stratified_sample" ->
-      """WITH d AS (SELECT doc_id, source,
-        |     cast(concat('0x', substr(md5(cast(doc_id as varchar)), 1, 8)) as bigint) % 1000000 AS h
-        |   FROM documents),
-        | r AS (SELECT doc_id, source,
-        |     row_number() OVER (PARTITION BY source ORDER BY h, doc_id) AS rk,
-        |     count(*) OVER (PARTITION BY source) AS n
-        |   FROM d)
-        | SELECT doc_id, source FROM r
-        | WHERE rk <= (n * 200 + 999) // 1000 ORDER BY doc_id""".stripMargin,
-    // regenerates the 'rp_' md5 planes (ann_lsh_portable's coordinate
-    // recipe) and replays every inner product
-    "rp_reduce" ->
-      """WITH e AS (SELECT vec_id, cast(embedding as double[]) AS v FROM embeddings),
-        | planes AS (SELECT b, list_transform(generate_series(0, 63),
-        |     d -> ((cast(concat('0x', substr(md5(concat('rp_', b, '_', d)), 1, 8)) as bigint) % 2001) - 1000) / 1000.0) AS p
-        |   FROM generate_series(0, 7) t(b))
-        | SELECT e.vec_id, cast(pl.b as bigint) AS dim,
-        |   round(list_inner_product(e.v, pl.p), 6) AS value
-        | FROM e CROSS JOIN planes pl ORDER BY vec_id, dim""".stripMargin,
     "q29_json_props" ->
       """SELECT event_type, count(*) AS n,
         | cast(sum(cast(json_extract_string(props, '$.k') as bigint)) as bigint) AS sum_k,

@@ -239,8 +239,7 @@ object KnnJoin {
         when(dot >= 0, lit(1L << bit)).otherwise(lit(0L))
       }
       // bits = 0 → one bucket per group: the FULL-PROBE degenerate case
-      // (with window ≥ group size this reduces to exact k-NN — the
-      // reduction the driver's ann_lsh_full oracle gate exploits)
+      // (with window ≥ group size this reduces to exact k-NN)
       if (bits == 0) lit(0L) else bitCols.reduce(_ + _)
     }
     // ordering projection: one extra plane per table (index `bits`, never
@@ -283,11 +282,11 @@ object KnnJoin {
     (partials, idType)
   }
 
-  /** One md5-derived unit-cube coordinate for key `"<bit>_<dim>"` (or
-    * `"<table>_<bit>_<dim>"`): 8-hex parse, % 2001 − 1000, /1000 — the
-    * exact integer arithmetic a SQL engine reproduces from its own md5.
+  /** One md5-derived unit-cube coordinate for key `"<table>_<bit>_<dim>"`:
+    * 8-hex parse, % 2001 − 1000, /1000 — the exact integer arithmetic a
+    * SQL engine reproduces from its own md5.
     */
-  private[graft] def portablePlaneCoef(key: String): Double = {
+  private def portablePlaneCoef(key: String): Double = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val hex = md.digest(key.getBytes("UTF-8")).map(x => f"$x%02x").mkString.take(8)
     ((java.lang.Long.parseLong(hex, 16) % 2001L) - 1000L) / 1000.0

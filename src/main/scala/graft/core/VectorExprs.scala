@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
@@ -177,6 +178,12 @@ object VectorExprs {
 
   def vec_dot(a: Column, b: Column): Column =
     Bridge.column(Dot(Bridge.expression(a), Bridge.expression(b)))
+
+  /** Cosine similarity: a·b / (√(a·a) · √(b·b)), each dot a left-to-right
+    * fold — the value DuckDB's `list_cosine_similarity` computes.
+    */
+  def cosine(a: Column, b: Column): Column =
+    vec_dot(a, b) / (sqrt(vec_dot(a, a)) * sqrt(vec_dot(b, b)))
 
   def vec_zscore(v: Column, mu: Column, sigma: Column): Column =
     Bridge.column(ZScore(Bridge.expression(v), Bridge.expression(mu),

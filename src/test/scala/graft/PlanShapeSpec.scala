@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * broadcast joins for dimensions and semi/anti joins, global top-k as
   * TakeOrderedAndProject, and — across the ENTIRE query surface — no
   * unintended cartesian / broadcast-nested-loop join and no
-  * single-partition exchange outside rrf_fusion's bounded rank windows.
+  * single-partition exchange.
   *
   * Plans are built (analyzed + optimized + planned), not executed; the
   * assertions read the physical plan string. AQE wrapping is fine: the
@@ -27,11 +27,11 @@ class PlanShapeSpec extends AnyFunSuite {
     planCache.getOrElseUpdate(name,
       SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString)
 
-  /** Exact verifiers over a deterministic bounded candidate set
-    * (doc_id < 200 all-pairs / a fixed probe set): the nested-loop side
+  /** Exact verifiers over a deterministic bounded candidate set (the
+    * all-pairs cosine of the embeddings fixture): the nested-loop side
     * is a small broadcast by design, never the corpus.
     */
-  private val boundedAllPairs = Set("ngram_jaccard", "q27_cosine_pairs")
+  private val boundedAllPairs = Set("q27_cosine_pairs")
 
   /** Streaming entries return a memory-sink scan (the interesting plan
     * is the stream side, proven in StreamingSpec) and invoking them
@@ -41,6 +41,8 @@ class PlanShapeSpec extends AnyFunSuite {
     SparkEntry.queries.keys.toSeq.sorted.filterNot(_.startsWith("streaming_"))
 
   test("no query plan contains an unintended cartesian / nested-loop join") {
+    assert(boundedAllPairs.subsetOf(SparkEntry.queries.keySet),
+      s"exemption names no query: ${(boundedAllPairs -- SparkEntry.queries.keySet).mkString(", ")}")
     val offenders = batchNames.filterNot(boundedAllPairs).filter { n =>
       val p = plan(n)
       p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin")
@@ -50,11 +52,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("no single-partition exchange outside the bounded prefix-sum") {
-    // rrf_fusion's two rank windows (running row counts) run over the
-    // ≤pool-row candidate lists AFTER each leg's bounded top-k —
-    // serving-side tables (the MMR stage-2 class), never the corpus.
-    val offenders = batchNames.filterNot(_ == "rrf_fusion")
-      .filter(n => plan(n).contains("SinglePartition"))
+    val offenders = batchNames.filter(n => plan(n).contains("SinglePartition"))
     assert(offenders.isEmpty,
       s"unexpected single-partition exchange in: ${offenders.mkString(", ")}")
   }
@@ -86,7 +84,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("global top-k plans as TakeOrderedAndProject, not sort+limit") {
-    for (n <- Seq("q03_topk_orders", "ann_topk", "kg_topk_quality"))
+    for (n <- Seq("q03_topk_orders", "kg_topk_quality"))
       assert(plan(n).contains("TakeOrderedAndProject"),
         s"$n should plan the global top-k as TakeOrderedAndProject")
   }
