@@ -66,12 +66,6 @@ object Bench {
     (sec, n)
   }
 
-  /** Launch one pipeline leg in its own JVM, optionally pinned to the
-    * TOP `cores` CPUs via taskset (cpu0 services kernel IRQs — see the
-    * scaling-section comment). Shared by the strong-scaling (vary
-    * cores, fixed rows) and weak-scaling (fixed cores, vary rows)
-    * protocols. Returns (wall seconds, triples).
-    */
   /** Cluster-faithful per-leg heap: on a real cluster, N → 4N
     * EXECUTORS brings 4× aggregate memory (each executor owns its
     * fixed heap), so the single-JVM core-pinned proxy should hold
@@ -89,8 +83,11 @@ object Bench {
     else s"${perCore * cores}g"
   }
 
-  /** One pinned leg. Returns (wall sec, triples, Σ task-sec, Σ GC-sec) —
-    * the task/GC figures feed the scaling JSON's inflation fields.
+  /** Launch one pipeline leg in its own JVM, optionally pinned to the
+    * TOP `cores` CPUs via taskset (cpu0 services kernel IRQs — see the
+    * scaling-section comment). Returns (wall sec, triples, Σ task-sec,
+    * Σ GC-sec) — the task/GC figures feed the scaling JSON's inflation
+    * fields.
     */
   private def spawnLeg(cpus: Int, pin: Boolean, cores: Int, rows: Long,
                        repos: Int, outDir: String): (Double, Long, Double, Double) = {
@@ -238,42 +235,6 @@ object Bench {
         f""""aqe":${sys.env.getOrElse("SPARK_GRAFT_SCALE_AQE", "0") == "1"},"pinned":$pin}"""
     }
 
-    // --- 1b. weak scaling (data-size axis): same pinned core count,
-    // 1× vs 2× rows, cold JVMs. The north rule's scaling criterion has
-    // two axes a 100 TB deployment cares about — more executors on the
-    // same data (strong, section 1) and the same executors on more data
-    // (weak). Ideal weak efficiency is flat throughput: tps(2×)/tps(1×)
-    // = 1.0. A superlinear operator (anything hiding an all-pairs or a
-    // global sort) shows up here as tps collapsing with corpus size even
-    // when the strong ratio looks fine, so the two sections are
-    // complementary evidence, not redundancy. Back-to-back legs in one
-    // rep share a host-noise window; SPARK_GRAFT_WEAK_REPS adds pairs
-    // (best reported, band recorded, mirroring the strong protocol).
-    var weakJson = ""
-    val doWeak = sys.env.getOrElse("SPARK_GRAFT_WEAK", "1") == "1"
-    if (doWeak) {
-      val wCores = sys.env.getOrElse("SPARK_GRAFT_WEAK_CORES", "4").toInt
-      val wRows = sys.env.getOrElse("SPARK_GRAFT_WEAK_ROWS", benchRows.toString).toLong
-      val wReps = sys.env.getOrElse("SPARK_GRAFT_WEAK_REPS", "1").toInt
-      val pin = sys.env.getOrElse("SPARK_GRAFT_SCALE_PIN", "1") == "1"
-      def leg(rows: Long): (Double, Long) = {
-        val (sec, n, _, _) = spawnLeg(cpus, pin, wCores, rows,
-          math.max((rows / 1500).toInt, 1), s"/tmp/graft_weak_$rows")
-        (sec, n)
-      }
-      val wPairs = (1 to wReps).map { _ => (leg(wRows), leg(wRows * 2)) }
-      def weakEff(p: ((Double, Long), (Double, Long))): Double = p match {
-        case ((sa, na), (sb, nb)) => (nb / sb) / (na / sa)
-      }
-      val ((secA, nA), (secB, nB)) = wPairs.maxBy(weakEff)
-      val band = wPairs.map(weakEff).sorted.map(e => f"$e%.3f")
-        .mkString("[", ",", "]")
-      val tpsA = nA / secA; val tpsB = nB / secB
-      weakJson = f""","datascale":{"cores":$wCores,"rows_a":$wRows,"sec_a":$secA%.2f,""" +
-        f""""tps_a":$tpsA%.0f,"rows_b":${wRows * 2},"sec_b":$secB%.2f,"tps_b":$tpsB%.0f,""" +
-        f""""weak_efficiency":${tpsB / tpsA}%.3f,"weak_band":$band,"pinned":$pin}"""
-    }
-
     // --- 2. headline: end-to-end pipeline triples/sec at full cores,
     // in a fresh session BEFORE the query sweep — a JVM that has chewed
     // through 50 operator queries measures its own heap history, not
@@ -324,23 +285,15 @@ object Bench {
       .mkString("{", ",", "}")
     val errs = results.collect { case (k, Left(e)) => s""""$k":"$e"""" }
     val errJson = if (errs.isEmpty) "" else errs.mkString(""","query_errors":{""", ",", "}")
-    // operator-only windows for harness-heavy entries (streaming queries
-    // stage a temp-parquet source + boot the micro-batch engine; the
-    // `queries` figure bills that setup to the operator — this doesn't)
-    val opJson =
-      if (SparkEntry.operatorSec.isEmpty) ""
-      else SparkEntry.operatorSec.toSeq.sortBy(_._1)
-        .map { case (k, v) => f""""$k":$v%.3f""" }
-        .mkString(""","operator_sec":{""", ",", "}")
     val total = results.collect { case (_, Right(v)) => v }.sum + pipeSec
     val json =
-      f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":$qs$errJson$opJson,"sf":"$sfDir",""" +
-        f""""pipeline_rows":$benchRows,"triples":$nTriples,"triples_per_sec":$tps%.0f$headlineJson$scalingJson$weakJson}"""
+      f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":$qs$errJson,"sf":"$sfDir",""" +
+        f""""pipeline_rows":$benchRows,"triples":$nTriples,"triples_per_sec":$tps%.0f$headlineJson$scalingJson}"""
     // The committed BENCH.json is the canonical full-bench record: only a
     // FULL run (scaling + pipeline + complete query sweep, no errors) may
     // overwrite it; partial dev runs land in /tmp so an ONLY=q1 iteration
     // can't silently replace the record with a near-empty line.
-    val fullRun = doScaling && doWeak && doPipeline && runQueries &&
+    val fullRun = doScaling && doPipeline && runQueries &&
       only.isEmpty && errs.isEmpty
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (fullRun) new java.io.File("BENCH.json").getAbsolutePath

@@ -3,7 +3,6 @@ package graft
 import graft.core.{CorpusRow, Ontology}
 import graft.extract.MentionExtractor
 import graft.link.{EntityLinker, ShipCatalog}
-import graft.ops.TextAnalysis
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -19,25 +18,6 @@ object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
-
-  /** Operator-only wall seconds for queries whose `queries` entry carries
-    * harness setup the operator shouldn't be billed for — the streaming
-    * entries stage a temp-parquet source and boot the micro-batch engine
-    * before the keyed-state operator runs. Populated (overwritten) each
-    * time such a query executes; Bench emits it as `operator_sec` next to
-    * the harness-inclusive sweep timings so operator regressions aren't
-    * masked by (or blamed on) harness noise.
-    */
-  val operatorSec = scala.collection.concurrent.TrieMap.empty[String, Double]
-
-  /** Times the streaming window only: start → processAllAvailable → stop. */
-  private def timedStream(name: String)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val t0 = System.nanoTime()
-    val q = start
-    q.processAllAvailable(); q.stop()
-    operatorSec(name) = (System.nanoTime() - t0) / 1e9
-  }
 
   // ---- documents-as-corpus: the KG pipeline over the driver's table ----
 
@@ -76,20 +56,20 @@ object SparkEntry {
     EntityLinker.depicts(docFrames(spark, "/root/testdata/sf0.001"), docLabels)
   }
 
-  /** embeddings → the (id string, group long, vec array<double>) frame
-    * the kNN and PCA operators take.
+  /** embeddings → the (id long, group long, vec array<double>) frame
+    * the kNN, DBSCAN and PCA operators take.
     */
   private def knnFeatures(embeddings: DataFrame): DataFrame =
-    embeddings.select(col("vec_id").cast("string").as("id"),
+    embeddings.select(col("vec_id").cast("long").as("id"),
       col("label").cast("long").as("group"),
       expr("transform(embedding, x -> cast(x as double))").as("vec"))
 
-  /** Deterministic sampling bucket in [0, m): first 8 hex digits of the
+  /** Deterministic sampling bucket in [0, 10^6): first 8 hex digits of the
     * md5 of the key. Engine-portable (md5 is md5 everywhere), so sampled
     * subsets are reproducible across Spark, DuckDB, and reruns.
     */
-  private def hashBucket(key: Column, m: Long = 1000000L): Column =
-    pmod(conv(substring(md5(key), 1, 8), 16, 10).cast("long"), lit(m))
+  private def hashBucket(key: Column): Column =
+    pmod(conv(substring(md5(key), 1, 8), 16, 10).cast("long"), lit(1000000L))
 
   // ---- SQL fragments shared by the generated oracles ----
 
@@ -354,23 +334,21 @@ object SparkEntry {
 
     "knn_graph" -> ((s, dir) =>
       graft.canon.KnnJoin.exactTopK(knnFeatures(t(s, dir, "embeddings")), 5)
-        .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
-          round(col("distance"), 6).as("distance"))
+        .select(col("src"), col("dst"), round(col("distance"), 6).as("distance"))
         .orderBy("src", "distance", "dst")),
 
     // the POSITIONAL-BLOCK linearized-LSH kNN — the engine's web-scale
     // candidate plan (tag → bucket → order-projection → ±window pairing →
     // bounded top-k aggregator) — with PORTABLE md5-derived hyperplanes,
     // so the DuckDB oracle replays every stage (signature bits, bucket
-    // order, window pairing, (distance, dst-string) tie rule) and the
+    // order, window pairing, (distance, dst) tie rule) and the
     // whole machinery is hash-proven with REAL bucketing (16 sign
     // buckets per group, candidates a strict subset). knn_graph stays
     // the exact-path gate; CanonSpec pins the production variant's recall.
     "knn_portable" -> ((s, dir) => {
       graft.canon.KnnJoin.approxTopK(knnFeatures(t(s, dir, "embeddings")), 5,
           tables = 1, bits = 4, window = 8, portable = true)
-        .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
-          round(col("distance"), 6).as("distance"))
+        .select(col("src"), col("dst"), round(col("distance"), 6).as("distance"))
         .orderBy("src", "dst")
     }),
 
@@ -382,15 +360,6 @@ object SparkEntry {
           .as("heading_bin"))
         .agg(count(lit(1)).as("n"))
         .orderBy("heading_bin")),
-
-    // --- BPE-ish token estimate (codegen'd HOF aggregate) ---
-
-    "q19_bpe_tokens" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .groupBy("lang")
-        .agg(sum(TextAnalysis.bpeTokenEstimate).as("bpe_tokens"),
-          count(lit(1)).as("n_docs"))
-        .orderBy("lang")),
 
     // --- exact n-gram Jaccard over a SQL-expressible candidate set ---
 
@@ -450,11 +419,8 @@ object SparkEntry {
     // dense per-group numbering, noise = -1) on SQL-visible vectors
     "q26_dbscan" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      val pts = t(s, dir, "embeddings").select(
-        col("vec_id").cast("long").as("id"),
-        col("label").cast("long").as("group"),
-        expr("transform(embedding, x -> cast(x as double))").as("vec"))
-      graft.canon.Dbscan.cluster(pts, eps = 1.25, minPts = 4).orderBy("id")
+      graft.canon.Dbscan.cluster(knnFeatures(t(s, dir, "embeddings")),
+        eps = 1.25, minPts = 4).orderBy("id")
     }),
 
     // --- connected components against a window-SQL oracle ---
@@ -473,13 +439,6 @@ object SparkEntry {
         .select(col("id"), col("component")).orderBy("id")
     }),
 
-    // --- language-ID heuristic vs a CASE-expression oracle ---
-
-    "lang_id" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      TextAnalysis.languageId(t(s, dir, "documents")).orderBy("doc_id")
-    }),
-
     // --- A4 interpolate/resample vs a DuckDB window-SQL oracle ---
 
     "telemetry_interp" -> ((s, dir) => {
@@ -491,17 +450,13 @@ object SparkEntry {
         col("event_type").as("channel"), col("value"))
       graft.extract.TelemetryInterpolation.interpolate(samples, 64)
         .orderBy("inspection_id", "channel", "frame_index")
-    })
-  ) ++ rowsOnlyQueries
+    }),
 
-  // --- operator queries added after the first wave; the five with no
-  // SQL-expressible oracle (kg_similar_edges, kg_clusters, kg_mosaics,
-  // kg_clusters_grid, streaming_neardup) get the driver's rows-only
-  // check, every key that also appears in oracleSql is hash-gated like
-  // the main set ---
+    // --- operator keys added after the first wave; the five with no
+    // SQL-expressible oracle (kg_similar_edges, kg_clusters, kg_mosaics,
+    // kg_clusters_grid, streaming_neardup) get the driver's rows-only
+    // check, every key that also appears in oracleSql is hash-gated ---
 
-  def rowsOnlyQueries: Map[String, (SparkSession, String) => DataFrame] =
-      Map[String, (SparkSession, String) => DataFrame](
     "fuzzy_link" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       import s.implicits._
@@ -541,7 +496,7 @@ object SparkEntry {
     "cc_components" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       val edges = graft.canon.KnnJoin.exactTopK(knnFeatures(t(s, dir, "embeddings")), 3)
-        .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+        .select("src", "dst")
       graft.canon.ConnectedComponents.run(edges)
     }),
     // stateful streaming operator (flatMapGroupsWithState): exact dedup,
@@ -554,11 +509,10 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("graft_sdedup_q").toString
       docs.coalesce(1).write.mode("overwrite").parquet(tmp)
       val stream = s.readStream.schema(docs.schema).parquet(tmp)
-      timedStream("streaming_dedup") {
-        graft.streaming.StreamingIngest.dedupStream(stream)
-          .writeStream.outputMode("append").format("memory")
-          .queryName("graft_sdedup_q").trigger(Trigger.AvailableNow()).start()
-      }
+      val q = graft.streaming.StreamingIngest.dedupStream(stream)
+        .writeStream.outputMode("append").format("memory")
+        .queryName("graft_sdedup_q").trigger(Trigger.AvailableNow()).start()
+      q.processAllAvailable(); q.stop()
       s.sql("SELECT doc_id, hash FROM graft_sdedup_q ORDER BY doc_id")
     }),
 
@@ -570,11 +524,10 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("graft_stream_q").toString
       batch.write.mode("overwrite").parquet(tmp)
       val stream = s.readStream.schema(batch.schema).parquet(tmp)
-      timedStream("streaming_sessions") {
-        graft.streaming.StreamingIngest.sessionCounts(stream, gap = "30 minutes")
-          .writeStream.outputMode("complete").format("memory")
-          .queryName("graft_sessions_q").trigger(Trigger.AvailableNow()).start()
-      }
+      val q = graft.streaming.StreamingIngest.sessionCounts(stream, gap = "30 minutes")
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("graft_sessions_q").trigger(Trigger.AvailableNow()).start()
+      q.processAllAvailable(); q.stop()
       s.sql("SELECT user_id, count(*) AS n_sessions FROM graft_sessions_q " +
         "GROUP BY 1 ORDER BY 1")
     }),
@@ -590,11 +543,10 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("graft_sneardup_q").toString
       docs.coalesce(1).write.mode("overwrite").parquet(tmp)
       val stream = s.readStream.schema(docs.schema).parquet(tmp)
-      timedStream("streaming_neardup") {
-        graft.streaming.StreamingIngest.neardupStream(stream)
-          .writeStream.outputMode("append").format("memory")
-          .queryName("graft_sneardup_q").trigger(Trigger.AvailableNow()).start()
-      }
+      val q = graft.streaming.StreamingIngest.neardupStream(stream)
+        .writeStream.outputMode("append").format("memory")
+        .queryName("graft_sneardup_q").trigger(Trigger.AvailableNow()).start()
+      q.processAllAvailable(); q.stop()
       s.sql("SELECT DISTINCT a, b FROM graft_sneardup_q ORDER BY a, b")
     }),
     // the portable streaming twin: keyed-state LSH anchors over PORTABLE
@@ -608,11 +560,10 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("graft_sneardup_p_q").toString
       docs.coalesce(1).write.mode("overwrite").parquet(tmp)
       val stream = s.readStream.schema(docs.schema).parquet(tmp)
-      timedStream("streaming_neardup_portable") {
-        graft.streaming.StreamingIngest.neardupStreamPortable(stream)
-          .writeStream.outputMode("append").format("memory")
-          .queryName("graft_sneardup_p_q").trigger(Trigger.AvailableNow()).start()
-      }
+      val q = graft.streaming.StreamingIngest.neardupStreamPortable(stream)
+        .writeStream.outputMode("append").format("memory")
+        .queryName("graft_sneardup_p_q").trigger(Trigger.AvailableNow()).start()
+      q.processAllAvailable(); q.stop()
       s.sql("SELECT DISTINCT a, b FROM graft_sneardup_p_q ORDER BY a, b")
     }),
     // the web-scale grid-DBSCAN path (ε-cell bucketing + contracted CC
@@ -634,8 +585,10 @@ object SparkEntry {
       implicit val sp: SparkSession = s
       // deterministic PCA twin (sign-canonicalized, integer-sum fit) —
       // (id, dim, value) rows, hash-checkable against the DuckDB mirror
-      // of the same arithmetic; Reduce.pca stays the MLlib variant
-      graft.canon.Reduce.pcaDet(knnFeatures(t(s, dir, "embeddings")), 8)
+      // of the same arithmetic (which keys rows by the varchar id);
+      // Reduce.pca stays the MLlib variant
+      graft.canon.Reduce.pcaDet(knnFeatures(t(s, dir, "embeddings"))
+          .withColumn("id", col("id").cast("string")), 8)
         .select(col("id"), posexplode(col("vec")).as(Seq("dim", "value")))
         .select(col("id"), col("dim"), round(col("value"), 6).as("value"))
         .orderBy("id", "dim")
@@ -785,11 +738,6 @@ object SparkEntry {
     "q18_heading_bins" ->
       """SELECT cast(((round((value - 77.0 + 180) / 30) * 30) % 360 + 360) % 360 as int) AS heading_bin,
         | count(*) AS n FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q19_bpe_tokens" ->
-      """SELECT lang,
-        | cast(sum(list_sum(list_transform(string_split(text, ' '),
-        |   w -> greatest(cast(ceil(length(w) / 4.0) as bigint), 1)))) as bigint) AS bpe_tokens,
-        | count(*) AS n_docs FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
     "q23_jaccard_adj" ->
       """WITH g AS (SELECT doc_id,
         |   list_distinct(list_transform(
@@ -812,25 +760,24 @@ object SparkEntry {
         | c AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY grp) AS component,
         |       count(*) OVER (PARTITION BY grp) AS n FROM r)
         | SELECT doc_id AS id, component FROM c WHERE n >= 2 ORDER BY id""".stripMargin,
-    "lang_id" -> langIdOracleSql,
-    // tie order inside the engine's top-k aggregator is (distance, dst
-    // as string) — mirrored by the varchar cast in the window order
+    // tie order inside the engine's top-k buffer is (distance, dst) —
+    // mirrored by the window order
     "knn_graph" ->
       """WITH e AS (SELECT vec_id, label, cast(embedding as double[]) AS v FROM embeddings),
         | p AS (SELECT a.vec_id AS src, b.vec_id AS dst,
         |       round(list_distance(a.v, b.v), 6) AS distance,
         |       row_number() OVER (PARTITION BY a.vec_id
-        |         ORDER BY list_distance(a.v, b.v), cast(b.vec_id as varchar)) AS rn
+        |         ORDER BY list_distance(a.v, b.v), b.vec_id) AS rn
         |       FROM e a JOIN e b ON a.label = b.label AND a.vec_id <> b.vec_id)
         | SELECT src, dst, distance FROM p WHERE rn <= 5 ORDER BY src, distance, dst""".stripMargin,
     // replays the positional-block linearized LSH stage for stage:
     // md5-derived planes (key '0_<bit>_<dim>' — table 0), 4 signature
     // sign bits + the order projection (plane 4), row_number bucket
-    // positions ordered by (proj, id-as-varchar) exactly like the
-    // engine, ±8-window pairing, both directions, top-5 per src with
-    // the aggregator's (distance, dst-as-string) tie rule
+    // positions ordered by (proj, id) exactly like the engine, ±8-window
+    // pairing, both directions, top-5 per src with the top-k buffer's
+    // (distance, dst) tie rule
     "knn_portable" ->
-      """WITH e AS (SELECT cast(vec_id as varchar) AS id, cast(label as bigint) AS grp,
+      """WITH e AS (SELECT cast(vec_id as bigint) AS id, cast(label as bigint) AS grp,
         |     cast(embedding as double[]) AS v FROM embeddings),
         | pl AS (SELECT b, list_transform(generate_series(0, 63),
         |     d -> ((cast(concat('0x', substr(md5(concat('0_', b, '_', d)), 1, 8)) as bigint) % 2001) - 1000) / 1000.0) AS p
@@ -860,7 +807,7 @@ object SparkEntry {
       """WITH RECURSIVE e AS (SELECT vec_id, label, cast(embedding as double[]) AS v FROM embeddings),
         | p AS (SELECT a.vec_id AS src, b.vec_id AS dst,
         |       row_number() OVER (PARTITION BY a.vec_id
-        |         ORDER BY list_distance(a.v, b.v), cast(b.vec_id as varchar)) AS rn
+        |         ORDER BY list_distance(a.v, b.v), b.vec_id) AS rn
         |       FROM e a JOIN e b ON a.label = b.label AND a.vec_id <> b.vec_id),
         | knn AS (SELECT src, dst FROM p WHERE rn <= 3),
         | edges AS (SELECT src, dst FROM knn UNION SELECT dst AS src, src AS dst FROM knn),
@@ -1060,25 +1007,6 @@ object SparkEntry {
        |  GROUP BY doc_id, j),
        | band AS (SELECT doc_id, j // 4 AS band, string_agg(h::VARCHAR, ',' ORDER BY j) AS bkey
        |  FROM hj GROUP BY doc_id, j // 4)""".stripMargin
-
-  /** lang_id oracle: per-language n-gram hit counts via `contains`,
-    * argmax in the same fixed order as TextAnalysis.langProfiles
-    * (ties → earlier language, zero hits → 'und').
-    */
-  private def langIdOracleSql: String = {
-    val scores = TextAnalysis.langProfiles.map { case (l, ps) =>
-      l -> ps.map(p => s"CASE WHEN contains(text, '$p') THEN 1 ELSE 0 END")
-        .mkString("(", " + ", ")")
-    }
-    val scoreCols = scores.map { case (l, e) => s"$e AS s_$l" }.mkString(", ")
-    val m = scores.map { case (l, _) => s"s_$l" }.mkString("greatest(", ", ", ")")
-    val pick = scores.map { case (l, _) => s"WHEN s_$l = m THEN '$l'" }.mkString(" ")
-    s"""SELECT doc_id, CASE WHEN m = 0 THEN 'und' $pick END AS lang_pred,
-       | cast(m as int) AS lang_votes
-       | FROM (SELECT doc_id, $m AS m, ${scores.map(s => "s_" + s._1).mkString(", ")}
-       |       FROM (SELECT doc_id, $scoreCols FROM documents) s0) s1
-       | ORDER BY doc_id""".stripMargin
-  }
 
   /** kg_scores oracle: per-label fused score via substring counting. */
   private def kgScoresOracleSql: String = {

@@ -1,6 +1,6 @@
 package graft.canon
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** k-NN similarity edges per group (reference A26: per-inspection
@@ -37,41 +37,19 @@ object KnnJoin {
     * (ScalaAggregator) groupBy, whose per-candidate encoder round-trip
     * and Seq-buffer serialize/merge were 70 of ~87 task-s on the
     * pipeline's kNN probe. Same pruning/tie/dedup semantics, primitive
-    * arrays end to end. Long ids rank on primitives; other id types
-    * round-trip as strings (lossless for the ids used here, and the
-    * (distance, dst-string) tie rule matches the previous aggregator).
+    * arrays end to end: ids are Long, and ties at equal distance go to
+    * the numerically smaller dst.
     */
   private def topKByDistance(candidates: DataFrame, k: Int,
                              dropSelf: Boolean): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    val srcType = candidates.schema("src").dataType
-    val dstType = candidates.schema("dst").dataType
-    val ranked =
-      if (srcType == LongType && dstType == LongType) {
-        val cands = candidates
-          .select(col("src"), col("dst"), col("distance").cast("double").as("distance"))
-          .as[CandL](org.apache.spark.sql.Encoders.product[CandL])
-        cands.mapPartitions(it => partialTopKLong(it, k))(
-            org.apache.spark.sql.Encoders.product[PartL]).toDF()
-          .repartition(col("src"))
-          .as[PartL](org.apache.spark.sql.Encoders.product[PartL])
-          .mapPartitions(it => mergeLong(it, k))(
-            org.apache.spark.sql.Encoders.product[CandL]).toDF()
-      } else {
-        val cands = candidates
-          .select(col("src").cast("string").as("src"),
-            col("dst").cast("string").as("dst"),
-            col("distance").cast("double").as("distance"))
-          .as[CandS](org.apache.spark.sql.Encoders.product[CandS])
-        cands.mapPartitions(it => partialTopKStr(it, k))(
-            org.apache.spark.sql.Encoders.product[PartS]).toDF()
-          .repartition(col("src"))
-          .as[PartS](org.apache.spark.sql.Encoders.product[PartS])
-          .mapPartitions(it => mergeStr(it, k))(
-            org.apache.spark.sql.Encoders.product[CandS]).toDF()
-          .select(col("src").cast(srcType).as("src"),
-            col("dst").cast(dstType).as("dst"), col("distance"))
-      }
+    val ranked = candidates
+      .select(col("src"), col("dst"), col("distance").cast("double").as("distance"))
+      .as[CandL](org.apache.spark.sql.Encoders.product[CandL])
+      .mapPartitions(it => partialTopKLong(it, k))(
+        org.apache.spark.sql.Encoders.product[PartL])
+      .repartition(col("src"))
+      .mapPartitions(it => mergeLong(it, k))(
+        org.apache.spark.sql.Encoders.product[CandL]).toDF()
     if (dropSelf) ranked.where(col("src") =!= col("dst")) else ranked
   }
 
@@ -94,23 +72,7 @@ object KnnJoin {
     }
   }
 
-  private def partialTopKStr(it: Iterator[CandS], k: Int): Iterator[PartS] = {
-    val acc = new java.util.HashMap[String, KBufS]()
-    while (it.hasNext) {
-      val c = it.next()
-      var b = acc.get(c.src)
-      if (b == null) { b = new KBufS(k); acc.put(c.src, b) }
-      b.insert(c.distance, c.dst)
-    }
-    import scala.jdk.CollectionConverters._
-    acc.entrySet().iterator().asScala.map { kv =>
-      val b = kv.getValue
-      PartS(kv.getKey, java.util.Arrays.copyOf(b.ds, b.n),
-        java.util.Arrays.copyOf(b.ids, b.n))
-    }
-  }
-
-  /** feat: (id string, group long/string, vec array<double>).
+  /** feat: (id long, group long, vec array<double>).
     * Returns (src, dst, distance): k nearest neighbors of each id
     * within its group, deterministic ties by dst id.
     *
@@ -157,7 +119,7 @@ object KnnJoin {
     * ring buffer, scoring the exact same Δpos ∈ [1, window] pairs the
     * old positional-block self-join produced, accumulating a bounded
     * per-src top-k in a task-local hash map (same (distance, dst) tie
-    * rule and per-dst min dedup as [[TopKNeighborsLong]], so pruning is
+    * rule and per-dst min dedup as [[topKByDistance]], so pruning is
     * safe by the same subset argument the partial aggregation relies
     * on). The previous plan shuffled the VECTORS four times (window
     * rank, localCheckpoint, both join sides) and fed ~2·window·tables
@@ -177,22 +139,11 @@ object KnnJoin {
     // (70 of ~87 task-s on the 4-core probe); semantics are unchanged —
     // per-dst min dedup then k smallest by (distance, dst) — so results
     // are identical to the aggregator path exactTopK still uses.
-    val (partials, idType) = lshPartials(feat, k, tables, bits, seed,
-      selfRank, window, portable)
-    val merged: DataFrame =
-      if (idType == org.apache.spark.sql.types.LongType)
-        partials.repartition(col("src"))
-          .as[PartL](org.apache.spark.sql.Encoders.product[PartL])
-          .mapPartitions(it => mergeLong(it, k))(
-            org.apache.spark.sql.Encoders.product[CandL]).toDF()
-      else
-        partials.repartition(col("src"))
-          .as[PartS](org.apache.spark.sql.Encoders.product[PartS])
-          .mapPartitions(it => mergeStr(it, k))(
-            org.apache.spark.sql.Encoders.product[CandS]).toDF()
-          .select(col("src").cast(idType).as("src"),
-            col("dst").cast(idType).as("dst"), col("distance"))
-    merged.where(col("src") =!= col("dst"))
+    lshPartials(feat, k, tables, bits, seed, selfRank, window, portable)
+      .repartition(col("src"))
+      .mapPartitions(it => mergeLong(it, k))(
+        org.apache.spark.sql.Encoders.product[CandL]).toDF()
+      .where(col("src") =!= col("dst"))
   }
 
   /** Row-level candidate view of [[lshPartials]] (measurement harness
@@ -202,22 +153,19 @@ object KnnJoin {
                  feat: DataFrame, k: Int, tables: Int = 4, bits: Int = 8,
                  seed: Long = 42L, selfRank: Boolean = false,
                  window: Int = 8, portable: Boolean = false): DataFrame = {
-    val (partials, idType) = lshPartials(feat, k, tables, bits, seed,
-      selfRank, window, portable)
-    partials.select(col("src"), posexplode(col("ds")).as(Seq("i", "distance")),
-        col("ids"))
-      .select(col("src").cast(idType).as("src"),
-        col("ids")(col("i")).cast(idType).as("dst"), col("distance"))
+    lshPartials(feat, k, tables, bits, seed, selfRank, window, portable)
+      .select(col("src"), posexplode(col("ds")).as(Seq("i", "distance")), col("ids"))
+      .select(col("src"), col("ids")(col("i")).as("dst"), col("distance"))
   }
 
   /** Per-task pre-aggregated top-k partials: one row per (src, task)
-    * with parallel distance/id arrays (≤ k entries). Returns the
-    * partial DataFrame and the caller-facing id type.
+    * with parallel distance/id arrays (≤ k entries).
     */
   private def lshPartials(
-                 feat: DataFrame, k: Int, tables: Int = 4, bits: Int = 8,
-                 seed: Long = 42L, selfRank: Boolean = false,
-                 window: Int = 8, portable: Boolean = false): (DataFrame, org.apache.spark.sql.types.DataType) = {
+                 feat: DataFrame, k: Int, tables: Int, bits: Int, seed: Long,
+                 selfRank: Boolean, window: Int,
+                 portable: Boolean): Dataset[PartL] = {
+    require(bits > 0, s"LSH needs at least one signature bit, got bits=$bits")
     val dims = 64 // upper bound on vec length used for plane generation
     // signature per table: sum over bits of sign(dot(vec, plane)) << bit.
     // portable=true swaps the avalanche-mixed coefficients for the
@@ -238,9 +186,7 @@ object KnnJoin {
         val dot = graft.core.VectorExprs.vec_dot(col("vec"), plane(t, bit))
         when(dot >= 0, lit(1L << bit)).otherwise(lit(0L))
       }
-      // bits = 0 → one bucket per group: the FULL-PROBE degenerate case
-      // (with window ≥ group size this reduces to exact k-NN)
-      if (bits == 0) lit(0L) else bitCols.reduce(_ + _)
+      bitCols.reduce(_ + _)
     }
     // ordering projection: one extra plane per table (index `bits`, never
     // used by the signature), so bucket order is independent of the bits
@@ -259,27 +205,13 @@ object KnnJoin {
       .repartition(col("group"), col("t"), col("sig"))
       .sortWithinPartitions(col("group"), col("t"), col("sig"), col("p"), col("id"))
 
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    val idType = feat.schema("id").dataType
-    val groupType = feat.schema("group").dataType
-    val partials: DataFrame =
-      if (idType == LongType && (groupType == LongType || groupType == IntegerType)) {
-        // hot path (the pipeline's packed-long frame ids): all-primitive
-        // typed rows, no per-row string allocation
-        val ds = bucketed.select(col("id"), col("group").cast("long").as("g"),
-          col("t"), col("sig"), col("vec").cast("array<double>").as("vec"))
-          .as[BRowL](org.apache.spark.sql.Encoders.product[BRowL])
-        ds.mapPartitions(it => slideLong(it, k, window, selfRank))(
-          org.apache.spark.sql.Encoders.product[PartL]).toDF()
-      } else {
-        val ds = bucketed.select(col("id").cast("string").as("id"),
-          col("group").cast("string").as("g"),
-          col("t"), col("sig"), col("vec").cast("array<double>").as("vec"))
-          .as[BRowS](org.apache.spark.sql.Encoders.product[BRowS])
-        ds.mapPartitions(it => slideStr(it, k, window, selfRank))(
-          org.apache.spark.sql.Encoders.product[PartS]).toDF()
-      }
-    (partials, idType)
+    // ids and groups are Long (the pipeline's packed frame ids); the
+    // encoder widens Int and rejects non-numeric columns at analysis
+    bucketed.select(col("id"), col("group").as("g"),
+        col("t"), col("sig"), col("vec").cast("array<double>").as("vec"))
+      .as[BRowL](org.apache.spark.sql.Encoders.product[BRowL])
+      .mapPartitions(it => slideLong(it, k, window, selfRank))(
+        org.apache.spark.sql.Encoders.product[PartL])
   }
 
   /** One md5-derived unit-cube coordinate for key `"<table>_<bit>_<dim>"`:
@@ -297,11 +229,7 @@ object KnnJoin {
   private[canon] final case class BRowL(id: Long, g: Long, t: Int, sig: Long,
                                         vec: Array[Double])
   private[canon] final case class CandL(src: Long, dst: Long, distance: Double)
-  private[canon] final case class BRowS(id: String, g: String, t: Int, sig: Long,
-                                        vec: Array[Double])
-  private[canon] final case class CandS(src: String, dst: String, distance: Double)
   private[canon] final case class PartL(src: Long, ds: Array[Double], ids: Array[Long])
-  private[canon] final case class PartS(src: String, ds: Array[Double], ids: Array[String])
 
   /** Σ (a_i − b_i)² over min length — same accumulation order as
     * [[graft.core.VectorExprs.SqDist]] (bit-identical distances).
@@ -313,9 +241,8 @@ object KnnJoin {
     s
   }
 
-  /** Bounded top-k buffer, sorted by (distance, dst): the exact pruning
-    * + per-dst min dedup semantics of [[TopKNeighborsLong]].reduce, in
-    * primitive arrays (no per-candidate allocation).
+  /** Bounded top-k buffer, sorted by (distance, dst): per-dst min
+    * dedup and pruning in primitive arrays (no per-candidate allocation).
     */
   private final class KBufL(k: Int) {
     val ds = new Array[Double](k); val ids = new Array[Long](k); var n = 0
@@ -337,31 +264,6 @@ object KnnJoin {
       }
       var pos = 0
       while (pos < n && (ds(pos) < d || (ds(pos) == d && ids(pos) < dst))) pos += 1
-      if (n < k) n += 1
-      var j = n - 1
-      while (j > pos) { ds(j) = ds(j - 1); ids(j) = ids(j - 1); j -= 1 }
-      ds(pos) = d; ids(pos) = dst
-    }
-  }
-
-  private final class KBufS(k: Int) {
-    val ds = new Array[Double](k); val ids = new Array[String](k); var n = 0
-    def insert(d: Double, dst: String): Unit = {
-      if (n == k) {
-        val wd = ds(n - 1)
-        if (d > wd || (d == wd && ids(n - 1).compareTo(dst) <= 0)) return
-      }
-      var di = -1; var i = 0
-      while (i < n && di < 0) { if (ids(i) == dst) di = i; i += 1 }
-      if (di >= 0) {
-        if (ds(di) <= d) return
-        var j = di
-        while (j < n - 1) { ds(j) = ds(j + 1); ids(j) = ids(j + 1); j += 1 }
-        n -= 1
-      }
-      var pos = 0
-      while (pos < n && (ds(pos) < d ||
-        (ds(pos) == d && ids(pos).compareTo(dst) < 0))) pos += 1
       if (n < k) n += 1
       var j = n - 1
       while (j > pos) { ds(j) = ds(j - 1); ids(j) = ids(j - 1); j -= 1 }
@@ -434,62 +336,6 @@ object KnnJoin {
     acc.entrySet().iterator().asScala.flatMap { kv =>
       val b = kv.getValue
       (0 until b.n).iterator.map(i => CandL(kv.getKey, b.ids(i), b.ds(i)))
-    }
-  }
-
-  private def mergeStr(it: Iterator[PartS], k: Int): Iterator[CandS] = {
-    val acc = new java.util.HashMap[String, KBufS]()
-    while (it.hasNext) {
-      val p = it.next()
-      var b = acc.get(p.src)
-      if (b == null) { b = new KBufS(k); acc.put(p.src, b) }
-      var i = 0
-      while (i < p.ds.length) { b.insert(p.ds(i), p.ids(i)); i += 1 }
-    }
-    import scala.jdk.CollectionConverters._
-    acc.entrySet().iterator().asScala.flatMap { kv =>
-      val b = kv.getValue
-      (0 until b.n).iterator.map(i => CandS(kv.getKey, b.ids(i), b.ds(i)))
-    }
-  }
-
-  private def slideStr(it: Iterator[BRowS], k: Int, window: Int,
-                       selfRank: Boolean): Iterator[PartS] = {
-    val w = math.max(window, 1)
-    val acc = new java.util.HashMap[String, KBufS]()
-    def buf(src: String): KBufS = {
-      var b = acc.get(src)
-      if (b == null) { b = new KBufS(k); acc.put(src, b) }
-      b
-    }
-    val ringId = new Array[String](w)
-    val ringVec = new Array[Array[Double]](w)
-    var started = false; var curG: String = null; var curT = 0; var curSig = 0L
-    var ringN = 0; var ringPos = 0
-    while (it.hasNext) {
-      val r = it.next()
-      if (!started || r.t != curT || r.sig != curSig || r.g != curG) {
-        started = true; curG = r.g; curT = r.t; curSig = r.sig
-        ringN = 0; ringPos = 0
-      }
-      if (selfRank) buf(r.id).insert(0.0, r.id)
-      var i = 0
-      while (i < ringN) {
-        val idx = (ringPos - 1 - i + w + w) % w
-        val d = math.sqrt(sqd(ringVec(idx), r.vec))
-        buf(ringId(idx)).insert(d, r.id)
-        buf(r.id).insert(d, ringId(idx))
-        i += 1
-      }
-      ringId(ringPos) = r.id; ringVec(ringPos) = r.vec
-      ringPos = (ringPos + 1) % w
-      if (ringN < w) ringN += 1
-    }
-    import scala.jdk.CollectionConverters._
-    acc.entrySet().iterator().asScala.map { kv =>
-      val b = kv.getValue
-      PartS(kv.getKey, java.util.Arrays.copyOf(b.ds, b.n),
-        java.util.Arrays.copyOf(b.ids, b.n))
     }
   }
 }

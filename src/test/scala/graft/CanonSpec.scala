@@ -51,28 +51,44 @@ class CanonSpec extends AnyFunSuite {
   }
 
   test("exact kNN returns k nearest within group, no self-match, deterministic ties") {
+    val (a, b, c, d, x, y) = (1L, 2L, 3L, 4L, 5L, 6L)
     val pts = Seq(
-      ("a", 1L, Array(0.0)), ("b", 1L, Array(1.0)), ("c", 1L, Array(2.0)),
-      ("d", 1L, Array(10.0)), ("x", 2L, Array(0.0)), ("y", 2L, Array(0.5))
+      (a, 1L, Array(0.0)), (b, 1L, Array(1.0)), (c, 1L, Array(2.0)),
+      (d, 1L, Array(10.0)), (x, 2L, Array(0.0)), (y, 2L, Array(0.5))
     ).toDF("id", "group", "vec")
     val knn = KnnJoin.exactTopK(pts, 2).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
-    val forA = knn.filter(_._1 == "a").map(_._2).toSeq
-    assert(forA === Seq("b", "c")) // nearest two, ordered
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val forA = knn.filter(_._1 == a).map(_._2).toSeq
+    assert(forA === Seq(b, c)) // nearest two, ordered
     assert(!knn.exists(t => t._1 == t._2))
-    assert(knn.filter(_._1 == "x").map(_._2).toSeq === Seq("y")) // group 2 only has 1 neighbor
-    assert(!knn.exists(t => (t._1 == "x" || t._1 == "y") && (t._2 != "x" && t._2 != "y")))
+    assert(knn.filter(_._1 == x).map(_._2).toSeq === Seq(y)) // group 2 only has 1 neighbor
+    assert(!knn.exists(t => (t._1 == x || t._1 == y) && (t._2 != x && t._2 != y)))
+  }
+
+  test("kNN ties at equal distance keep the numerically smaller dst") {
+    // dsts 9 and 10 are both exactly 1.0 from src 1; as strings "10" < "9",
+    // so a string tie rule would keep 10. The knn_graph, knn_portable and
+    // cc_components oracles order ties by the bigint id.
+    val pts = Seq(
+      (1L, 1L, Array(100.0, 100.0)), (9L, 1L, Array(100.0, 101.0)),
+      (10L, 1L, Array(101.0, 100.0))
+    ).toDF("id", "group", "vec")
+    def nearestOfSrc1(knn: org.apache.spark.sql.DataFrame) =
+      knn.where(col("src") === 1L).collect()
+        .map(r => (r.getLong(1), r.getDouble(2))).toSeq
+    assert(nearestOfSrc1(KnnJoin.exactTopK(pts, 1)) === Seq((9L, 1.0)))
+    assert(nearestOfSrc1(KnnJoin.approxTopK(pts, 1)) === Seq((9L, 1.0)))
   }
 
   test("approx kNN finds the same near neighbors on clustered data") {
     val pts = (0 until 40).map { i =>
       val base = if (i < 20) 0.0 else 100.0
-      (s"p$i", 1L, Array(base + i % 20 * 0.1, base))
+      (i.toLong, 1L, Array(base + i % 20 * 0.1, base))
     }.toDF("id", "group", "vec")
     val exact = KnnJoin.exactTopK(pts, 3).select("src", "dst").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
     val approx = KnnJoin.approxTopK(pts, 3, tables = 6, bits = 4)
-      .select("src", "dst").collect().map(r => (r.getString(0), r.getString(1))).toSet
+      .select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact & approx).size.toDouble / exact.size
     assert(recall > 0.8, s"LSH recall $recall too low")
   }
@@ -94,10 +110,10 @@ class CanonSpec extends AnyFunSuite {
   test("kNN top-k aggregator is invariant to partition count (partial-agg pruning safe)") {
     val rnd = new scala.util.Random(11)
     val pts = (0 until 120).map(i =>
-      (f"p$i%03d", (i % 3).toLong, Array(rnd.nextDouble() * 10, rnd.nextDouble() * 10)))
+      (i.toLong, (i % 3).toLong, Array(rnd.nextDouble() * 10, rnd.nextDouble() * 10)))
       .toDF("id", "group", "vec")
     def run(parts: Int) = KnnJoin.exactTopK(pts.repartition(parts), 4)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(run(2) === run(17))
   }
 

@@ -1,12 +1,10 @@
 package graft
 
 import graft.canon.MinHash
-import graft.ops.TextAnalysis
 import org.scalatest.funsuite.AnyFunSuite
 
-/** MinHash near-dup candidates with the hot-bucket cap's recall guarantee,
-  * plus the TextAnalysis token estimate and language ID that dedup-style
-  * curation leans on.
+/** MinHash near-dup candidates with the hot-bucket cap's recall guarantee
+  * and the portable signature arithmetic.
   */
 class DedupSpec extends AnyFunSuite {
   lazy implicit val spark: org.apache.spark.sql.SparkSession = SparkTestSession.spark
@@ -47,24 +45,6 @@ class DedupSpec extends AnyFunSuite {
     // duplicate GROUP survives transitive closure
     val covered = pairs.map(_._2).toSet ++ pairs.map(_._1).toSet
     assert(covered === (0L until 200L).toSet)
-  }
-
-  test("bpe token estimate: whitespace tokens + ceil(len/4) sub-tokens") {
-    // "internationalization" -> ceil(20/4)=5; "a" -> 1; "cat" -> 1
-    val df = Seq("internationalization a cat").toDF("text")
-    val got = df.select(TextAnalysis.bpeTokenEstimate.as("n")).as[Long].collect()(0)
-    assert(got === 7L)
-  }
-
-  test("language id: fixed-order argmax, und on zero hits") {
-    val docs = Seq(
-      (1L, "the thing and the other thing", "x", "s", 0L), // en n-grams
-      (2L, "zzzz qqqq", "x", "s", 0L) // no profile hits
-    ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val got = TextAnalysis.languageId(docs).collect()
-      .map(r => r.getLong(0) -> (r.getString(1), r.getInt(2))).toMap
-    assert(got(1L)._1 === "en" && got(1L)._2 > 0)
-    assert(got(2L) === ("und", 0))
   }
 
   test("portable minhash: planted near-dup found, signature arithmetic bounded") {
