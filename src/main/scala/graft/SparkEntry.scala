@@ -452,10 +452,10 @@ object SparkEntry {
         .orderBy("inspection_id", "channel", "frame_index")
     }),
 
-    // --- operator keys added after the first wave; the five with no
+    // --- operator keys added after the first wave; the four with no
     // SQL-expressible oracle (kg_similar_edges, kg_clusters, kg_mosaics,
-    // kg_clusters_grid, streaming_neardup) get the driver's rows-only
-    // check, every key that also appears in oracleSql is hash-gated ---
+    // kg_clusters_grid) get the rows-only check, every key that also
+    // appears in oracleSql is hash-gated ---
 
     "fuzzy_link" -> ((s, dir) => {
       implicit val sp: SparkSession = s
@@ -499,22 +499,6 @@ object SparkEntry {
         .select("src", "dst")
       graft.canon.ConnectedComponents.run(edges)
     }),
-    // stateful streaming operator (flatMapGroupsWithState): exact dedup,
-    // first-seen-wins keyed state; single-file source → one micro-batch,
-    // so first-seen == global min doc_id == the batch/DuckDB oracle
-    "streaming_dedup" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      import org.apache.spark.sql.streaming.Trigger
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sdedup_q").toString
-      docs.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val stream = s.readStream.schema(docs.schema).parquet(tmp)
-      val q = graft.streaming.StreamingIngest.dedupStream(stream)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("graft_sdedup_q").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable(); q.stop()
-      s.sql("SELECT doc_id, hash FROM graft_sdedup_q ORDER BY doc_id")
-    }),
 
     "streaming_sessions" -> ((s, dir) => {
       // Structured Streaming surface, driven synchronously: session_window
@@ -530,41 +514,6 @@ object SparkEntry {
       q.processAllAvailable(); q.stop()
       s.sql("SELECT user_id, count(*) AS n_sessions FROM graft_sessions_q " +
         "GROUP BY 1 ORDER BY 1")
-    }),
-    // streaming LSH near-dup candidates (first-seen bucket anchors in
-    // keyed state); single-batch source → pair set == batch
-    // minhashCandidates(maxBucket = 1), proven by StreamingSpec.
-    // Rows-only here: bucket keys are engine-internal hashes
-    // (streaming_neardup_portable is the hash-gated twin)
-    "streaming_neardup" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      import org.apache.spark.sql.streaming.Trigger
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sneardup_q").toString
-      docs.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val stream = s.readStream.schema(docs.schema).parquet(tmp)
-      val q = graft.streaming.StreamingIngest.neardupStream(stream)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("graft_sneardup_q").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable(); q.stop()
-      s.sql("SELECT DISTINCT a, b FROM graft_sneardup_q ORDER BY a, b")
-    }),
-    // the portable streaming twin: keyed-state LSH anchors over PORTABLE
-    // band keys, so the DuckDB oracle replays banding + first-seen
-    // (min-id) anchors and the STREAMING near-dup machinery itself is
-    // hash-proven (streaming_neardup stays the avalanche production path)
-    "streaming_neardup_portable" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      import org.apache.spark.sql.streaming.Trigger
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sneardup_p_q").toString
-      docs.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val stream = s.readStream.schema(docs.schema).parquet(tmp)
-      val q = graft.streaming.StreamingIngest.neardupStreamPortable(stream)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("graft_sneardup_p_q").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable(); q.stop()
-      s.sql("SELECT DISTINCT a, b FROM graft_sneardup_p_q ORDER BY a, b")
     }),
     // the web-scale grid-DBSCAN path (ε-cell bucketing + contracted CC
     // over the CELL graph) timed in the sweep next to the exact entries
@@ -583,10 +532,10 @@ object SparkEntry {
     }),
     "pca_reduce" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      // deterministic PCA twin (sign-canonicalized, integer-sum fit) —
+      // deterministic PCA (sign-canonicalized, integer-sum fit) —
       // (id, dim, value) rows, hash-checkable against the DuckDB mirror
       // of the same arithmetic (which keys rows by the varchar id);
-      // Reduce.pca stays the MLlib variant
+      // OperatorSpec checks it against MLlib's PCA (`mllibPca`)
       graft.canon.Reduce.pcaDet(knnFeatures(t(s, dir, "embeddings"))
           .withColumn("id", col("id").cast("string")), 8)
         .select(col("id"), posexplode(col("vec")).as(Seq("dim", "value")))
@@ -825,19 +774,6 @@ object SparkEntry {
         | round(quantile_cont(n_chars, 0.5), 6) AS p50,
         | round(quantile_cont(n_chars, 0.75), 6) AS p75
         | FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    // replays streaming first-seen bucket anchors: with a single-batch
-    // source the anchor is the bucket MINIMUM, so the pair set is
-    // (anchor, member) over the portable band buckets
-    "streaming_neardup_portable" ->
-      s"""WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 5),
-         |${portableMinhashCtes("d")},
-         | anchors AS (SELECT band, bkey, min(doc_id) AS anchor
-         |  FROM band GROUP BY band, bkey),
-         | pairs AS (SELECT DISTINCT least(b.doc_id, a.anchor) AS a,
-         |     greatest(b.doc_id, a.anchor) AS b
-         |  FROM band b JOIN anchors a USING (band, bkey)
-         |  WHERE b.doc_id <> a.anchor)
-         | SELECT a, b FROM pairs ORDER BY a, b""".stripMargin,
     // element-order list_sum mirrors sq_dist's index-order accumulation;
     // 1.25*1.25 is exact in binary on both engines
     "q26_dbscan" ->
@@ -892,9 +828,6 @@ object SparkEntry {
         |   round(uc, 6) AS union_cov
         | FROM m WHERE n_frames >= 3 OR size_raw >= 1.5
         | ORDER BY inspection_id, session""".stripMargin,
-    "streaming_dedup" ->
-      """SELECT cast(min(doc_id) as bigint) AS doc_id, md5(text) AS hash
-        | FROM documents GROUP BY md5(text) ORDER BY doc_id""".stripMargin,
     "q27_cosine_pairs" ->
       """WITH e AS (SELECT vec_id, cast(embedding as double[]) AS v FROM embeddings)
         | SELECT a.vec_id AS a, b.vec_id AS b,
@@ -985,28 +918,6 @@ object SparkEntry {
         | max(cast(json_extract_string(props, '$.k') as bigint)) AS max_k
         | FROM events GROUP BY 1 ORDER BY 1""".stripMargin
   )
-
-  /** The portable-minhash CTE chain over an input relation
-    * `src(doc_id, text)` (rows already length-filtered): positions →
-    * polynomial shingle hashes → 16 affine min-hashes mod 2³¹−1 →
-    * `band(doc_id, band, bkey)`, the 4-slot band keys of
-    * MinHash.portableBandKeys.
-    */
-  private def portableMinhashCtes(src: String): String =
-    s""" pos AS (SELECT doc_id, text, unnest(range(1, length(text) - 3)) AS i FROM $src),
-       | gr AS (SELECT doc_id,
-       |  (((((cast(ord(substr(text, cast(i as int), 1)) as bigint)) * 131
-       |     + ord(substr(text, cast(i as int)+1, 1))) * 131
-       |     + ord(substr(text, cast(i as int)+2, 1))) * 131
-       |     + ord(substr(text, cast(i as int)+3, 1))) * 131
-       |     + ord(substr(text, cast(i as int)+4, 1))) % 2147483647 AS g
-       |  FROM pos),
-       | hj AS (SELECT doc_id, j,
-       |  min(((7919 * (j + 1)) % 2147483647 * g + (104729 * (j + 1)) % 2147483647) % 2147483647) AS h
-       |  FROM gr CROSS JOIN (SELECT unnest(range(0, 16)) AS j) seeds
-       |  GROUP BY doc_id, j),
-       | band AS (SELECT doc_id, j // 4 AS band, string_agg(h::VARCHAR, ',' ORDER BY j) AS bkey
-       |  FROM hj GROUP BY doc_id, j // 4)""".stripMargin
 
   /** kg_scores oracle: per-label fused score via substring counting. */
   private def kgScoresOracleSql: String = {

@@ -1,8 +1,6 @@
 package graft.canon
 
 import graft.core.VectorExprs
-import org.apache.spark.ml.feature.{PCA, StandardScaler}
-import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,27 +11,9 @@ import org.apache.spark.sql.functions._
 object Reduce {
 
   /** (id, group, vec array<double>) → (id, group, vec array<double> of
-    * dimension k), standardized then PCA-projected. Fit is global
-    * (covariance eigendecomposition — deterministic up to sign).
-    */
-  def pca(feat: DataFrame, k: Int)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val asVec = udf((a: Seq[Double]) => Vectors.dense(a.toArray))
-    val asArr = udf((v: org.apache.spark.ml.linalg.Vector) => v.toArray)
-    val df = feat.withColumn("fv", asVec(col("vec")))
-    val scaler = new StandardScaler().setInputCol("fv").setOutputCol("sv")
-      .setWithMean(true).setWithStd(true).fit(df)
-    val scaled = scaler.transform(df)
-    val dims = feat.select(size(col("vec"))).first().getInt(0)
-    val model = new PCA().setInputCol("sv").setOutputCol("pv")
-      .setK(math.min(k, dims)).fit(scaled)
-    model.transform(scaled)
-      .select(col("id"), col("group"), asArr(col("pv")).as("vec"))
-  }
-
-  /** Deterministic PCA twin of [[pca]], engineered so an independent
-    * engine can reproduce it bit-for-bit (the driver's DuckDB oracle
-    * does):
+    * dimension k), standardized then PCA-projected, engineered so an
+    * independent engine can reproduce it bit-for-bit (the DuckDB
+    * oracle does; OperatorSpec checks it against MLlib's PCA):
     *
     *  - per-dim mean/std come from 1e-7-quantized INTEGER sums — exact
     *    and summation-order-independent, so the fit does not depend on

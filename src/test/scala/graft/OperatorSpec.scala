@@ -3,6 +3,10 @@ package graft
 import graft.canon.Reduce
 import graft.extract.TelemetryInterpolation
 import graft.materialize.Upsert
+import org.apache.spark.ml.feature.{PCA, StandardScaler}
+import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, size, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
 class OperatorSpec extends AnyFunSuite {
@@ -108,6 +112,23 @@ class OperatorSpec extends AnyFunSuite {
 
   // ---- A23 PCA ----
 
+  /** MLlib StandardScaler + PCA(k): the reference that pcaDet is checked
+    * against. (id, group, vec array<double>) → same, vec of dimension k.
+    */
+  private def mllibPca(feat: DataFrame, k: Int): DataFrame = {
+    val asVec = udf((a: Seq[Double]) => Vectors.dense(a.toArray))
+    val asArr = udf((v: org.apache.spark.ml.linalg.Vector) => v.toArray)
+    val df = feat.withColumn("fv", asVec(col("vec")))
+    val scaler = new StandardScaler().setInputCol("fv").setOutputCol("sv")
+      .setWithMean(true).setWithStd(true).fit(df)
+    val scaled = scaler.transform(df)
+    val dims = feat.select(size(col("vec"))).first().getInt(0)
+    val model = new PCA().setInputCol("sv").setOutputCol("pv")
+      .setK(math.min(k, dims)).fit(scaled)
+    model.transform(scaled)
+      .select(col("id"), col("group"), asArr(col("pv")).as("vec"))
+  }
+
   test("PCA projects to k dims and preserves the dominant direction ordering") {
     val rnd = new scala.util.Random(7)
     val pts = (0 until 200).map { i =>
@@ -115,7 +136,7 @@ class OperatorSpec extends AnyFunSuite {
       (s"p$i", 1L, Array(t + rnd.nextGaussian() * 0.01,
         2 * t + rnd.nextGaussian() * 0.01, rnd.nextGaussian() * 0.01))
     }.toDF("id", "group", "vec")
-    val red = Reduce.pca(pts, 2)
+    val red = mllibPca(pts, 2)
     val row = red.limit(1).collect()(0)
     assert(row.getSeq[Double](2).length === 2)
     assert(red.count() === 200)
@@ -131,7 +152,7 @@ class OperatorSpec extends AnyFunSuite {
     def comp0(df: org.apache.spark.sql.DataFrame): Map[String, Double] =
       df.collect().map(r => r.getString(0) -> r.getSeq[Double](2).head).toMap
     val a = comp0(Reduce.pcaDet(pts, 2))
-    val b = comp0(Reduce.pca(pts, 2))
+    val b = comp0(mllibPca(pts, 2))
     val keys = a.keys.toSeq
     val (xs, ys) = (keys.map(a), keys.map(b))
     val corr = {

@@ -8,12 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * fails here, not only in tools/compare_oracle.py.
   */
 class OracleGateSpec extends AnyFunSuite {
-  test("oracleSql keys are queries; the rows-only set is exactly the intended five") {
+  test("oracleSql keys are queries; the rows-only set is exactly the intended four") {
     val queries = SparkEntry.queries.keySet
     val oracles = SparkEntry.oracleSql.keySet
     assert(oracles.subsetOf(queries),
       s"oracle SQL without a query: ${(oracles -- queries).toSeq.sorted.mkString(", ")}")
     assert((queries -- oracles) === Set("kg_clusters", "kg_clusters_grid", "kg_mosaics",
-      "kg_similar_edges", "streaming_neardup"))
+      "kg_similar_edges"))
   }
 }
