@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-inspection tool: print the formatted physical plan of named
   * `SparkEntry.queries` entries (the evidence docs/PLANS.md captures —
@@ -11,12 +10,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, namesArg) = args.take(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = graft.core.GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.constraintPropagation.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     namesArg.split(',').foreach { name =>

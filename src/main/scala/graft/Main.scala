@@ -3,6 +3,7 @@ package graft
 import graft.core.GraftSession
 import graft.corpus.CorpusGen
 import graft.pipeline.KgPipeline
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** CLI entry point (spark-submit analog of the reference's
   * `python main.py analyze`): generate/read the corpus, run the
@@ -32,6 +33,8 @@ object Main {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobCount.incrementAndGet()
     })
+    // Janino compiles (codegen cache misses) over the run
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t0 = System.nanoTime()
     val corpus = CorpusGen.corpus(spark, CorpusGen.Config(rows, nRepos, partitions = cores * 2))
     val mode = if (args.length > 4) args(4) else "full"
@@ -58,6 +61,7 @@ object Main {
     println(f"[graft] rows=$rows repos=$nRepos cores=$cores wall=$secs%.2fs " +
       f"triples=$nTriples rate=${nTriples / secs}%.0f triples/sec " +
       f"jobs=${jobCount.get} taskSec=${taskTime.get / 1000.0}%.0f " +
+      s"codegenCompiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0} " +
       f"util=${taskTime.get / 1000.0 / (cores * secs) * 100}%.0f%% " +
       f"gcSec=${gcTime.get / 1000.0}%.0f files=$files")
     triples.foreach(_.groupBy("pred").count().orderBy("pred").show(20, truncate = false))

@@ -505,13 +505,17 @@ object SparkEntry {
       // over the event stream, complete mode, memory sink
       import org.apache.spark.sql.streaming.Trigger
       val batch = t(s, dir, "events")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_q").toString
-      batch.write.mode("overwrite").parquet(tmp)
-      val stream = s.readStream.schema(batch.schema).parquet(tmp)
-      val q = graft.streaming.StreamingIngest.sessionCounts(stream, gap = "30 minutes")
-        .writeStream.outputMode("complete").format("memory")
-        .queryName("graft_sessions_q").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable(); q.stop()
+      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_q").toFile
+      // the memory sink holds the result rows, so the source files are
+      // deleted once the query stops
+      try {
+        batch.write.mode("overwrite").parquet(tmp.toString)
+        val stream = s.readStream.schema(batch.schema).parquet(tmp.toString)
+        val q = graft.streaming.StreamingIngest.sessionCounts(stream)
+          .writeStream.outputMode("complete").format("memory")
+          .queryName("graft_sessions_q").trigger(Trigger.AvailableNow()).start()
+        q.processAllAvailable(); q.stop()
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
       s.sql("SELECT user_id, count(*) AS n_sessions FROM graft_sessions_q " +
         "GROUP BY 1 ORDER BY 1")
     }),

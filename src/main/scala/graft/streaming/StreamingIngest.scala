@@ -37,15 +37,15 @@ object StreamingIngest {
     }.toDF("repo", "path", "total_score", "total_mentions")
   }
 
-  /** Session windows over an event stream (gap-based, watermark for
-    * late data): streaming twin of the batch q12 sessionization.
+  /** Session windows over an event stream (30-minute gap, 1-hour
+    * watermark for late data): streaming twin of the batch q12
+    * sessionization.
     */
-  def sessionCounts(events: DataFrame, gap: String = "30 minutes",
-                    watermark: String = "1 hour"): DataFrame =
+  def sessionCounts(events: DataFrame): DataFrame =
     events
       .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap).as("session"), col("user_id"))
+      .withWatermark("ts", "1 hour")
+      .groupBy(session_window(col("ts"), "30 minutes").as("session"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), col("session.start").as("session_start"),
         col("n_events"))

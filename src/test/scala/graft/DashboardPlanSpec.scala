@@ -13,11 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * a call starts, the order of the results sorted in one partition, and
   * the `pred` partition pruning of the triples scans.
   */
-class DashboardPlanSpec extends AnyFunSuite {
+class DashboardPlanSpec extends AnyFunSuite with TempDirs {
   lazy implicit val spark: org.apache.spark.sql.SparkSession = SparkTestSession.spark
 
   private lazy val (frames, triples, nodes) = {
-    val dir = java.nio.file.Files.createTempDirectory("kg-dashboard").toString
+    val dir = tempDir("kg-dashboard")
     KgPipeline.write(KgPipeline.runFull(
       CorpusGen.corpus(spark, CorpusGen.Config(rows = 600, nRepos = 2, partitions = 4)),
       exactKnn = false), dir)
@@ -56,6 +56,24 @@ class DashboardPlanSpec extends AnyFunSuite {
     val b13 = jobs(GraphQueries.headingsHist(f))
     assert(b11 <= 3, s"B11: $b11 jobs")
     assert(b13 <= 2, s"B13: $b13 jobs")
+  }
+
+  test("B6 and B12 repeated after an ingest batch compile no generated code") {
+    // a batch compiles more classes than Spark's default 100-entry codegen
+    // cache holds; with that cache and the plan-local stage id in every
+    // class name, the repeated calls compiled 29 classes
+    // (graft.core.GraftSession.settings)
+    val frameSet = frames.where(col("inspection_id") === inspection).select("frame_id")
+    def calls(): Unit = {
+      GraphQueries.neighborhood(triples, frameSet).collect()
+      GraphQueries.histogramData(frames, triples, nodes).values.foreach(_.collect())
+    }
+    calls()
+    KgPipeline.write(KgPipeline.runFull(
+      CorpusGen.corpus(spark, CorpusGen.Config(rows = 600, nRepos = 2, seed = 7, partitions = 4)),
+      exactKnn = false), tempDir("kg-batch"))
+    val compiled = SparkTestSession.compiles(calls())
+    assert(compiled === 0, s"$compiled classes compiled")
   }
 
   test("results sorted in one partition equal the global orderBy rows, in order") {

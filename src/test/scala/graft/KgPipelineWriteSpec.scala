@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Its concurrent writes run in the caller's job group, and a small
   * batch builds and writes in a bounded number of Spark jobs.
   */
-class KgPipelineWriteSpec extends AnyFunSuite {
+class KgPipelineWriteSpec extends AnyFunSuite with TempDirs {
   lazy implicit val spark: org.apache.spark.sql.SparkSession = SparkTestSession.spark
 
   private lazy val result = {
@@ -33,11 +33,8 @@ class KgPipelineWriteSpec extends AnyFunSuite {
     spark.read.schema(in.schema).parquet(s"$outDir/$t")
       .select(in.columns.toIndexedSeq.map(col): _*)
 
-  private def tempDir(): String =
-    java.nio.file.Files.createTempDirectory("kg-write").toString
-
   private lazy val outDir = {
-    val d = tempDir()
+    val d = tempDir("kg-write")
     KgPipeline.write(result, d)
     d
   }
@@ -71,7 +68,7 @@ class KgPipelineWriteSpec extends AnyFunSuite {
   test("with AQE off the write keeps the same rows") {
     val key = "spark.sql.adaptive.enabled"
     val before = spark.conf.get(key)
-    val off = tempDir()
+    val off = tempDir("kg-write")
     try {
       spark.conf.set(key, "false")
       KgPipeline.write(result, off)
@@ -81,7 +78,7 @@ class KgPipelineWriteSpec extends AnyFunSuite {
   }
 
   test("every write job runs in the caller's job group") {
-    val dir = tempDir()
+    val dir = tempDir("kg-write")
     val groups = SparkTestSession.jobGroups {
       spark.sparkContext.setJobGroup("g", "write")
       try KgPipeline.write(result, dir) finally spark.sparkContext.clearJobGroup()
@@ -97,9 +94,21 @@ class KgPipelineWriteSpec extends AnyFunSuite {
     // Spark jobs; 33 since each small side is fetched once
     // (graft.core.SmallSide). A count job added back fails this.
     val corpus = CorpusGen.corpus(spark, CorpusGen.Config(rows = 800, nRepos = 2, partitions = 4))
-    val dir = tempDir()
+    val dir = tempDir("kg-write")
     val jobs = SparkTestSession.jobGroups(
       KgPipeline.write(KgPipeline.runFull(corpus, exactKnn = false), dir)).size
     assert(jobs <= 33, s"$jobs jobs")
+  }
+
+  test("a second batch of the same shape compiles no generated code") {
+    // generated classes are named without their stage id and the codegen
+    // cache holds 1000 (graft.core.GraftSession.settings); with the id in
+    // the name and 100 entries, the second batch compiled 153 classes
+    def batch(seed: Long): Unit = KgPipeline.write(KgPipeline.runFull(
+      CorpusGen.corpus(spark, CorpusGen.Config(rows = 800, nRepos = 2, seed = seed, partitions = 4)),
+      exactKnn = false), tempDir("kg-write"))
+    batch(seed = 1)
+    val compiled = SparkTestSession.compiles(batch(seed = 2))
+    assert(compiled === 0, s"$compiled classes compiled")
   }
 }

@@ -8,11 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** North-rule exact-resume: kill after an early stage, resume, and the
   * final triple set is identical to an uninterrupted run.
   */
-class ResumeSpec extends AnyFunSuite {
+class ResumeSpec extends AnyFunSuite with TempDirs {
   lazy implicit val spark: org.apache.spark.sql.SparkSession = SparkTestSession.spark
-
-  def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   val cfg = CorpusGen.Config(rows = 800, nRepos = 2, partitions = 4)
 
@@ -20,7 +17,7 @@ class ResumeSpec extends AnyFunSuite {
     val corpus = CorpusGen.corpus(spark, cfg)
 
     // uninterrupted reference run
-    val fullDir = tmpDir("graft_full")
+    val fullDir = tempDir("graft_full")
     val want = KgPipeline.runCheckpointed(corpus, fullDir)
       .select("subj", "pred", "obj").collect().map(_.toSeq).toSet
     // the checkpointed and in-memory entry points build the same graph
@@ -28,7 +25,7 @@ class ResumeSpec extends AnyFunSuite {
       .select("subj", "pred", "obj").collect().map(_.toSeq).toSet === want)
 
     // partial run: compute only the first two stages, then "crash"
-    val resDir = tmpDir("graft_resume")
+    val resDir = tempDir("graft_resume")
     val mgr0 = new graft.lineage.StageManager(resDir)
     import graft.extract.MentionExtractor
     import graft.link.ShipCatalog
@@ -59,7 +56,7 @@ class ResumeSpec extends AnyFunSuite {
 
   test("a zero-row stage completes with rows 0 and resumes without recomputing") {
     import spark.implicits._
-    val dir = tmpDir("graft_empty")
+    val dir = tempDir("graft_empty")
     val out = new graft.lineage.StageManager(dir).stage("empty", Seq("id")) {
       Seq.empty[Long].toDF("id")
     }

@@ -1,25 +1,31 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test JVM (forked by sbt). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    // the settings every session here takes (graft.core.GraftSession)
+    val s = graft.core.GraftSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.adaptive.enabled", "true")
-      // CLAUDE.md: constraint propagation is superlinear on the
-      // wide-alias kNN/lineage plans — every session in this repo
-      // disables it (GraftSession, Verify, Explain do too)
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** How many classes Janino compiles while `body` runs, i.e. how many
+    * times the generated code was not found in Spark's codegen cache.
+    * The counter is per JVM, and the suites of the test JVM run one at
+    * a time. */
+  def compiles(body: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 
   /** The job group of every job `body` starts, in start order. The

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * must agree with the batch gap-sessionization (q12 semantics), and
   * the streaming scorer must agree with the batch extractor.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   lazy implicit val spark: org.apache.spark.sql.SparkSession = SparkTestSession.spark
 
   val sfDir = "/root/testdata/sf0.001"
@@ -16,12 +16,12 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming session_window == batch gap sessionization (counts per user)") {
     import org.apache.spark.sql.streaming.Trigger
     val batchEvents = spark.read.parquet(s"$sfDir/events.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_events").toString
+    val dir = tempDir("graft_events")
     batchEvents.write.mode("overwrite").parquet(dir) // streaming source needs a directory
     val stream = spark.readStream.schema(batchEvents.schema).parquet(dir)
     // complete mode: append would hold back sessions newer than the final
     // watermark (they'd only emit on a later batch that never comes)
-    val q = StreamingIngest.sessionCounts(stream, gap = "30 minutes")
+    val q = StreamingIngest.sessionCounts(stream)
       .writeStream.outputMode("complete").format("memory").queryName("sessions")
       .trigger(Trigger.AvailableNow()).start()
     q.processAllAvailable(); q.stop()
@@ -41,7 +41,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val corpus = SparkEntry.docsCorpus(spark, sfDir)
     val schema = corpus.schema
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream")
     corpus.write.mode("overwrite").parquet(dir)
 
     val stream = spark.readStream.schema(schema).parquet(dir).as[graft.core.CorpusRow]
