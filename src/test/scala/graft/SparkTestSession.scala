@@ -7,7 +7,6 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test JVM (forked by sbt). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    // the settings every session here takes (graft.core.GraftSession)
     val s = graft.core.GraftSession.builder()
       .master("local[4]")
       .appName("graft-test")
